@@ -87,7 +87,7 @@ def _run_stream(spark, args) -> None:
     """Incremental catch-up: drain unseen transcript drops into
     exactly-once triples micro-batch tables (streaming.run_to_table)."""
     from .io import TableIO
-    from .pipeline.exec import collect_surface_rows
+    from .pipeline.extract import collect_surface_rows
     from .streaming import read_transcript_stream, run_to_table, streaming_triples
 
     TABLE = "triples_stream"

@@ -31,7 +31,7 @@ restriction is on how far the DuckDB cross-check extends.
 
 Scale shape (Spark side): vocab derivation is two JVM aggregations over the
 token stream (map-side partial counts, one shuffle each) + a ≤K+M-row
-driver collect (same contract as pipeline.exec.collect_surface_rows);
+driver collect (same contract as pipeline.extract.collect_surface_rows);
 extraction itself is the one Arrow-batched pass the flagship pipeline uses
 — no extra shuffle, no per-row Python at the API layer.
 """

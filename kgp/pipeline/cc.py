@@ -194,7 +194,12 @@ def _driver_union_find(e0: DataFrame) -> DataFrame:
     """Exact same contract as the distributed loop (component min as
     canonical id), solved driver-side for small graphs.  Edges arrive via
     Arrow (``toPandas``) — numpy column iteration, no per-row Row objects
-    (a 2M-edge collect() would cost GBs of driver heap)."""
+    (a 2M-edge collect() would cost GBs of driver heap).  Assignments leave
+    via Arrow too, as a local relation: a list of tuples would go through
+    a Python RDD and start a second pool of Python workers."""
+    import numpy as np
+    import pandas as pd
+
     spark = e0.sparkSession
     parent: dict[int, int] = {}
 
@@ -211,8 +216,10 @@ def _driver_union_find(e0: DataFrame) -> DataFrame:
         ra, rb = find(int(a)), find(int(b))
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "entity_id long, canonical_id long")
+    ids = list(parent)
+    pdf = pd.DataFrame({"entity_id": np.array(ids, dtype=np.int64),
+                        "canonical_id": np.array([find(n) for n in ids], dtype=np.int64)})
+    return spark.createDataFrame(pdf, "entity_id long, canonical_id long")
 
 
 # real lineage truncation cadence inside the loop: each round's plan embeds
@@ -240,7 +247,11 @@ CHECKPOINT_EVERY_SALTED = 2
 # round regardless of cluster size).  The probe pays one extra
 # partial-aggregated pass over the edge set — measured end-to-end at
 # +5.9% (N) / +1.9% (4N) on the short-loop CC_SALT graph, an upper
-# bound that longer loops amortize further (BENCH/CC_SALT.md).
+# bound that longer loops amortize further (BENCH/CC_SALT.md).  The
+# salted/window ratios come from ONE rotating-order round: each range is
+# that round's N and 4N legs, not a median of replicates — one round
+# decides the direction because the 2.3-7.2x gap is far beyond the host's
+# 1.5-2x single-leg drift band.
 SKEW_AUTO_DEGREE_BUDGET = 20_000_000
 
 

@@ -1,19 +1,25 @@
 """In-memory pipeline executor with branch-level job overlap.
 
-`run_pipeline` (run.py) is the durable path: every stage commits a snapshot,
-strictly sequential.  `build_graph` here is the hot path used by the bench
-harnesses and ad-hoc queries: no snapshot writes, and the two independent
-DAG branches —
+`run_pipeline` (run.py) is the durable path: every stage commits a
+snapshot.  `build_graph` here is the hot path used by the bench harnesses
+and ad-hoc queries: no snapshot writes.  Both run the two independent DAG
+branches —
 
     transcripts ─ S1 order ─ S2 extract ──┐
                                           ├─ S5 materialize
     vocab ─ S3 link ─ S4 CC ─ entity map ─┘
 
-— are submitted concurrently from two driver threads (Spark job scheduling
-is thread-safe; on a cluster this is the standard FAIR-scheduler pattern).
+— concurrently from two driver threads (Spark job scheduling is
+thread-safe; on a cluster this is the standard FAIR-scheduler pattern).
 The linking/CC branch is latency-bound (iterative tiny jobs with
 checkpoint barriers), the extraction branch is throughput-bound; run
 serially they add, overlapped they hide the CC latency entirely.
+
+The linking branch runs on a worker thread and the extraction branch on
+the caller's; both are joined before S5.  An error in the extraction
+branch is raised once the linking branch has finished, and an error in
+the linking branch is raised from the join.  ``overlap=False`` runs the
+branches one after the other on the caller's thread.
 
 The extraction branch is pinned with an eager localCheckpoint so both
 branches make progress simultaneously and the final materialize join reads
@@ -27,19 +33,10 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 
 from .cc import connected_components
-from .extract import extract, raw_triples_view
+from .extract import collect_surface_rows, extract, raw_triples_view
 from .link import entity_map_from_edges, link_candidate_edges
 from .materialize import materialize
 from .order import order_turns
-
-
-def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
-    return [
-        (r["surface"], int(r["entity_id"]), r["entity_type"])
-        for r in vocab.selectExpr(
-            "entity_id", "entity_type",
-            "explode(concat(array(canonical_name), aliases)) as surface").collect()
-    ]
 
 
 def build_graph(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,

@@ -48,6 +48,18 @@ def _get_matcher(broadcast, fingerprint: str) -> GazetteerMatcher:
     return m
 
 
+def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
+    """(surface, entity_id, entity_type) for every canonical name and alias
+    of ``vocab`` — the gazetteer list extract() broadcasts, collected to
+    the driver (one row per surface, vocabulary-sized)."""
+    return [
+        (r["surface"], int(r["entity_id"]), r["entity_type"])
+        for r in vocab.selectExpr(
+            "entity_id", "entity_type",
+            "explode(concat(array(canonical_name), aliases)) as surface").collect()
+    ]
+
+
 def extract(ordered: DataFrame, surface_rows: list[tuple[str, int, str]],
             cue_toks: list[tuple[str, tuple[str, ...]]] | None = None) -> DataFrame:
     """ordered(conv_id, turn_idx, role, text, tool, ts) -> EXTRACTED rows.

@@ -6,15 +6,37 @@ whose snapshot is committed against the same input — the reference's
 skip-existing resume (extract_paragraphs_faster.py:20-26 etc.) promoted to
 atomic snapshot semantics.  ``fail_after`` injects a crash for the
 kill-and-rerun test (FIXTURES.md §5 resume row).
+
+The stages form two independent branches that meet at S5:
+
+    transcripts ─ S1 ordered ─ S2 extracted ──┐
+                                              ├─ S5 triples/nodes/edges/errors
+    vocab ─ S3 link ─ S4 CC ─ entity_map ─────┘
+
+The vocabulary branch is submitted to one extra driver thread before S1
+starts, and the corpus branch runs on the caller's thread — the overlap
+exec.build_graph measured hiding the latency-bound CC jobs behind the
+throughput-bound extraction.  The branch thread inherits the caller's
+Spark local properties and job tags, so a job group set by the caller
+(and ``cancelJobGroup`` on it) covers both branches.
+
+The branch thread is joined before S5 and before any error leaves the
+runner: a failure in S1/S2 is raised only after the vocabulary branch has
+finished (its snapshot is then committed for the rerun), and a failure in
+the vocabulary branch is raised from the join.  If both branches fail,
+the corpus branch's error is the one raised.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import TableIO
 from .cc import connected_components
-from .extract import extract, mentions_view, raw_triples_view
+from .extract import collect_surface_rows, extract, mentions_view, raw_triples_view
 from .link import entity_map_from_edges, link_candidate_edges
 from .materialize import materialize, unmatched_surfaces
 from .order import order_turns, validation_errors
@@ -31,42 +53,39 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
                  surface_rows: list[tuple[str, int, str]] | None = None,
                  fail_after: str | None = None, force: bool = False) -> dict:
     """Run (or resume) S1..S5; returns {'io': TableIO, 'recomputed': [...],
-    '<table>': DataFrame for each committed table}."""
+    '<table>': DataFrame for each committed table}.  ``recomputed`` lists
+    the stages written by this call in STAGES order, whichever branch
+    committed first."""
     io = TableIO(out_root)
-    recomputed: list[str] = []
+    written: set[str] = set()
 
     def stage(name: str, fingerprint: str, compute) -> tuple[DataFrame, str]:
         if not force and io.is_committed(name, fingerprint):
             return io.read(spark, name), io.manifest(name)["snapshot_id"]
         manifest = io.write(compute(), name, input_fingerprint=fingerprint)
-        recomputed.append(name)
+        written.add(name)
         if fail_after == name:
             raise InjectedFailure(f"injected failure after committing stage {name!r}")
         return io.read(spark, name), manifest["snapshot_id"]
 
-    def _surface_rows() -> list[tuple[str, int, str]]:
-        # collected lazily: only the extract stage consumes the surface
-        # rows, and a fully-committed resume must not pay a
-        # vocabulary-sized driver collect for data it never uses
-        if surface_rows is not None:
-            return surface_rows
-        return [
-            (r["surface"], int(r["entity_id"]), r["entity_type"])
-            for r in vocab.selectExpr(
-                "entity_id", "entity_type",
-                "explode(concat(array(canonical_name), aliases)) as surface",
-            ).collect()
-        ]
+    def vocab_branch() -> tuple[DataFrame, str]:
+        return stage(
+            "entity_map", input_fingerprint,
+            lambda: entity_map_from_edges(vocab, connected_components(link_candidate_edges(vocab))),
+        )
 
-    ordered, snap1 = stage("ordered", input_fingerprint, lambda: order_turns(transcripts))
-    extracted, snap2 = stage(
-        "extracted", f"{input_fingerprint}/{snap1}",
-        lambda: extract(ordered, _surface_rows())
-    )
-    emap, snap3 = stage(
-        "entity_map", input_fingerprint,
-        lambda: entity_map_from_edges(vocab, connected_components(link_candidate_edges(vocab))),
-    )
+    # leaving the block joins the branch thread, also when S1/S2 raise
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        vocab_done = pool.submit(inheritable_thread_target(spark)(vocab_branch))
+        ordered, snap1 = stage("ordered", input_fingerprint, lambda: order_turns(transcripts))
+        # the surface rows are collected lazily: a fully-committed resume
+        # must not pay a vocabulary-sized driver collect it never uses
+        extracted, snap2 = stage(
+            "extracted", f"{input_fingerprint}/{snap1}",
+            lambda: extract(ordered, collect_surface_rows(vocab)
+                            if surface_rows is None else surface_rows),
+        )
+    emap, snap3 = vocab_done.result()
 
     raw_triples = raw_triples_view(extracted)
     fp_mat = f"{input_fingerprint}/{snap2}/{snap3}"
@@ -96,7 +115,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
     )
 
     return dict(
-        io=io, recomputed=recomputed,
+        io=io, recomputed=[n for n in STAGES if n in written],
         ordered=ordered, extracted=extracted,
         mentions=mentions_view(extracted), raw_triples=raw_triples,
         entity_map=emap, triples=triples, nodes=nodes, edges=edges,

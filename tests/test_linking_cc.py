@@ -59,6 +59,19 @@ def test_cc_empty_edges(spark):
     assert connected_components(edf).count() == 0
 
 
+def test_driver_union_find_returns_local_relation(spark):
+    """The small-graph result goes back through Arrow as a local relation,
+    not a Python RDD (which would start a second Python worker pool)."""
+    from kgp.pipeline.cc import _driver_union_find
+
+    e0 = spark.createDataFrame(pd.DataFrame({"a": [1, 2, 5], "b": [2, 3, 6]}))
+    res = _driver_union_find(e0)
+    assert "LogicalRDD" not in res._jdf.queryExecution().analyzed().toString()
+    assert res.schema.simpleString() == "struct<entity_id:bigint,canonical_id:bigint>"
+    assert {(r["entity_id"], r["canonical_id"]) for r in res.collect()} == {
+        (1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+
+
 def test_link_edges_all_verified(spark, small_vocab, small_spark_inputs):
     """Every emitted link edge satisfies the spec's verification predicate."""
     from kgp import linkspec

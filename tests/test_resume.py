@@ -5,7 +5,7 @@ import pytest
 
 from kgp.io import TableIO
 from kgp.pipeline import run_pipeline
-from kgp.pipeline.run import InjectedFailure
+from kgp.pipeline.run import STAGES, InjectedFailure
 
 
 def test_kill_and_rerun_identical_and_no_recompute(spark, tiny_spark_inputs, tmp_path):
@@ -14,6 +14,7 @@ def test_kill_and_rerun_identical_and_no_recompute(spark, tiny_spark_inputs, tmp
 
     # full clean run → record snapshot ids
     res1 = run_pipeline(spark, t, v, out, "resume:v1")
+    assert res1["recomputed"] == list(STAGES)
     io = TableIO(out)
     snaps1 = {n: io.manifest(n)["snapshot_id"] for n in
               ("ordered", "extracted", "entity_map", "triples", "nodes", "edges")}
@@ -32,6 +33,50 @@ def test_kill_and_rerun_identical_and_no_recompute(spark, tiny_spark_inputs, tmp
     assert "extracted" not in res2["recomputed"]
     snaps2 = {n: io2.manifest(n)["snapshot_id"] for n in snaps1}
     assert snaps1 == snaps2  # content-addressed snapshots identical
+
+
+def test_corpus_failure_raises_after_vocab_branch_joins(spark, tiny_spark_inputs, tmp_path):
+    """A crash in the corpus branch leaves the runner only once the
+    overlapped vocabulary branch has committed and no job is left running."""
+    t, v = tiny_spark_inputs
+    out = str(tmp_path / "wh")
+    with pytest.raises(InjectedFailure):
+        run_pipeline(spark, t, v, out, "join:v1", fail_after="ordered")
+    io = TableIO(out)
+    assert io.is_committed("ordered") and io.is_committed("entity_map")
+    assert not io.is_committed("extracted")
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+def test_vocab_branch_failure_is_raised_and_resumes(spark, tiny_spark_inputs, tmp_path):
+    """A crash in the vocabulary branch is raised from the join, not lost
+    on its thread, and the rerun reuses its committed snapshot."""
+    t, v = tiny_spark_inputs
+    out = str(tmp_path / "wh")
+    with pytest.raises(InjectedFailure, match="entity_map"):
+        run_pipeline(spark, t, v, out, "vfail:v1", fail_after="entity_map")
+    io = TableIO(out)
+    assert all(io.is_committed(n) for n in ("ordered", "extracted", "entity_map"))
+    assert not io.is_committed("triples")
+    res = run_pipeline(spark, t, v, out, "vfail:v1")
+    assert res["recomputed"] == ["triples", "nodes", "edges", "errors"]
+
+
+def test_vocab_branch_inherits_job_group(spark, tiny_spark_inputs, tmp_path):
+    """Every job of the run, the vocabulary branch's included, runs under
+    the caller's job group, so cancelJobGroup reaches both branches."""
+    t, v = tiny_spark_inputs
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kgp-resume-test", "run_pipeline under one job group")
+    try:
+        run_pipeline(spark, t, v, str(tmp_path / "wh"), "group:v1")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("kgp-resume-test")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
 def test_fingerprint_mismatch_forces_recompute(spark, tiny_spark_inputs, tmp_path):

@@ -71,7 +71,8 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     with the app, so no cross-run storage leak (ContextCleaner only frees
     blocks after a driver-JVM GC, which a quiet 1g driver heap may never
     trigger — observed as executors wedged at their storage limit)."""
-    from kgp.pipeline.exec import build_graph, collect_surface_rows
+    from kgp.pipeline.exec import build_graph
+    from kgp.pipeline.extract import collect_surface_rows
     from tools.cluster import executor_session
 
     spark = executor_session(n_exec, app_name=f"kgp-scale-{n_exec}exec")

@@ -21,7 +21,8 @@ INPUT_DIR = os.environ.get("KGP_SCALE_INPUT", "/tmp/kgp_scale_input4")
 
 def single(n_exec: int, pin_extracted: bool, pin_ordered: str,
            overlap: bool = True) -> None:
-    from kgp.pipeline.exec import build_graph, collect_surface_rows
+    from kgp.pipeline.exec import build_graph
+    from kgp.pipeline.extract import collect_surface_rows
     from tools.cluster import executor_session
 
     spark = executor_session(n_exec, app_name=f"kgp-ab-{n_exec}")

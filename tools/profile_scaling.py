@@ -23,8 +23,7 @@ INPUT_DIR = os.environ.get("KGP_SCALE_INPUT", "/tmp/kgp_scale_input3")
 def main() -> None:
     n_exec = int(sys.argv[1])
     from kgp.pipeline.cc import connected_components
-    from kgp.pipeline.exec import collect_surface_rows
-    from kgp.pipeline.extract import extract, raw_triples_view
+    from kgp.pipeline.extract import collect_surface_rows, extract, raw_triples_view
     from kgp.pipeline.link import entity_map_from_edges, link_candidate_edges
     from kgp.pipeline.materialize import materialize
     from kgp.pipeline.order import order_turns
