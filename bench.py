@@ -81,7 +81,7 @@ def _materialize(df) -> None:
 
 def run_kgp(spark, n_conv: int, repeats: int = 1) -> dict:
     from kgp import synth
-    from kgp.pipeline.exec import build_graph
+    from kgp.pipeline import run_pipeline
 
     vocab_pd = synth.gen_entity_vocab(400)
     transcripts = synth.gen_transcripts_spark(spark, n_conv, vocab_pd).cache()
@@ -93,8 +93,8 @@ def run_kgp(spark, n_conv: int, repeats: int = 1) -> dict:
     for _ in range(max(1, repeats)):
         t0 = time.time()
         vocab = spark.createDataFrame(vocab_pd)
-        out = build_graph(spark, transcripts, vocab,
-                          synth.vocab_surface_rows(vocab_pd))
+        out = run_pipeline(spark, transcripts, vocab,
+                           surface_rows=synth.vocab_surface_rows(vocab_pd))
         _materialize(out["edges"])
         best = min(best, time.time() - t0)
     transcripts.unpersist()

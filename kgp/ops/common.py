@@ -50,9 +50,9 @@ def pin(df: DataFrame) -> DataFrame:
     queries; single-query consumers need to do nothing (app exit frees
     everything).
 
-    The registry is lock-guarded: build_graph plans its linking branch on
-    a second driver thread (pipeline/exec.py), so pin()/release_pins()
-    can genuinely race list mutation.  Scope caveat (by design): the
+    The registry is lock-guarded: run_pipeline plans its vocabulary
+    branch on a second driver thread (pipeline/run.py), so
+    pin()/release_pins() can genuinely race list mutation.  Scope caveat (by design): the
     registry is process-global, so release_pins() invalidates the pins of
     ANY earlier-returned DataFrame that has not been materialized yet —
     its consumer then silently recomputes (correct, just unpinned).

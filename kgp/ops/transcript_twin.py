@@ -441,7 +441,7 @@ def transcript_edges_sql(t_path: str | None = None,
                          v_path: str | None = None,
                          threshold: float = 85.0) -> str:
     """Full S1..S5 twin: canonical KG edges (src, dst, pred, conv_id, ts)
-    from the raw transcripts — pipeline/exec.build_graph's ``edges``
+    from the raw transcripts — pipeline/run.run_pipeline's ``edges``
     output re-derived end to end (ordering, extraction, blocked linking
     with the difflib verify, CC, resolve; materialize keeps ent→ent pair
     triples only and the timestamp rides from S2)."""

@@ -5,6 +5,10 @@ S2 extract      vectorized mention detection + raw triple extraction
 S3 link         blocked candidate generation + fuzzy verification
 S4 canonicalize large-star/small-star connected components
 S5 materialize  canonical triples + partitioned nodes/edges tables
+
+run_pipeline (run.py) wires them into the one S1→S5 DAG: S3/S4 run on a
+vocabulary-branch thread overlapped with S1/S2, durable (committed
+TableIO snapshots, resumable) given an ``out_root`` and in memory without.
 """
 
 from .order import order_turns

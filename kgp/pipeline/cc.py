@@ -290,9 +290,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     # Catalyst NoSuchElementException inside UnionBase.rewriteConstraints
     # when the loop plan is (local)checkpointed (observed on Spark 4.1.2),
     # so constraint propagation is disabled — but only in the cloned
-    # session's SQLConf, never session-wide.  build_graph overlaps this
-    # branch with extraction planning on the shared session; the clone
-    # removes the set/restore race the previous implementation had.
+    # session's SQLConf, never session-wide.  run_pipeline runs this on
+    # its vocabulary-branch thread, overlapped with extraction planning on
+    # the shared session; the clone removes the set/restore race the
+    # previous implementation had.
     e0 = (
         edges.select(F.col("a").cast("long"), F.col("b").cast("long"))
         .filter(F.col("a") != F.col("b")).distinct()

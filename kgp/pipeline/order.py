@@ -62,25 +62,8 @@ def validation_errors(df: DataFrame) -> DataFrame:
     )
 
 
-def order_turns(df: DataFrame, num_partitions: int | None = None,
-                pin: str | bool = "checkpoint") -> DataFrame:
-    """``pin`` selects how the keyed corpus is shared between the census
-    branch and the main branch:
-
-    - "checkpoint" (default): eager localCheckpoint — lineage truncated,
-      rows stored deserialized in the block manager;
-    - "cache": columnar persist (MEMORY_AND_DISK) + eager count — same
-      sharing, compressed batches instead of row objects;
-    - "none": no pin — both branches re-derive from the conv_id hash
-      exchange, which Catalyst deduplicates (ReusedExchange), paying the
-      window sort + key UDF twice but writing no storage at all.
-    Legacy booleans map to "checkpoint"/"none".
-    """
-    if pin is True:
-        pin = "checkpoint"
-    if pin is False:
-        pin = "none"
-    parts = num_partitions or PARTS_PER_CORE * df.sparkSession.sparkContext.defaultParallelism
+def order_turns(df: DataFrame) -> DataFrame:
+    parts = PARTS_PER_CORE * df.sparkSession.sparkContext.defaultParallelism
 
     # invalid ordering keys are excluded here and surfaced via
     # validation_errors -> the errors table (D4), never silently kept
@@ -101,14 +84,7 @@ def order_turns(df: DataFrame, num_partitions: int | None = None,
         F.col("role").asc_nulls_last(), F.col("tool").asc_nulls_last())
     df = df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
-    keyed = df.withColumn("_dkey", _dup_key("text"))
-    if pin == "checkpoint":
-        keyed = keyed.localCheckpoint(eager=True)
-    elif pin == "cache":
-        from ..ops.common import pin as _pin
-
-        keyed = _pin(keyed)
-        keyed.count()
+    keyed = df.withColumn("_dkey", _dup_key("text")).localCheckpoint(eager=True)
 
     bad_keys = (
         keyed.groupBy("_dkey").agg(F.count("*").alias("_n"))

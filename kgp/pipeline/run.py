@@ -1,11 +1,4 @@
-"""Pipeline runner: stage orchestration + snapshot-based idempotent resume.
-
-Each stage writes a committed TableIO snapshot whose manifest records the
-input fingerprint (upstream snapshot ids chained).  A rerun reads any stage
-whose snapshot is committed against the same input — the reference's
-skip-existing resume (extract_paragraphs_faster.py:20-26 etc.) promoted to
-atomic snapshot semantics.  ``fail_after`` injects a crash for the
-kill-and-rerun test (FIXTURES.md §5 resume row).
+"""Pipeline runner: the one definition of the S1→S5 DAG.
 
 The stages form two independent branches that meet at S5:
 
@@ -13,18 +6,35 @@ The stages form two independent branches that meet at S5:
                                               ├─ S5 triples/nodes/edges/errors
     vocab ─ S3 link ─ S4 CC ─ entity_map ─────┘
 
+With an ``out_root`` the run is durable: each stage writes a committed
+TableIO snapshot whose manifest records the input fingerprint (upstream
+snapshot ids chained).  A rerun reads any stage whose snapshot is
+committed against the same input — the reference's skip-existing resume
+(extract_paragraphs_faster.py:20-26 etc.) promoted to atomic snapshot
+semantics.  ``fail_after`` injects a crash for the kill-and-rerun test
+(FIXTURES.md §5 resume row).
+
+Without one the run is in memory (the bench harnesses and ad-hoc
+queries): no TableIO, no manifest, no resume.  Each stage's plan is
+returned lazily except ``extracted``, which is pinned with an eager
+localCheckpoint on the caller's thread, so extraction overlaps the
+vocabulary branch and is computed once for triples, nodes and edges.
+
 The vocabulary branch is submitted to one extra driver thread before S1
-starts, and the corpus branch runs on the caller's thread — the overlap
-exec.build_graph measured hiding the latency-bound CC jobs behind the
-throughput-bound extraction.  The branch thread inherits the caller's
-Spark local properties and job tags, so a job group set by the caller
-(and ``cancelJobGroup`` on it) covers both branches.
+starts, and the corpus branch runs on the caller's thread: the
+latency-bound CC jobs hide behind the throughput-bound extraction.  The
+branch thread inherits the caller's Spark local properties and job tags,
+so a job group set by the caller (and ``cancelJobGroup`` on it) covers
+both branches.
 
 The branch thread is joined before S5 and before any error leaves the
 runner: a failure in S1/S2 is raised only after the vocabulary branch has
 finished (its snapshot is then committed for the rerun), and a failure in
 the vocabulary branch is raised from the join.  If both branches fail,
 the corpus branch's error is the one raised.
+
+Every layer function is looked up through this module's globals at call
+time, so a wrapper patched onto them (a tracer) sees every call.
 """
 
 from __future__ import annotations
@@ -35,7 +45,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import TableIO
-from .cc import connected_components
+from .cc import SMALL_GRAPH_EDGES, connected_components
 from .extract import collect_surface_rows, extract, mentions_view, raw_triples_view
 from .link import entity_map_from_edges, link_candidate_edges
 from .materialize import materialize, unmatched_surfaces
@@ -49,17 +59,24 @@ class InjectedFailure(RuntimeError):
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
-                 out_root: str, input_fingerprint: str, *,
+                 out_root: str | None = None, input_fingerprint: str | None = None, *,
                  surface_rows: list[tuple[str, int, str]] | None = None,
+                 small_graph_threshold: int = SMALL_GRAPH_EDGES,
                  fail_after: str | None = None, force: bool = False) -> dict:
-    """Run (or resume) S1..S5; returns {'io': TableIO, 'recomputed': [...],
-    '<table>': DataFrame for each committed table}.  ``recomputed`` lists
-    the stages written by this call in STAGES order, whichever branch
-    committed first."""
-    io = TableIO(out_root)
+    """Run (or resume) S1..S5; returns {'io': TableIO or None,
+    'recomputed': [...], '<stage>': DataFrame for each stage}.
+    ``recomputed`` lists the stages computed by this call in STAGES order,
+    whichever branch finished first (every stage when in memory).
+    ``small_graph_threshold`` is forwarded to connected_components (pass 0
+    to force the distributed large-star/small-star loop)."""
+    io = TableIO(out_root) if out_root is not None else None
     written: set[str] = set()
 
-    def stage(name: str, fingerprint: str, compute) -> tuple[DataFrame, str]:
+    def stage(name: str, fingerprint: str, compute) -> tuple[DataFrame, str | None]:
+        if io is None:
+            df = compute()
+            written.add(name)
+            return (df.localCheckpoint(eager=True) if name == "extracted" else df), None
         if not force and io.is_committed(name, fingerprint):
             return io.read(spark, name), io.manifest(name)["snapshot_id"]
         manifest = io.write(compute(), name, input_fingerprint=fingerprint)
@@ -68,10 +85,11 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
             raise InjectedFailure(f"injected failure after committing stage {name!r}")
         return io.read(spark, name), manifest["snapshot_id"]
 
-    def vocab_branch() -> tuple[DataFrame, str]:
+    def vocab_branch() -> tuple[DataFrame, str | None]:
         return stage(
             "entity_map", input_fingerprint,
-            lambda: entity_map_from_edges(vocab, connected_components(link_candidate_edges(vocab))),
+            lambda: entity_map_from_edges(vocab, connected_components(
+                link_candidate_edges(vocab), small_graph_threshold=small_graph_threshold)),
         )
 
     # leaving the block joins the branch thread, also when S1/S2 raise
@@ -119,5 +137,5 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
         ordered=ordered, extracted=extracted,
         mentions=mentions_view(extracted), raw_triples=raw_triples,
         entity_map=emap, triples=triples, nodes=nodes, edges=edges,
-        errors=errors, metrics=io.metrics_df(spark),
+        errors=errors, metrics=io.metrics_df(spark) if io is not None else None,
     )

@@ -516,13 +516,13 @@ def _kgp_edges(spark, sf_dir):
     re-derivation (incl. the difflib token_set_ratio verify and a
     recursive-CTE CC twin)."""
     from .fixtures import load_transcripts, load_vocab_pd
-    from .pipeline.exec import build_graph
+    from .pipeline import run_pipeline
     from .synth import vocab_surface_rows
 
     vocab_pd = load_vocab_pd()
     vocab = spark.createDataFrame(vocab_pd)
-    return build_graph(spark, load_transcripts(spark), vocab,
-                       vocab_surface_rows(vocab_pd))["edges"]
+    return run_pipeline(spark, load_transcripts(spark), vocab,
+                        surface_rows=vocab_surface_rows(vocab_pd))["edges"]
 
 
 # ---------------------------------------------------------------------------

@@ -39,7 +39,7 @@ def test_s1_empty_drop_parity_on_whitespace_edges(spark):
     pdf = _transcripts_pdf()
     got_oracle = oracle.order_turns(pdf)
     got_spark = (
-        s1.order_turns(spark.createDataFrame(pdf), pin="none")
+        s1.order_turns(spark.createDataFrame(pdf))
         .select("conv_id", "turn_idx", "text").toPandas()
         .sort_values("turn_idx").reset_index(drop=True)
     )
@@ -492,7 +492,7 @@ def test_null_ts_ordering_parity(spark):
             ("c0", 1, "user", "dup text", None, pd.Timestamp("2025-01-01")),
             ("c0", 2, "user", "other", None, pd.Timestamp("2025-01-02"))]
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-    got = (s1.order_turns(spark.createDataFrame(pdf), pin="none")
+    got = (s1.order_turns(spark.createDataFrame(pdf))
            .select("turn_idx", "text", "ts").toPandas()
            .sort_values("turn_idx").reset_index(drop=True))
     want = oracle.order_turns(pdf)

@@ -62,7 +62,8 @@ def test_vocab_branch_failure_is_raised_and_resumes(spark, tiny_spark_inputs, tm
     assert res["recomputed"] == ["triples", "nodes", "edges", "errors"]
 
 
-def test_vocab_branch_inherits_job_group(spark, tiny_spark_inputs, tmp_path):
+@pytest.mark.parametrize("durable", [True, False], ids=["durable", "in_memory"])
+def test_vocab_branch_inherits_job_group(spark, tiny_spark_inputs, tmp_path, durable):
     """Every job of the run, the vocabulary branch's included, runs under
     the caller's job group, so cancelJobGroup reaches both branches."""
     t, v = tiny_spark_inputs
@@ -71,12 +72,35 @@ def test_vocab_branch_inherits_job_group(spark, tiny_spark_inputs, tmp_path):
     before = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup("kgp-resume-test", "run_pipeline under one job group")
     try:
-        run_pipeline(spark, t, v, str(tmp_path / "wh"), "group:v1")
+        args = (str(tmp_path / "wh"), "group:v1") if durable else ()
+        run_pipeline(spark, t, v, *args)["edges"].count()
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert tracker.getJobIdsForGroup("kgp-resume-test")
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+def test_in_memory_run_matches_durable_and_writes_nothing(
+        spark, tiny_spark_inputs, tmp_path, monkeypatch):
+    """With no out_root the same DAG runs in memory: no TableIO, no
+    directory anywhere, and the same triples/nodes/edges rows."""
+    from collections import Counter
+
+    t, v = tiny_spark_inputs
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    mem = run_pipeline(spark, t, v)
+    assert mem["io"] is None and mem["metrics"] is None
+    assert mem["recomputed"] == list(STAGES)
+    got = {n: Counter(mem[n].collect()) for n in ("triples", "nodes", "edges")}
+    assert list(tmp_path.iterdir()) == [cwd] and list(cwd.iterdir()) == []
+
+    dur = run_pipeline(spark, t, v, str(tmp_path / "wh"), "mem:v1")
+    for n, rows in got.items():
+        assert rows, n
+        assert rows == Counter(dur[n].collect()), n
 
 
 def test_fingerprint_mismatch_forces_recompute(spark, tiny_spark_inputs, tmp_path):

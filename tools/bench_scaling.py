@@ -20,8 +20,8 @@ levels are INTERLEAVED in ABBA rounds — one efficiency sample per round,
 median of rounds reported — because the sandbox VM's effective CPU
 drifts on a tens-of-minutes timescale and a blocked design confounds
 that drift with the scaling effect.  Pipeline: S1 order → S2 extract →
-S3/S4 link+CC → S5 materialize → noop sink (sequential branches: the
-overlap variant contends with extraction on a busy cluster).
+S3/S4 link+CC → S5 materialize → noop sink, through the production
+``run_pipeline`` DAG (the link/CC branch overlaps S1/S2).
 
 Usage:
     python tools/bench_scaling.py                  # interleaved rounds
@@ -71,7 +71,8 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     with the app, so no cross-run storage leak (ContextCleaner only frees
     blocks after a driver-JVM GC, which a quiet 1g driver heap may never
     trigger — observed as executors wedged at their storage limit)."""
-    from kgp.pipeline.exec import build_graph
+    from kgp.pipeline import run_pipeline
+    from kgp.pipeline.cc import SMALL_GRAPH_EDGES
     from kgp.pipeline.extract import collect_surface_rows
     from tools.cluster import executor_session
 
@@ -82,15 +83,12 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     n_turns = transcripts.count()
 
     t0 = time.monotonic()
-    # sequential branches: the CC/link branch overlap helps a mostly-idle
-    # pipeline but contends with extraction once the cluster is busy —
-    # per-phase profiling at 10.2M turns measured sequential 154s vs
-    # overlapped 179s at 4 executors (and near-ideal 0.99 phase scaling)
+    # the production DAG: the link/CC branch overlaps S1/S2.
     # force_cc=0-threshold runs the distributed large-star/small-star loop
     # even though the link graph is below the driver-union-find cutoff —
     # the scaling evidence for the at-scale CC path (VERDICT r2 ask)
-    out = build_graph(spark, transcripts, vocab, surface_rows, overlap=False,
-                      cc_threshold=0 if force_cc else None)
+    out = run_pipeline(spark, transcripts, vocab, surface_rows=surface_rows,
+                       small_graph_threshold=0 if force_cc else SMALL_GRAPH_EDGES)
     out["edges"].write.format("noop").mode("overwrite").save()
     dt = time.monotonic() - t0
     spark.stop()
@@ -309,7 +307,8 @@ per fresh driver/executor JVMs): the sandbox VM's effective CPU drifts
 ±10-15% on a tens-of-minutes timescale, so per-round efficiency ratios
 (median reported) are the drift-robust estimator a blocked design is
 not.  Full pipeline per run: S1 order → S2 extract → S3/S4 link+CC →
-S5 materialize → noop sink.
+S5 materialize → noop sink, through the production `run_pipeline` DAG
+(the link/CC branch overlaps S1/S2).
 
 | executors | median sec | turns/s | runs (s) |
 |---|---|---|---|

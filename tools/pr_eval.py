@@ -19,7 +19,7 @@ def main() -> None:
     n_ents = int(sys.argv[2]) if len(sys.argv) > 2 else 300
 
     from kgp import oracle, synth
-    from kgp.pipeline.exec import build_graph
+    from kgp.pipeline import run_pipeline
     from kgp.session import get_spark
 
     spark = get_spark(app_name="kgp-pr-eval",
@@ -29,7 +29,8 @@ def main() -> None:
     transcripts = spark.createDataFrame(transcripts_pd)
     vocab = spark.createDataFrame(vocab_pd)
 
-    out = build_graph(spark, transcripts, vocab, synth.vocab_surface_rows(vocab_pd))
+    out = run_pipeline(spark, transcripts, vocab,
+                       surface_rows=synth.vocab_surface_rows(vocab_pd))
     golden = oracle.run_pipeline(transcripts_pd, vocab_pd)
 
     st = set(map(tuple, out["triples"].select("subj", "pred", "obj").distinct()
