@@ -538,7 +538,8 @@ def _kgp_edges(spark, sf_dir):
 # outright:
 #   - ann_lsh_topk            ⊂ ann_batch_topk (+ ann_recall tracks quality)
 #   - dedup_ngram_jaccard_pairs ⊂ its df-capped twin (same SQL, same engine)
-#   - kgp_triples_joinpath    == kgp_triples bit-for-bit (pytest-asserted)
+#   - kgp_triples_joinpath    (its join-based extractor is deleted; S2 has
+#                               one implementation, pipeline.extract)
 # and same-granularity ops were merged into single gated rows:
 #   - text_doc_profile  = quality_scores ⋈ lang_id
 #   - mm_meta           = payload_meta + resize planning

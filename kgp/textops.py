@@ -29,8 +29,7 @@ from typing import NamedTuple
 # Sentence segmentation (T1)
 # ---------------------------------------------------------------------------
 
-# ASCII whitespace class, not \s: the JVM twin (pipeline.extract_join uses
-# Java \s == this exact set) and the DuckDB twins ([\s\v]) must split the
+# ASCII whitespace class, not \s: the DuckDB twins ([\s\v]) must split the
 # same places; Python \s would additionally split on NBSP etc.
 _SENT_SPLIT_RE = re.compile(r"(?<=[.!?])[ \t\n\r\f\v]+")
 _ASCII_WS = " \t\n\r\f\v"
@@ -210,8 +209,8 @@ class GazetteerMatcher:
         self._max_toks = max_toks
 
     def find(self, sentence: str) -> list[Mention]:
-        # ASCII split (JVM-twin parity: pipeline.extract_join tokenizes
-        # sentences with Java \s, which never matches Unicode whitespace)
+        # ASCII split (DuckDB-twin parity: the SQL twins split on
+        # [\s\v], which never matches Unicode whitespace)
         raw = ascii_split(sentence)
         toks = [clean_token(t) for t in raw]
         n = len(toks)

@@ -113,30 +113,55 @@ def test_word_bigram_shingles_three_engine_parity(spark):
             assert py == set(), t
 
 
-def test_tableio_crash_keeps_committed_snapshot(spark, tmp_path):
-    """A failed second write must leave the first committed snapshot
-    readable (versioned data dirs; manifest replace is the commit)."""
+@pytest.mark.parametrize("crash_at", ["data_write", "manifest_commit"])
+def test_tableio_crash_keeps_committed_snapshot(spark, tmp_path, monkeypatch, crash_at):
+    """A second write that crashes — inside the data write, or at the
+    manifest replace that commits it — must leave the first committed
+    snapshot readable (versioned data dirs; manifest replace is the
+    commit), and the next good write must clear the orphaned data dir."""
+    import os
+
     from pyspark.sql import functions as F
 
     io = TableIO(str(tmp_path / "wh"))
     df1 = spark.range(10).withColumn("v", F.col("id") * 2)
     m1 = io.write(df1, "t")
-    assert io.read(spark, "t").count() == 10
+    rows1 = sorted(map(tuple, io.read(spark, "t").collect()))
+    assert len(rows1) == 10
 
-    @F.udf("long")
-    def boom(x):
-        raise RuntimeError("simulated mid-write crash")
+    if crash_at == "data_write":
+        @F.udf("long")
+        def boom(x):
+            raise RuntimeError("simulated mid-write crash")
 
-    bad = spark.range(5).withColumn("v", boom(F.col("id")))
-    with pytest.raises(Exception):
-        io.write(bad, "t")
-    # old snapshot still committed and readable
+        bad = spark.range(5).withColumn("v", boom(F.col("id")))
+        with pytest.raises(Exception):
+            io.write(bad, "t")
+    else:
+        def crash(src, dst):
+            raise OSError("simulated crash at manifest commit")
+
+        with monkeypatch.context() as mp:
+            mp.setattr("kgp.io.os.replace", crash)
+            with pytest.raises(OSError, match="manifest commit"):
+                io.write(spark.range(5).withColumn("v", F.lit(7)), "t")
+    # old snapshot still committed and readable, row for row
     assert io.manifest("t")["snapshot_id"] == m1["snapshot_id"]
-    assert io.read(spark, "t").count() == 10
-    # and a subsequent good write supersedes it cleanly
+    assert sorted(map(tuple, io.read(spark, "t").collect())) == rows1
+    table_dir = tmp_path / "wh" / "t"
+
+    def data_dirs():
+        return {d for d in os.listdir(table_dir) if d.startswith("data")}
+
+    if crash_at == "manifest_commit":
+        # the uncommitted snapshot's data fully landed next to the live one
+        assert data_dirs() == {m1["data_dir"], "data-001"}
+    # a subsequent good write supersedes it cleanly and garbage-collects
+    # every other data dir, the orphan included
     m2 = io.write(spark.range(3).withColumn("v", F.lit(1)), "t")
     assert m2["snapshot_id"] != m1["snapshot_id"]
     assert io.read(spark, "t").count() == 3
+    assert data_dirs() == {m2["data_dir"]}
 
 
 # ---------------------------------------------------------------------------

@@ -142,22 +142,11 @@ def test_salt_invariance(spark, small_run, small_spark_inputs):
             pd.testing.assert_frame_equal(base, cur)
 
 
-def test_auto_salt_policy(spark):
-    """"auto" picks the window form below the degree budget and a
-    power-of-two salt sized so each shard fits the budget above it."""
-    from kgp.pipeline.cc import _auto_salt
-
+def test_distributed_cc_on_star_is_exact(spark):
+    """A 300-spoke hub through the distributed loop gives the exact
+    assignment: every spoke canonicalizes to the hub."""
     star = spark.createDataFrame(
         pd.DataFrame([(0, i) for i in range(1, 301)], columns=["a", "b"]))
-    # hot degree 300: under a 1000 budget -> window form; over smaller
-    # budgets -> smallest power of two bringing a shard back under
-    assert _auto_salt(star, budget=1000) is None
-    assert _auto_salt(star, budget=200) == 2
-    assert _auto_salt(star, budget=100) == 4
-    assert _auto_salt(star, budget=1) == 64  # capped
-    # the default entry point accepts "auto" on the distributed path and
-    # still produces the exact component assignment
     got = {(int(r["entity_id"]), int(r["canonical_id"]))
-           for r in connected_components(
-               star, small_graph_threshold=0, skew_salt="auto").collect()}
+           for r in connected_components(star, small_graph_threshold=0).collect()}
     assert got == {(i, 0) for i in range(301)}

@@ -1,9 +1,8 @@
 """Round-4 review/advice fixes, each pinned by a test:
 
-1. cc.py salted two-level star passes (head-entity skew dial) must be
-   output-identical to the window form;
-2. cc.py periodic localCheckpoint inside the loop (lineage bound) must
-   not change results;
+1. cc.py's distributed window-form loop must equal the driver
+   union-find, across the periodic localCheckpoint (lineage bound);
+2. the fused round's plan keeps three exchanges and no join;
 3. ann_recall is a quality GATE: floors asserted inside the entry,
    quantized int output;
 4. ann_batch_topk accepts a self-built bucket table with an explicit
@@ -34,7 +33,7 @@ def _random_edges(rng, n_nodes, n_edges):
             for _ in range(n_edges)]
 
 
-def test_salted_cc_matches_window_cc(spark):
+def test_window_cc_matches_union_find(spark):
     rng = random.Random(4)
     # enough rounds that the CHECKPOINT_EVERY boundary is crossed too
     edges = _random_edges(rng, 400, 900) + [(i, i + 1) for i in range(120)]
@@ -42,24 +41,9 @@ def test_salted_cc_matches_window_cc(spark):
     window_form = {(r["entity_id"], r["canonical_id"])
                    for r in connected_components(
                        edf, small_graph_threshold=0).collect()}
-    salted = {(r["entity_id"], r["canonical_id"])
-              for r in connected_components(
-                  edf, small_graph_threshold=0, skew_salt=4).collect()}
     exact = {(r["entity_id"], r["canonical_id"])
              for r in connected_components(edf).collect()}  # union-find
-    assert window_form == salted == exact
-
-
-def test_salted_star_passes_row_equal(spark):
-    from kgp.pipeline.cc import _large_star, _small_star
-
-    rng = random.Random(11)
-    edf = spark.createDataFrame(_random_edges(rng, 50, 200), "a long, b long")
-    edf = edf.filter(F.col("a") != F.col("b")).distinct()
-    for fn in (_large_star, _small_star):
-        w = {tuple(r) for r in fn(edf).collect()}
-        s = {tuple(r) for r in fn(edf, skew_salt=3).collect()}
-        assert w == s and len(w) > 0
+    assert window_form == exact
 
 
 def test_checkpoint_cadence_constant_sane():
@@ -88,6 +72,9 @@ def test_fused_round_plan_has_three_exchanges(spark):
     # large window (hash a) + small repartition (hash a') + final distinct:
     # the intermediate distinct's 4th exchange must not reappear
     assert plan.count("Exchange hashpartitioning") == 3
+    # no join anywhere in the round, so the loop session needs no
+    # broadcast guard
+    assert "Join" not in plan
 
 
 def test_ann_recall_gate_passes_and_quantizes(spark):

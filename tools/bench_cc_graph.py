@@ -10,7 +10,7 @@ evidences the loop RUNS at 10M-turn scale; it cannot evidence that it
 SCALES, because there is nothing to scale.
 
 This bench measures the claim that matters at 10^8 surfaces: with real
-per-iteration shuffle volume, the loop's joins scale with executors while
+per-iteration shuffle volume, the loop's shuffles scale with executors while
 the barrier count stays O(log n).  Input is the alias-graph shape the
 linker produces (link.py blocking):
 
@@ -83,14 +83,14 @@ def ensure_input() -> None:
     open(marker, "w").close()
 
 
-def single_run(n_exec: int, salt: int | None | str = None) -> None:
+def single_run(n_exec: int) -> None:
     from kgp.pipeline.cc import connected_components
     from tools.cluster import executor_session
 
     spark = executor_session(n_exec, app_name=f"kgp-cc-graph-{n_exec}exec")
     edges = spark.read.parquet(f"{INPUT_DIR}/edges")
     t0 = time.monotonic()
-    assign = connected_components(edges, small_graph_threshold=0, skew_salt=salt)
+    assign = connected_components(edges, small_graph_threshold=0)
     n_nodes = assign.count()
     n_comps = assign.select("canonical_id").distinct().count()
     dt = time.monotonic() - t0
@@ -99,13 +99,11 @@ def single_run(n_exec: int, salt: int | None | str = None) -> None:
                                "sec": round(dt, 2)}), flush=True)
 
 
-def one_run(n_exec: int, salt: int | None = None) -> dict:
+def one_run(n_exec: int) -> dict:
     # every failure mode surfaces as RuntimeError so callers' retry-after-
     # bounce covers wedged runs and garbled RUN lines too (same
     # normalization as bench_scaling.one_run)
     cmd = [sys.executable, os.path.abspath(__file__), "--single-run", str(n_exec)]
-    if salt is not None:
-        cmd += ["--salt", str(salt)]
     try:
         proc = subprocess.run(cmd, capture_output=True, text=True, timeout=3600, cwd=_REPO)
     except subprocess.TimeoutExpired as exc:
@@ -126,115 +124,12 @@ def one_run(n_exec: int, salt: int | None = None) -> dict:
     return r
 
 
-SALT_VARIANTS = (None, 4, 16)
-
-
-def salt_compare_main() -> None:
-    """Window form vs skew_salt∈{4,16} on the skewed star graph (r4 verdict
-    ask #4): the salted two-level min pass exists for giant-component
-    graphs; this measures its actual cost/benefit on the 10×100k-spoke
-    stars at both executor levels.  Per round, each LEVEL runs all three
-    variants back-to-back in rotating order (the variant ratio is a
-    within-round, same-level comparison — drift cancels the same way the
-    ABBA efficiency rounds do); medians across rounds are the headline."""
-    ensure_input()
-    from tools.cluster import start_cluster, stop_cluster
-
-    lo, hi = LEVELS
-    rounds = int(os.environ.get("KGP_CC_SALT_ROUNDS", "3"))
-    times: dict[tuple, list] = {(v, lvl): [] for v in SALT_VARIANTS for lvl in LEVELS}
-    try:
-        for rnd in range(rounds):
-            start_cluster()
-            try:
-                var_order = list(SALT_VARIANTS)
-                var_order = var_order[rnd % 3:] + var_order[:rnd % 3]
-                for lvl in ((lo, hi) if rnd % 2 == 0 else (hi, lo)):
-                    for v in var_order:
-                        for attempt in (0, 1):
-                            try:
-                                r = one_run(lvl, salt=v)
-                                break
-                            except RuntimeError as exc:
-                                if attempt:
-                                    raise
-                                print(f"round {rnd} salt={v} n={lvl} failed "
-                                      f"({exc}); restarting cluster", flush=True)
-                                stop_cluster()
-                                start_cluster()
-                        times[(v, lvl)].append(r["sec"])
-                        print(f"round {rnd}: salt={v} n={lvl} {r['sec']}s", flush=True)
-            finally:
-                stop_cluster()
-    finally:
-        if all(ts for ts in times.values()):
-            write_salt_report(times, rounds)
-
-
-def write_salt_report(times: dict, rounds: int) -> None:
-    lo, hi = LEVELS
-    med = {k: round(statistics.median(v), 2) for k, v in times.items()}
-    # per-round variant/window ratios at each level (within-round pairing)
-    ratios = {}
-    for v in SALT_VARIANTS[1:]:
-        for lvl in LEVELS:
-            rs = [s / w for s, w in zip(times[(v, lvl)], times[(None, lvl)])]
-            ratios[f"salt{v}_vs_window_n{lvl}"] = round(statistics.median(rs), 3)
-    effs = {str(v): round(statistics.median(
-        [(a / b) / (hi / lo) for a, b in zip(times[(v, lo)], times[(v, hi)])]), 3)
-        for v in SALT_VARIANTS}
-    summary = {
-        "input": {"n_edges": N_EDGES, "n_chains": N_CHAINS,
-                  "n_stars": N_STARS, "star_spokes": STAR_SPOKES},
-        "rounds": rounds,
-        "medians_sec": {f"salt={v} n={lvl}": med[(v, lvl)]
-                        for v in SALT_VARIANTS for lvl in LEVELS},
-        "runs_sec": {f"salt={v} n={lvl}": times[(v, lvl)]
-                     for v in SALT_VARIANTS for lvl in LEVELS},
-        "salt_vs_window_median_ratio": ratios,
-        "scaling_efficiency_by_variant": effs,
-    }
-    tag = os.environ.get("KGP_CC_SALT_TAG", "")
-    suffix = f"_{tag}" if tag else ""
-    with open(os.path.join(_REPO, "BENCH", f"cc_salt_compare{suffix}.json"), "w") as f:
-        json.dump(summary, f, indent=2)
-    lines = ["# CC star passes: window form vs skew_salt on the skewed graph",
-             "",
-             f"`tools/bench_cc_graph.py --salt-compare`: {N_EDGES:,} edges, "
-             f"{N_STARS} stars × {STAR_SPOKES:,} spokes + {N_CHAINS:,} 8-node "
-             "chains; fresh JVMs per run, rotating variant order per round, "
-             "median of within-round ratios.",
-             "",
-             "| variant | N median (s) | 4N median (s) | eff N→4N |",
-             "|---|---|---|---|"]
-    for v in SALT_VARIANTS:
-        name = "window (salt=None)" if v is None else f"skew_salt={v}"
-        lines.append(f"| {name} | {med[(v, lo)]} | {med[(v, hi)]} | {effs[str(v)]} |")
-    lines += ["",
-              "Within-round salt/window time ratios (median): " +
-              ", ".join(f"{k}={v}" for k, v in ratios.items()), ""]
-    with open(os.path.join(_REPO, "BENCH", f"CC_SALT{suffix}.md"), "w") as f:
-        f.write("\n".join(lines))
-    print(json.dumps(summary))
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--single-run", type=int, help="internal: one cold run")
-    ap.add_argument("--salt", default=None,
-                    help="internal: skew_salt for --single-run — an int, "
-                         "or 'auto' to time the production default "
-                         "(max-degree probe + selected form)")
-    ap.add_argument("--salt-compare", action="store_true",
-                    help="window form vs skew_salt variants on the star graph")
     args = ap.parse_args()
     if args.single_run:
-        salt = (args.salt if args.salt in (None, "auto")
-                else int(args.salt))
-        single_run(args.single_run, salt=salt)
-        return
-    if args.salt_compare:
-        salt_compare_main()
+        single_run(args.single_run)
         return
 
     ensure_input()
