@@ -82,8 +82,7 @@ class TableIO:
             return False
         return input_fingerprint is None or m.get("input_fingerprint") == input_fingerprint
 
-    def write(self, df: DataFrame, name: str, partition_by: list[str] | None = None,
-              input_fingerprint: str | None = None) -> dict:
+    def write(self, df: DataFrame, name: str, input_fingerprint: str | None = None) -> dict:
         """Write table data, then lineage manifest (the commit point).
 
         Iceberg-style commit order: the new snapshot is written to a FRESH
@@ -101,16 +100,11 @@ class TableIO:
             n += 1
         new_dir = f"data-{n:03d}"
         new_path = os.path.join(table_dir, new_dir)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(new_path)
+        df.write.mode("overwrite").parquet(new_path)
 
-        # digest what LANDED, but under the writer's schema — a bare
-        # read-back re-infers partition-directory types ('02' -> int 2),
-        # so a partitioned string column would make the manifest checksums
-        # hashes of data read() (which applies the committed schema) can
-        # never reproduce
+        # digest what LANDED, but under the writer's schema — the same
+        # schema read() applies — so the manifest checksums hash exactly
+        # the rows a resumed run reads back
         written = df.sparkSession.read.schema(df.schema).parquet(new_path)
         total, parts, snapshot_id = _digest(written.select(*df.columns))
         manifest = {
@@ -137,11 +131,9 @@ class TableIO:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         if not self.is_committed(name):
             raise FileNotFoundError(f"table {name!r} has no committed snapshot under {self.root}")
-        # apply the COMMITTED schema, never re-infer: partition-directory
-        # type inference would silently re-type a string partition column
-        # with numeric-looking values ('02' -> int 2, leading zero lost),
-        # so a resumed run would read back different data than the run
-        # that committed it
+        # apply the COMMITTED schema, never re-infer: a resumed run must
+        # read back the table under the schema the run that committed it
+        # wrote
         from pyspark.sql.types import StructType
 
         m = self.manifest(name)

@@ -231,6 +231,16 @@ def canon_col(text_col) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
+def dup_key_col(text_col) -> Column:
+    r"""JVM twin of textops.dup_key: lowercase, canon_col, mask ASCII digit
+    runs.  Equal to the scalar on every code point Python's Unicode tables
+    assign, given ``spark.sql.icu.caseMappings.enabled=true`` (the default):
+    ICU's case tables are newer, so only code points Python leaves
+    unassigned can lower differently (pinned by tests/test_dup_key_col.py)."""
+    c = F.col(text_col) if isinstance(text_col, str) else text_col
+    return F.regexp_replace(canon_col(F.lower(c)), "[0-9]+", "#")
+
+
 def canon_sql(col: str) -> str:
     r"""DuckDB twin of canon_col.  [\s\v], not \s: RE2's \s lacks \v,
     which the Spark twin's Java \s has — the explicit class closes the

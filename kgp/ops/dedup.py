@@ -20,8 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from ..textops import char_shingles, normalize_surface, shingle_set
-from .common import explode_once, pin, spread
+from ..textops import normalize_surface, shingle_set
+from .common import canon_col, dup_key_col, explode_once, pin, spread
 
 # ---------------------------------------------------------------------------
 # exact dedup (D1 — sha256 content hash, create_faiss_index.py:19-37)
@@ -179,14 +179,6 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
             "a", "b",
             F.floor(F.col("_j") * F.lit(1 << 20)).cast("long").alias("jq20"))
     return verified.select("a", "b", F.round("_j", 6).alias("jaccard"))
-
-
-def minhash_dedup(df: DataFrame, text_col: str, id_col: str,
-                  threshold: float = 0.8, mode: str = "char") -> DataFrame:
-    """Drop near-duplicates: every row that matches a lower-id row goes."""
-    dup_b = minhash_near_dup_pairs(df, text_col, id_col, threshold, mode).select(
-        F.col("b").alias(id_col)).distinct()
-    return df.join(dup_b, id_col, "left_anti")
 
 
 def minhash_pairs_sql(table: str = "documents", text_col: str = "text",
@@ -439,41 +431,6 @@ def simhash_pairs_sql(table: str = "documents", text_col: str = "text",
 
 
 # ---------------------------------------------------------------------------
-# exact n-gram Jaccard self-join (no LSH approximation)
-# ---------------------------------------------------------------------------
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _shingle_arr(texts: pd.Series) -> pd.Series:
-    # signed-long shingle hashes (Spark LongType)
-    return texts.map(lambda t: [h - (1 << 63) for h in char_shingles(t or "")])
-
-
-def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
-                        threshold: float = 0.5) -> DataFrame:
-    """Exact Jaccard over char-3gram shingle sets via explode + self-join.
-    Returns (a, b, jaccard).  O(sum shared-shingle pairs) shuffle — the
-    exact baseline the LSH variants approximate."""
-    sh = df.select(F.col(id_col).alias("id"), _shingle_arr(text_col).alias("sh"))
-    sizes = sh.select("id", F.size("sh").alias("n"))
-    ex = sh.select("id", F.explode("sh").alias("g"))
-    l, r = ex.alias("l"), ex.alias("r")
-    shared = (
-        l.join(r, "g")
-        .filter(F.col("l.id") < F.col("r.id"))
-        .groupBy(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col("id").alias("a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("id").alias("b"), F.col("n").alias("nb"))
-    return (
-        shared.join(sa, "a").join(sb, "b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
-
-
-# ---------------------------------------------------------------------------
 # word-bigram Jaccard — pure DataFrame-API variant (whole-stage codegen)
 # ---------------------------------------------------------------------------
 
@@ -485,7 +442,7 @@ def _word_bigrams(text_col: str):
     and the DuckDB twins): trimming first strips only the space char, so a
     leading tab would survive into the collapse and yield an empty first
     token — a phantom ' x' bigram the other engines never emit."""
-    norm = F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " "))
+    norm = canon_col(F.lower(text_col))
     w = F.split(norm, " ")
     grams = F.transform(
         F.sequence(F.lit(0), F.size(w) - 2),
@@ -573,11 +530,8 @@ def ngram_jaccard_sql(table: str, text_col: str, id_col: str,
 
 def masked_dup_groups(df: DataFrame, text_col: str, id_col: str,
                       min_group: int = 2) -> DataFrame:
-    # collapse-then-trim, same order as textops.dup_key and the SQL twin
-    key = F.regexp_replace(
-        F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " ")), "[0-9]+", "#")
     return (
-        df.groupBy(key.alias("dup_key"))
+        df.groupBy(dup_key_col(text_col).alias("dup_key"))
         .agg(F.count("*").alias("n_members"), F.min(id_col).alias("keep_id"))
         .filter(F.col("n_members") >= min_group)
     )
@@ -599,12 +553,6 @@ def masked_dup_groups_sql(table: str, text_col: str, id_col: str,
 
 N_HYPERPLANES = 12
 _HP_SEED = 1234  # independent hash family from simsearch's (by design)
-
-
-def _hyperplanes(dim: int, n: int = N_HYPERPLANES) -> np.ndarray:
-    from .hyperlsh import hyperplanes
-
-    return hyperplanes(dim, n, _HP_SEED)
 
 
 def cosine_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,

@@ -171,7 +171,7 @@ def extract_docs_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = spark.createDataFrame(
         [(eid, s, t) for s, eid, t in surface_rows],
         "entity_id long, canonical_name string, entity_type string")
-    triples, _nodes, _edges = materialize(raw, raw, entity_map, vocab)
+    triples, _nodes, _edges = materialize(raw, entity_map, vocab)
     return triples.select(
         F.col("conv_id").alias("doc_id"), "subj", "pred", "obj")
 

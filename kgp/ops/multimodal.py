@@ -115,7 +115,7 @@ def frame_sample_sql(every_n: int = 2) -> str:
 
 def _resize_exprs(max_side: int):
     """(out_w, out_h, keep): the ONE Spark-side definition of the
-    aspect-preserving resize plan, shared by resize_meta and mm_meta.
+    aspect-preserving resize plan (mm_meta; mm_meta_sql is its twin).
     Explicit floor + 1px minimum: Spark's double->int cast truncates while
     DuckDB's rounds, so the rounding mode must be spelled out for parity."""
     longest = F.greatest("width", "height")
@@ -124,41 +124,13 @@ def _resize_exprs(max_side: int):
     return out_w, out_h, longest <= max_side
 
 
-def resize_meta(docs: DataFrame, max_side: int = 64) -> DataFrame:
-    """(doc_id, width, height, out_w, out_h): aspect-preserving resize
-    planning — integer arithmetic on the decoded dimensions (the compute
-    a real resizer would do before touching pixels)."""
-    m = payload_meta(docs).filter((F.col("width") > 0) & (F.col("height") > 0))
-    out_w, out_h, keep = _resize_exprs(max_side)
-    return m.select(
-        "doc_id", "width", "height",
-        F.when(keep, F.col("width")).otherwise(out_w).alias("out_w"),
-        F.when(keep, F.col("height")).otherwise(out_h).alias("out_h"),
-    )
-
-
-def resize_meta_sql(max_side: int = 64) -> str:
-    # composed over PAYLOAD_META_SQL — see frame_sample_sql
-    return f"""
-        WITH m AS ({PAYLOAD_META_SQL})
-        SELECT doc_id, width, height,
-               CASE WHEN GREATEST(width, height) <= {max_side} THEN width
-                    ELSE GREATEST(1, FLOOR(width * {max_side} / GREATEST(width, height)))::INT
-               END AS out_w,
-               CASE WHEN GREATEST(width, height) <= {max_side} THEN height
-                    ELSE GREATEST(1, FLOOR(height * {max_side} / GREATEST(width, height)))::INT
-               END AS out_h
-        FROM m WHERE width > 0 AND height > 0
-    """
-
-
 def mm_meta(docs: DataFrame, max_side: int = 64) -> DataFrame:
     """payload_meta + resize planning merged into ONE per-doc row, so a
     single driver-gate slot hash-checks both multimodal ops.  ``out_w`` /
-    ``out_h`` are 0 for degenerate dimensions (width or height 0 — the
-    rows resize_meta filters out); real outputs are always >= 1, so the
-    sentinel is unambiguous and the schema stays null-free (nullable ints
-    round-trip differently through pandas in the two engines)."""
+    ``out_h`` are 0 for degenerate dimensions (width or height 0); real
+    outputs are always >= 1, so the sentinel is unambiguous and the schema
+    stays null-free (nullable ints round-trip differently through pandas
+    in the two engines)."""
     m = payload_meta(docs)
     out_w, out_h, keep = _resize_exprs(max_side)
     ok = (F.col("width") > 0) & (F.col("height") > 0)

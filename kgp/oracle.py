@@ -151,8 +151,8 @@ def surface_map(entity_map: pd.DataFrame) -> pd.DataFrame:
 # S5 — graph materialization
 # ---------------------------------------------------------------------------
 
-def materialize(raw_triples: pd.DataFrame, ordered: pd.DataFrame,
-                entity_map: pd.DataFrame, vocab: pd.DataFrame):
+def materialize(raw_triples: pd.DataFrame, entity_map: pd.DataFrame,
+                vocab: pd.DataFrame):
     smap = dict(surface_map(entity_map).itertuples(index=False))
 
     def resolve(v: str) -> str | None:
@@ -200,7 +200,7 @@ def run_pipeline(transcripts: pd.DataFrame, vocab: pd.DataFrame) -> dict[str, pd
     ordered = order_turns(transcripts)
     mentions, raw_triples = extract(ordered, matcher)
     entity_map = link_entities(vocab)
-    triples, nodes, edges = materialize(raw_triples, ordered, entity_map, vocab)
+    triples, nodes, edges = materialize(raw_triples, entity_map, vocab)
     return dict(
         ordered=ordered,
         mentions=mentions,

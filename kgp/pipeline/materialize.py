@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+SALT_BUCKETS = 16  # edges writer spread (see materialize)
+
 
 def _resolve(t: DataFrame, smap: DataFrame, col: str) -> DataFrame:
     """Replace ``srf:<surface>`` values in `col` with ``ent:<canonical_id>``."""
@@ -58,8 +60,7 @@ def unmatched_surfaces(raw_triples: DataFrame, entity_map: DataFrame) -> DataFra
     )
 
 
-def materialize(raw_triples: DataFrame, ordered: DataFrame, entity_map: DataFrame,
-                vocab: DataFrame, salt_buckets: int = 16):
+def materialize(raw_triples: DataFrame, entity_map: DataFrame, vocab: DataFrame):
     smap = surface_map_df(entity_map)
     t = _resolve(raw_triples, smap, "subj")
     t = _resolve(t, smap, "obj")
@@ -72,24 +73,18 @@ def materialize(raw_triples: DataFrame, ordered: DataFrame, entity_map: DataFram
         .select("canonical_id", F.col("canonical_name").alias("name"), "entity_type")
     )
 
-    ee = (
+    # the emitting turn's timestamp rode along from S2 (schemas.EXTRACTED):
+    # no join back to the ordered corpus
+    edges = (
         t.filter(F.col("subj").startswith("ent:") & F.col("obj").startswith("ent:"))
         .select(
             F.expr("cast(substring(subj, 5) as long)").alias("src"),
             F.expr("cast(substring(obj, 5) as long)").alias("dst"),
-            "pred", "conv_id", "turn_idx",
-            *(["ts"] if "ts" in t.columns else []),
+            "pred", "conv_id", "ts",
         )
     )
-    if "ts" in t.columns:
-        # timestamp rode along from S2 (schemas.EXTRACTED) — no corpus join
-        edges = ee.select("src", "dst", "pred", "conv_id", "ts")
-    else:
-        edges = ee.join(
-            ordered.select("conv_id", "turn_idx", "ts"), ["conv_id", "turn_idx"], "left"
-        ).select("src", "dst", "pred", "conv_id", "ts")
     # salted repartition on entity key: hot src values spread over
-    # salt_buckets writer partitions (salt is a content hash → deterministic).
+    # SALT_BUCKETS writer partitions (salt is a content hash → deterministic).
     # To be precise about what this buys: it is a WRITER SPREAD — it defuses
     # single-writer hot partitions under Zipf head entities; it does NOT
     # preserve per-src locality for later reads (a consumer wanting src
@@ -98,6 +93,6 @@ def materialize(raw_triples: DataFrame, ordered: DataFrame, entity_map: DataFram
     edges = edges.repartition(
         parts,
         F.col("src"),
-        F.pmod(F.xxhash64("conv_id", "ts"), F.lit(salt_buckets)).alias("_salt"),
+        F.pmod(F.xxhash64("conv_id", "ts"), F.lit(SALT_BUCKETS)).alias("_salt"),
     )
     return triples, nodes, edges

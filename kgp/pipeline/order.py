@@ -20,29 +20,26 @@ Physical plan (exactly ONE shuffle of the corpus):
   second shuffle of the corpus, and Zipf-heavy dup keys cost map-side
   combine instead of a skewed sort (the window-count formulation we
   replaced sorted the whole corpus by dup_key);
-- the deduped+keyed rows are pinned with an eager localCheckpoint so the
-  census branch and the main branch share one computation of the
-  dup-key pandas UDF (and downstream stages re-read blocks, not lineage).
-  On a real cluster this is ``df.persist(StorageLevel.DISK_ONLY)`` or a
-  stage-table write — same seam, see io.TableIO.
+- the deduped+keyed rows are pinned with an eager localCheckpoint.  The
+  key is built-in functions only (ops.common.dup_key_col), so the pin
+  shares no Python evaluation; it keeps S1 at ONE corpus shuffle and one
+  dedup window.  Without it the census and main branches each plan the
+  repartition + window: over a parquet scan AQE's final plan has two
+  ``Exchange hashpartitioning(conv_id)`` and no ReusedExchange (the
+  census side carries an inferred ``isnotnull(_dkey)`` filter, so the
+  subtrees differ); over a local relation the exchange is reused but the
+  window still runs twice.  Downstream stages also re-read blocks, not
+  lineage.  On a real cluster this is
+  ``df.persist(StorageLevel.DISK_ONLY)`` or a stage-table write — same
+  seam, see io.TableIO.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+from pyspark.sql import DataFrame, Window as W, functions as F
 
-from ..textops import MIN_DUP_GROUP, dup_key
-
-
-@F.pandas_udf(T.StringType())
-def _dup_key(texts: pd.Series) -> pd.Series:
-    # the vectorized twin lives in textops beside the scalar (the pandas
-    # oracle calls dup_key; parity tests compare outputs)
-    from ..textops import dup_key_batch
-
-    return dup_key_batch(texts)
-
+from ..ops.common import dup_key_col
+from ..textops import MIN_DUP_GROUP
 
 # partition oversubscription: conversations vary 2-16 turns, so 1 task per
 # core straggles on the unlucky partition; 4x gives the scheduler room
@@ -62,14 +59,22 @@ def validation_errors(df: DataFrame) -> DataFrame:
     )
 
 
+def valid_turns(df: DataFrame) -> DataFrame:
+    """Rows that can be ordered and carry text: a null conv_id/turn_idx or
+    blank text is dropped.  Batch S1 surfaces the null-key rows via
+    validation_errors -> the errors table (D4), never silently kept.  The
+    streaming surface applies the same gate before extraction: a file
+    source's schema nullability is advisory, and one null turn_idx would
+    otherwise fail the whole query in the extractor's int() coercion."""
+    return df.filter(
+        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+        & (F.length(F.trim(F.col("text"))) > 0))
+
+
 def order_turns(df: DataFrame) -> DataFrame:
     parts = PARTS_PER_CORE * df.sparkSession.sparkContext.defaultParallelism
 
-    # invalid ordering keys are excluded here and surfaced via
-    # validation_errors -> the errors table (D4), never silently kept
-    df = df.filter(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
-    df = df.filter(F.length(F.trim(F.col("text"))) > 0)
-    df = df.repartition(parts, "conv_id")
+    df = valid_turns(df).repartition(parts, "conv_id")
 
     # exact within-conversation dedup, keep earliest turn — window is
     # clustered by a superset of the partitioning key: no extra exchange.
@@ -84,7 +89,8 @@ def order_turns(df: DataFrame) -> DataFrame:
         F.col("role").asc_nulls_last(), F.col("tool").asc_nulls_last())
     df = df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
-    keyed = df.withColumn("_dkey", _dup_key("text")).localCheckpoint(eager=True)
+    # eager pin: keeps S1 at one corpus shuffle (see module docstring)
+    keyed = df.withColumn("_dkey", dup_key_col("text")).localCheckpoint(eager=True)
 
     bad_keys = (
         keyed.groupBy("_dkey").agg(F.count("*").alias("_n"))

@@ -116,7 +116,7 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
         # resolve joins independently per output table
         def compute() -> DataFrame:
             if mat_out[0] is None:
-                mat_out[0] = materialize(raw_triples, ordered, emap, vocab)
+                mat_out[0] = materialize(raw_triples, emap, vocab)
             return mat_out[0][idx]
         return compute
 

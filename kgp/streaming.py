@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import schemas
 from .pipeline.extract import extract, mentions_view, raw_triples_view
+from .pipeline.order import valid_turns
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str,
@@ -33,26 +34,13 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
     return reader.parquet(input_dir)
 
 
-def _valid_turns(stream: DataFrame) -> DataFrame:
-    """Streaming twin of the batch D4 validation gate (pipeline.order):
-    rows with a null conv_id/turn_idx or blank text are DROPPED before
-    extraction — the file source's schema nullability is advisory only,
-    and one null turn_idx would otherwise kill the whole query inside the
-    extractor's int() coercion instead of being filtered.  (The batch
-    path additionally ledgers these rows; a firehose deployment gets the
-    ledger from the periodic batch run over the landed table.)"""
-    return stream.filter(
-        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
-        & (F.length(F.trim(F.col("text"))) > 0))
-
-
 def streaming_mentions(stream: DataFrame,
                        surface_rows: list[tuple[str, int, str]]) -> DataFrame:
     """Per-turn mention rows from a streaming transcript source.
 
     Reuses the exact batch extraction operator — mapInPandas is
     stream-compatible (stateless, no shuffle)."""
-    cleaned = _valid_turns(stream)
+    cleaned = valid_turns(stream)
     return mentions_view(extract(cleaned, surface_rows))
 
 
@@ -70,7 +58,7 @@ def streaming_triples(stream: DataFrame,
     triples table downstream, so a firehose deployment is: this stream →
     ``run_to_table`` exactly-once sink → periodic batch link+CC over the
     warehouse."""
-    cleaned = _valid_turns(stream)
+    cleaned = valid_turns(stream)
     return raw_triples_view(extract(cleaned, surface_rows))
 
 
@@ -83,7 +71,7 @@ def windowed_mention_counts(stream: DataFrame,
     State per (window, mention); the watermark lets the state store drop
     windows older than `watermark` — bounded memory at any stream length.
     """
-    cleaned = _valid_turns(stream)
+    cleaned = valid_turns(stream)
     extracted = extract(cleaned, surface_rows)  # carries ts (schemas.EXTRACTED)
     mentions = extracted.select("ts", F.explode("mentions").alias("m")).select(
         F.col("m.mention").alias("mention"),

@@ -19,7 +19,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .textops import PRED_CUES, DEFAULT_PAIR_PRED, MENTION_PRED, TOOL_PRED
+from .textops import PRED_CUES, DEFAULT_PAIR_PRED
 
 SEED = 42
 EPOCH = pd.Timestamp("2024-01-01 00:00:00")
@@ -199,19 +199,6 @@ def vocab_surface_rows(vocab: pd.DataFrame) -> list[tuple[str, int, str]]:
         for a in aliases:
             out.append((a, int(eid), etype))
     return out
-
-
-def gen_predicates() -> pd.DataFrame:
-    """Relation cue dimension (FIXTURES.md §3, rolle-dim analog)."""
-    preds = [(pred, cue) for pred, cue in PRED_CUES] + [
-        (DEFAULT_PAIR_PRED, ""),
-        (MENTION_PRED, ""),
-        (TOOL_PRED, ""),
-    ]
-    return pd.DataFrame(
-        [(i + 1, p, c) for i, (p, c) in enumerate(preds)],
-        columns=["pred_id", "pred", "cue"],
-    ).astype({"pred_id": "int32"})
 
 
 # ---------------------------------------------------------------------------

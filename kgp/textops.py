@@ -432,24 +432,12 @@ def dup_key(text: str) -> str:
 
     Deliberately NOT diacritic-stripped: boilerplate instances of one
     template share their diacritics, so stripping buys no extra grouping
-    while costing a per-char NFKD pass — this exact pipeline is
-    vectorizable as pandas ``.str`` ops (``dup_key_batch`` below),
-    ~20× faster per row at corpus scale.
+    while costing a per-char NFKD pass.  This scalar is the oracle; its
+    JVM twin is ``ops.common.dup_key_col`` (S1 and ops.dedup's masked
+    groups), equality pinned by tests/test_dup_key_col.py.
     """
     s = _WS_ASCII_RE.sub(" ", (text or "").lower()).strip(" ")
     return _DIGITS_RE.sub("#", s)
-
-
-def dup_key_batch(texts):
-    """Vectorized ``dup_key`` over a pandas Series — lives BESIDE its
-    scalar (like ascii_split/normalize_surface and their batch twins) so
-    an edit to one step is visibly an edit to both; the census UDF in
-    pipeline.order calls this.  Parity asserted in tests."""
-    return (
-        texts.fillna("").str.lower()
-        .str.replace(r"[ \t\n\r\f\v]+", " ", regex=True).str.strip(" ")
-        .str.replace(r"[0-9]+", "#", regex=True)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -660,13 +648,6 @@ def parse_qa_pairs(text: str, expected_fallback_count: int = 5) -> list[tuple[st
 # Token counting / quality heuristics (T6 + training-data ops)
 # ---------------------------------------------------------------------------
 
-_WORD_RE = re.compile(r"\w+")
-
-
 def count_tokens(text: str) -> int:
     """Whitespace token count (reference notebooks/count_tokens.ipynb cell-1)."""
     return len(text.split()) if text else 0
-
-
-def count_words(text: str) -> int:
-    return len(_WORD_RE.findall(text)) if text else 0

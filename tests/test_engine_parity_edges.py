@@ -262,16 +262,17 @@ def test_embed_components_c0_parity(spark):
 
 def test_masked_dup_c0_and_unicode_digit_parity(spark):
     """dup_key family: \\v collapses, \\x1c and Unicode digits pass
-    through untouched — scalar, pandas, JVM, and DuckDB agree."""
+    through untouched — scalar, JVM column, and DuckDB agree."""
+    from kgp.ops.common import dup_key_col
     from kgp.ops.dedup import masked_dup_groups, masked_dup_groups_sql
-    from kgp.pipeline.order import _dup_key
 
     texts = ["pay\v42 kr", "pay 43 kr", "pay \u0663 kr", "pay 44 kr\x1c",
              "pay \u0663 kr", "pay 99 kr\x1c"]
     pdf = _docs_pdf(texts)
-    # scalar == pandas twin
+    # scalar == JVM column (the key S1's boilerplate census groups by)
     assert ([textops.dup_key(t) for t in texts]
-            == list(_dup_key.func(pd.Series(texts))))
+            == [r["k"] for r in spark.createDataFrame(pdf).orderBy("doc_id")
+                .select(dup_key_col("text").alias("k")).collect()])
     got = {(r["dup_key"], r["n_members"], r["keep_id"]) for r in
            masked_dup_groups(spark.createDataFrame(pdf), "text", "doc_id",
                              min_group=1).collect()}

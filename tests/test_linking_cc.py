@@ -1,11 +1,16 @@
 """Linking + connected-components tests (FIXTURES.md §5 rows 3 & 6)."""
 
+import importlib
+
 import pandas as pd
 import pytest
 
 from kgp.pipeline.cc import connected_components
 from kgp.pipeline.link import link_candidate_edges
 from kgp.pipeline.materialize import materialize
+
+# the module, not the function kgp.pipeline re-exports under the same name
+materialize_mod = importlib.import_module("kgp.pipeline.materialize")
 
 
 def _uf_components(edges: list[tuple[int, int]], nodes: set[int]) -> dict[int, int]:
@@ -125,16 +130,15 @@ def test_token_set_ratio_ge_equivalence():
             assert (token_set_ratio(a, b) >= thr) == token_set_ratio_ge(a, b, thr), (a, b, thr)
 
 
-def test_salt_invariance(spark, small_run, small_spark_inputs):
+def test_salt_invariance(spark, small_run, small_spark_inputs, monkeypatch):
     """Same edges content for any salt bucket count (FIXTURES.md skew row)."""
     t, v = small_spark_inputs
     keys = ["conv_id", "src", "dst", "pred", "ts"]
     base = None
     for salt in (1, 32):
+        monkeypatch.setattr(materialize_mod, "SALT_BUCKETS", salt)
         _, _, edges = materialize(
-            small_run["raw_triples"], small_run["ordered"], small_run["entity_map"], v,
-            salt_buckets=salt,
-        )
+            small_run["raw_triples"], small_run["entity_map"], v)
         cur = edges.toPandas()[keys].sort_values(keys).reset_index(drop=True)
         if base is None:
             base = cur

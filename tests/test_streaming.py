@@ -132,7 +132,7 @@ def test_stream_catchup_registry_entry(spark):
     validated rows, and a second invocation is an idempotent catch-up
     (same snapshots, no re-commit).
 
-    The comparison is against extraction over _valid_turns-filtered rows,
+    The comparison is against extraction over valid_turns-filtered rows,
     NOT the full S1 (order_turns): the corpus-level dedup steps — the
     (conv_id, text) D1 window and the D2 boilerplate census — are corpus
     aggregates that the firehose architecture deliberately leaves to the

@@ -28,11 +28,12 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
+from kgp.pipeline.materialize import SALT_BUCKETS  # noqa: E402 — after sys.path
+
 N_ROWS = int(os.environ.get("KGP_MAT_SKEW_ROWS", "40000000"))
 HEAD_PCT = 39            # head entity's edge share, matching the fixture
 N_ENTITIES = 10_000
 ROUNDS = int(os.environ.get("KGP_MAT_SKEW_ROUNDS", "3"))
-SALT_BUCKETS = 16
 
 
 def build_edges(spark):
