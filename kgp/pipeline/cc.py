@@ -17,7 +17,7 @@ Scale notes:
   in a single job), the previous round unpersisting as the next pins; a
   real localCheckpoint every CHECKPOINT_EVERY rounds truncates lineage so
   a lost block late in the loop recomputes at most that many rounds, not
-  the whole doubling-per-round chain back to the parquet hop;
+  the whole doubling-per-round chain back to the pinned input;
 - convergence is detected by an order-insensitive content digest, one tiny
   aggregate per round;
 - head-entity skew (a giant component's min attracts everything) is the
@@ -124,31 +124,6 @@ def _digest(e: DataFrame) -> tuple[int, int]:
 # takes the iterative large-star/small-star path below.
 SMALL_GRAPH_EDGES = 2_000_000
 
-# one isolated session per PARENT session, not per call: newSession shares
-# the SparkContext but each clone owns a SessionState — a scaling sweep
-# crossing the threshold repeatedly would otherwise accumulate one live
-# session (catalog, SQLConf, temp views) per connected_components call
-import weakref
-
-_ISO_SESSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _iso_session(parent):
-    iso = _ISO_SESSIONS.get(parent)
-    if iso is None:
-        iso = parent.newSession()
-        iso.conf.set("spark.sql.constraintPropagation.enabled", "false")
-        # the loop's plan between checkpoints references its predecessor
-        # multiple times per round, so the TEXT rendering of late-round
-        # plans is exponentially larger than the plan DAG itself — AQE
-        # stringifies the plan on every update callback and an unbounded
-        # maxPlanStringLength turns that into a driver OOM
-        # (java.lang.OutOfMemoryError inside QueryExecution.explainString).
-        # 1 MB is plenty for debugging.
-        iso.conf.set("spark.sql.maxPlanStringLength", str(1 << 20))
-        _ISO_SESSIONS[parent] = iso
-    return iso
-
 
 def _driver_union_find(e0: DataFrame) -> DataFrame:
     """Exact same contract as the distributed loop (component min as
@@ -184,9 +159,11 @@ def _driver_union_find(e0: DataFrame) -> DataFrame:
 
 # real lineage truncation cadence inside the loop: each round's plan embeds
 # its predecessor TWICE (via _sym), so persist-only pinning leaves a
-# 2^rounds recompute fan-out back to the parquet hop if a late round loses
-# a cached block — one eager localCheckpoint every N rounds caps the chain
-# at N rounds for ~1 extra pass per N
+# 2^rounds recompute fan-out back to the pinned input if a late round
+# loses a cached block — one eager localCheckpoint every N rounds caps the
+# chain at N rounds for ~1 extra pass per N.  It also bounds the plan
+# TEXT, which grows ~4x per round (AQE renders it on every update) and
+# drops back to a leaf at each checkpoint round.
 CHECKPOINT_EVERY = 5
 
 
@@ -199,56 +176,31 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     ``small_graph_threshold`` edges short-circuit to a driver union-find
     (identical result, property-tested); pass 0 to force the distributed
     large-star/small-star loop.
-    """
-    parent = edges.sparkSession
 
-    # Materialize the input edge list in the PARENT session (no conf
-    # dependency), then run the whole iteration inside an ISOLATED
-    # spark.newSession(): self-unions with swapped column attributes trip a
-    # Catalyst NoSuchElementException inside UnionBase.rewriteConstraints
-    # when the loop plan is (local)checkpointed (observed on Spark 4.1.2),
-    # so constraint propagation is disabled — but only in the cloned
-    # session's SQLConf, never session-wide.  run_pipeline runs this on
-    # its vocabulary-branch thread, overlapped with extraction planning on
-    # the shared session; the clone removes the set/restore race the
-    # previous implementation had.
-    e0 = (
+    Runs entirely in the caller's session and sets no conf.  The loop's
+    result is pinned with an eager localCheckpoint: its blocks live in
+    executor storage, so an executor lost after this returns loses part
+    of the assignment (a durable caller commits it, as run_pipeline does).
+    A parquet copy under the driver's temp dir would not help: executors
+    on other hosts cannot read it.
+    """
+    # one pinned input for both paths; its lineage reaches the caller's
+    # input, so a lost block recomputes instead of corrupting
+    e = (
         edges.select(F.col("a").cast("long"), F.col("b").cast("long"))
         .filter(F.col("a") != F.col("b")).distinct()
-        .localCheckpoint(eager=True)
+        .persist()
     )
-    if e0.count() <= small_graph_threshold:
-        return _driver_union_find(e0)
-    iso = _iso_session(parent)
-    # crossing sessions JVM-side via a temp parquet hop: this path only
-    # runs ABOVE the small-graph threshold — exactly where a Python
-    # createDataFrame(e0.rdd, ...) round-trip (pickling every edge row
-    # through the Python workers) would dominate.  One columnar write +
-    # read keeps the transfer in the JVM; AQE coalescePartitions shrinks
-    # the loop's shuffles, so no partition tuning here.
-    import atexit
-    import shutil
-    import tempfile
-
-    hop = tempfile.mkdtemp(prefix="kgp_cc_hop_")
-    # {hop}/assign must outlive the call (the returned DataFrame re-reads
-    # it lazily) and {hop}/edges must outlive the LOOP (persist recovers
-    # through lineage — an executor loss recomputes from this source), so
-    # the directory is reclaimed at process exit — without this, every
-    # large-graph call leaks a full edge-set copy into /tmp
-    atexit.register(shutil.rmtree, hop, ignore_errors=True)
-    e0.write.mode("overwrite").parquet(f"{hop}/edges")
+    if e.count() <= small_graph_threshold:
+        out = _driver_union_find(e)
+        e.unpersist(blocking=False)
+        return out
     # per-round pin is persist(), not localCheckpoint(eager=True): the
     # eager checkpoint is a FULL extra pass per round (execute, then store
     # row-object blocks), after which the digest runs as a second job.
     # persist is lazy — the digest job both computes the round AND
     # populates the (columnar, compressed) cache, halving the passes per
     # round; the previous round unpersists as soon as the next is pinned.
-    # Lineage stays valid (each round's plan chains to the parquet hop
-    # through the cached subtrees), so eviction/executor loss recomputes
-    # instead of corrupting — and constraint propagation is off in this
-    # session, which sidesteps the rewriteConstraints bug either way.
-    e = iso.read.parquet(f"{hop}/edges").persist()
     prev = _digest(e)
     for rnd in range(max_iter):
         new = _round_fused(e)
@@ -277,18 +229,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             F.col("a").alias("entity_id"),
             F.least(F.col("mn"), F.col("a")).alias("canonical_id"),
         )
+        .localCheckpoint(eager=True)
     )
-    # hand the result back to the parent session so downstream joins never
-    # mix DataFrames across sessions — same JVM-side parquet hop (the
-    # assignment table is one row per linked node; still no Python pickle).
-    # The write IS the materialization — no checkpoint needed first.
-    assign.write.mode("overwrite").parquet(f"{hop}/assign")
     e.unpersist(blocking=False)
-    # the edge-set copy is only needed while persisted rounds could still
-    # recompute through lineage; once assign is ON DISK nothing references
-    # it — delete now so a long-lived session making repeated large-graph
-    # CC calls (the periodic link+CC batch of a streaming deployment)
-    # accumulates only the tiny assign tables until process exit, not one
-    # full edge copy per call
-    shutil.rmtree(f"{hop}/edges", ignore_errors=True)
-    return parent.read.parquet(f"{hop}/assign")
+    return assign

@@ -60,18 +60,23 @@ def unmatched_surfaces(raw_triples: DataFrame, entity_map: DataFrame) -> DataFra
     )
 
 
+def nodes_df(vocab: DataFrame, entity_map: DataFrame) -> DataFrame:
+    """One row per canonical entity: vocab ⋈ canon WHERE entity_id = canonical_id."""
+    canon = entity_map.select("entity_id", "canonical_id").distinct()
+    return (
+        vocab.join(canon, "entity_id")
+        .filter(F.col("entity_id") == F.col("canonical_id"))
+        .select("canonical_id", F.col("canonical_name").alias("name"), "entity_type")
+    )
+
+
 def materialize(raw_triples: DataFrame, entity_map: DataFrame, vocab: DataFrame):
     smap = surface_map_df(entity_map)
     t = _resolve(raw_triples, smap, "subj")
     t = _resolve(t, smap, "obj")
     triples = t.select("subj", "pred", "obj", "conv_id", "turn_idx")
 
-    canon = entity_map.select("entity_id", "canonical_id").distinct()
-    nodes = (
-        vocab.join(canon, "entity_id")
-        .filter(F.col("entity_id") == F.col("canonical_id"))
-        .select("canonical_id", F.col("canonical_name").alias("name"), "entity_type")
-    )
+    nodes = nodes_df(vocab, entity_map)
 
     # the emitting turn's timestamp rode along from S2 (schemas.EXTRACTED):
     # no join back to the ordered corpus

@@ -477,24 +477,17 @@ def _kgp_triples(spark, sf_dir):
 
 
 def _kgp_nodes_canonical(spark, sf_dir):
-    """S5 nodes surface over the persisted vocab: one row per canonical
-    entity (pipeline.materialize's nodes output — vocab ⋈ canon WHERE
-    entity_id = canonical_id), hash-checked against the transcript twin's
-    linking/CC chain (local-oracle: past the driver window)."""
+    """S5 nodes surface over the persisted vocab (pipeline.materialize's
+    nodes_df), hash-checked against the transcript twin's linking/CC chain
+    (local-oracle: past the driver window)."""
     from .fixtures import load_vocab_pd
     from .pipeline.cc import connected_components
     from .pipeline.link import entity_map_from_edges, link_candidate_edges
+    from .pipeline.materialize import nodes_df
 
     vocab = spark.createDataFrame(load_vocab_pd())
-    emap = entity_map_from_edges(
-        vocab, connected_components(link_candidate_edges(vocab)))
-    canon = emap.select("entity_id", "canonical_id").distinct()
-    return (
-        vocab.join(canon, "entity_id")
-        .filter(F.col("entity_id") == F.col("canonical_id"))
-        .select("canonical_id", F.col("canonical_name").alias("name"),
-                "entity_type")
-    )
+    return nodes_df(vocab, entity_map_from_edges(
+        vocab, connected_components(link_candidate_edges(vocab))))
 
 
 def _kgp_entity_map(spark, sf_dir):

@@ -31,12 +31,6 @@ ENTITY_VOCAB = T.StructType([
     T.StructField("aliases", T.ArrayType(T.StringType()), False),
 ])
 
-PREDICATES = T.StructType([
-    T.StructField("pred_id", T.IntegerType(), False),
-    T.StructField("pred", T.StringType(), False),
-    T.StructField("cue", T.StringType(), True),
-])
-
 MENTIONS = T.StructType([
     T.StructField("conv_id", T.StringType(), False),
     T.StructField("turn_idx", T.IntegerType(), False),
@@ -51,6 +45,7 @@ RAW_TRIPLES = T.StructType([
     T.StructField("subj", T.StringType(), False),
     T.StructField("pred", T.StringType(), False),
     T.StructField("obj", T.StringType(), False),
+    T.StructField("ts", T.TimestampType(), True),
 ])
 
 # one extraction pass emits ONE compact row per turn, with mentions and

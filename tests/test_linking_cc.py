@@ -1,6 +1,9 @@
 """Linking + connected-components tests (FIXTURES.md §5 rows 3 & 6)."""
 
+import glob
 import importlib
+import os
+import tempfile
 
 import pandas as pd
 import pytest
@@ -148,9 +151,16 @@ def test_salt_invariance(spark, small_run, small_spark_inputs, monkeypatch):
 
 def test_distributed_cc_on_star_is_exact(spark):
     """A 300-spoke hub through the distributed loop gives the exact
-    assignment: every spoke canonicalizes to the hub."""
+    assignment: every spoke canonicalizes to the hub.  The loop runs in the
+    caller's session and leaves no files and no conf behind."""
+    confs = ("spark.sql.constraintPropagation.enabled", "spark.sql.maxPlanStringLength")
+    before = {k: spark.conf.get(k) for k in confs}
+    hops = set(glob.glob(os.path.join(tempfile.gettempdir(), "kgp_cc_hop_*")))
     star = spark.createDataFrame(
         pd.DataFrame([(0, i) for i in range(1, 301)], columns=["a", "b"]))
-    got = {(int(r["entity_id"]), int(r["canonical_id"]))
-           for r in connected_components(star, small_graph_threshold=0).collect()}
+    result = connected_components(star, small_graph_threshold=0)
+    got = {(int(r["entity_id"]), int(r["canonical_id"])) for r in result.collect()}
     assert got == {(i, 0) for i in range(301)}
+    assert result.sparkSession is spark
+    assert {k: spark.conf.get(k) for k in confs} == before
+    assert set(glob.glob(os.path.join(tempfile.gettempdir(), "kgp_cc_hop_*"))) <= hops

@@ -8,6 +8,8 @@
 
 import pandas as pd
 
+from kgp import schemas
+
 
 def _pdf(df, keys):
     p = df.toPandas().sort_values(keys).reset_index(drop=True)
@@ -73,6 +75,13 @@ def test_metrics_lineage_rows(small_run):
     assert set(m["stage"].unique()) >= {"ordered", "extracted", "entity_map", "triples", "nodes", "edges"}
     assert (m["output_rows"] >= 0).all()
     assert m["snapshot_id"].notna().all()
+    # every declared schema is the shape the run actually produces
+    for name, schema in [("extracted", schemas.EXTRACTED), ("entity_map", schemas.ENTITY_MAP),
+                         ("nodes", schemas.NODES), ("edges", schemas.EDGES),
+                         ("errors", schemas.ERRORS), ("mentions", schemas.MENTIONS),
+                         ("raw_triples", schemas.RAW_TRIPLES)]:
+        got = [(f.name, f.dataType.simpleString()) for f in small_run[name].schema.fields]
+        assert got == [(f.name, f.dataType.simpleString()) for f in schema.fields], name
 
 
 def test_edge_turns_match_oracle(spark):

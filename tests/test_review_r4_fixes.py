@@ -14,6 +14,7 @@
 
 from __future__ import annotations
 
+import importlib
 import random
 import threading
 
@@ -25,6 +26,8 @@ from kgp.ops import simsearch
 from kgp.ops.common import pin, release_pins
 from kgp.ops.tables import load
 
+cc_mod = importlib.import_module("kgp.pipeline.cc")
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -33,14 +36,27 @@ def _random_edges(rng, n_nodes, n_edges):
             for _ in range(n_edges)]
 
 
-def test_window_cc_matches_union_find(spark):
+def test_window_cc_matches_union_find(spark, monkeypatch):
     rng = random.Random(4)
-    # enough rounds that the CHECKPOINT_EVERY boundary is crossed too
     edges = _random_edges(rng, 400, 900) + [(i, i + 1) for i in range(120)]
+    # a shuffled 200-node path on fresh ids needs enough rounds that the
+    # CHECKPOINT_EVERY localCheckpoint fires inside the loop
+    path = list(range(1000, 1200))
+    random.Random(4).shuffle(path)
+    edges += list(zip(path, path[1:]))
     edf = spark.createDataFrame(edges, "a long, b long")
+
+    digests = []
+    digest = cc_mod._digest
+    monkeypatch.setattr(cc_mod, "_digest",
+                        lambda e: digests.append(1) or digest(e))
     window_form = {(r["entity_id"], r["canonical_id"])
                    for r in connected_components(
                        edf, small_graph_threshold=0).collect()}
+    # one digest of the input, then one per round
+    assert len(digests) - 1 > CHECKPOINT_EVERY
+    # the loop runs in the caller's session with constraint propagation on
+    assert spark.conf.get("spark.sql.constraintPropagation.enabled") == "true"
     exact = {(r["entity_id"], r["canonical_id"])
              for r in connected_components(edf).collect()}  # union-find
     assert window_form == exact
