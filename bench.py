@@ -93,8 +93,7 @@ def run_kgp(spark, n_conv: int, repeats: int = 1) -> dict:
     for _ in range(max(1, repeats)):
         t0 = time.time()
         vocab = spark.createDataFrame(vocab_pd)
-        out = run_pipeline(spark, transcripts, vocab,
-                           surface_rows=synth.vocab_surface_rows(vocab_pd))
+        out = run_pipeline(spark, transcripts, vocab)
         _materialize(out["edges"])
         best = min(best, time.time() - t0)
     transcripts.unpersist()

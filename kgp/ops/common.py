@@ -244,5 +244,7 @@ def dup_key_col(text_col) -> Column:
 def canon_sql(col: str) -> str:
     r"""DuckDB twin of canon_col.  [\s\v], not \s: RE2's \s lacks \v,
     which the Spark twin's Java \s has — the explicit class closes the
-    one gap between the engines' whitespace classes."""
-    return f"trim(regexp_replace({col}, '[\\s\\v]+', ' ', 'g'))"
+    one gap between the engines' whitespace classes.  trim(x, ' '), not
+    trim(x): DuckDB's one-argument trim also strips Unicode spaces
+    (U+00A0, U+2003, U+3000 ...) that Spark's trim and canon_ws keep."""
+    return f"trim(regexp_replace({col}, '[\\s\\v]+', ' ', 'g'), ' ')"

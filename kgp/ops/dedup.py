@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..textops import normalize_surface, shingle_set
-from .common import canon_col, dup_key_col, explode_once, pin, spread
+from .common import canon_col, canon_sql, dup_key_col, explode_once, pin, spread
 
 # ---------------------------------------------------------------------------
 # exact dedup (D1 — sha256 content hash, create_faiss_index.py:19-37)
@@ -206,7 +206,7 @@ def minhash_pairs_sql(table: str = "documents", text_col: str = "text",
                           -- so NULL text gets the sentinel signature exactly like ''
                           -- — a bare lower(NULL) would NULL the whole chain and emit
                           -- zero pairs for NULL-text docs (engine drift)
-                          trim(regexp_replace(lower(coalesce({text_col}, '')), '[\\s\\v]+', ' ', 'g'), ' ') AS nt
+                          {canon_sql(f"lower(coalesce({text_col}, ''))")} AS nt
                    FROM {table}),
         w AS (SELECT id, nt, string_split(nt, ' ') AS ws FROM d),
         shs AS (SELECT id,
@@ -507,7 +507,7 @@ def ngram_jaccard_sql(table: str, text_col: str, id_col: str,
         sizes_sql = "SELECT id, COUNT(*) AS n FROM ex GROUP BY id"
     return f"""
         WITH d AS (SELECT {id_col} AS id,
-                          trim(regexp_replace(lower({text_col}), '[\\s\\v]+', ' ', 'g'), ' ') AS nt
+                          {canon_sql(f"lower({text_col})")} AS nt
                    FROM {table}),
         w AS (SELECT id, string_split(nt, ' ') AS ws, nt FROM d),
         sh AS (SELECT id, CASE WHEN len(ws) >= 2
@@ -540,7 +540,7 @@ def masked_dup_groups(df: DataFrame, text_col: str, id_col: str,
 def masked_dup_groups_sql(table: str, text_col: str, id_col: str,
                           min_group: int = 2) -> str:
     return f"""
-        SELECT regexp_replace(trim(regexp_replace(lower({text_col}), '[\\s\\v]+', ' ', 'g'), ' '),
+        SELECT regexp_replace({canon_sql(f"lower({text_col})")},
                               '[0-9]+', '#', 'g') AS dup_key,
                COUNT(*) AS n_members, MIN({id_col}) AS keep_id
         FROM {table} GROUP BY 1 HAVING COUNT(*) >= {min_group}

@@ -665,23 +665,3 @@ FROM (
             ON e.qid = a.qid AND e.vec_id = a.vec_id))
 """
 
-
-def ann_topk_lsh(df: DataFrame, query_id: int, k: int = 10,
-                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k: only vectors sharing >=1 LSH band with the query are
-    scored exactly.  Approximate (recall < 1 by design) — rows-only check."""
-    buckets = lsh_bucket_ids(df, id_col, vec_col)
-    q_buckets = buckets.filter(F.col("id") == query_id).select("bkey")
-    cand_ids = (
-        buckets.join(F.broadcast(q_buckets), "bkey")
-        .filter(F.col("id") != query_id)
-        .select(F.col("id").alias(id_col)).distinct()
-    )
-    cand = df.join(cand_ids, id_col)
-    q = df.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qv"))
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(F.col(id_col),
-                _cos(vec_col, "qv").alias("score"))
-        .orderBy(F.desc("score"), id_col).limit(k)
-    )

@@ -16,12 +16,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-# normalized text: lowercase → collapse whitespace → trim.  Collapse runs
-# FIRST so non-space edge whitespace (tabs) reduces to a trimmable space;
-# the explicit [\s\v] class on the DuckDB side closes the one gap between
-# Java's \s (has \v) and RE2's (doesn't)
-_NORM = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
-_NORM_DUCK = "trim(regexp_replace(lower(text), '[\\s\\v]+', ' ', 'g'), ' ')"
+from .common import canon_col, canon_sql
+
+# normalized text: lowercase, then the cross-engine whitespace canon of
+# ops.common (canon_col on Spark, canon_sql on DuckDB)
+_NORM_DUCK = canon_sql("lower(text)")
+
+
+def _norm() -> F.Column:
+    return canon_col(F.lower("text"))
 
 # language marker words (stand-in for an n-gram language model; deterministic)
 LANG_MARKERS = {
@@ -34,7 +37,7 @@ LANG_MARKERS = {
 
 def token_stats(docs: DataFrame) -> DataFrame:
     """Per-language token statistics (T6 + A6)."""
-    toks = F.split(F.expr(_NORM), " ")
+    toks = F.split(_norm(), " ")
     return (
         docs.select("lang", F.size(toks).alias("n_tokens"), F.col("n_chars"))
         .groupBy("lang")
@@ -58,7 +61,7 @@ TOKEN_STATS_SQL = f"""
 def _quality_cols() -> list[F.Column]:
     """The aliased quality-heuristic expressions (single-sourced so the
     standalone operator and the composed doc_profile cannot drift)."""
-    norm = F.expr(_NORM)
+    norm = _norm()
     toks = F.split(norm, " ")
     n_tok = F.size(toks)
     uniq_ratio = F.round(F.size(F.array_distinct(toks)) / n_tok, 4)
@@ -99,7 +102,7 @@ def _lang_cols() -> list[F.Column]:
     """Aliased score_<lang> expressions + pred_lang (argmax, tie-break in
     sorted lang order) — pred is built from the score EXPRESSIONS, not
     column references, so the whole set composes into one select."""
-    toks = F.split(F.expr(_NORM), " ")
+    toks = F.split(_norm(), " ")
 
     def marker_count(markers: tuple[str, ...]) -> F.Column:
         # single-arg lambda: a 2-arg lambda would make Spark pass the
@@ -166,7 +169,7 @@ DOC_PROFILE_SQL = f"""
 def fingerprints(docs: DataFrame) -> DataFrame:
     """Per-source fingerprint dedup stats: md5 of normalized text as the
     document fingerprint (D1 analog), distinct-fingerprint counts per source."""
-    fp = F.substring(F.md5(F.expr(_NORM)), 1, 16)
+    fp = F.substring(F.md5(_norm()), 1, 16)
     return (
         docs.select("source", fp.alias("fp"))
         .groupBy("source")

@@ -204,7 +204,7 @@ def t7_chunking_errors_sql(table: str = "documents", group_col: str = "source",
 # piece or a merge product) and can no longer absorb the incoming element.
 
 def _canon_list_sql(lst: str) -> str:
-    c = "trim(regexp_replace(p, '[\\s\\v]+', ' ', 'g'))"
+    c = _canon_sql("p")
     return (f"list_transform(list_filter({lst}, p -> {c} <> ''), "
             f"p -> {c})")
 

@@ -4,8 +4,9 @@ One Arrow-batched pass over the ordered turns emits BOTH mention rows and
 raw triple rows (union schema EXTRACTED) — the per-sentence NER loop of the
 reference (src/data/extract_entities.py:29-50) re-expressed as an
 iterator-of-batches pandas transform: the gazetteer matcher is built once
-per python worker from a broadcast surface list (analog of loading the NER
-model once per executor, SURVEY.md §2.9 M1) and applied to every batch.
+on the driver and broadcast; each python worker unpickles the broadcast
+value once and caches it (analog of loading the NER model once per
+executor, SURVEY.md §2.9 M1), then applies it to every batch.
 
 No per-row Python at the Spark API layer (input_hint requirement): Spark
 hands us Arrow record batches; the tight loop is plain-python over an
@@ -23,35 +24,12 @@ from pyspark.sql import DataFrame
 from .. import schemas
 from ..textops import GazetteerMatcher, extract_turn
 
-# per-python-worker matcher cache — python workers are reused across tasks,
-# so the matcher (like an NER model) is constructed once per executor core.
-# Keyed on a CONTENT fingerprint computed driver-side, never id(broadcast):
-# after a broadcast is GC'd its worker-side object can be freed and a later
-# broadcast allocated at the same address (CPython id reuse), which would
-# silently serve a stale gazetteer for a different vocabulary.  Bounded,
-# not cleared per miss, so interleaved extractions don't thrash rebuilds.
-_MATCHER_CACHE: dict[str, GazetteerMatcher] = {}
-_MATCHER_CACHE_MAX = 4
-
-
-def _get_matcher(broadcast, fingerprint: str) -> GazetteerMatcher:
-    m = _MATCHER_CACHE.get(fingerprint)
-    if m is None:
-        if len(_MATCHER_CACHE) >= _MATCHER_CACHE_MAX:
-            # evict ONE entry (oldest insertion), not the whole cache:
-            # clearing everything makes interleaved extractions over >4
-            # vocabularies rebuild every matcher on every task — the
-            # thrash the bound exists to avoid
-            _MATCHER_CACHE.pop(next(iter(_MATCHER_CACHE)))
-        m = GazetteerMatcher(broadcast.value)
-        _MATCHER_CACHE[fingerprint] = m
-    return m
-
 
 def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
     """(surface, entity_id, entity_type) for every canonical name and alias
-    of ``vocab`` — the gazetteer list extract() broadcasts, collected to
-    the driver (one row per surface, vocabulary-sized)."""
+    of ``vocab``, collected to the driver (one row per surface,
+    vocabulary-sized) — the list extract() builds its broadcast matcher
+    from."""
     return [
         (r["surface"], int(r["entity_id"]), r["entity_type"])
         for r in vocab.selectExpr(
@@ -67,14 +45,10 @@ def extract(ordered: DataFrame, surface_rows: list[tuple[str, int, str]],
     ``cue_toks`` overrides the predicate-cue dictionary (textops._CUE_TOKS
     shape); the transcript pipeline always uses the default — the override
     exists for the documents-corpus oracle entry (ops.docextract)."""
-    import hashlib
-
-    sc = ordered.sparkSession.sparkContext
-    b_surfaces = sc.broadcast(surface_rows)
-    vocab_fp = hashlib.md5(repr(surface_rows).encode()).hexdigest()
+    b_matcher = ordered.sparkSession.sparkContext.broadcast(GazetteerMatcher(surface_rows))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _get_matcher(b_surfaces, vocab_fp)
+        matcher = b_matcher.value
         for pdf in batches:
             # one compact row per turn: mention/triple tuples nest into
             # struct arrays (schemas.EXTRACTED) — conv_id/ts are never

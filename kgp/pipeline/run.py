@@ -11,8 +11,7 @@ TableIO snapshot whose manifest records the input fingerprint (upstream
 snapshot ids chained).  A rerun reads any stage whose snapshot is
 committed against the same input — the reference's skip-existing resume
 (extract_paragraphs_faster.py:20-26 etc.) promoted to atomic snapshot
-semantics.  ``fail_after`` injects a crash for the kill-and-rerun test
-(FIXTURES.md §5 resume row).
+semantics.
 
 Without one the run is in memory (the bench harnesses and ad-hoc
 queries): no TableIO, no manifest, no resume.  Each stage's plan is
@@ -54,15 +53,10 @@ from .order import order_turns, validation_errors
 STAGES = ("ordered", "extracted", "entity_map", "triples", "nodes", "edges", "errors")
 
 
-class InjectedFailure(RuntimeError):
-    pass
-
-
 def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
                  out_root: str | None = None, input_fingerprint: str | None = None, *,
-                 surface_rows: list[tuple[str, int, str]] | None = None,
                  small_graph_threshold: int = SMALL_GRAPH_EDGES,
-                 fail_after: str | None = None, force: bool = False) -> dict:
+                 force: bool = False) -> dict:
     """Run (or resume) S1..S5; returns {'io': TableIO or None,
     'recomputed': [...], '<stage>': DataFrame for each stage}.
     ``recomputed`` lists the stages computed by this call in STAGES order,
@@ -81,8 +75,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
             return io.read(spark, name), io.manifest(name)["snapshot_id"]
         manifest = io.write(compute(), name, input_fingerprint=fingerprint)
         written.add(name)
-        if fail_after == name:
-            raise InjectedFailure(f"injected failure after committing stage {name!r}")
         return io.read(spark, name), manifest["snapshot_id"]
 
     def vocab_branch() -> tuple[DataFrame, str | None]:
@@ -100,29 +92,17 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame, vocab: DataFrame,
         # must not pay a vocabulary-sized driver collect it never uses
         extracted, snap2 = stage(
             "extracted", f"{input_fingerprint}/{snap1}",
-            lambda: extract(ordered, collect_surface_rows(vocab)
-                            if surface_rows is None else surface_rows),
+            lambda: extract(ordered, collect_surface_rows(vocab)),
         )
     emap, snap3 = vocab_done.result()
 
     raw_triples = raw_triples_view(extracted)
     fp_mat = f"{input_fingerprint}/{snap2}/{snap3}"
-    mat_out: list[tuple[DataFrame, DataFrame, DataFrame] | None] = [None]
-
-    def _mat(idx: int):
-        # materialize() is derived ONCE and shared by whichever of
-        # triples/nodes/edges turn out to be uncommitted — a partial resume
-        # (e.g. killed after 'triples') must not rebuild the corpus-scale
-        # resolve joins independently per output table
-        def compute() -> DataFrame:
-            if mat_out[0] is None:
-                mat_out[0] = materialize(raw_triples, emap, vocab)
-            return mat_out[0][idx]
-        return compute
-
-    triples, _ = stage("triples", fp_mat, _mat(0))
-    nodes, _ = stage("nodes", fp_mat, _mat(1))
-    edges, _ = stage("edges", fp_mat, _mat(2))
+    # plans only (no job runs): each uncommitted table's write runs its own
+    triples_df, nodes_df, edges_df = materialize(raw_triples, emap, vocab)
+    triples, _ = stage("triples", fp_mat, lambda: triples_df)
+    nodes, _ = stage("nodes", fp_mat, lambda: nodes_df)
+    edges, _ = stage("edges", fp_mat, lambda: edges_df)
 
     # D4 failure ledger: validation rejects + unmatched surfaces, written
     # as a committed table like any other stage output (reference

@@ -510,12 +510,9 @@ def _kgp_edges(spark, sf_dir):
     recursive-CTE CC twin)."""
     from .fixtures import load_transcripts, load_vocab_pd
     from .pipeline import run_pipeline
-    from .synth import vocab_surface_rows
 
-    vocab_pd = load_vocab_pd()
-    vocab = spark.createDataFrame(vocab_pd)
-    return run_pipeline(spark, load_transcripts(spark), vocab,
-                        surface_rows=vocab_surface_rows(vocab_pd))["edges"]
+    vocab = spark.createDataFrame(load_vocab_pd())
+    return run_pipeline(spark, load_transcripts(spark), vocab)["edges"]
 
 
 # ---------------------------------------------------------------------------

@@ -480,7 +480,7 @@ def merge_split_sentences(text: str, min_chars: int = 30, max_chars: int = 500) 
 def canon_ws(s: str) -> str:
     """Whitespace-canonical form: single spaces, no edge whitespace.
 
-    ASCII class (== the JVM twin textseg._canon_col's Java \\s and the
+    ASCII class (== the JVM twin ops.common.canon_col's Java \\s and the
     DuckDB twins' [\\s\\v]): after canon, splitting on the single space
     char gives the SAME tokens on all three engines — a Python .split()
     here would also break on Unicode whitespace the others keep, silently

@@ -287,14 +287,20 @@ def test_masked_dup_c0_and_unicode_digit_parity(spark):
     assert any("\x1c" in k for k in keys)  # \x1c survives as a character
 
 
-def test_canon_sql_vertical_tab_parity():
-    """llm._canon_sql must collapse \\v like the Spark _canon (Java \\s)."""
-    from kgp.ops.llm import _canon_sql
+def test_canon_sql_vertical_tab_parity(spark):
+    """canon_sql (DuckDB), canon_col (Spark) and textops.canon_ws agree:
+    \\v collapses like Java's \\s, and Unicode edge spaces survive (DuckDB's
+    one-argument trim strips them; Spark's trim and canon_ws do not)."""
+    from kgp.ops.common import canon_col, canon_sql
 
+    texts = ["a" + chr(11) + "b  c", "\xa0a b\xa0", "\u3000x\u3000", "\u2003y"]
+    pdf = pd.DataFrame({"i": range(len(texts)), "s": texts})
     con = duckdb.connect()
-    lit = "'a" + chr(11) + "b  c'"
-    got = con.execute("SELECT " + _canon_sql(lit)).fetchone()[0]
-    assert got == "a b c"
+    con.register("t", pdf)
+    duck = [r[0] for r in con.execute(f"SELECT {canon_sql('s')} FROM t ORDER BY i").fetchall()]
+    jvm = [r[0] for r in spark.createDataFrame(pdf).orderBy("i").select(canon_col("s")).collect()]
+    assert duck[0] == "a b c"
+    assert duck == jvm == [textops.canon_ws(t) for t in texts]
 
 
 def test_coref_sql_vertical_tab_parity(spark):

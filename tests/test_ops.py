@@ -164,7 +164,7 @@ def test_ann_subset_of_exact_ordering(spark, emb):
     """ANN results are exact-scored; every returned score must equal the
     brute-force score for that id (approximation only affects the set)."""
     exact = dict(_np_cosine_topk(emb.toPandas(), 0, 10**6))
-    ann = simsearch.ann_topk_lsh(emb, query_id=0, k=10).collect()
+    ann = simsearch.ann_batch_topk(emb.filter(emb.vec_id == 0), emb, k=10).collect()
     assert len(ann) > 0
     for r in ann:
         assert math.isclose(r["score"], exact[r["vec_id"]], abs_tol=2e-6)

@@ -120,3 +120,35 @@ def test_edge_turns_match_oracle(spark):
     by_turn = {r["turn_idx"]: [tuple(t) for t in r["triples"]] for r in got.collect()}
     assert 0 in by_turn and ("conv:c0", "uses_tool", "tool:sql") in by_turn[0]
     assert 1 in by_turn and by_turn[1] == []
+
+
+def test_extract_serves_each_calls_gazetteer(spark):
+    """extract() over surface lists A, then B, then A again in one session:
+    every call matches with its own list's gazetteer, never with a matcher
+    a Python worker kept from an earlier call."""
+    from kgp import oracle, synth
+    from kgp.pipeline.extract import extract, mentions_view
+    from kgp.textops import GazetteerMatcher
+
+    vocab_pd = synth.gen_entity_vocab(30)
+    ordered_pd = synth.gen_transcripts_pandas(12, vocab_pd)
+    ordered = spark.createDataFrame(ordered_pd)
+    rows = synth.vocab_surface_rows(vocab_pd)
+    ids = sorted({eid for _s, eid, _t in rows})
+    lists = {
+        "A": [r for r in rows if r[1] in ids[::2]],
+        "B": [r for r in rows if r[1] not in ids[::2]],
+    }
+    keys = ["conv_id", "turn_idx", "sent_idx", "mention", "entity_type"]
+
+    def rows_of(pdf):
+        return sorted(map(tuple, pdf[keys].itertuples(index=False)))
+
+    got = {}
+    for name in ("A", "B", "A"):
+        m = rows_of(mentions_view(extract(ordered, lists[name])).toPandas())
+        want, _ = oracle.extract(ordered_pd, GazetteerMatcher(lists[name]))
+        assert m == rows_of(want), name
+        assert m, name
+        assert got.setdefault(name, m) == m, name
+    assert got["A"] != got["B"]

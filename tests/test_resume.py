@@ -1,11 +1,34 @@
 """Idempotent-resume semantics (FIXTURES.md §5 resume row; reference D3
 skip-existing checks, extract_paragraphs_faster.py:20-26)."""
 
+from contextlib import contextmanager
+
 import pytest
 
 from kgp.io import TableIO
 from kgp.pipeline import run_pipeline
-from kgp.pipeline.run import STAGES, InjectedFailure
+from kgp.pipeline.run import STAGES
+
+
+class InjectedFailure(RuntimeError):
+    pass
+
+
+@contextmanager
+def crash_after(table: str):
+    """Inside the block, TableIO.write raises right after it commits
+    ``table``: the kill of a kill-and-rerun."""
+    write = TableIO.write
+
+    def write_then_crash(self, df, name, *args, **kwargs):
+        manifest = write(self, df, name, *args, **kwargs)
+        if name == table:
+            raise InjectedFailure(f"injected failure after committing stage {name!r}")
+        return manifest
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(TableIO, "write", write_then_crash)
+        yield
 
 
 def test_kill_and_rerun_identical_and_no_recompute(spark, tiny_spark_inputs, tmp_path):
@@ -21,8 +44,8 @@ def test_kill_and_rerun_identical_and_no_recompute(spark, tiny_spark_inputs, tmp
 
     # fresh warehouse, crash after S2 commit
     out2 = str(tmp_path / "wh2")
-    with pytest.raises(InjectedFailure):
-        run_pipeline(spark, t, v, out2, "resume:v1", fail_after="extracted")
+    with crash_after("extracted"), pytest.raises(InjectedFailure):
+        run_pipeline(spark, t, v, out2, "resume:v1")
     io2 = TableIO(out2)
     assert io2.is_committed("ordered") and io2.is_committed("extracted")
     assert not io2.is_committed("triples")
@@ -40,8 +63,8 @@ def test_corpus_failure_raises_after_vocab_branch_joins(spark, tiny_spark_inputs
     overlapped vocabulary branch has committed and no job is left running."""
     t, v = tiny_spark_inputs
     out = str(tmp_path / "wh")
-    with pytest.raises(InjectedFailure):
-        run_pipeline(spark, t, v, out, "join:v1", fail_after="ordered")
+    with crash_after("ordered"), pytest.raises(InjectedFailure):
+        run_pipeline(spark, t, v, out, "join:v1")
     io = TableIO(out)
     assert io.is_committed("ordered") and io.is_committed("entity_map")
     assert not io.is_committed("extracted")
@@ -53,8 +76,8 @@ def test_vocab_branch_failure_is_raised_and_resumes(spark, tiny_spark_inputs, tm
     on its thread, and the rerun reuses its committed snapshot."""
     t, v = tiny_spark_inputs
     out = str(tmp_path / "wh")
-    with pytest.raises(InjectedFailure, match="entity_map"):
-        run_pipeline(spark, t, v, out, "vfail:v1", fail_after="entity_map")
+    with crash_after("entity_map"), pytest.raises(InjectedFailure, match="entity_map"):
+        run_pipeline(spark, t, v, out, "vfail:v1")
     io = TableIO(out)
     assert all(io.is_committed(n) for n in ("ordered", "extracted", "entity_map"))
     assert not io.is_committed("triples")

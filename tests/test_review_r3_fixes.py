@@ -1,6 +1,6 @@
 """Regressions for the round-3 adversarial review of the pipeline core:
-punctuation-only-alias mega-merge, streaming null guards, scipy-clip
-minima semantics, and the vocab-fingerprinted matcher cache."""
+punctuation-only-alias mega-merge, streaming null guards and scipy-clip
+minima semantics."""
 
 from __future__ import annotations
 

@@ -73,13 +73,11 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     trigger — observed as executors wedged at their storage limit)."""
     from kgp.pipeline import run_pipeline
     from kgp.pipeline.cc import SMALL_GRAPH_EDGES
-    from kgp.pipeline.extract import collect_surface_rows
     from tools.cluster import executor_session
 
     spark = executor_session(n_exec, app_name=f"kgp-scale-{n_exec}exec")
     transcripts = spark.read.parquet(f"{INPUT_DIR}/transcripts")
     vocab = spark.read.parquet(f"{INPUT_DIR}/vocab")
-    surface_rows = collect_surface_rows(vocab)
     n_turns = transcripts.count()
 
     t0 = time.monotonic()
@@ -87,7 +85,7 @@ def single_run(n_exec: int, force_cc: bool = False) -> None:
     # force_cc=0-threshold runs the distributed large-star/small-star loop
     # even though the link graph is below the driver-union-find cutoff —
     # the scaling evidence for the at-scale CC path (VERDICT r2 ask)
-    out = run_pipeline(spark, transcripts, vocab, surface_rows=surface_rows,
+    out = run_pipeline(spark, transcripts, vocab,
                        small_graph_threshold=0 if force_cc else SMALL_GRAPH_EDGES)
     out["edges"].write.format("noop").mode("overwrite").save()
     dt = time.monotonic() - t0

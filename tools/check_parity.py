@@ -80,7 +80,8 @@ def main() -> int:
     from kgp.ops.common import release_pins
     from kgp.session import get_spark
 
-    spark = get_spark(app_name="parity-check")
+    spark = get_spark(app_name="parity-check",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     create_views(con, SF_DIR)
 

@@ -56,7 +56,8 @@ def main() -> int:
     from kgp.queries import PARITY_CAPS, REGISTRY
     from kgp.session import get_spark
 
-    spark = get_spark(app_name="driver-gate-sim")
+    spark = get_spark(app_name="driver-gate-sim",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     create_views(con, SF_DIR)
 

@@ -29,8 +29,7 @@ def main() -> None:
     transcripts = spark.createDataFrame(transcripts_pd)
     vocab = spark.createDataFrame(vocab_pd)
 
-    out = run_pipeline(spark, transcripts, vocab,
-                       surface_rows=synth.vocab_surface_rows(vocab_pd))
+    out = run_pipeline(spark, transcripts, vocab)
     golden = oracle.run_pipeline(transcripts_pd, vocab_pd)
 
     st = set(map(tuple, out["triples"].select("subj", "pred", "obj").distinct()
