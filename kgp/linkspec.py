@@ -67,7 +67,7 @@ def blocking_keys(name: str) -> list[str]:
     return [f"d:{d}" for d in dels]
 
 
-def block_is_capped(key: str, size: int) -> bool:
+def block_is_capped(size: int) -> bool:
     """Shared corpus-wide frequency-cap rule."""
     return size > MAX_BLOCK_DF
 

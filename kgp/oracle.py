@@ -119,8 +119,8 @@ def link_entities(vocab: pd.DataFrame) -> pd.DataFrame:
     for ids in by_norm.values():
         for other in ids[1:]:
             uf.union(ids[0], other)
-    for key, group in by_block.items():
-        if len(group) < 2 or linkspec.block_is_capped(key, len(group)):
+    for group in by_block.values():
+        if len(group) < 2 or linkspec.block_is_capped(len(group)):
             continue
         for i in range(len(group)):
             for j in range(i + 1, len(group)):

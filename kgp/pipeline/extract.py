@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 
 from .. import schemas
 from ..textops import GazetteerMatcher, extract_turn
+from .link import surfaces_df
 
 
 def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
@@ -30,12 +31,8 @@ def collect_surface_rows(vocab: DataFrame) -> list[tuple[str, int, str]]:
     of ``vocab``, collected to the driver (one row per surface,
     vocabulary-sized) — the list extract() builds its broadcast matcher
     from."""
-    return [
-        (r["surface"], int(r["entity_id"]), r["entity_type"])
-        for r in vocab.selectExpr(
-            "entity_id", "entity_type",
-            "explode(concat(array(canonical_name), aliases)) as surface").collect()
-    ]
+    return [(r["surface"], int(r["entity_id"]), r["entity_type"])
+            for r in surfaces_df(vocab).collect()]
 
 
 def extract(ordered: DataFrame, surface_rows: list[tuple[str, int, str]],

@@ -43,9 +43,10 @@ def _verify(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 def surfaces_df(vocab: DataFrame) -> DataFrame:
-    """(entity_id, surface) — canonical name + all aliases."""
+    """(entity_id, entity_type, surface) — canonical name + all aliases: S3's
+    surface rows and, collected, S2's gazetteer."""
     return vocab.select(
-        "entity_id",
+        "entity_id", "entity_type",
         F.explode(F.concat(F.array("canonical_name"), "aliases")).alias("surface"),
     )
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-SALT_BUCKETS = 16  # edges writer spread (see materialize)
+SALT_BUCKETS = 16  # edges writer spread (see spread_writers)
 
 
 def _resolve(t: DataFrame, smap: DataFrame, col: str) -> DataFrame:
@@ -34,6 +34,23 @@ def _resolve(t: DataFrame, smap: DataFrame, col: str) -> DataFrame:
         t.withColumn(col, resolved)
         .filter(F.col("_srf").isNull() | F.col("_cid").isNotNull())
         .drop("_srf", "_cid")
+    )
+
+
+def spread_writers(edges: DataFrame) -> DataFrame:
+    """Salted repartition of edges(src, conv_id, ts, ...) on the entity key:
+    hot src values spread over SALT_BUCKETS writer partitions (the salt is a
+    content hash, so the layout is deterministic).
+
+    To be precise about what this buys: it is a WRITER SPREAD — it defuses
+    single-writer hot partitions under Zipf head entities; it does NOT
+    preserve per-src locality for later reads (a consumer wanting src
+    clustering reads the pred-partitioned materialized table instead)."""
+    parts = edges.sparkSession.sparkContext.defaultParallelism
+    return edges.repartition(
+        parts,
+        F.col("src"),
+        F.pmod(F.xxhash64("conv_id", "ts"), F.lit(SALT_BUCKETS)).alias("_salt"),
     )
 
 
@@ -88,16 +105,4 @@ def materialize(raw_triples: DataFrame, entity_map: DataFrame, vocab: DataFrame)
             "pred", "conv_id", "ts",
         )
     )
-    # salted repartition on entity key: hot src values spread over
-    # SALT_BUCKETS writer partitions (salt is a content hash → deterministic).
-    # To be precise about what this buys: it is a WRITER SPREAD — it defuses
-    # single-writer hot partitions under Zipf head entities; it does NOT
-    # preserve per-src locality for later reads (a consumer wanting src
-    # clustering reads the pred-partitioned materialized table instead)
-    parts = edges.sparkSession.sparkContext.defaultParallelism
-    edges = edges.repartition(
-        parts,
-        F.col("src"),
-        F.pmod(F.xxhash64("conv_id", "ts"), F.lit(SALT_BUCKETS)).alias("_salt"),
-    )
-    return triples, nodes, edges
+    return triples, nodes, spread_writers(edges)

@@ -14,13 +14,11 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(master: str | None = None, app_name: str = "kgp",
-              shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or os.environ.get("KGP_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cpus if n in ("", "*") else max(int(n), 4) if n.isdigit() else cpus
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
+    shuffle_partitions = cpus if n in ("", "*") else max(int(n), 4) if n.isdigit() else cpus
 
     b = (
         SparkSession.builder.master(master)

@@ -11,7 +11,8 @@ SMALL_CONVS, SMALL_ENTS = 600, 200
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(master="local[4]", app_name="kgp-tests", shuffle_partitions=8)
+    s = get_spark(master="local[4]", app_name="kgp-tests",
+                  extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
     s.stop()
 

@@ -28,7 +28,7 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-from kgp.pipeline.materialize import SALT_BUCKETS  # noqa: E402 — after sys.path
+from kgp.pipeline.materialize import SALT_BUCKETS, spread_writers  # noqa: E402 — after sys.path
 
 N_ROWS = int(os.environ.get("KGP_MAT_SKEW_ROWS", "40000000"))
 HEAD_PCT = 39            # head entity's edge share, matching the fixture
@@ -36,10 +36,10 @@ N_ENTITIES = 10_000
 ROUNDS = int(os.environ.get("KGP_MAT_SKEW_ROUNDS", "3"))
 
 
-def build_edges(spark):
+def build_edges(spark, n_rows: int = N_ROWS):
     from pyspark.sql import functions as F
 
-    ids = spark.range(N_ROWS)
+    ids = spark.range(n_rows)
     # deterministic Zipf-head: HEAD_PCT% of rows land on src=0, the rest
     # spread uniformly — the worst case the salted writer exists for
     h = F.pmod(F.xxhash64("id"), F.lit(100))
@@ -56,17 +56,17 @@ def build_edges(spark):
     )
 
 
-def one_write(spark, salted: bool) -> float:
-    from pyspark.sql import functions as F
-
+def layout(spark, salted: bool):
+    """The edges frame in the production writer spread, or in the unsalted
+    repartition(src) baseline."""
     edges = build_edges(spark)
-    parts = spark.sparkContext.defaultParallelism
     if salted:
-        out = edges.repartition(
-            parts, F.col("src"),
-            F.pmod(F.xxhash64("conv_id", "ts"), F.lit(SALT_BUCKETS)).alias("_salt"))
-    else:
-        out = edges.repartition(parts, F.col("src"))
+        return spread_writers(edges)
+    return edges.repartition(spark.sparkContext.defaultParallelism, "src")
+
+
+def one_write(spark, salted: bool) -> float:
+    out = layout(spark, salted)
     t0 = time.monotonic()
     out.write.format("noop").mode("overwrite").save()
     return time.monotonic() - t0
@@ -75,15 +75,7 @@ def one_write(spark, salted: bool) -> float:
 def partition_balance(spark, salted: bool) -> dict:
     from pyspark.sql import functions as F
 
-    edges = build_edges(spark)
-    parts = spark.sparkContext.defaultParallelism
-    if salted:
-        out = edges.repartition(
-            parts, F.col("src"),
-            F.pmod(F.xxhash64("conv_id", "ts"), F.lit(SALT_BUCKETS)).alias("_salt"))
-    else:
-        out = edges.repartition(parts, F.col("src"))
-    counts = (out.select(F.spark_partition_id().alias("p"))
+    counts = (layout(spark, salted).select(F.spark_partition_id().alias("p"))
               .groupBy("p").count().toPandas()["count"])
     return {"max_rows": int(counts.max()),
             "mean_rows": int(counts.mean()),

@@ -33,6 +33,8 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 EXECUTOR_CORES = int(os.environ.get("KGP_EXECUTOR_CORES", "2"))
 EXECUTOR_MEM = os.environ.get("KGP_EXECUTOR_MEM", "20g")
+WORKER_CORES = 32      # the worker's pool that executors are carved from
+WORKER_MEM = "100g"
 
 
 LOCAL_DIRS = os.environ.get("KGP_SPARK_LOCAL_DIRS", "/dev/shm/kgp-spark")
@@ -51,7 +53,7 @@ def _java_env() -> dict:
     return env
 
 
-def start_cluster(worker_cores: int = 32, worker_mem: str = "100g") -> None:
+def start_cluster() -> None:
     stop_cluster()
     cp = os.path.join(SPARK_HOME, "jars", "*")
     subprocess.Popen(
@@ -63,7 +65,7 @@ def start_cluster(worker_cores: int = 32, worker_mem: str = "100g") -> None:
     os.makedirs("/tmp/spark-work", exist_ok=True)
     subprocess.Popen(
         ["java", "-Xmx1g", "-cp", cp, "org.apache.spark.deploy.worker.Worker",
-         MASTER_URL, "-c", str(worker_cores), "-m", worker_mem,
+         MASTER_URL, "-c", str(WORKER_CORES), "-m", WORKER_MEM,
          "-h", "127.0.0.1", "-d", "/tmp/spark-work", "--webui-port", "8092"],
         env=_java_env(), stdout=open("/tmp/spark-worker.log", "w"),
         stderr=subprocess.STDOUT)
@@ -96,30 +98,23 @@ def build_pyfiles_zip(path: str = "/tmp/kgp.zip") -> str:
 
 def executor_session(n_executors: int, app_name: str | None = None):
     """SparkSession with exactly n_executors executors of EXECUTOR_CORES
-    cores each, kgp shipped as a py-files zip."""
-    from pyspark.sql import SparkSession
+    cores each, kgp shipped as a py-files zip.  SQL, Arrow and AQE settings
+    are get_spark's, as for every other entry point; only the executor
+    topology, its partition count, the driver heap and the tmpfs local
+    dirs are set here."""
+    from kgp.session import get_spark
 
     cores = EXECUTOR_CORES * n_executors
-    spark = (
-        SparkSession.builder.master(MASTER_URL)
-        .appName(app_name or f"kgp-{n_executors}exec")
-        .config("spark.executor.cores", str(EXECUTOR_CORES))
-        .config("spark.executor.memory", EXECUTOR_MEM)
-        .config("spark.cores.max", str(cores))
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.local.dir", LOCAL_DIRS)
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(master=MASTER_URL, app_name=app_name or f"kgp-{n_executors}exec",
+                      extra_conf={
+                          "spark.executor.cores": str(EXECUTOR_CORES),
+                          "spark.executor.memory": EXECUTOR_MEM,
+                          "spark.cores.max": str(cores),
+                          "spark.default.parallelism": str(cores),
+                          "spark.sql.shuffle.partitions": str(cores),
+                          "spark.driver.memory": "1g",
+                          "spark.local.dir": LOCAL_DIRS,
+                      })
     spark.sparkContext.addPyFile(build_pyfiles_zip())
     # wait until the requested executors are registered
     deadline = time.time() + 60
