@@ -20,7 +20,6 @@ batch job over the accumulated warehouse.
 from __future__ import annotations
 
 import argparse
-import os
 import time
 
 
@@ -85,29 +84,19 @@ def main(argv: list[str] | None = None) -> None:
 
 def _run_stream(spark, args) -> None:
     """Incremental catch-up: drain unseen transcript drops into
-    exactly-once triples micro-batch tables (streaming.run_to_table)."""
+    exactly-once triples micro-batch tables (streaming.drain_triples)."""
     from .io import TableIO
     from .pipeline.extract import collect_surface_rows
-    from .streaming import read_transcript_stream, run_to_table, streaming_triples
+    from .streaming import committed_batches, drain_triples
 
-    TABLE = "triples_stream"
-    vocab = spark.read.parquet(args.vocab)
-    surface_rows = collect_surface_rows(vocab)
-    io = TableIO(args.out)
-
-    def batches() -> list[str]:
-        return sorted(n for n in os.listdir(args.out)
-                      if n.startswith(f"{TABLE}_batch") and io.is_committed(n))
-
-    pre = set(batches())
+    table = "triples_stream"
+    surface_rows = collect_surface_rows(spark.read.parquet(args.vocab))
+    pre = set(committed_batches(args.out, table))
     t0 = time.monotonic()
-    stream = read_transcript_stream(spark, args.stream_input)
-    q = run_to_table(streaming_triples(stream, surface_rows), args.out, TABLE,
-                     os.path.join(args.out, "_checkpoints", TABLE))
-    q.awaitTermination()
+    all_b = drain_triples(spark, args.stream_input, surface_rows, args.out, table)
     elapsed = time.monotonic() - t0
 
-    all_b = batches()
+    io = TableIO(args.out)
     new = [n for n in all_b if n not in pre]
     new_rows = sum(io.manifest(n)["rows"] for n in new)
     total_rows = sum(io.manifest(n)["rows"] for n in all_b)

@@ -466,7 +466,6 @@ ANN_RECALL_FLOORS = {"lsh": 0.60, "ivf": 0.50}
 
 def ann_recall_at_k(df: DataFrame, max_qid: int = 20, k: int = 10,
                     index: DataFrame | None = None,
-                    centroids: np.ndarray | None = None,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     min_recall: dict[str, float] | None = None) -> DataFrame:
     """(method, n_exact, n_hit, recall_bp): registry-visible recall@k of
@@ -492,9 +491,7 @@ def ann_recall_at_k(df: DataFrame, max_qid: int = 20, k: int = 10,
         "lsh": ann_batch_topk(queries, df, k=k, id_col=id_col,
                               vec_col=vec_col, index=index),
         "ivf": ann_ivf_topk(
-            queries, df,
-            centroids if centroids is not None
-            else train_centroids(df, vec_col=vec_col, id_col=id_col),
+            queries, df, train_centroids(df, vec_col=vec_col, id_col=id_col),
             k=k, id_col=id_col, vec_col=vec_col),
     }
     out = None

@@ -1,27 +1,35 @@
-"""Structured Streaming surface: incremental transcript ingestion.
+"""Structured Streaming surface: incremental triple extraction.
 
 The reference is purely batch (SURVEY.md §2.10) and the north rule asks
-for checkpointed, resumable *batch* — parity does not require streaming.
-This module is the forward path a transcript firehose needs anyway:
-the same extraction core (kgp.textops via pipeline.extract's mapInPandas)
-applied to a file-source stream with event-time windowing + watermarks.
+for checkpointed, resumable *batch*, so parity does not require
+streaming.  What ships is the catch-up path a growing transcript
+directory needs: S2 triple emission applied to a file-source stream and
+landed exactly-once in the warehouse.  ``python -m kgp.job
+--stream-input`` and the ``stream_triples_catchup`` registry entry both
+run it through ``drain_triples``.  The corpus-level steps (S1's D1
+window and D2 boilerplate census, S3/S4 linking and canonicalization)
+stay batch passes over the landed tables.
 
-Design notes (cluster scale):
-- the stream is stateless through extraction (mapInPandas — no shuffle),
-  stateful only at the windowed aggregation (state store keyed by
-  (window, mention), pruned by the watermark);
-- `trigger(availableNow=True)` turns the same query into a catch-up
-  batch job — the batch/stream unification Spark gives for free;
+Design notes:
+- the stream is stateless end to end: validation + the batch extraction
+  operator (mapInPandas, no shuffle, no state store), so a micro-batch's
+  triples are bit-identical to the batch ``raw_triples_view`` over the
+  same rows;
+- ``trigger(availableNow=True)`` turns the query into a catch-up batch
+  job: each run processes only the files its checkpoint has not seen;
 - exactly-once into the warehouse via foreachBatch + TableIO snapshot
-  commits keyed on batch id (idempotent MERGE analog of pipeline.run).
+  commits keyed on the batch id (the streaming twin of pipeline.run's
+  snapshot resume).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
-from .pipeline.extract import extract, mentions_view, raw_triples_view
+from .pipeline.extract import extract, raw_triples_view
 from .pipeline.order import valid_turns
 
 
@@ -34,140 +42,24 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
     return reader.parquet(input_dir)
 
 
-def streaming_mentions(stream: DataFrame,
-                       surface_rows: list[tuple[str, int, str]]) -> DataFrame:
-    """Per-turn mention rows from a streaming transcript source.
-
-    Reuses the exact batch extraction operator — mapInPandas is
-    stream-compatible (stateless, no shuffle)."""
-    cleaned = valid_turns(stream)
-    return mentions_view(extract(cleaned, surface_rows))
-
-
 def streaming_triples(stream: DataFrame,
                       surface_rows: list[tuple[str, int, str]]) -> DataFrame:
     """The flagship S2 stage as a stream: per-turn (subj, pred, obj)
     triples from a transcript firehose.
 
     Triple emission is per-turn — no ordering, no cross-turn context —
-    so the batch operator streams unchanged: stateless mapInPandas, no
-    shuffle, no state store, and the micro-batch output is bit-identical
-    to the batch ``raw_triples_view`` over the same rows (pytest asserts
-    this parity).  Entity linking and canonicalization stay batch jobs
-    (they are global fixpoints over the vocab); they consume the landed
-    triples table downstream, so a firehose deployment is: this stream →
-    ``run_to_table`` exactly-once sink → periodic batch link+CC over the
-    warehouse."""
+    so the batch operator streams unchanged."""
     cleaned = valid_turns(stream)
     return raw_triples_view(extract(cleaned, surface_rows))
 
 
-def windowed_mention_counts(stream: DataFrame,
-                            surface_rows: list[tuple[str, int, str]],
-                            window: str = "1 hour",
-                            watermark: str = "2 hours") -> DataFrame:
-    """Event-time tumbling-window mention frequencies with late-data bound.
-
-    State per (window, mention); the watermark lets the state store drop
-    windows older than `watermark` — bounded memory at any stream length.
-    """
-    cleaned = valid_turns(stream)
-    extracted = extract(cleaned, surface_rows)  # carries ts (schemas.EXTRACTED)
-    mentions = extracted.select("ts", F.explode("mentions").alias("m")).select(
-        F.col("m.mention").alias("mention"),
-        F.col("m.entity_type").alias("entity_type"), "ts")
-    return (
-        mentions.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "mention")
-        .agg(F.count("*").alias("n_mentions"))
-        .select(F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"), "mention", "n_mentions")
-    )
-
-
-def streaming_conv_progress(stream: DataFrame) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): incremental
-    per-conversation progress — turn count + time span — maintained in the
-    state store across micro-batches and emitted in update mode.
-
-    This is the `applyInPandasWithState` surface a transcript firehose
-    needs for operators Spark lacks built-in (per-key custom aggregation
-    with explicit state).  State per conv_id is three scalars; at scale
-    the state store shards by the groupBy key exactly like any shuffle.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "conv_id string, n_turns long, first_ts timestamp, last_ts timestamp"
-    state_schema = "n long, first_us long, last_us long"
-
-    def update(key, pdfs, state: GroupState):
-        n, first_us, last_us = state.get if state.exists else (0, None, None)
-        for pdf in pdfs:
-            n += len(pdf)
-            # null ts rows still count as turns but must not touch the
-            # span: NaT.astype(int64) is the int64-min sentinel, which
-            # would poison min() forever and overflow pd.Timestamp
-            ts = pd.to_datetime(pdf["ts"])
-            ts = ts[ts.notna()]
-            if len(ts):
-                us = ts.astype("int64") // 1000
-                lo, hi = int(us.min()), int(us.max())
-                first_us = lo if first_us is None else min(first_us, lo)
-                last_us = hi if last_us is None else max(last_us, hi)
-        state.update((n, first_us, last_us))
-        yield pd.DataFrame({
-            "conv_id": [key[0]],
-            "n_turns": [n],
-            "first_ts": [pd.Timestamp(first_us * 1000, unit="ns")
-                         if first_us is not None else pd.NaT],
-            "last_ts": [pd.Timestamp(last_us * 1000, unit="ns")
-                        if last_us is not None else pd.NaT],
-        })
-
-    return (
-        stream.groupBy("conv_id")
-        .applyInPandasWithState(update, out_schema, state_schema,
-                                "update", GroupStateTimeout.NoTimeout)
-    )
-
-
-def streaming_exact_dedup(stream: DataFrame,
-                          watermark: str = "2 hours") -> DataFrame:
-    """D1's streaming twin: exact content dedup over an unbounded
-    transcript stream.
-
-    Keys on the same sha2 content hash as ops.dedup.exact_dedup and uses
-    ``dropDuplicatesWithinWatermark`` so the dedup state store keeps one
-    entry per distinct hash only within the watermark horizon — memory is
-    bounded by (ingest rate × watermark), never by stream length.  The
-    state shards on the hash key exactly like the batch D1 shuffle, so at
-    firehose scale it spreads across executors with no hot key (sha2 is
-    uniform by construction).  Duplicates arriving later than the
-    watermark are admitted — the horizon is the documented contract, same
-    as any watermarked streaming op; run the batch D1 pass on the
-    warehouse table for total dedup.
-    """
-    # null event-times cannot participate in a watermarked operator;
-    # null texts have no content to dedup on — drop both up front
-    hashed = stream.filter(
-        F.col("ts").isNotNull() & F.col("text").isNotNull()
-    ).withColumn(
-        "content_hash", F.sha2(F.col("text").cast("binary"), 256))
-    return (hashed
-            .withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark(["content_hash"])
-            .drop("content_hash"))
-
-
 def run_to_table(result: DataFrame, out_root: str, table: str,
                  checkpoint_dir: str):
-    """Drain the stream exactly-once into a TableIO-managed table.
+    """Drain the stream exactly-once into TableIO-managed tables.
 
     foreachBatch gives a batch DataFrame + monotone batch id; the batch id
     in the fingerprint makes re-delivery after a crash a no-op (TableIO
-    skips committed fingerprints) — the streaming twin of pipeline.run's
-    snapshot resume.
+    skips committed fingerprints).
     """
     from .io import TableIO
 
@@ -186,3 +78,33 @@ def run_to_table(result: DataFrame, out_root: str, table: str,
         .trigger(availableNow=True)
         .start()
     )
+
+
+def committed_batches(out_root: str, table: str) -> list[str]:
+    """Sorted ``<table>_batchNNNNNN`` names with a committed snapshot."""
+    from .io import TableIO
+
+    io = TableIO(out_root)  # creates out_root on the first run
+    return sorted(n for n in os.listdir(out_root)
+                  if n.startswith(f"{table}_batch") and io.is_committed(n))
+
+
+def drain_triples(spark: SparkSession, input_dir: str,
+                  surface_rows: list[tuple[str, int, str]], out_root: str,
+                  table: str, max_files_per_trigger: int | None = None,
+                  timeout_s: float | None = None) -> list[str]:
+    """Catch up on ``input_dir``: stream its unseen drops through
+    ``streaming_triples`` into ``run_to_table`` (checkpoint under
+    ``<out_root>/_checkpoints/<table>``), wait for the availableNow drain
+    to finish, and return ``committed_batches``.  With ``timeout_s`` a
+    drain still running after that many seconds is stopped and raises."""
+    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
+    q = run_to_table(streaming_triples(stream, surface_rows), out_root, table,
+                     os.path.join(out_root, "_checkpoints", table))
+    if timeout_s is None:
+        q.awaitTermination()
+    elif not q.awaitTermination(timeout_s):
+        q.stop()
+        raise RuntimeError(f"availableNow drain of {table} did not terminate "
+                           f"within {timeout_s}s")
+    return committed_batches(out_root, table)

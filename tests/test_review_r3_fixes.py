@@ -57,33 +57,6 @@ def test_relative_minima_matches_scipy_clip_semantics():
     assert embed.relative_minima(np.array([3.0, 1.0, 1.0, 3.0, 4.0])) == []
 
 
-def test_streaming_conv_progress_tolerates_null_ts(spark, tmp_path):
-    from kgp.streaming import read_transcript_stream, streaming_conv_progress
-
-    pdf = pd.DataFrame({
-        "conv_id": ["c1", "c1", "c1"],
-        "turn_idx": pd.array([0, 1, 2], dtype="int32"),
-        "role": ["user"] * 3,
-        "text": ["a.", "b.", "c."],
-        "tool": [None] * 3,
-        "ts": [pd.Timestamp("2025-01-01"), pd.NaT, pd.Timestamp("2025-01-02")],
-    })
-    from kgp import schemas
-    drop = str(tmp_path / "drops")
-    spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS).write.parquet(drop)
-    q = (
-        streaming_conv_progress(read_transcript_stream(spark, drop))
-        .writeStream.format("memory").queryName("convprog_nullts")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM convprog_nullts").toPandas()
-    row = out.sort_values("n_turns").tail(1).iloc[0]
-    assert int(row["n_turns"]) == 3  # null-ts turn still counted
-    assert row["first_ts"] == pd.Timestamp("2025-01-01")
-    assert row["last_ts"] == pd.Timestamp("2025-01-02")
-
-
 def test_ascii_split_fast_path_equals_regex():
     """ascii_split's str.split() fast path must match the ASCII-class regex
     on every input, including the \\x1c-\\x1f separator controls Python's

@@ -5,8 +5,7 @@ from __future__ import annotations
 import pytest
 
 from kgp import schemas, synth
-from kgp.streaming import (read_transcript_stream, run_to_table,
-                           streaming_mentions, windowed_mention_counts)
+from kgp.streaming import read_transcript_stream
 
 
 @pytest.fixture(scope="module")
@@ -21,110 +20,6 @@ def stream_input(spark, tiny_vocab, tiny_transcripts, tmp_path_factory):
     return d
 
 
-def test_stream_mentions_equal_batch(spark, tiny_vocab, tiny_transcripts, stream_input, tmp_path):
-    surface_rows = synth.vocab_surface_rows(tiny_vocab)
-    stream = read_transcript_stream(spark, stream_input, max_files_per_trigger=1)
-    assert stream.isStreaming
-
-    q = (
-        streaming_mentions(stream, surface_rows)
-        .writeStream.format("memory").queryName("mstream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.sql(
-        "select mention, count(*) as n from mstream group by mention").collect()
-    got_counts = {r["mention"]: r["n"] for r in got}
-
-    # batch truth over the same files
-    from kgp.pipeline.extract import extract, mentions_view
-    from pyspark.sql import functions as F
-
-    batch = spark.read.parquet(stream_input).filter(
-        F.length(F.trim("text")) > 0)
-    exp = {
-        r["mention"]: r["n"]
-        for r in mentions_view(extract(batch, surface_rows))
-        .groupBy("mention").agg(F.count("*").alias("n")).collect()
-    }
-    assert got_counts == exp
-
-
-def test_windowed_counts_and_sink(spark, tiny_vocab, stream_input, tmp_path):
-    surface_rows = synth.vocab_surface_rows(tiny_vocab)
-    # 1-file micro-batches + tight watermark: append mode only emits a
-    # window after the watermark passes it in a LATER batch, so the test
-    # needs several batches and a lag shorter than the fixture's time span
-    stream = read_transcript_stream(spark, stream_input, max_files_per_trigger=1)
-    result = windowed_mention_counts(stream, surface_rows, window="10 minutes",
-                                     watermark="1 second")
-    out_root = str(tmp_path / "wh")
-    ckpt = str(tmp_path / "ckpt")
-
-    q = run_to_table(result, out_root, "mention_counts", ckpt)
-    q.awaitTermination(120)
-
-    from kgp.io import TableIO
-    import os
-
-    io = TableIO(out_root)
-    tables = [t for t in os.listdir(out_root) if t.startswith("mention_counts_batch")]
-    assert tables, "no committed stream batches"
-    total = 0
-    for t in tables:
-        m = io.manifest(t)
-        assert m is not None  # committed snapshot with lineage
-        total += m["rows"]
-    assert total > 0
-
-
-def test_stateful_conv_progress(spark, tiny_transcripts, stream_input):
-    """applyInPandasWithState: per-conversation running state across
-    micro-batches; the LAST update per conv equals the batch ground truth."""
-    from kgp.streaming import read_transcript_stream, streaming_conv_progress
-
-    stream = read_transcript_stream(spark, stream_input, max_files_per_trigger=1)
-    q = (
-        streaming_conv_progress(stream)
-        .writeStream.format("memory").queryName("convprog")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM convprog").toPandas()
-    # updates accumulate; keep the final (max n_turns) row per conv
-    final = out.sort_values("n_turns").groupby("conv_id").tail(1).set_index("conv_id")
-
-    truth = tiny_transcripts.groupby("conv_id").agg(
-        n_turns=("turn_idx", "size"), first_ts=("ts", "min"), last_ts=("ts", "max"))
-    assert len(final) == len(truth)
-    for conv, row in truth.iterrows():
-        got = final.loc[conv]
-        assert int(got["n_turns"]) == int(row["n_turns"])
-        assert got["first_ts"] == row["first_ts"]
-        assert got["last_ts"] == row["last_ts"]
-
-
-def test_streaming_exact_dedup(spark, tiny_transcripts, stream_input):
-    """dropDuplicatesWithinWatermark keyed on the D1 content hash: each
-    distinct text survives exactly once across micro-batches (the fixture's
-    time span is far inside the watermark horizon)."""
-    from kgp.streaming import read_transcript_stream, streaming_exact_dedup
-
-    stream = read_transcript_stream(spark, stream_input, max_files_per_trigger=1)
-    q = (
-        streaming_exact_dedup(stream, watermark="365 days")
-        .writeStream.format("memory").queryName("dedupstream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT text FROM dedupstream").toPandas()
-
-    n_distinct = tiny_transcripts["text"].nunique()
-    assert len(out) == n_distinct
-    assert out["text"].nunique() == n_distinct
-
-
 def test_stream_catchup_registry_entry(spark):
     """The stream_triples_catchup registry entry (file-source stream →
     availableNow → exactly-once TableIO sink → committed read-back) emits
@@ -137,8 +32,7 @@ def test_stream_catchup_registry_entry(spark):
     (conv_id, text) D1 window and the D2 boilerplate census — are corpus
     aggregates that the firehose architecture deliberately leaves to the
     periodic batch pass over the landed warehouse (streaming.py module
-    docstring); the streaming twin of D1 exists separately as
-    streaming_exact_dedup."""
+    docstring)."""
     import os
 
     from pyspark.sql import functions as F
@@ -165,6 +59,9 @@ def test_stream_catchup_registry_entry(spark):
     snaps = {t: io.manifest(t)["snapshot_id"]
              for t in os.listdir(f"{root}/wh") if t.startswith("triples_batch")}
     assert snaps, "no committed stream batches"
+    # every committed batch carries its lineage manifest, and the
+    # manifests' row counts add up to the streamed multiset
+    assert sum(io.manifest(t)["rows"] for t in snaps) == len(exp)
     # second call: catch-up no-op — identical committed snapshots
     again = (_stream_triples_catchup(spark, "")
              .select(cols).toPandas().sort_values(cols).reset_index(drop=True))
@@ -200,3 +97,51 @@ def test_streaming_triples_equal_batch(spark, tiny_vocab, stream_input):
            .toPandas().sort_values(cols).reset_index(drop=True))
     assert got.equals(exp)
     assert len(got) > 0
+
+
+def test_job_stream_input_catches_up(spark, tiny_vocab, tiny_transcripts,
+                                     tmp_path, capsys):
+    """``python -m kgp.job --stream-input``, driven in-process (main()
+    would stop the shared session): each run lands exactly the drops the
+    checkpoint has not seen, and the committed manifests add up to the
+    batch extractor over the same files."""
+    import argparse
+    import re
+
+    from kgp import job
+    from kgp.io import TableIO
+    from kgp.pipeline.extract import extract, raw_triples_view
+    from kgp.pipeline.order import valid_turns
+    from kgp.streaming import committed_batches
+
+    drops, vocab, out = (str(tmp_path / d) for d in ("drops", "vocab", "wh"))
+    spark.createDataFrame(tiny_vocab, schema=schemas.ENTITY_VOCAB).write.parquet(vocab)
+    surface_rows = synth.vocab_surface_rows(tiny_vocab)
+    args = argparse.Namespace(stream_input=drops, vocab=vocab, out=out)
+    half = len(tiny_transcripts) // 2
+
+    def drop(rows):
+        df = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
+        df.coalesce(1).write.mode("append").parquet(drops)
+        return raw_triples_view(extract(valid_turns(df), surface_rows)).count()
+
+    def run():
+        job._run_stream(spark, args)
+        m = re.search(r"kgp-stream done: (\d+) new micro-batches -> (\d+) new",
+                      capsys.readouterr().out)
+        return int(m[1]), int(m[2])
+
+    n_first = drop(tiny_transcripts.iloc[:half])
+    assert n_first > 0
+    assert run() == (1, n_first)
+    assert run() == (0, 0)  # nothing unseen: catch-up no-op
+    n_second = drop(tiny_transcripts.iloc[half:])
+    assert n_second > 0
+    assert run() == (1, n_second)  # only the appended drop is processed
+
+    names = committed_batches(out, "triples_stream")
+    assert len(names) == 2
+    io = TableIO(out)
+    batch = spark.read.parquet(drops)
+    assert (sum(io.manifest(n)["rows"] for n in names)
+            == raw_triples_view(extract(valid_turns(batch), surface_rows)).count())

@@ -30,16 +30,18 @@ takes a SparkSession; each writes its own record under BENCH/:
   the linker produces: N_CHAINS 8-node chain components (small alias
   groups, the bulk) plus N_STARS stars of STAR_SPOKES spokes (head
   entities, the skew case: every spoke's min is the hub).  A run whose
-  component count is not the formula's raises: scaling numbers from a
-  wrong answer are meaningless.
+  component count is not the formula's raises WrongAnswer, which ends the
+  sweep unretried and unrecorded: scaling numbers from a wrong answer are
+  meaningless.
 
 Method: input generated once to parquet (byte-identical for both levels,
-deterministic); each run in a fresh driver subprocess (fresh executor
-JVMs); levels INTERLEAVED in ABBA rounds — one efficiency sample per
-round, median of rounds reported — because the sandbox VM's effective
-CPU drifts on a tens-of-minutes timescale and a blocked design confounds
-that drift with the scaling effect.  The record JSON is rewritten; the
-BENCH/*.md write-ups are maintained by hand from it.
+deterministic) by a child process that exits before round 0; each run
+in a fresh driver subprocess (fresh executor JVMs); levels INTERLEAVED
+in ABBA rounds — one efficiency sample per round, median of rounds
+reported — because the sandbox VM's effective CPU drifts on a
+tens-of-minutes timescale and a blocked design confounds that drift with
+the scaling effect.  The record JSON is rewritten; the BENCH/*.md
+write-ups are maintained by hand from it.
 
 Usage:
     python tools/bench_scaling.py --subject pipeline           # ABBA rounds
@@ -52,6 +54,7 @@ from __future__ import annotations
 import argparse
 import functools
 import json
+import multiprocessing
 import os
 import statistics
 import subprocess
@@ -75,6 +78,11 @@ RUNS = int(os.environ.get("KGP_SCALE_ROUNDS", "3"))
 LEVELS = (1, 4)  # executors: N and 4N
 TARGET = 0.8     # BASELINE.json's N→4N efficiency gate
 RUN_TIMEOUT_S = 3600
+
+
+class WrongAnswer(Exception):
+    """A measured body failed its correctness check.  Deterministic, so
+    unlike a transient executor loss (RuntimeError) it is never retried."""
 
 
 def build_corpus(spark, path: str, n_convs: int = N_CONVS, n_ents: int = N_ENTS) -> None:
@@ -139,7 +147,7 @@ def measure_cc_graph(spark, path: str, n_chains: int = N_CHAINS,
     dt = time.monotonic() - t0
     want = cc_graph_components(n_chains, n_stars)
     if n_comps != want:
-        raise RuntimeError(f"wrong component count: {n_comps} != {want}")
+        raise WrongAnswer(f"wrong component count: {n_comps} != {want}")
     return {"n_nodes": n_nodes, "n_components": n_comps, "sec": round(dt, 2)}
 
 
@@ -180,15 +188,28 @@ SUBJECTS = {
 }
 
 
-def ensure_input(subj: Subject) -> None:
-    marker = os.path.join(subj.input_dir, subj.marker)
-    if os.path.exists(marker):
-        return
+def _build_input(build: Callable[..., None], input_dir: str) -> None:
     from kgp.session import get_spark
 
     spark = get_spark(master="local[32]", app_name="kgp-scale-gen")
-    subj.build(spark, subj.input_dir)
+    build(spark, input_dir)
     spark.stop()
+
+
+def ensure_input(subj: Subject) -> None:
+    """Build the subject's input once, in a child process: the generator
+    session's py4j JVM outlives spark.stop(), and in the sweep's own
+    process it would sit beside every round's executor JVMs."""
+    marker = os.path.join(subj.input_dir, subj.marker)
+    if os.path.exists(marker):
+        return
+    proc = multiprocessing.get_context("spawn").Process(
+        target=_build_input, args=(subj.build, subj.input_dir))
+    proc.start()
+    proc.join()
+    if proc.exitcode != 0:
+        raise RuntimeError(f"building {subj.input_dir} failed "
+                           f"(exit code {proc.exitcode})")
     open(marker, "w").close()
 
 
@@ -202,16 +223,20 @@ def single_run(name: str, n_exec: int) -> None:
 
     subj = SUBJECTS[name]
     spark = executor_session(n_exec, app_name=f"kgp-{name}-{n_exec}exec")
-    run = subj.measure(spark, subj.input_dir)
+    try:
+        run = subj.measure(spark, subj.input_dir)
+    except WrongAnswer as exc:
+        print(f"WRONG {exc}", flush=True)  # one_run raises WrongAnswer on it
+        raise
     spark.stop()
     print("RUN " + json.dumps(run), flush=True)
 
 
 def one_run(name: str, n_exec: int) -> dict:
-    # every failure mode surfaces as RuntimeError so the caller's one
-    # whole-round retry covers all of them: a wedged run (TimeoutExpired),
-    # a garbled/truncated RUN line (JSONDecodeError), and the no-RUN-line
-    # crash (including a measured body that raised)
+    # a failed correctness check surfaces as WrongAnswer; every other
+    # failure mode as RuntimeError, so the caller's one whole-round retry
+    # covers all of them: a wedged run (TimeoutExpired), a garbled/truncated
+    # RUN line (JSONDecodeError), and the no-RUN-line crash
     cmd = [sys.executable, os.path.abspath(__file__), "--subject", name,
            "--single-run", str(n_exec)]
     try:
@@ -220,7 +245,11 @@ def one_run(name: str, n_exec: int) -> dict:
     except subprocess.TimeoutExpired as exc:
         raise RuntimeError(
             f"{name} run wedged (>{RUN_TIMEOUT_S}s) at {n_exec} executors") from exc
-    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("RUN ")]
+    lines = proc.stdout.splitlines()
+    wrong = [ln for ln in lines if ln.startswith("WRONG ")]
+    if wrong:
+        raise WrongAnswer(f"{name} at {n_exec} executors: {wrong[-1][6:]}")
+    line = [ln for ln in lines if ln.startswith("RUN ")]
     if not line:
         sys.stderr.write(proc.stdout[-2000:] + proc.stderr[-4000:])
         raise RuntimeError(f"{name} run failed at {n_exec} executors")
@@ -235,7 +264,8 @@ def abba(name: str) -> None:
     """RUNS interleaved rounds; each runs BOTH levels back-to-back, in
     alternating order to cancel linear drift within a round, and yields
     one efficiency sample.  The record is written with whatever rounds
-    completed, even if a later one fails."""
+    completed, even if a later one fails, unless a run gave a wrong
+    answer: that ends the sweep at once and voids every timing in it."""
     from tools.cluster import start_cluster, stop_cluster
 
     subj = SUBJECTS[name]
@@ -271,6 +301,9 @@ def abba(name: str) -> None:
             round_effs.append(eff_r)
             print(f"round {rnd}: N={got[lo]['sec']}s 4N={got[hi]['sec']}s "
                   f"eff={eff_r}", flush=True)
+    except WrongAnswer:
+        round_effs.clear()
+        raise
     finally:
         if round_effs:
             write_record(name, times, round_effs, last)
