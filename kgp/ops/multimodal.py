@@ -216,7 +216,7 @@ def byte_features_q20_sql(table: str = "documents", dim: int = 8) -> str:
     """DuckDB twin of byte_features_q20, exact for ASCII text (the
     documents fixture is [a-z ]): payload bytes = UTF-8 of text = ord of
     each char, so the histogram is a join-by-index char scan (no unnest —
-    see ops/docextract.py's DuckDB 1.0 hazard notes).  cnt::DOUBLE /
+    see the DuckDB 1.0 hazard notes in ops/transcript_twin.py).  cnt::DOUBLE /
     total::DOUBLE is the identical IEEE division numpy performs
     (hist.sum() over 8 sub-2^53 counts is exact in float64), the squared
     components fold left-to-right like F.aggregate, and floor-2^20 fixed

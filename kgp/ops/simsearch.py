@@ -555,7 +555,7 @@ def ann_recall_sql(dim: int = 64, max_qid: int = 20, k: int = 10,
 
     Lambda-free by construction (dim-unrolled AVG columns, built-in
     list_dot_product only) — the DuckDB 1.0 lambda-executor misassociation
-    the repo's twin style avoids (see ops/docextract.py) never applies.
+    the repo's twin style avoids (see ops/transcript_twin.py) never applies.
     ``dim`` must match the embeddings table (all testdata sfs carry 64)."""
     from .hyperlsh import hyperplanes
     from .sqlhash import xxh64_long_steps

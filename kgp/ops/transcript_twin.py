@@ -14,8 +14,9 @@ module re-derives the full pipeline FROM SCRATCH in DuckDB SQL:
   GazetteerMatcher.find / find_cues / extract_turn, reference
   src/data/extract_entities.py:29-50) — the cursor scan is a RECURSIVE
   CTE advancing one token position per step, exact for ANY surface
-  length 1..MAX_SURFACE_TOKENS (the documents twin's closed form only
-  covers {1,2}-gram vocabularies);
+  length 1..MAX_SURFACE_TOKENS.  This S2 core (s2_cte) is the only SQL
+  definition of extraction: the documents-corpus twin (ops.docextract)
+  runs it too, over its own ``ordered``/``nums``/``vocab`` CTEs;
 - S3/S4/S5 (edges twin, see transcript_edges_sql): normalized-surface
   equality edges + deletion-neighborhood blocking + df-cap + a
   from-scratch SQL reimplementation of difflib's SequenceMatcher ratio
@@ -24,9 +25,10 @@ module re-derives the full pipeline FROM SCRATCH in DuckDB SQL:
   (recursive CTE), and the materialize resolve join (rdf_graph.ipynb
   cell-16/20/22).
 
-House twin style (see ops/docextract.py): MATERIALIZED everywhere,
-join-by-index instead of unnest, no lambdas downstream of tokenization —
-DuckDB 1.0's lambda/unnest executors misassociate rows otherwise.
+House twin style (see the hazard notes above s2_cte): MATERIALIZED
+everywhere, join-by-index instead of unnest, no lambdas downstream of
+tokenization, no correlated subquery — DuckDB 1.0's lambda/unnest
+executors misassociate rows otherwise.
 
 ORACLE DOMAIN: exact for corpora whose text carries no \\x01 byte (the
 sentence-boundary sentinel — RE2 has no lookbehind, so the twin rewrites
@@ -39,8 +41,8 @@ the DuckDB cross-check extends.
 
 from __future__ import annotations
 
-from ..textops import (_EDGE_PUNCT, MAX_SURFACE_TOKENS, MIN_DUP_GROUP,
-                       PRED_CUES, DEFAULT_PAIR_PRED)
+from ..textops import (_CUE_TOKS, _EDGE_PUNCT, MAX_SURFACE_TOKENS,
+                       MIN_DUP_GROUP, DEFAULT_PAIR_PRED)
 
 _WS_CLASS = "[ \\t\\n\\r\\f\\v]+"      # RE2 escape form of the 6-char class
 _WS_CHARS = " \t\n\r\f\v"              # literal form (trim char-set arg)
@@ -133,14 +135,15 @@ g{size} AS MATERIALIZED (
     return ",".join(out)
 
 
-def _cue_ctes() -> str:
-    """One UNION ALL branch per predicate cue (textops.PRED_CUES), matched
-    over LOWERCASED cleaned tokens (find_cues semantics).  Generated from
-    the shared constant so editing PRED_CUES cannot desynchronize the twin
-    silently (the parity pytest would still catch a drift)."""
+def _cue_ctes(cue_toks: list[tuple[str, tuple[str, ...]]] | None = None) -> str:
+    """One UNION ALL branch per predicate cue, matched over LOWERCASED
+    cleaned tokens (find_cues semantics).  ``cue_toks`` has the shape of
+    textops._CUE_TOKS and defaults to it, like extract_turn's override;
+    the CTE is generated from the list, so editing a cue list cannot
+    desynchronize the twin silently."""
+    cues = _CUE_TOKS if cue_toks is None else cue_toks
     branches = []
-    for pred, cue in PRED_CUES:
-        words = cue.split()
+    for pred, words in cues:
         k = len(words)
         joins = "\n  ".join(
             f"JOIN lowtoks w{j} ON w{j}.tid = w1.tid AND w{j}.sent_idx = w1.sent_idx"
@@ -156,13 +159,72 @@ def _cue_ctes() -> str:
 
 
 def _extract_cte(t_path: str, v_path: str) -> str:
-    """The shared WITH-clause body: S1 → sentences → tokens → vocabulary →
-    greedy cursor scan (recursive) → mentions/cues/pairs → ``triples_raw``
+    """The transcript WITH-clause body: S1 (``ordered``, ``nums``) + the
+    gazetteer (``vraw`` → ``vocab``) + the shared S2 core → ``triples_raw``
     (conv_id, turn_idx, subj, pred, obj, ts)."""
+    return f"""{_tid_cte(t_path)},
+-- gazetteer: every distinct surface (canonical + aliases), 1..{MAX_SURFACE_TOKENS} tokens
+-- (GazetteerMatcher.__init__ skips longer/empty surfaces); join-by-index
+-- over the alias lists, not unnest (hazard notes above s2_cte)
+vraw AS MATERIALIZED (
+  SELECT entity_id, canonical_name, entity_type, aliases
+  FROM read_parquet('{v_path}')
+),
+vsurf_all AS MATERIALIZED (
+  SELECT canonical_name AS surface FROM vraw
+  UNION ALL
+  SELECT aliases[n.i] FROM vraw JOIN nums n ON n.i <= len(aliases)
+),
+vocab AS MATERIALIZED (
+  SELECT DISTINCT surface, ntoks FROM (
+    SELECT surface,
+           len(list_filter(string_split_regex(surface, '{_WS_CLASS}'), x -> x <> '')) AS ntoks
+    FROM vsurf_all)
+  WHERE ntoks BETWEEN 1 AND {MAX_SURFACE_TOKENS}
+),{s2_cte()}"""
+
+
+# DuckDB 1.0 hazard notes — every twin in kgp/ops keeps to these rules:
+#
+# - NO unnest.  List explosion is JOIN-BY-INDEX: a MATERIALIZED CTE builds
+#   the per-row list, a shared ``nums`` numbers table (bounded above every
+#   later list length) joins on n.i <= len(lst), and extraction is the
+#   plain scalar lst[n.i].  unnest (SELECT-list OR lateral, struct-packed
+#   or not) over lambda-producing CTEs was observed to MISALIGN rows (~1%
+#   of executions: one row's key paired with another row's list entries —
+#   the same query returning 211/212/213 rows across runs, surviving AS
+#   MATERIALIZED and single-threaded mode).  With join-by-index the list
+#   and its key never separate: the value is a scalar function of the row.
+# - MATERIALIZED everywhere is load-bearing, not an optimization: DuckDB
+#   inlines plain CTEs at every reference, and re-executions of
+#   lambda/unnest-bearing producers were observed NONDETERMINISTIC.
+#   Materializing pins one evaluation.
+# - No lambdas downstream of tokenization.  A list_reduce cursor fold for
+#   the greedy scan paired one group's key with ANOTHER group's fold
+#   result — deterministically on some corpora, nondeterministically on
+#   others; the lambda execution itself is the hazard, so the scan is a
+#   recursive CTE instead.
+# - No correlated scalar subquery: the correlated form of the pair-cue
+#   lookup was observed to CORRUPT the sibling mentions branch of the
+#   final UNION (same family as the CTE-inlining hazard); use join + window.
+
+
+def s2_cte(cue_toks: list[tuple[str, tuple[str, ...]]] | None = None) -> str:
+    """The S2 core, ``psent`` → ``triples_raw`` (conv_id, turn_idx, subj,
+    pred, obj, ts): sentences → tokens → greedy cursor scan (recursive) →
+    mentions/cues/pairs → triple emission (split_sentences /
+    GazetteerMatcher.find / find_cues / extract_turn).
+
+    The caller defines three CTEs before it: ``ordered(tid, conv_id,
+    turn_idx, text, tool, ts)`` with a unique ``tid`` per row, ``nums(i)``
+    covering every sentence and token list length, and ``vocab(surface,
+    ntoks)`` with distinct surfaces of 1..MAX_SURFACE_TOKENS tokens.
+    ``cue_toks`` overrides the predicate cues (textops._CUE_TOKS shape).
+    Needs ``WITH RECURSIVE``."""
     gmax = MAX_SURFACE_TOKENS
     gram_union = "\n  UNION ALL ".join(
         f"SELECT * FROM g{s}" for s in range(1, gmax + 1))
-    return f"""{_tid_cte(t_path)},
+    return f"""
 -- S2 sentence structure: RE2 has no lookbehind, so split_sentences'
 -- (?<=[.!?])\\s+ becomes replace-terminator-ws-with-sentinel, then split.
 psent AS MATERIALIZED (
@@ -199,25 +261,6 @@ stoks AS MATERIALIZED (
 lowtoks AS MATERIALIZED (
   SELECT tid, sent_idx, ord, lower(tok) AS ltok FROM stoks
 ),
--- gazetteer: every distinct surface (canonical + aliases), 1..{gmax} tokens
--- (GazetteerMatcher.__init__ skips longer/empty surfaces); join-by-index
--- over the alias lists, not unnest (docextract hazard note)
-vraw AS MATERIALIZED (
-  SELECT entity_id, canonical_name, entity_type, aliases
-  FROM read_parquet('{v_path}')
-),
-vsurf_all AS MATERIALIZED (
-  SELECT canonical_name AS surface FROM vraw
-  UNION ALL
-  SELECT aliases[n.i] FROM vraw JOIN nums n ON n.i <= len(aliases)
-),
-vocab AS MATERIALIZED (
-  SELECT DISTINCT surface, ntoks FROM (
-    SELECT surface,
-           len(list_filter(string_split_regex(surface, '{_WS_CLASS}'), x -> x <> '')) AS ntoks
-    FROM vsurf_all)
-  WHERE ntoks BETWEEN 1 AND {gmax}
-),
 {_gram_ctes()},
 m_all AS MATERIALIZED (
   SELECT g.tid, g.sent_idx, g.i, g.size, g.gram AS surface
@@ -233,8 +276,7 @@ cand AS MATERIALIZED (
 ),
 -- the greedy cursor: select the candidate at pos (if any), advance past
 -- it (pos + size) else by one — one recursion step per visited position,
--- bounded by the per-sentence token count.  Exact for any size mix,
--- unlike the documents twin's {{1,2}}-gram closed form.
+-- bounded by the per-sentence token count.  Exact for any size mix.
 scan(tid, sent_idx, pos, size, surface) AS (
   SELECT s.tid, s.sent_idx, 1, c.size, c.surface
   FROM sentn s LEFT JOIN cand c
@@ -254,7 +296,7 @@ men AS MATERIALIZED (
          row_number() OVER (PARTITION BY tid, sent_idx ORDER BY pos) AS midx
   FROM scan WHERE surface IS NOT NULL
 ),
-{_cue_ctes()},
+{_cue_ctes(cue_toks)},
 pairs AS MATERIALIZED (
   SELECT a.tid, a.sent_idx, a.midx AS amidx,
          a.surface AS s_a, b.surface AS s_b,
@@ -263,7 +305,7 @@ pairs AS MATERIALIZED (
     ON a.tid = b.tid AND a.sent_idx = b.sent_idx AND b.midx = a.midx + 1
 ),
 -- first cue strictly between the two spans, (cs, ce)-ordered — join +
--- window, NOT a correlated scalar subquery (docextract hazard note)
+-- window, NOT a correlated scalar subquery (hazard notes above s2_cte)
 paircue AS MATERIALIZED (
   SELECT p.tid, p.sent_idx, p.amidx, c.pred,
          row_number() OVER (PARTITION BY p.tid, p.sent_idx, p.amidx
@@ -306,6 +348,28 @@ def _norm_sql(col: str) -> str:
     strip_chars = (_EDGE_PUNCT + " \t\n\r").replace("'", "''")
     return (f"trim(regexp_replace(lower(strip_accents({expr})), "
             f"'{_WS_CLASS}', ' ', 'g'), '{strip_chars}')")
+
+
+def cc_ctes(edges: str, nodes_sql: str) -> str:
+    """S4 canonicalization twin → ``assign(entity_id, canonical_id)``:
+    min-label reachability to fixpoint over the symmetrized ``edges(a, b)``
+    CTE, seeded with every node of ``nodes_sql`` (one id column) so
+    isolated nodes map to themselves.  The recursive twin of pipeline/cc.py's
+    large-star/small-star loop: UNION dedups, so the walk is bounded by
+    |V|², and min(label) per node is the component minimum the loop
+    converges to.  Needs ``WITH RECURSIVE``."""
+    return f"""
+sym AS MATERIALIZED (
+  SELECT a, b FROM {edges} UNION SELECT b, a FROM {edges}
+),
+walk(node, comp) AS (
+  SELECT id, id FROM ({nodes_sql}) seed(id)
+  UNION
+  SELECT s.b, w.comp FROM walk w JOIN sym s ON s.a = w.node
+),
+assign AS MATERIALIZED (
+  SELECT node AS entity_id, min(comp) AS canonical_id FROM walk GROUP BY node
+)"""
 
 
 def _linking_cte(threshold: float = 85.0) -> str:
@@ -382,20 +446,7 @@ link_edges AS MATERIALIZED (
   UNION
   SELECT c.a, c.b FROM vcand c JOIN dl_pass p ON p.pid = c.pid
 ),
--- S4 canonicalization: min-label reachability to fixpoint (the recursive
--- twin of pipeline/cc.py's large-star/small-star loop — UNION dedups, so
--- the walk is bounded by |V|²)
-lsym AS MATERIALIZED (
-  SELECT a, b FROM link_edges UNION SELECT b, a FROM link_edges
-),
-walk(node, comp) AS (
-  SELECT entity_id, entity_id FROM vraw
-  UNION
-  SELECT s.b, w.comp FROM walk w JOIN lsym s ON s.a = w.node
-),
-assign AS MATERIALIZED (
-  SELECT node AS entity_id, min(comp) AS canonical_id FROM walk GROUP BY node
-),
+{cc_ctes("link_edges", "SELECT entity_id FROM vraw")},
 -- S5 resolve: surface → min canonical (materialize.surface_map_df)
 smap AS MATERIALIZED (
   SELECT s.surface, min(coalesce(a.canonical_id, s.entity_id)) AS cid

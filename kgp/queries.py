@@ -17,7 +17,11 @@ DuckDB.  Small-group sums (< ~1e3 terms) round at 4-6 digits directly.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -278,23 +282,26 @@ _P9_SQL = """
 """
 
 
-_W5_DIR: list[str] = []  # one scratch warehouse per process, not per call
+@functools.cache
+def scratch_root() -> str:
+    """The process's one scratch dir for registry entries that commit
+    tables (W5 snapshots, the stream catch-up warehouse): created on first
+    use, reused by every later call in the process, and removed at
+    interpreter exit."""
+    root = tempfile.mkdtemp(prefix="kgp_scratch_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def _w5_latest_snapshot(spark, sf_dir):
     """W5: newest committed snapshot (validate_two_tower.py:42-53 sort-by-
     mtime-take-latest, over the metrics/lineage table).  Rows-only: the
-    commit timestamps are wall-clock.  The scratch warehouse is created
-    once per process — repeated gate/bench invocations re-commit into the
-    same dir (latest-snapshot semantics are precisely what is under test)
-    instead of littering /tmp with one tree per call."""
-    import tempfile
-
+    commit timestamps are wall-clock.  Repeated gate/bench invocations
+    re-commit into the same per-process scratch warehouse (latest-snapshot
+    semantics are precisely what is under test)."""
     from .io import TableIO
 
-    if not _W5_DIR:
-        _W5_DIR.append(tempfile.mkdtemp(prefix="kgp_w5_"))
-    io = TableIO(_W5_DIR[0])
+    io = TableIO(f"{scratch_root()}/w5")
     base = spark.range(3).select(F.col("id").alias("v"))
     io.write(base, "t1")
     io.write(base.withColumn("v", F.col("v") + 1), "t2")
@@ -304,9 +311,6 @@ def _w5_latest_snapshot(spark, sf_dir):
         .limit(1)
         .select("stage", "snapshot_id", "output_rows")
     )
-
-
-_STREAM_ROOT: list[str] = []  # one stream scratch dir per process (like _W5_DIR)
 
 
 def _stream_triples_catchup(spark, sf_dir):
@@ -323,19 +327,14 @@ def _stream_triples_catchup(spark, sf_dir):
     (test_streaming.py::test_stream_catchup_registry_entry).  The S1
     corpus-level dedup steps (D1 window, D2 boilerplate census) stay in
     the periodic batch pass over the landed warehouse."""
-    import functools
-    import tempfile
-
     from .io import TableIO
     from .streaming import drain_triples
     from .synth import vocab_surface_rows
 
     vocab_pd, transcripts = _kgp_inputs(spark)
-    if not _STREAM_ROOT:
-        root = tempfile.mkdtemp(prefix="kgp_stream_")
+    root = f"{scratch_root()}/stream"
+    if not os.path.exists(f"{root}/in/_SUCCESS"):
         transcripts.repartition(3).write.mode("overwrite").parquet(f"{root}/in")
-        _STREAM_ROOT.append(root)
-    root = _STREAM_ROOT[0]
     names = drain_triples(spark, f"{root}/in", vocab_surface_rows(vocab_pd),
                           f"{root}/wh", "triples", max_files_per_trigger=1,
                           timeout_s=300)

@@ -47,14 +47,14 @@ def test_stream_catchup_registry_entry(spark):
     got = (_stream_triples_catchup(spark, "")
            .select(cols).toPandas().sort_values(cols).reset_index(drop=True))
     vocab_pd, _ = _kgp_inputs(spark)
-    batch = spark.read.parquet(f"{Qmod._STREAM_ROOT[0]}/in").filter(
+    batch = spark.read.parquet(f"{Qmod.scratch_root()}/stream/in").filter(
         F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
         & (F.length(F.trim("text")) > 0))
     exp = (raw_triples_view(extract(batch, vocab_surface_rows(vocab_pd)))
            .select(cols).toPandas().sort_values(cols).reset_index(drop=True))
     assert len(got) > 0 and got.equals(exp)
 
-    root = Qmod._STREAM_ROOT[0]
+    root = f"{Qmod.scratch_root()}/stream"
     io = TableIO(f"{root}/wh")
     snaps = {t: io.manifest(t)["snapshot_id"]
              for t in os.listdir(f"{root}/wh") if t.startswith("triples_batch")}
@@ -69,6 +69,23 @@ def test_stream_catchup_registry_entry(spark):
     snaps2 = {t: io.manifest(t)["snapshot_id"]
               for t in os.listdir(f"{root}/wh") if t.startswith("triples_batch")}
     assert snaps2 == snaps
+
+
+def test_scratch_root_is_removed_at_exit():
+    """queries.scratch_root: one dir per process, reused by a repeat call,
+    and gone (contents too) once the interpreter exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = ("import os; from kgp import queries as q; r = q.scratch_root(); "
+            "assert q.scratch_root() == r; os.makedirs(r + '/w5/t'); "
+            "open(r + '/w5/t/f', 'w').write('x'); print(r)")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, check=True,
+                         capture_output=True, text=True).stdout
+    root = out.strip().splitlines()[-1]
+    assert "kgp_scratch_" in root and not os.path.exists(root)
 
 
 def test_streaming_triples_equal_batch(spark, tiny_vocab, stream_input):

@@ -203,3 +203,43 @@ def test_lowercase_domain_agreement():
     got = duckdb.connect().execute("SELECT lower(?)", [chars]).fetchone()[0]
     assert got == chars.lower()
     assert "\x01" not in chars  # sentence-sentinel byte stays out of domain
+
+
+def test_s2_core_matches_extract_turn_with_cue_override():
+    """The shared S2 core on its own: caller-supplied ``ordered``/``vocab``/
+    ``nums``, a 3-token surface beside its own 2- and 1-token prefixes
+    (greedy leftmost-longest), and an overridden cue list with a 1-token
+    and a 2-token cue (matched case-insensitively) — row-multiset equal to
+    textops.extract_turn on the same turns."""
+    from kgp.ops.transcript_twin import s2_cte
+    from kgp.textops import GazetteerMatcher, extract_turn
+
+    surfaces = ["new york city", "new york", "york", "paris", "rome", "big apple"]
+    cues = [("near_to", ("near",)), ("next_to", ("next", "to"))]
+    turns = [
+        ("c1", 0, "New York City was quiet. new york city Near paris, rome!", "search"),
+        ("c1", 1, "paris next to new york then york near rome", None),
+        ("c2", 0, "  new york city new york york?  big apple next  TO rome. ", ""),
+        ("c2", 3, "rome paris. ...  . paris near near rome next", "db"),
+    ]
+    ordered = pd.DataFrame(
+        [(i + 1, c, t, tx, tool, pd.Timestamp("2024-01-01") + pd.Timedelta(hours=i))
+         for i, (c, t, tx, tool) in enumerate(turns)],
+        columns=["tid", "conv_id", "turn_idx", "text", "tool", "ts"])
+    vocab = pd.DataFrame({"surface": surfaces,
+                          "ntoks": [len(s.split()) for s in surfaces]})
+    con = duckdb.connect()
+    con.register("ordered", ordered)
+    con.register("vocab", vocab)
+    con.register("nums", pd.DataFrame({"i": range(1, 64)}))
+    got = sorted(con.execute(
+        f"WITH RECURSIVE {s2_cte(cues)}\n"
+        "SELECT conv_id, turn_idx, subj, pred, obj FROM triples_raw").fetchall())
+
+    m = GazetteerMatcher([(s, i, "t") for i, s in enumerate(surfaces)])
+    exp = sorted(row for c, t, tx, tool in turns
+                 for row in extract_turn(c, t, tx, tool, m, cue_toks=cues)[1])
+    assert got == exp
+    # non-vacuous: the 3-gram matched, and both override cues fired
+    assert ("c1", 0, "conv:c1", "mentions", "srf:new york city") in got
+    assert {"near_to", "next_to"} <= {p for _c, _t, _s, p, _o in got}

@@ -2,10 +2,10 @@
 
 DuckDB 1.0's lambda (``list_reduce``/``list_transform``) and ``unnest``
 executors can misassociate rows across a CTE chain — nondeterministically
-(~1% of executions) or stably-wrong on specific corpora (see
-kgp/ops/docextract.py's hazard notes).  A twin that hash-matches Spark
+(~1% of executions) or stably-wrong on specific corpora (see the hazard
+notes in kgp/ops/transcript_twin.py).  A twin that hash-matches Spark
 once can therefore still flake in the driver's gate.  This tool runs each
-oracle SQL ``N_RUNS`` times on FRESH connections over the same parquet
+oracle SQL ``n_runs`` times on FRESH connections over the same parquet
 views and reports any query whose canonicalized result hash is not
 constant across runs.  No Spark involved — it sweeps only the DuckDB side.
 
@@ -24,10 +24,6 @@ import numpy as np
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-N_RUNS = int(sys.argv[2]) if len(sys.argv) > 2 else 15
-ONLY = set(sys.argv[3:])
 
 from tools._common import create_views  # noqa: E402
 
@@ -49,33 +45,43 @@ def _hash(df) -> str:
     return hashlib.sha256(repr(rows).encode()).hexdigest()
 
 
-def main() -> int:
+def sweep_query(sql: str, sf_dir: str, n_runs: int
+                ) -> tuple[set[tuple[int, str]], str | None]:
+    """Run ``sql`` ``n_runs`` times, each on a fresh connection over the
+    ``sf_dir`` views; return the distinct (rows, hash) results seen and
+    the first error (which stops the runs), if any."""
+    seen: set[tuple[int, str]] = set()
+    for _ in range(n_runs):
+        con = duckdb.connect()
+        try:
+            con.execute("SET TimeZone='UTC'")
+            create_views(con, sf_dir)
+            df = con.execute(sql).df()
+            seen.add((len(df), _hash(df)))
+        except Exception as e:  # noqa: BLE001 — report, keep sweeping
+            return seen, f"{type(e).__name__}: {e}"
+        finally:
+            con.close()
+    return seen, None
+
+
+def main(argv: list[str]) -> int:
     import __spark_entry__ as entry
 
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    n_runs = int(argv[1]) if len(argv) > 1 else 15
+    only = set(argv[2:])
     oracles = entry.oracle_sql()
-    if ONLY:
-        unknown = ONLY - oracles.keys()
+    if only:
+        unknown = only - oracles.keys()
         if unknown:
             print("unknown oracle name(s):", ", ".join(sorted(unknown)))
             return 2
-        oracles = {k: v for k, v in oracles.items() if k in ONLY}
+        oracles = {k: v for k, v in oracles.items() if k in only}
     flaky: list[str] = []
     for name, sql in oracles.items():
         t0 = time.time()
-        seen: set[tuple[int, str]] = set()
-        err = None
-        for _ in range(N_RUNS):
-            con = duckdb.connect()
-            try:
-                con.execute("SET TimeZone='UTC'")
-                create_views(con, SF_DIR)
-                df = con.execute(sql).df()
-                seen.add((len(df), _hash(df)))
-            except Exception as e:  # noqa: BLE001 — report, keep sweeping
-                err = f"{type(e).__name__}: {e}"
-                break
-            finally:
-                con.close()
+        seen, err = sweep_query(sql, sf_dir, n_runs)
         status = ("ERR " + err if err else
                   "ok" if len(seen) == 1 else f"FLAKY({len(seen)} variants)")
         if err or len(seen) != 1:
@@ -84,11 +90,11 @@ def main() -> int:
         print(f"{name:34s} {status:8s} rows={rows} "
               f"{time.time() - t0:6.1f}s", flush=True)
     print(f"\n{len(oracles) - len(flaky)}/{len(oracles)} stable over "
-          f"{N_RUNS} runs at {SF_DIR}")
+          f"{n_runs} runs at {sf_dir}")
     if flaky:
         print("UNSTABLE:", ", ".join(flaky))
     return 1 if flaky else 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))
