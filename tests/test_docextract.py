@@ -14,21 +14,17 @@ from kgp.ops.docextract import (DOC_CUES, derive_vocab, docs_components,
                                 extract_docs_resolved,
                                 extract_docs_resolved_sql, extract_docs_sql)
 from kgp.textops import GazetteerMatcher, extract_turn, find_cues
+from tools.check_parity import driver_canon
 
 SF = "/root/testdata/sf0.001"
-
-
-def _canon(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
 def test_docs_extraction_matches_duckdb(spark):
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
-    odf = _canon(con.execute(extract_docs_sql()).df())
-    sdf = _canon(extract_docs(spark, SF).toPandas())
+    odf = driver_canon(con.execute(extract_docs_sql()).df())
+    sdf = driver_canon(extract_docs(spark, SF).toPandas())
     assert len(sdf) == len(odf) > 10_000
     assert sdf.equals(odf)
     # non-vacuous: every triple family fires on the fixture corpus
@@ -43,8 +39,8 @@ def test_docs_resolved_matches_duckdb(spark):
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
-    odf = _canon(con.execute(extract_docs_resolved_sql()).df())
-    sdf = _canon(extract_docs_resolved(spark, SF).toPandas())
+    odf = driver_canon(con.execute(extract_docs_resolved_sql()).df())
+    sdf = driver_canon(extract_docs_resolved(spark, SF).toPandas())
     assert len(sdf) == len(odf) > 10_000
     assert sdf.equals(odf)
     assert not sdf["subj"].str.startswith("srf:").any()
@@ -60,8 +56,8 @@ def test_docs_components_match_recursive_cte(spark):
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
-    odf = _canon(con.execute(docs_components_sql()).df())
-    sdf = _canon(docs_components(spark, SF).toPandas())
+    odf = driver_canon(con.execute(docs_components_sql()).df())
+    sdf = driver_canon(docs_components(spark, SF).toPandas())
     assert sdf.equals(odf)
     sizes = sorted(odf.groupby("canonical_id").size())
     assert len(odf) == len(set(odf["entity_id"]))
@@ -126,8 +122,8 @@ def test_adversarial_corpus_parity(spark, tmp_path):
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet/*.parquet'")
-    odf = _canon(con.execute(extract_docs_sql()).df())
-    sdf = _canon(extract_docs(spark, d).toPandas())
+    odf = driver_canon(con.execute(extract_docs_sql()).df())
+    sdf = driver_canon(extract_docs(spark, d).toPandas())
     assert sdf.equals(odf)
     # NULL and '' source docs emit no uses_tool triple on either engine
     tools = sdf[sdf["pred"] == "uses_tool"]

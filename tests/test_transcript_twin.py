@@ -10,7 +10,6 @@ bug in textops/link/cc cannot self-confirm.
 
 from __future__ import annotations
 
-import hashlib
 import random
 
 import duckdb
@@ -21,24 +20,8 @@ from kgp import fixtures
 from kgp.fuzzy import token_set_ratio
 from kgp.ops.difflib_sql import ratio_chain
 from kgp.ops.transcript_twin import transcript_edges_sql, transcript_triples_sql
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
-def _vhash(df: pd.DataFrame) -> str:
-    # the driver's canonicalizer shape (tools/driver_gate_sim.py)
-    h = hashlib.sha256()
-    for c in df.columns:
-        for v in df[c]:
-            if isinstance(v, float):
-                v = round(v, 6)
-            h.update(str(v).encode())
-            h.update(b"\x1f")
-        h.update(b"|")
-    return h.hexdigest()
+# the driver's canonicalizer, as the registry gate replays it
+from tools.check_parity import driver_canon, value_hash
 
 
 # ---------------------------------------------------------------------------
@@ -129,33 +112,33 @@ def test_fixture_matches_generator():
 def fixture_spark_result(spark):
     from kgp.queries import _kgp_edges, _kgp_triples
 
-    triples = _canon(_kgp_triples(spark, "unused").toPandas())
-    edges = _canon(_kgp_edges(spark, "unused").toPandas())
+    triples = driver_canon(_kgp_triples(spark, "unused").toPandas())
+    edges = driver_canon(_kgp_edges(spark, "unused").toPandas())
     return triples, edges
 
 
 def test_triples_twin_hash_parity(fixture_spark_result):
     sdf, _ = fixture_spark_result
-    odf = _canon(duckdb.connect().execute(transcript_triples_sql()).df())
+    odf = driver_canon(duckdb.connect().execute(transcript_triples_sql()).df())
     assert len(sdf) == len(odf)
-    assert _vhash(sdf) == _vhash(odf)
+    assert value_hash(sdf) == value_hash(odf)
 
 
 def test_edges_twin_hash_parity(fixture_spark_result):
     _, sdf = fixture_spark_result
-    odf = _canon(duckdb.connect().execute(transcript_edges_sql()).df())
+    odf = driver_canon(duckdb.connect().execute(transcript_edges_sql()).df())
     assert len(sdf) == len(odf)
-    assert _vhash(sdf) == _vhash(odf)
+    assert value_hash(sdf) == value_hash(odf)
 
 
 def test_nodes_twin_hash_parity(spark):
     from kgp.ops.transcript_twin import transcript_nodes_sql
     from kgp.queries import _kgp_nodes_canonical
 
-    sdf = _canon(_kgp_nodes_canonical(spark, "unused").toPandas())
-    odf = _canon(duckdb.connect().execute(transcript_nodes_sql()).df())
+    sdf = driver_canon(_kgp_nodes_canonical(spark, "unused").toPandas())
+    odf = driver_canon(duckdb.connect().execute(transcript_nodes_sql()).df())
     assert len(sdf) == len(odf) > 0
-    assert _vhash(sdf) == _vhash(odf)
+    assert value_hash(sdf) == value_hash(odf)
     # the canonical set is a real contraction of the vocab (linking merged)
     assert len(sdf) < fixtures.N_ENT
 

@@ -1,7 +1,7 @@
 """Shared fixture-table registry for the tools/ parity harnesses.
 
-check_parity.py, driver_gate_sim.py, and oracle_sweep.py all register the
-same ten driver-generated parquet tables as DuckDB views.  Single-sourcing
+check_parity.py and oracle_sweep.py both register the same ten
+driver-generated parquet tables as DuckDB views.  Single-sourcing
 the tuple + loop here means adding/renaming a fixture table is one edit —
 a per-tool copy that drifts would make a harness silently report 'ok' on
 oracles that never saw the data.

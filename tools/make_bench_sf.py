@@ -28,10 +28,6 @@ import sys
 
 import duckdb
 
-SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-K = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-OUT = sys.argv[3] if len(sys.argv) > 3 else f"/tmp/kgp_bench_sf0.{K}"
-
 # (table, key columns owned by this table, foreign keys → owning table)
 SPEC: dict[str, tuple[list[str], dict[str, str]]] = {
     "region": ([], {}),        # shared dimension
@@ -52,25 +48,28 @@ _KEY_OWNER = {"customer": "c_custkey", "supplier": "s_suppkey",
               "part": "p_partkey", "orders": "o_orderkey"}
 
 
-def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+def main(argv: list[str]) -> None:
+    src_dir = argv[0] if argv else "/root/testdata/sf0.1"
+    n_rep = int(argv[1]) if len(argv) > 1 else 5
+    out_dir = argv[2] if len(argv) > 2 else f"/tmp/kgp_bench_sf0.{n_rep}"
+    os.makedirs(out_dir, exist_ok=True)
     con = duckdb.connect()
     strides: dict[str, int] = {}
     for t, col in _KEY_OWNER.items():
         strides[t] = 1 + con.execute(
-            f"SELECT max({col}) FROM read_parquet('{SRC}/{t}.parquet')").fetchone()[0]
+            f"SELECT max({col}) FROM read_parquet('{src_dir}/{t}.parquet')").fetchone()[0]
 
     for t, (own_keys, fks) in SPEC.items():
-        src = f"read_parquet('{SRC}/{t}.parquet')"
+        src = f"read_parquet('{src_dir}/{t}.parquet')"
         if not own_keys and not fks:
-            con.execute(f"COPY (SELECT * FROM {src}) TO '{OUT}/{t}.parquet' (FORMAT PARQUET)")
+            con.execute(f"COPY (SELECT * FROM {src}) TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)")
             continue
         cols = [c[0] for c in con.execute(f"DESCRIBE SELECT * FROM {src}").fetchall()]
         own_strides = {
             c: 1 + con.execute(f"SELECT max({c}) FROM {src}").fetchone()[0]
             for c in own_keys}
         selects = []
-        for k in range(K):
+        for k in range(n_rep):
             exprs = []
             for c in cols:
                 if c in own_strides:
@@ -81,11 +80,11 @@ def main() -> None:
                     exprs.append(c)
             selects.append(f"SELECT {', '.join(exprs)} FROM {src}")
         union = "\nUNION ALL\n".join(selects)
-        con.execute(f"COPY ({union}) TO '{OUT}/{t}.parquet' (FORMAT PARQUET)")
-        n = con.execute(f"SELECT count(*) FROM read_parquet('{OUT}/{t}.parquet')").fetchone()[0]
+        con.execute(f"COPY ({union}) TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)")
+        n = con.execute(f"SELECT count(*) FROM read_parquet('{out_dir}/{t}.parquet')").fetchone()[0]
         print(f"{t}: {n} rows")
-    print(f"done: {OUT} (K={K} from {SRC})")
+    print(f"done: {out_dir} (K={n_rep} from {src_dir})")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -19,9 +19,6 @@ import os
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = sys.argv[2:]
-
 AUDIT = [
     "p2_in_filter", "agg_pricing_summary", "kg_edges", "bgp_two_hop",
     "bgp_two_hop_mat", "bgp_date_range_mat", "knn_cosine_topk",
@@ -57,17 +54,18 @@ def summarize(name: str, txt: str) -> str:
             f"pushed_scans={pushed} partition_pruned={parts}")
 
 
-def main() -> None:
+def main(argv: list[str]) -> None:
     from kgp.queries import REGISTRY
     from kgp.session import get_spark
 
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    names = argv[1:] or AUDIT
     spark = get_spark(app_name="plan-audit",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
-    names = ONLY or AUDIT
     for name in names:
-        df = REGISTRY[name].fn(spark, SF_DIR)
+        df = REGISTRY[name].fn(spark, sf_dir)
         print(summarize(name, plan_text(df)), flush=True)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
