@@ -4,8 +4,9 @@ Brand-new engine (not a port) with the data-processing capabilities of the
 reference project Rune-Nedergaard/knowledge-graph (see SURVEY.md): it reads a
 table of multi-turn conversation/agent transcripts, reconstructs stable
 per-conversation turn order, runs vectorized mention detection + triple
-extraction, links and canonicalizes entities (LSH blocking + connected
-components), and materializes partitioned nodes/edges tables.
+extraction, links and canonicalizes entities (token deletion-neighborhood
+blocking + connected components), and materializes partitioned nodes/edges
+tables.
 
 Package layout
 --------------

@@ -11,12 +11,17 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+# DECIMAL(18, DECSUM_SCALE) accumulation, rounded to DECSUM_ROUND_TO digits
+DECSUM_SCALE, DECSUM_ROUND_TO = 4, 2
 
-def decsum(col: str | F.Column, alias: str, scale: int = 4, round_to: int = 2) -> F.Column:
+
+def decsum(col: str | F.Column, alias: str, scale: int = DECSUM_SCALE,
+           round_to: int = DECSUM_ROUND_TO) -> F.Column:
     """Exact DECIMAL(18, scale) accumulation, double out, rounded."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(F.sum(c.cast(f"decimal(18,{scale})")).cast("double"), round_to).alias(alias)
 
 
-def decsum_sql(expr: str, alias: str, scale: int = 4, round_to: int = 2) -> str:
+def decsum_sql(expr: str, alias: str, scale: int = DECSUM_SCALE,
+               round_to: int = DECSUM_ROUND_TO) -> str:
     return f"ROUND(SUM(({expr})::DECIMAL(18,{scale}))::DOUBLE, {round_to}) AS {alias}"

@@ -113,7 +113,7 @@ def retry_call(fn: Callable[[], T], max_tries: int,
     return None, err
 
 
-def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a narrow input so CPU-bound (pandas-UDF)
     stages use every core.
 
@@ -129,7 +129,7 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     same trap as localCheckpoint(eager=False); every current call site
     passes a raw table scan or createDataFrame local relation).
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
     return df.repartition(target)

@@ -22,27 +22,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-# default lexicons for the synthetic corpora (parameters, not policy: real
-# deployments pass real pronoun / NP-head lists; the testdata documents
-# vocabulary has no true pronouns, so the determiners stand in as the
-# anaphor class there)
+# default lexicons for the synthetic corpora (the Spark operator takes
+# them as parameters: real deployments pass real pronoun / NP-head lists;
+# the testdata documents vocabulary has no true pronouns, so the
+# determiners stand in as the anaphor class there).  The DuckDB twin
+# replays these defaults.
 ANAPHORS = ("it", "this", "that", "a", "the")
 ANTECEDENTS = ("customer", "supplier", "part", "order", "table", "query")
 
 
-def resolve_anaphora(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
+def resolve_anaphora(df: DataFrame,
                      anaphors: tuple[str, ...] = ANAPHORS,
                      antecedents: tuple[str, ...] = ANTECEDENTS) -> DataFrame:
-    """(id, pos, anaphor, ant_pos, antecedent): every anaphor token bound
+    """(doc_id, pos, anaphor, ant_pos, antecedent): every anaphor token bound
     to the nearest PRECEDING antecedent token in the same document
     (recency heuristic; anaphors with no preceding candidate are
     dropped, matching FCoref's singleton suppression)."""
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("pos", "tok"))
+        F.col("doc_id"),
+        F.posexplode(F.split(F.lower(F.col("text")), r"\s+")).alias("pos", "tok"))
     is_ant = F.col("tok").isin(*antecedents)
-    w = (W.partitionBy(id_col).orderBy("pos")
+    w = (W.partitionBy("doc_id").orderBy("pos")
          .rowsBetween(W.unboundedPreceding, W.currentRow - 1))
     carried = toks.withColumn(
         "ant", F.last(F.when(is_ant, F.struct(F.col("pos").alias("p"),
@@ -51,36 +51,33 @@ def resolve_anaphora(df: DataFrame, text_col: str = "text",
     return (
         carried
         .filter(F.col("tok").isin(*anaphors) & F.col("ant").isNotNull())
-        .select(id_col, "pos", F.col("tok").alias("anaphor"),
+        .select("doc_id", "pos", F.col("tok").alias("anaphor"),
                 F.col("ant.p").alias("ant_pos"),
                 F.col("ant.t").alias("antecedent"))
     )
 
 
-def resolve_anaphora_sql(table: str = "documents", text_col: str = "text",
-                         id_col: str = "doc_id",
-                         anaphors: tuple[str, ...] = ANAPHORS,
-                         antecedents: tuple[str, ...] = ANTECEDENTS) -> str:
+def resolve_anaphora_sql() -> str:
     """DuckDB twin: same tokenization, same recency window."""
-    ana = ", ".join(f"'{a}'" for a in anaphors)
-    ant = ", ".join(f"'{a}'" for a in antecedents)
+    ana = ", ".join(f"'{a}'" for a in ANAPHORS)
+    ant = ", ".join(f"'{a}'" for a in ANTECEDENTS)
     return f"""
         WITH toks AS (
-          SELECT {id_col},
+          SELECT doc_id,
                  CAST(generate_subscripts(ws, 1) - 1 AS BIGINT) AS pos,
                  unnest(ws) AS tok
-          FROM (SELECT {id_col},
-                       string_split_regex(lower({text_col}), '[\\s\\v]+') AS ws
-                FROM {table})),
+          FROM (SELECT doc_id,
+                       string_split_regex(lower(text), '[\\s\\v]+') AS ws
+                FROM documents)),
         carried AS (
-          SELECT {id_col}, pos, tok,
+          SELECT doc_id, pos, tok,
                  last_value(CASE WHEN tok IN ({ant})
                                  THEN {{'p': pos, 't': tok}} END IGNORE NULLS)
-                   OVER (PARTITION BY {id_col} ORDER BY pos
+                   OVER (PARTITION BY doc_id ORDER BY pos
                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                    AS ant
           FROM toks)
-        SELECT {id_col}, pos, tok AS anaphor,
+        SELECT doc_id, pos, tok AS anaphor,
                ant.p AS ant_pos, ant.t AS antecedent
         FROM carried
         WHERE tok IN ({ana}) AND ant IS NOT NULL

@@ -109,11 +109,16 @@ def _arr_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
 _arr_jaccard = _arr_jaccard.asNondeterministic()
 
 
+# minhash LSH shape, shared with the DuckDB twin; the twin (and its
+# registry entry) verify at MINHASH_PAIRS_THRESHOLD
+MINHASH_NUM_HASHES, MINHASH_BANDS = 32, 8
+MINHASH_PAIRS_THRESHOLD = 0.5
+
+
 def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
                            threshold: float = 0.8, mode: str = "char",
-                           num_hashes: int = 32, bands: int = 8,
                            quantize: bool = False) -> DataFrame:
-    """Candidate pairs sharing >=1 of ``bands`` minhash bands, verified by
+    """Candidate pairs sharing >=1 of ``MINHASH_BANDS`` minhash bands, verified by
     exact shingle Jaccard >= threshold.  Returns (a, b, jaccard), a < b.
 
     ``mode='char'``: char-3gram shingles (surface-form near-dup, J7).
@@ -158,7 +163,7 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     # UDF runs once, not once per self-join side (AQE's broadcast pick
     # stops the two sides' exchanges from being reusable).
     keyed = pin(explode_once(sh, ["id"],
-                            _bands_from_sh_udf(num_hashes, bands)("sh"),
+                            _bands_from_sh_udf(MINHASH_NUM_HASHES, MINHASH_BANDS)("sh"),
                             ["bkey"], pos=False))
     l, r = keyed.alias("l"), keyed.alias("r")
     pairs = (
@@ -181,9 +186,7 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     return verified.select("a", "b", F.round("_j", 6).alias("jaccard"))
 
 
-def minhash_pairs_sql(table: str = "documents", text_col: str = "text",
-                      id_col: str = "doc_id", threshold: float = 0.5,
-                      num_hashes: int = 32, bands: int = 8) -> str:
+def minhash_pairs_sql() -> str:
     """DuckDB oracle for ``minhash_near_dup_pairs(mode='word',
     quantize=True)`` — the FULL pipeline replayed exactly in SQL: word-
     bigram fnv1a shingles, 32 multiply-shift minhashes (mod-2^64-exact,
@@ -194,6 +197,7 @@ def minhash_pairs_sql(table: str = "documents", text_col: str = "text",
     from ..textops import _MINHASH_A, _MINHASH_B
     from .sqlhash import fnv1a_sql, mulshift_sql
 
+    num_hashes, bands = MINHASH_NUM_HASHES, MINHASH_BANDS
     rows = num_hashes // bands
     sig_exprs = ",\n                ".join(
         "CASE WHEN len(sh) = 0 THEN CAST(0 AS HUGEINT) ELSE "
@@ -201,13 +205,13 @@ def minhash_pairs_sql(table: str = "documents", text_col: str = "text",
         for i in range(num_hashes))
     bkey = " || ',' || ".join(f"sig[bi * {rows} + {j + 1}]::VARCHAR" for j in range(rows))
     return f"""
-        WITH d AS (SELECT {id_col} AS id,
+        WITH d AS (SELECT doc_id AS id,
                           -- coalesce FIRST: the Spark UDF runs shingle_set(t or ''),
                           -- so NULL text gets the sentinel signature exactly like ''
                           -- — a bare lower(NULL) would NULL the whole chain and emit
                           -- zero pairs for NULL-text docs (engine drift)
-                          {canon_sql(f"lower(coalesce({text_col}, ''))")} AS nt
-                   FROM {table}),
+                          {canon_sql("lower(coalesce(text, ''))")} AS nt
+                   FROM documents),
         w AS (SELECT id, nt, string_split(nt, ' ') AS ws FROM d),
         shs AS (SELECT id,
                      CASE WHEN nt = '' THEN CAST([] AS HUGEINT[])
@@ -232,7 +236,7 @@ def minhash_pairs_sql(table: str = "documents", text_col: str = "text",
                      CASE WHEN u = 0 THEN 1.0 ELSE inter / CAST(u AS DOUBLE) END AS jac
               FROM v)
         SELECT a, b, CAST(FLOOR(jac * 1048576) AS BIGINT) AS jq20
-        FROM j WHERE jac >= {threshold}
+        FROM j WHERE jac >= {MINHASH_PAIRS_THRESHOLD}
     """
 
 
@@ -332,10 +336,11 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
 
 SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = 16
+SIMHASH_MAX_HAMMING = 3  # the pigeonhole bound of the 4x16-bit banding
 
 
 def simhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
-                           max_hamming: int = 3) -> DataFrame:
+                           max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
     """Pairs whose simhashes agree on >=1 of 4 16-bit bands AND have
     hamming distance <= max_hamming.  Returns (a, b, hamming).
 
@@ -380,8 +385,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     )
 
 
-def simhash_pairs_sql(table: str = "documents", text_col: str = "text",
-                      id_col: str = "doc_id", max_hamming: int = 3) -> str:
+def simhash_pairs_sql() -> str:
     """DuckDB oracle for ``simhash_near_dup_pairs``: normalize → fnv1a
     token hashes → per-bit sign aggregation → 4×16-bit band join →
     bit_count hamming verify, all mod-2^64-exact integer arithmetic.
@@ -399,10 +403,10 @@ def simhash_pairs_sql(table: str = "documents", text_col: str = "text",
     band_p = ("CASE bi WHEN 0 THEN CAST(1 AS HUGEINT) WHEN 1 THEN 65536 "
               "WHEN 2 THEN 4294967296 ELSE 281474976710656 END")
     return f"""
-        WITH d AS (SELECT {id_col} AS id,
-                          trim(regexp_replace(lower({text_col}), '[\\s\\v]+', ' ', 'g'),
+        WITH d AS (SELECT doc_id AS id,
+                          trim(regexp_replace(lower(text), '[\\s\\v]+', ' ', 'g'),
                                '{strip_chars}') AS nt
-                   FROM {table}),
+                   FROM documents),
         w AS (SELECT id, list_filter(string_split(nt, ' '), t -> t <> '') AS toks FROM d),
         tok AS (SELECT id, unnest(toks) AS t FROM w),
         th AS (SELECT id, {fnv1a_sql('t')} AS h FROM tok),
@@ -426,7 +430,7 @@ def simhash_pairs_sql(table: str = "documents", text_col: str = "text",
                                     CAST(ob - 9223372036854775808 AS BIGINT))) AS hamming
                FROM cand)
         SELECT a, b, CAST(hamming AS INT) AS hamming
-        FROM hd WHERE hamming <= {max_hamming}
+        FROM hd WHERE hamming <= {SIMHASH_MAX_HAMMING}
     """
 
 
@@ -451,8 +455,12 @@ def _word_bigrams(text_col: str):
     return F.when(F.size(w) >= 2, F.array_distinct(grams)).otherwise(F.array(norm))
 
 
+# exact word-bigram Jaccard floor, and the df cap the registry entry runs at
+NGRAM_JACCARD_THRESHOLD, NGRAM_DF_CAP = 0.2, 64
+
+
 def ngram_jaccard_pairs_sqlable(df: DataFrame, text_col: str, id_col: str,
-                                threshold: float = 0.2,
+                                threshold: float = NGRAM_JACCARD_THRESHOLD,
                                 df_cap: int | None = None) -> DataFrame:
     """Exact word-bigram Jaccard pairs >= threshold via explode + self-join.
 
@@ -494,7 +502,7 @@ def ngram_jaccard_pairs_sqlable(df: DataFrame, text_col: str, id_col: str,
 
 
 def ngram_jaccard_sql(table: str, text_col: str, id_col: str,
-                      threshold: float = 0.2, df_cap: int | None = None) -> str:
+                      df_cap: int | None = None) -> str:
     """DuckDB oracle for `ngram_jaccard_pairs_sqlable` (same shingling,
     same optional document-frequency cap)."""
     if df_cap is None:
@@ -520,7 +528,7 @@ def ngram_jaccard_sql(table: str, text_col: str, id_col: str,
                    FROM ex l JOIN ex r USING (g) WHERE l.id < r.id GROUP BY 1, 2)
         SELECT a, b, ROUND(inter / (sa.n + sb.n - inter)::DOUBLE, 6) AS jaccard
         FROM shared JOIN sizes sa ON shared.a = sa.id JOIN sizes sb ON shared.b = sb.id
-        WHERE ROUND(inter / (sa.n + sb.n - inter)::DOUBLE, 6) >= {threshold}
+        WHERE ROUND(inter / (sa.n + sb.n - inter)::DOUBLE, 6) >= {NGRAM_JACCARD_THRESHOLD}
     """
 
 
@@ -528,8 +536,11 @@ def ngram_jaccard_sql(table: str, text_col: str, id_col: str,
 # numbers/refs groups together (reference remove_duplicate_paragraphs.py
 # boilerplate examples).  Pure built-ins, SQL-expressible.
 
+MIN_MASKED_GROUP = 2
+
+
 def masked_dup_groups(df: DataFrame, text_col: str, id_col: str,
-                      min_group: int = 2) -> DataFrame:
+                      min_group: int = MIN_MASKED_GROUP) -> DataFrame:
     return (
         df.groupBy(dup_key_col(text_col).alias("dup_key"))
         .agg(F.count("*").alias("n_members"), F.min(id_col).alias("keep_id"))
@@ -538,7 +549,7 @@ def masked_dup_groups(df: DataFrame, text_col: str, id_col: str,
 
 
 def masked_dup_groups_sql(table: str, text_col: str, id_col: str,
-                          min_group: int = 2) -> str:
+                          min_group: int = MIN_MASKED_GROUP) -> str:
     return f"""
         SELECT regexp_replace({canon_sql(f"lower({text_col})")},
                               '[0-9]+', '#', 'g') AS dup_key,
@@ -552,32 +563,34 @@ def masked_dup_groups_sql(table: str, text_col: str, id_col: str,
 # ---------------------------------------------------------------------------
 
 N_HYPERPLANES = 12
+COSINE_LSH_BANDS = 3
+VERIFY_BLOCK = 2048
 _HP_SEED = 1234  # independent hash family from simsearch's (by design)
 
 
 def cosine_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
-                          threshold: float = 0.98, bands: int = 3,
-                          n_planes: int = N_HYPERPLANES,
-                          block: int = 2048) -> DataFrame:
-    """Random-hyperplane LSH (sign bits, ``bands`` prefixes) + exact cosine
-    verify >= threshold.  Mirrors the reference's near-dup rule
-    (remove_duplicate_paragraphs.py:117-128: angular dist < 2*(1-0.98)).
+                          threshold: float = 0.98) -> DataFrame:
+    """Random-hyperplane LSH (sign bits, ``COSINE_LSH_BANDS`` prefixes) +
+    exact cosine verify >= threshold.  Mirrors the reference's near-dup
+    rule (remove_duplicate_paragraphs.py:117-128: angular dist <
+    2*(1-0.98)).
 
     Shape: ONE pass assigns each vector its per-band bucket keys (vector
     rides along), then the verify is a blockwise numpy matmul INSIDE each
-    (band, bucket) group — vectors shuffle once per band (``bands``× the
+    (band, bucket) group — vectors shuffle once per band (bands × the
     corpus), never once per candidate pair, and there is no pair-level
     join at all.  The earlier band-self-join + per-pair cosine UDF moved
     Θ(Σ bucket²) pair rows (each carrying two vectors) through two
     shuffles; this form moves Θ(bands · N) rows and spends the same
-    Σ bucket² only as in-memory BLAS flops.  ``block`` caps the verify
-    working set (block × bucket matrix) for hot buckets.
+    Σ bucket² only as in-memory BLAS flops.  ``VERIFY_BLOCK`` caps the
+    verify working set (block × bucket matrix) for hot buckets.
 
-    Sizing for corpus scale: bucket count per band is 2^(n_planes/bands);
-    the 12/3 default (16 buckets/band) is calibrated for ~10^4-10^6 rows —
-    at 10^9 rows pass e.g. n_planes=48, bands=6 (256 buckets/band, recall
-    1-(1-p^8)^6 with p = 1-θ/π; ≈0.97 at cosine 0.98).  Verify flops
-    scale with Σ bucket², so planes-per-band is THE selectivity dial."""
+    Sizing for corpus scale: bucket count per band is
+    2^(N_HYPERPLANES/COSINE_LSH_BANDS); the 12/3 setting (16 buckets/band)
+    is calibrated for ~10^4-10^6 rows — at 10^9 rows 48/6 gives 256
+    buckets/band (recall 1-(1-p^8)^6 with p = 1-θ/π; ≈0.97 at cosine
+    0.98).  Verify flops scale with Σ bucket², so planes-per-band is THE
+    selectivity dial."""
     def keyed_vecs(it):
         from .hyperlsh import sign_band_keys
 
@@ -586,7 +599,7 @@ def cosine_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
                 continue
             mat = np.stack(pdf[vec_col].to_numpy())
             out = []
-            for keys in sign_band_keys(mat, bands, n_planes, _HP_SEED):
+            for keys in sign_band_keys(mat, COSINE_LSH_BANDS, N_HYPERPLANES, _HP_SEED):
                 out.append(pd.DataFrame(
                     {"bkey": keys, "id": pdf[id_col].to_numpy(),
                      "v": pdf[vec_col]}))
@@ -606,8 +619,8 @@ def cosine_near_dup_pairs(df: DataFrame, vec_col: str, id_col: str,
         np.divide(M, norms, out=M, where=norms > 0)  # zero vecs stay 0 ⇒ cos 0
         ids = pdf["id"].to_numpy()
         aa, bb, cc = [], [], []
-        for s in range(0, m, block):
-            C = M[s : s + block] @ M.T  # (block, m)
+        for s in range(0, m, VERIFY_BLOCK):
+            C = M[s : s + VERIFY_BLOCK] @ M.T  # (block, m)
             ii, jj = np.nonzero(C >= threshold)
             gi = ii + s
             keep = ids[gi] < ids[jj]  # dedupe within bucket + drop self

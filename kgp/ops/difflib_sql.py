@@ -41,16 +41,15 @@ DEPTH = 32            # unroll bound; names are ~<= 60 chars, typical depth <= 8
 AUTOJUNK_LIMIT = 200  # difflib enables autojunk at len(b) >= 200 — out of domain
 
 
-def ratio_chain(src: str, threshold: float, prefix: str = "dl",
-                nums: str = "nums", depth: int = DEPTH) -> str:
-    """CTE chain from ``{src}(pid, na, nb)`` to ``{prefix}_pass(pid)``.
+def ratio_chain(src: str, threshold: float) -> str:
+    """CTE chain from ``{src}(pid, na, nb)`` to ``dl_pass(pid)``.
 
     ``{src}`` rows are candidate pairs whose normalized names are UNEQUAL
     (the caller short-circuits na == nb, like linkspec.verify_pair);
-    ``{prefix}_pass`` holds the pids with token_set_ratio >= threshold.
+    ``dl_pass`` holds the pids with token_set_ratio >= threshold.
     ``nums`` is a shared 1-based numbers CTE covering max string length.
     """
-    p = prefix
+    p, nums, depth = "dl", "nums", DEPTH
     levels = []
     for lv in range(depth):
         nxt = "" if lv + 1 == depth else f""",

@@ -52,6 +52,7 @@ _VOCAB_MEMO: dict[tuple[str, str], list[tuple[str, int, str]]] = {}
 SENT_EVERY = 8          # inject '. ' after every 8th token
 N_UNIGRAMS = 12
 N_BIGRAMS = 8
+DOC_SURFACE_TOKENS = 2  # the vocab holds unigrams and bigrams only
 # cue words are RESERVED: excluded from the derived vocab so a cue
 # occurrence can never overlap a mention span (pair-rule cues must lie
 # strictly BETWEEN consecutive mentions to fire)
@@ -208,14 +209,14 @@ def docs_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB twin
 # --------------------------------------------------------------------------
 
-def _vocab_cte(table: str) -> str:
+def _vocab_cte() -> str:
     """raw → uni/doc_toks/bi → ``vocab`` (surface, ntoks, eid) — the
     corpus-derived vocabulary, shared by the extraction twins and the
     components twin — plus the shared ``nums`` numbers table."""
     cuelist = _in_list_sql()
     return f"""
 raw AS MATERIALIZED (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id, source, text FROM {table}
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, source, text FROM documents
 ),
 -- join-by-index list explosion, never unnest: see the DuckDB hazard
 -- notes in transcript_twin (above s2_cte).  Positions are over the
@@ -267,32 +268,32 @@ vocab AS MATERIALIZED (
 )"""
 
 
-def _docs_cte(table: str) -> str:
+def _docs_cte() -> str:
     """The shared WITH-clause body: _vocab_cte → ``ordered`` (one turn per
     doc, the injected-period text, source as the tool) → the transcript
     twin's S2 core with DOC_CUES → ``triples_raw`` (conv_id = doc_id)."""
-    return f"""{_vocab_cte(table)},
+    return f"""{_vocab_cte()},
 ordered AS MATERIALIZED (
   SELECT doc_id AS conv_id, 0 AS turn_idx,
          regexp_replace(text, '{_PERIOD_PAT}', '\\1. ', 'g') AS text,
          source AS tool, CAST(NULL AS TIMESTAMP) AS ts,
          row_number() OVER (ORDER BY doc_id) AS tid
   FROM raw
-),{s2_cte(DOC_CUES)}"""
+),{s2_cte(DOC_CUES, max_tokens=DOC_SURFACE_TOKENS)}"""
 
 
-def extract_docs_sql(table: str = "documents") -> str:
+def extract_docs_sql() -> str:
     """From-scratch SQL re-derivation of extract_docs (see _docs_cte)."""
-    return (f"WITH RECURSIVE {_docs_cte(table)}\n"
+    return (f"WITH RECURSIVE {_docs_cte()}\n"
             "SELECT conv_id AS doc_id, subj, pred, obj FROM triples_raw")
 
 
-def extract_docs_resolved_sql(table: str = "documents") -> str:
+def extract_docs_resolved_sql() -> str:
     """extract_docs + the S5 resolve layer: ``srf:<surface>`` → ``ent:<id>``
     via the derived vocab (identity entity map); rows whose srf: operand has
     no mapping are dropped — pipeline.materialize._resolve's exact guard
     (vacuous under this closed gazetteer, kept for drop-semantics parity)."""
-    return f"""WITH RECURSIVE {_docs_cte(table)}
+    return f"""WITH RECURSIVE {_docs_cte()}
 SELECT t.conv_id AS doc_id,
        CASE WHEN t.subj LIKE 'srf:%' THEN 'ent:' || vs.eid ELSE t.subj END AS subj,
        t.pred,
@@ -305,10 +306,10 @@ WHERE (t.subj NOT LIKE 'srf:%' OR vs.eid IS NOT NULL)
 """
 
 
-def docs_components_sql(table: str = "documents") -> str:
+def docs_components_sql() -> str:
     """Recursive-CTE twin of docs_components: the shared min-label
     reachability CC (transcript_twin.cc_ctes) over the shared-token edges."""
-    return f"""WITH RECURSIVE {_vocab_cte(table)},
+    return f"""WITH RECURSIVE {_vocab_cte()},
 vt AS MATERIALIZED (
   SELECT eid, slst[n.i] AS tok
   FROM (SELECT eid, string_split(surface, ' ') AS slst FROM vocab) v

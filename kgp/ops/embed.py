@@ -34,18 +34,22 @@ from .common import explode_once, spread
 from .dedup import _token_hash
 
 EMBED_DIM = 64
+# T3 segmentation (extract_paragraphs_faster.py): sentences weighed into
+# each activated similarity, and the half-width of a minimum's neighbourhood
+T3_P_SIZE, T3_ORDER = 10, 2
 
 
 # ---------------------------------------------------------------------------
 # pure core (shared by Spark UDFs, the pandas oracle, and tests)
 # ---------------------------------------------------------------------------
 
-def hash_embed(text: str, dim: int = EMBED_DIM) -> np.ndarray:
+def hash_embed(text: str) -> np.ndarray:
     """Signed feature-hash embedding, L2-normalized float32.
 
     token -> fnv1a hash; index = h mod dim; sign = parity of bit 62.
     Deterministic across processes; same function on every engine.
     """
+    dim = EMBED_DIM
     v = np.zeros(dim, dtype=np.float64)
     # ascii_split, not str.split(): the DuckDB twin splits on [\s\v] —
     # C0 separators / Unicode whitespace are NOT token boundaries there
@@ -88,11 +92,11 @@ def rev_sigmoid(x: float) -> float:
     return 1.0 / (1.0 + math.exp(0.5 * x))
 
 
-def activated_similarities(similarities: np.ndarray, p_size: int = 10) -> np.ndarray:
+def activated_similarities(similarities: np.ndarray) -> np.ndarray:
     """reference extract_paragraphs_faster.py:37-63: weighted sums of the
-    upper diagonals with reverse-sigmoid weights over p_size sentences."""
+    upper diagonals with reverse-sigmoid weights over T3_P_SIZE sentences."""
     n = similarities.shape[0]
-    p = min(p_size, n)
+    p = min(T3_P_SIZE, n)
     x = np.linspace(-10, 10, p)
     weights = np.pad(np.array([rev_sigmoid(v) for v in x]), (0, n - p))
     diagonals = [np.pad(similarities.diagonal(k), (0, k)) for k in range(n)]
@@ -100,9 +104,10 @@ def activated_similarities(similarities: np.ndarray, p_size: int = 10) -> np.nda
     return stacked.sum(axis=0)
 
 
-def relative_minima(a: np.ndarray, order: int = 2) -> list[int]:
-    """argrelextrema(a, np.less, order=order) without the scipy dependency:
-    indices strictly smaller than EVERY neighbor within ``order``.
+def relative_minima(a: np.ndarray) -> list[int]:
+    """argrelextrema(a, np.less, order=T3_ORDER) without the scipy
+    dependency: indices strictly smaller than EVERY neighbor within
+    ``T3_ORDER``.
 
     scipy's default mode='clip' compares out-of-range neighbors against
     the boundary element itself, so index 0 / n-1 can NEVER be extrema
@@ -113,14 +118,13 @@ def relative_minima(a: np.ndarray, order: int = 2) -> list[int]:
     out = []
     n = len(a)
     for i in range(1, n - 1):
-        lo, hi = max(0, i - order), min(n, i + order + 1)
+        lo, hi = max(0, i - T3_ORDER), min(n, i + T3_ORDER + 1)
         if all(a[i] < a[j] for j in range(lo, hi) if j != i):
             out.append(i)
     return out
 
 
-def semantic_segments(text: str, p_size: int = 10, order: int = 2,
-                      dim: int = EMBED_DIM) -> list[str]:
+def semantic_segments(text: str) -> list[str]:
     """T3: split into sentences, embed, break at activated-similarity
     minima (reference split_into_paragraphs:107-127)."""
     sents = split_sentences(text or "")
@@ -128,10 +132,10 @@ def semantic_segments(text: str, p_size: int = 10, order: int = 2,
         return []
     if len(sents) == 1:
         return [sents[0] + " "]
-    E = hash_embed_batch(sents, dim).astype(np.float64)
+    E = hash_embed_batch(sents).astype(np.float64)
     sims = E @ E.T
-    act = activated_similarities(sims, p_size)
-    minima = set(relative_minima(act, order))
+    act = activated_similarities(sims)
+    minima = set(relative_minima(act))
     paras: list[str] = []
     cur = ""
     for i, s in enumerate(sents):
@@ -168,10 +172,9 @@ def embed_texts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return spread(df).select(F.col(id_col), _embed(text_col).alias("embedding"))
 
 
-def embed_components(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", dim: int = EMBED_DIM) -> DataFrame:
+def embed_components(df: DataFrame, dim: int = EMBED_DIM) -> DataFrame:
     """Driver-hashable M2 surface: every component of the hash embedding as
-    a fixed-point scalar row ``(id, idx, vq20 = floor(component * 2^20))``.
+    a fixed-point scalar row ``(doc_id, idx, vq20 = floor(component * 2^20))``.
 
     Why fixed-point instead of ROUND: the embedding is float32; Spark
     rounds via the double's shortest decimal repr (BigDecimal HALF_UP)
@@ -181,19 +184,18 @@ def embed_components(df: DataFrame, text_col: str = "text",
     float32 value in both engines, so no boundary exists.  The raw
     ``array<float>`` operator (embed_texts) stays for internal consumers;
     a driver canonicalizer cannot sort rows by an array column anyway."""
-    emb = embed_texts(df, text_col, id_col, dim)
+    emb = embed_texts(df, dim=dim)
     # explode_once: a bare posexplode would re-run the embed UDF per doc
     # (inferred Generate filter pushed below the spread exchange)
     return (
-        explode_once(emb, [id_col], "embedding", ["idx", "c"])
-        .select(id_col, "idx",
+        explode_once(emb, ["doc_id"], "embedding", ["idx", "c"])
+        .select("doc_id", "idx",
                 F.floor(F.col("c").cast("double") * F.lit(1 << 20))
                 .cast("long").alias("vq20"))
     )
 
 
-def embed_components_sql(table: str = "documents", text_col: str = "text",
-                         id_col: str = "doc_id", dim: int = EMBED_DIM) -> str:
+def embed_components_sql(dim: int = EMBED_DIM) -> str:
     """DuckDB oracle for ``embed_components``: the hash-embedder replayed
     in SQL — fnv1a token hashes (sqlhash), scatter-sum per (doc, h mod
     dim), L2 norm, float32 cast, floor-2^20 fixed point.  All arithmetic
@@ -202,48 +204,46 @@ def embed_components_sql(table: str = "documents", text_col: str = "text",
     from .sqlhash import fnv1a_sql
 
     return f"""
-        WITH tok AS (SELECT {id_col},
-                            unnest(list_filter(string_split_regex(lower({text_col}), '[\\s\\v]+'),
+        WITH tok AS (SELECT doc_id,
+                            unnest(list_filter(string_split_regex(lower(text), '[\\s\\v]+'),
                                                t -> t <> '')) AS t
-                     FROM {table}),
-        th AS (SELECT {id_col}, {fnv1a_sql('t')} AS h FROM tok),
-        comp AS (SELECT {id_col}, CAST(h % {dim} AS INT) AS idx,
+                     FROM documents),
+        th AS (SELECT doc_id, {fnv1a_sql('t')} AS h FROM tok),
+        comp AS (SELECT doc_id, CAST(h % {dim} AS INT) AS idx,
                         SUM(CASE WHEN (h // 4611686018427387904) % 2 = 1
                                  THEN 1.0 ELSE -1.0 END) AS v
-                 FROM th GROUP BY {id_col}, CAST(h % {dim} AS INT)),
-        nrm AS (SELECT {id_col}, sqrt(SUM(v * v)) AS l2 FROM comp GROUP BY {id_col}),
-        grid AS (SELECT {id_col}, CAST(unnest(range({dim})) AS INT) AS idx
-                 FROM (SELECT DISTINCT {id_col} FROM {table})),
-        f AS (SELECT g.{id_col}, g.idx, COALESCE(c.v, 0.0) AS v,
+                 FROM th GROUP BY doc_id, CAST(h % {dim} AS INT)),
+        nrm AS (SELECT doc_id, sqrt(SUM(v * v)) AS l2 FROM comp GROUP BY doc_id),
+        grid AS (SELECT doc_id, CAST(unnest(range({dim})) AS INT) AS idx
+                 FROM (SELECT DISTINCT doc_id FROM documents)),
+        f AS (SELECT g.doc_id, g.idx, COALESCE(c.v, 0.0) AS v,
                      COALESCE(n.l2, 0.0) AS l2
               FROM grid g
-              LEFT JOIN comp c ON g.{id_col} = c.{id_col} AND g.idx = c.idx
-              LEFT JOIN nrm n ON g.{id_col} = n.{id_col})
-        SELECT {id_col}, idx,
+              LEFT JOIN comp c ON g.doc_id = c.doc_id AND g.idx = c.idx
+              LEFT JOIN nrm n ON g.doc_id = n.doc_id)
+        SELECT doc_id, idx,
                CAST(FLOOR(CAST(CAST(CASE WHEN l2 > 0 THEN v / l2 ELSE 0.0 END AS REAL)
                                AS DOUBLE) * 1048576) AS BIGINT) AS vq20
         FROM f
     """
 
 
-def t3_segments(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                p_size: int = 10, order: int = 2) -> DataFrame:
-    """(id, seg_idx, segment): semantic segmentation per document."""
+def t3_segments(df: DataFrame) -> DataFrame:
+    """(doc_id, seg_idx, segment): semantic segmentation per document."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _segs(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: semantic_segments(t or "", p_size, order))
+        return texts.map(lambda t: semantic_segments(t or ""))
 
-    return explode_once(spread(df), [id_col], _segs(text_col),
+    return explode_once(spread(df), ["doc_id"], _segs("text"),
                         ["seg_idx", "segment"])
 
 
-def embed_near_dup_pairs(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", threshold: float = 0.9) -> DataFrame:
+def embed_near_dup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """text → embed → LSH near-dup: the reference's
     embed_paragraphs → remove_duplicate_paragraphs chain end-to-end from
     raw text (M2 feeding J6), one job."""
     from .dedup import cosine_near_dup_pairs
 
-    emb = embed_texts(df, text_col, id_col)
-    return cosine_near_dup_pairs(emb, "embedding", id_col, threshold=threshold)
+    return cosine_near_dup_pairs(embed_texts(df), "embedding", "doc_id",
+                                 threshold=threshold)

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 from .aggutil import decsum, decsum_sql
 
 SESSION_GAP_US = 1800 * 1_000_000  # 30 min in microseconds
+# event values are summed as DECIMAL(18, 6), rounded to 4 digits
+VALUE_DEC = {"scale": 6, "round_to": 4}
 
 
 def _ts_asc():
@@ -45,7 +47,7 @@ STABLE_ORDER_SQL = """
 """
 
 
-def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization: new session when idle > gap.
 
     One shuffle on user_id; two window passes (lag → cumulative sum) —
@@ -56,7 +58,7 @@ def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
     # cast to TIMESTAMP is identity
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     is_new = F.when(
-        F.lag(us).over(w).isNull() | ((us - F.lag(us).over(w)) > gap_us), 1
+        F.lag(us).over(w).isNull() | ((us - F.lag(us).over(w)) > SESSION_GAP_US), 1
     ).otherwise(0)
     sess = events.withColumn(
         "session_seq", F.sum(is_new).over(w.rowsBetween(W.unboundedPreceding, 0)))
@@ -66,7 +68,7 @@ def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
              F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"),
              # DECIMAL accumulation: Spark partial-agg order vs DuckDB's
              # serial sum can never flip the rounded 4th digit
-             decsum("value", "total_value", scale=6, round_to=4))
+             decsum("value", "total_value", **VALUE_DEC))
     )
 
 
@@ -82,7 +84,7 @@ SESSIONIZE_SQL = f"""
         FROM o)
     SELECT user_id, session_seq, COUNT(*) AS n_events,
            MIN(ts) AS start_ts, MAX(ts) AS end_ts,
-           {decsum_sql('value', 'total_value', scale=6, round_to=4)}
+           {decsum_sql('value', 'total_value', **VALUE_DEC)}
     FROM s GROUP BY user_id, session_seq
 """
 
@@ -95,12 +97,12 @@ def hourly_counts(events: DataFrame) -> DataFrame:
         events.groupBy(
             F.date_trunc("hour", "ts").alias("hour"), "event_type")
         .agg(F.count("*").alias("n_events"),
-             decsum("value", "total_value", scale=6, round_to=4))
+             decsum("value", "total_value", **VALUE_DEC))
     )
 
 
 HOURLY_COUNTS_SQL = f"""
     SELECT date_trunc('hour', ts) AS hour, event_type,
-           COUNT(*) AS n_events, {decsum_sql('value', 'total_value', scale=6, round_to=4)}
+           COUNT(*) AS n_events, {decsum_sql('value', 'total_value', **VALUE_DEC)}
     FROM events GROUP BY 1, 2
 """

@@ -73,24 +73,23 @@ def pdf_text(payload: Column | str) -> Column:
     return F.array_join(F.filter(pages, lambda p: p != F.lit("")), "\n")
 
 
-def extract_text(df: DataFrame, payload_col: str = "payload",
-                 kind_col: str = "kind") -> DataFrame:
-    """Adds ``text_out``: kind-dispatched extraction (html | pdf)."""
+def extract_text(df: DataFrame) -> DataFrame:
+    """Adds ``text_out``: ``kind``-dispatched extraction (html | pdf) of
+    ``payload``."""
     return df.withColumn(
         "text_out",
-        F.when(F.col(kind_col) == "html", html_text(payload_col))
-        .when(F.col(kind_col) == "pdf", pdf_text(payload_col))
+        F.when(F.col("kind") == "html", html_text("payload"))
+        .when(F.col("kind") == "pdf", pdf_text("payload"))
         .otherwise(F.lit(None)))
 
 
-def synth_payloads(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def synth_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic fetched-document stand-ins built FROM the documents
     table (no external data): even ids become HTML pages (with title,
     markup, boilerplate footer), odd ids become 2-page PDFs (text split
     at the midpoint word).  Mirrored exactly by synth_payloads-part of
     fetch_extract_sql, so the whole S3/S4 chain is oracle-checkable."""
-    did, txt = F.col(id_col), F.col(text_col)
+    did, txt = F.col("doc_id"), F.col("text")
     html = F.concat(
         F.lit("<html><head><title>doc "), did.cast("string"),
         F.lit("</title><style>p{margin:0}</style></head><body><h1>Doc "),
@@ -104,21 +103,18 @@ def synth_payloads(docs: DataFrame, id_col: str = "doc_id",
         F.lit("\fpage 2\f"),
         F.array_join(F.slice(ws, half + 1, F.size(ws)), " "))
     return docs.select(
-        did.alias(id_col),
+        did.alias("doc_id"),
         F.when(did % 2 == 0, F.lit("html")).otherwise(F.lit("pdf")).alias("kind"),
         F.when(did % 2 == 0, html).otherwise(pdf).alias("payload"))
 
 
-def fetch_extract(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text") -> DataFrame:
+def fetch_extract(docs: DataFrame) -> DataFrame:
     """The S3/S4 registry entry: synthesize payloads, extract text back.
     (doc_id, kind, text_out) — fully JVM, one documents scan."""
-    return extract_text(synth_payloads(docs, id_col, text_col)).select(
-        id_col, "kind", "text_out")
+    return extract_text(synth_payloads(docs)).select("doc_id", "kind", "text_out")
 
 
-def fetch_extract_sql(table: str = "documents", id_col: str = "doc_id",
-                      text_col: str = "text") -> str:
+def fetch_extract_sql() -> str:
     """DuckDB twin of ``fetch_extract`` — same payload synthesis, same
     extraction regex chain.  The final whitespace collapse is the shared
     ``canon_sql`` form (single-sourced with the Spark side's canon_col)."""
@@ -141,17 +137,17 @@ def fetch_extract_sql(table: str = "documents", id_col: str = "doc_id",
                          '&nbsp;', ' ', 'g')"""
     return f"""
         WITH p AS (
-          SELECT {id_col},
-                 CASE WHEN {id_col} % 2 = 0 THEN 'html' ELSE 'pdf' END AS kind,
-                 CASE WHEN {id_col} % 2 = 0 THEN
-                   '<html><head><title>doc ' || {id_col} ||
+          SELECT doc_id,
+                 CASE WHEN doc_id % 2 = 0 THEN 'html' ELSE 'pdf' END AS kind,
+                 CASE WHEN doc_id % 2 = 0 THEN
+                   '<html><head><title>doc ' || doc_id ||
                    '</title><style>p{{margin:0}}</style></head><body><h1>Doc ' ||
-                   {id_col} || '</h1><p>' || {text_col} ||
+                   doc_id || '</h1><p>' || text ||
                    '</p><div>PDF to HTML conversion made easy</div></body></html>'
                  -- NULL text guard FIRST: Spark's concat propagates NULL
                  -- into a NULL payload, while the coalesce below would
                  -- otherwise fabricate a 'page 2' payload from nothing
-                 WHEN {text_col} IS NULL THEN NULL
+                 WHEN text IS NULL THEN NULL
                  ELSE
                    -- coalesce: DuckDB's array_to_string([]) is NULL (Spark's
                    -- array_join is ''), and NULL would poison the whole payload
@@ -159,11 +155,11 @@ def fetch_extract_sql(table: str = "documents", id_col: str = "doc_id",
                    'page 2' || chr(12) ||
                    coalesce(array_to_string(ws[half+1:len(ws)], ' '), '')
                  END AS payload
-          FROM (SELECT {id_col}, {text_col}, string_split({text_col}, ' ') AS ws,
-                       CAST(FLOOR(len(string_split({text_col}, ' ')) / 2.0) AS INT) AS half
-                FROM {table})),
+          FROM (SELECT doc_id, text, string_split(text, ' ') AS ws,
+                       CAST(FLOOR(len(string_split(text, ' ')) / 2.0) AS INT) AS half
+                FROM documents)),
         e AS (
-          SELECT {id_col}, kind,
+          SELECT doc_id, kind,
                  CASE WHEN kind = 'html' THEN
                    {canon_sql(html_inner)}
                  ELSE
@@ -175,7 +171,7 @@ def fetch_extract_sql(table: str = "documents", id_col: str = "doc_id",
                      chr(10))
                  END AS text_out
           FROM p)
-        SELECT {id_col}, kind, text_out FROM e
+        SELECT doc_id, kind, text_out FROM e
     """
 
 
@@ -208,11 +204,10 @@ def default_transport(url: str) -> bytes:
     raise ValueError(f"unsupported url scheme: {url}")
 
 
-def fetch_documents(df: DataFrame, url_col: str = "url",
-                    id_col: str = "doc_id",
+def fetch_documents(df: DataFrame,
                     transport: Callable[[str], bytes] | None = None,
                     max_tries: int = 3, backoff_s: float = 0.0) -> DataFrame:
-    """(id, url, status, payload, error): fetch every url through the
+    """(doc_id, url, status, payload, error): fetch every url through the
     transport with bounded exponential-backoff retry; failures become
     ``status='error'`` rows (the D4 ledger shape, get_files.py:86-102)
     instead of task failures, so one dead url never kills a 10^9-row
@@ -220,8 +215,7 @@ def fetch_documents(df: DataFrame, url_col: str = "url",
     worker (connection-pool analog), rows stream through in Arrow
     batches."""
     fn = transport or default_transport
-    out_schema = (f"{id_col} long, url string, status string, "
-                  "payload binary, error string")
+    out_schema = "doc_id long, url string, status string, payload binary, error string"
 
     def backoff(_exc: Exception, attempt: int) -> float:
         return backoff_s * (2 ** attempt) if backoff_s else 0.0
@@ -229,7 +223,7 @@ def fetch_documents(df: DataFrame, url_col: str = "url",
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for rid, url in zip(pdf[id_col], pdf[url_col]):
+            for rid, url in zip(pdf["doc_id"], pdf["url"]):
                 # NULL keys are an admitted input class (nullable schemas):
                 # a None/NaN id must become a NULL-id ledger row, not an
                 # int() TypeError that kills the task — the exact failure
@@ -238,7 +232,7 @@ def fetch_documents(df: DataFrame, url_col: str = "url",
                 payload, err = retry_call(lambda u=url: fn(u), max_tries, backoff)
                 rows.append((None if pd.isna(rid) else int(rid), url,
                              "ok" if err is None else "error", payload, err))
-            yield pd.DataFrame(rows, columns=[id_col, "url", "status",
+            yield pd.DataFrame(rows, columns=["doc_id", "url", "status",
                                               "payload", "error"])
 
-    return df.select(id_col, url_col).mapInPandas(run, schema=out_schema)
+    return df.select("doc_id", "url").mapInPandas(run, schema=out_schema)

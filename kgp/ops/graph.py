@@ -167,14 +167,21 @@ def materialize_graph(spark: SparkSession, sf_dir: str, out_root: str) -> None:
 # BGP query surface (Q1-Q5) — every query is joins/filters over `edges`
 # ---------------------------------------------------------------------------
 
-def edges_by_pred(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
+# the bound terms of each pattern, read by the query and its DuckDB twin
+TWO_HOP_NATION = "NATION_3"                     # Q1
+ATTR_PART_KEY = 558                             # Q2
+FILTER_SUPP_KEYS = (1, 2, 3, 4, 5)              # Q3
+DATE_RANGE = ("2000-01-01", "2000-06-30")       # Q4
+CONJ_STATUS_PRED, CONJ_SEGMENT = "placed_fulfilled", "BUILDING"  # Q5
+CONJ_RANGE = ("1999-01-01", "2000-12-31")
+
+
+def edges_by_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 frequency count over the edge table."""
-    e = e if e is not None else edges(spark, sf_dir)
-    return e.groupBy("pred").agg(F.count("*").alias("n_edges"))
+    return edges(spark, sf_dir).groupBy("pred").agg(F.count("*").alias("n_edges"))
 
 
-def bgp_two_hop(spark: SparkSession, sf_dir: str, nation_name: str = "NATION_3",
-                e: DataFrame | None = None) -> DataFrame:
+def bgp_two_hop(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
     """Q1-style BGP: distinct parts in orders placed by customers of a nation.
 
     Pattern: ?c from_nation <n> . ?o placed_* ?c . ?o contains_part ?p
@@ -183,7 +190,7 @@ def bgp_two_hop(spark: SparkSession, sf_dir: str, nation_name: str = "NATION_3",
     """
     e = e if e is not None else edges(spark, sf_dir)
     nation_id = (
-        load(spark, sf_dir, "nation").filter(F.col("n_name") == nation_name)
+        load(spark, sf_dir, "nation").filter(F.col("n_name") == TWO_HOP_NATION)
         .select(_nid("nation", "n_nationkey").alias("dst"))
     )
     custs = (
@@ -205,10 +212,10 @@ def bgp_two_hop(spark: SparkSession, sf_dir: str, nation_name: str = "NATION_3",
     )
 
 
-def bgp_two_hop_sql(nation_name: str = "NATION_3") -> str:
+def bgp_two_hop_sql() -> str:
     return f"""
         WITH e AS ({EDGES_SQL}),
-        nid AS (SELECT 'nation:' || n_nationkey::VARCHAR AS dst FROM nation WHERE n_name = '{nation_name}'),
+        nid AS (SELECT 'nation:' || n_nationkey::VARCHAR AS dst FROM nation WHERE n_name = '{TWO_HOP_NATION}'),
         custs AS (SELECT e.src AS cust FROM e JOIN nid USING (dst)
                   WHERE e.pred = 'from_nation' AND e.src LIKE 'customer:%'),
         ords AS (SELECT e.src AS ord FROM e JOIN custs ON e.dst = custs.cust
@@ -218,12 +225,11 @@ def bgp_two_hop_sql(nation_name: str = "NATION_3") -> str:
     """
 
 
-def bgp_attr_fetch(spark: SparkSession, sf_dir: str, part_key: int = 558,
-                   e: DataFrame | None = None) -> DataFrame:
+def bgp_attr_fetch(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
     """Q2-style BGP + attribute fetch: priorities of orders containing a part."""
     e = e if e is not None else edges(spark, sf_dir)
     ords = (
-        e.filter((F.col("pred") == "contains_part") & (F.col("dst") == f"part:{part_key}"))
+        e.filter((F.col("pred") == "contains_part") & (F.col("dst") == f"part:{ATTR_PART_KEY}"))
         .select(F.col("src").alias("order_id")).distinct()
     )
     orders = load(spark, sf_dir, "orders").select(
@@ -232,21 +238,20 @@ def bgp_attr_fetch(spark: SparkSession, sf_dir: str, part_key: int = 558,
     return ords.join(orders, "order_id").select("order_id", "priority")
 
 
-def bgp_attr_fetch_sql(part_key: int = 558) -> str:
+def bgp_attr_fetch_sql() -> str:
     return f"""
         WITH e AS ({EDGES_SQL}),
         ords AS (SELECT DISTINCT src AS order_id FROM e
-                 WHERE pred = 'contains_part' AND dst = 'part:{part_key}')
+                 WHERE pred = 'contains_part' AND dst = 'part:{ATTR_PART_KEY}')
         SELECT order_id, o_orderpriority AS priority FROM ords
         JOIN (SELECT 'order:' || o_orderkey::VARCHAR AS order_id, o_orderpriority FROM orders) o
         USING (order_id)
     """
 
 
-def bgp_filter_in(spark: SparkSession, sf_dir: str, supp_keys=(1, 2, 3, 4, 5),
-                  e: DataFrame | None = None) -> DataFrame:
+def bgp_filter_in(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
     """Q3-style FILTER IN: supplied_by edges restricted to a supplier set."""
-    targets = [f"supplier:{k}" for k in supp_keys]
+    targets = [f"supplier:{k}" for k in FILTER_SUPP_KEYS]
     e = e if e is not None else edges(spark, sf_dir)
     return (
         e
@@ -255,18 +260,17 @@ def bgp_filter_in(spark: SparkSession, sf_dir: str, supp_keys=(1, 2, 3, 4, 5),
     )
 
 
-def bgp_filter_in_sql(supp_keys=(1, 2, 3, 4, 5)) -> str:
-    inlist = ", ".join(f"'supplier:{k}'" for k in supp_keys)
+def bgp_filter_in_sql() -> str:
+    inlist = ", ".join(f"'supplier:{k}'" for k in FILTER_SUPP_KEYS)
     return f"""
         WITH e AS ({EDGES_SQL})
         SELECT DISTINCT src, dst FROM e WHERE pred = 'supplied_by' AND dst IN ({inlist})
     """
 
 
-def bgp_date_range(spark: SparkSession, sf_dir: str,
-                   lo: str = "2000-01-01", hi: str = "2000-06-30",
-                   e: DataFrame | None = None) -> DataFrame:
+def bgp_date_range(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
     """Q4-style FILTER date range over edge timestamps → count per dst part."""
+    lo, hi = DATE_RANGE
     e = e if e is not None else edges(spark, sf_dir)
     return (
         e
@@ -278,7 +282,8 @@ def bgp_date_range(spark: SparkSession, sf_dir: str,
     )
 
 
-def bgp_date_range_sql(lo: str = "2000-01-01", hi: str = "2000-06-30") -> str:
+def bgp_date_range_sql() -> str:
+    lo, hi = DATE_RANGE
     return f"""
         WITH e AS ({EDGES_SQL})
         SELECT dst AS part_id, COUNT(*) AS n_shipments FROM e
@@ -287,19 +292,18 @@ def bgp_date_range_sql(lo: str = "2000-01-01", hi: str = "2000-06-30") -> str:
     """
 
 
-def bgp_conjunctive(spark: SparkSession, sf_dir: str, *, status_pred: str = "placed_fulfilled",
-                    segment: str = "BUILDING", lo: str = "1999-01-01", hi: str = "2000-12-31",
-                    e: DataFrame | None = None) -> DataFrame:
+def bgp_conjunctive(spark: SparkSession, sf_dir: str, e: DataFrame | None = None) -> DataFrame:
     """Q5-style dynamic conjunctive criteria (rdf_graph.ipynb cell-47):
     orders matching status + date range + customer-segment constraints."""
+    lo, hi = CONJ_RANGE
     e = e if e is not None else edges(spark, sf_dir)
     seg_custs = (
         load(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == segment)
+        .filter(F.col("c_mktsegment") == CONJ_SEGMENT)
         .select(_nid("customer", "c_custkey").alias("dst"))
     )
     return (
-        e.filter((F.col("pred") == status_pred)
+        e.filter((F.col("pred") == CONJ_STATUS_PRED)
                  & (F.col("ts") >= F.lit(lo).cast("timestamp"))
                  & (F.col("ts") <= F.lit(hi).cast("timestamp")))
         .join(F.broadcast(seg_custs), "dst")
@@ -308,14 +312,14 @@ def bgp_conjunctive(spark: SparkSession, sf_dir: str, *, status_pred: str = "pla
     )
 
 
-def bgp_conjunctive_sql(*, status_pred: str = "placed_fulfilled", segment: str = "BUILDING",
-                        lo: str = "1999-01-01", hi: str = "2000-12-31") -> str:
+def bgp_conjunctive_sql() -> str:
+    lo, hi = CONJ_RANGE
     return f"""
         WITH e AS ({EDGES_SQL}),
         seg AS (SELECT 'customer:' || c_custkey::VARCHAR AS dst FROM customer
-                WHERE c_mktsegment = '{segment}')
+                WHERE c_mktsegment = '{CONJ_SEGMENT}')
         SELECT DISTINCT e.src AS order_id, e.dst AS customer_id
         FROM e JOIN seg USING (dst)
-        WHERE e.pred = '{status_pred}'
+        WHERE e.pred = '{CONJ_STATUS_PRED}'
           AND e.ts >= TIMESTAMP '{lo}' AND e.ts <= TIMESTAMP '{hi}'
     """

@@ -65,6 +65,9 @@ N_PAIRS = 3
 SPAN_WORDS = 8
 MAX_TOKENS = 2500  # extract_qa.py create_chunks oversize-skip threshold
 N_PASSAGES = 5     # assign_relevance.py scores 5 passages per question
+REPHRASE_KEEP = 6  # topic words kept by the rephrase stand-in
+MCQ_N_SUB, MCQ_SPAN = 3, 5  # subquestions per MCQ, words per subquestion
+RERANK_TOP = 3     # indices the index_rerank "model" returns
 
 Q_MARK = "Spørgsmål"
 A_MARK = "Svar"
@@ -97,13 +100,13 @@ from .common import canon_sql as _canon_sql  # noqa: E402
 # QA generation (extract_qa.py) — deterministic completion + parse
 # ---------------------------------------------------------------------------
 
-def _completion_of(ws: Column, n_pairs: int = N_PAIRS,
-                   span: int = SPAN_WORDS) -> Column:
+def _completion_of(ws: Column) -> Column:
     """Completion layout over an already-bound word array (a ``_let``
     lambda variable — every ``ws`` reference below is a value lookup,
     not a re-evaluated split)."""
+    span = SPAN_WORDS
     lines = []
-    for i in range(1, n_pairs + 1):
+    for i in range(1, N_PAIRS + 1):
         q0, a0 = (2 * i - 2) * span + 1, (2 * i - 1) * span + 1
         qspan = F.array_join(F.slice(ws, q0, span), " ")
         aspan = F.array_join(F.slice(ws, a0, span), " ")
@@ -114,25 +117,23 @@ def _completion_of(ws: Column, n_pairs: int = N_PAIRS,
     return F.concat_ws("\n", *lines)  # concat_ws skips the NULL lines
 
 
-def synth_completion(text_col: str = "text", n_pairs: int = N_PAIRS,
-                     span: int = SPAN_WORDS) -> Column:
+def synth_completion(text_col: str = "text") -> Column:
     """Deterministic stand-in for the chat completion: pair i asks about
     words [(2i-2)s+1 .. (2i-1)s] and answers with the next s words; pairs
     whose answer span is empty are dropped (short docs yield fewer
     pairs).  Pure JVM — mirrored by the Python ``synth_completer`` and
     the SQL twin.  The word array is let-bound so the split runs once
     per row, not once per ``when`` branch."""
-    return _let(F.split(_canon(text_col), " "),
-                lambda w: _completion_of(w, n_pairs, span))
+    return _let(F.split(_canon(text_col), " "), _completion_of)
 
 
-def synth_completer(prompts: list[str], n_pairs: int = N_PAIRS,
-                    span: int = SPAN_WORDS) -> list[str]:
+def synth_completer(prompts: list[str]) -> list[str]:
     """Python twin of ``synth_completion`` (the default ``completer`` for
     the mapInPandas path) — pytest asserts byte-equality with the JVM
     expression."""
     from ..textops import canon_ws
 
+    span = SPAN_WORDS
     out = []
     for text in prompts:
         # canon_ws, not re \s: Python's Unicode \s collapses NBSP etc.
@@ -142,7 +143,7 @@ def synth_completer(prompts: list[str], n_pairs: int = N_PAIRS,
         if ws == [""]:
             ws = []
         lines = []
-        for i in range(1, n_pairs + 1):
+        for i in range(1, N_PAIRS + 1):
             q0, a0 = (2 * i - 2) * span, (2 * i - 1) * span
             if len(ws) >= a0 + 1:
                 qspan = " ".join(ws[q0:q0 + span])
@@ -163,12 +164,11 @@ def api_completer(model: str = "gpt-3.5-turbo") -> Callable[[list[str]], list[st
     return call
 
 
-def complete_prompts(df: DataFrame, prompt_col: str = "text",
-                     id_col: str = "doc_id",
+def complete_prompts(df: DataFrame,
                      completer: Callable[[list[str]], list[str]] | None = None,
                      max_tries: int = 2, rate_limit_sleep_s: float = 0.0,
                      batch_rows: int = 64) -> DataFrame:
-    """(id, completion, status, error): run every prompt through the
+    """(doc_id, completion, status, error): run every ``text`` through the
     completer with the reference's retry protocol — up to ``max_tries``
     attempts, sleeping ``rate_limit_sleep_s`` when the error mentions a
     rate limit (extract_qa.py:100-106) — and ledger failures as rows
@@ -177,7 +177,7 @@ def complete_prompts(df: DataFrame, prompt_col: str = "text",
     failing batch is retried whole, like the reference's per-chunk
     loop)."""
     fn = completer or synth_completer
-    out_schema = f"{id_col} long, completion string, status string, error string"
+    out_schema = "doc_id long, completion string, status string, error string"
 
     def rate_limit_sleep(exc: Exception, _attempt: int) -> float:
         # extract_qa.py:100-106 sleeps only on rate-limit-worded errors
@@ -189,7 +189,7 @@ def complete_prompts(df: DataFrame, prompt_col: str = "text",
         for pdf in batches:
             for lo in range(0, len(pdf), batch_rows):
                 sub = pdf.iloc[lo:lo + batch_rows]
-                prompts = ["" if p is None else str(p) for p in sub[prompt_col]]
+                prompts = ["" if p is None else str(p) for p in sub["text"]]
                 comps, err = retry_call(lambda p=prompts: fn(p), max_tries,
                                         rate_limit_sleep)
                 if comps is not None and len(comps) != len(prompts):
@@ -202,18 +202,16 @@ def complete_prompts(df: DataFrame, prompt_col: str = "text",
                 if comps is None:
                     comps = [None] * len(prompts)
                 yield pd.DataFrame({
-                    id_col: sub[id_col].astype("int64"),
+                    "doc_id": sub["doc_id"].astype("int64"),
                     "completion": comps,
                     "status": "ok" if err is None else "error",
                     "error": err,
                 })
 
-    return df.select(id_col, prompt_col).mapInPandas(run, schema=out_schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema=out_schema)
 
 
-def qa_generate(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id",
-                max_tokens: int = MAX_TOKENS) -> DataFrame:
+def qa_generate(docs: DataFrame) -> DataFrame:
     """The M7 registry entry: oversize-skip (create_chunks bad-files
     rule) → deterministic completion → reference-regex parse with the
     marker-count rule → (doc_id, pair_idx, question, answer).  One
@@ -236,23 +234,21 @@ def qa_generate(docs: DataFrame, text_col: str = "text",
                 i.alias("pair_idx"), x.alias("question"),
                 F.get(a, i).alias("answer"))))))
 
-    pairs = _let(F.split(_canon(text_col), " "), lambda w: F.when(
-        F.size(w) <= max_tokens, _let(_completion_of(w), parse)))
+    pairs = _let(F.split(_canon("text"), " "), lambda w: F.when(
+        F.size(w) <= MAX_TOKENS, _let(_completion_of(w), parse)))
     # explode_once, not a bare explode: the inferred size>0/isnotnull
     # Generate pre-filter would re-evaluate the whole split→completion→
     # double-regex chain a second time per row (the when() wrapper defeats
     # codegen CSE — see _let), halving the win the let-binding bought
-    return (explode_once(docs, [id_col], pairs, ["p"], pos=False)
-            .select(id_col, "p.pair_idx", "p.question", "p.answer"))
+    return (explode_once(docs, ["doc_id"], pairs, ["p"], pos=False)
+            .select("doc_id", "p.pair_idx", "p.question", "p.answer"))
 
 
-def qa_generate_sql(table: str = "documents", text_col: str = "text",
-                    id_col: str = "doc_id", n_pairs: int = N_PAIRS,
-                    span: int = SPAN_WORDS,
-                    max_tokens: int = MAX_TOKENS) -> str:
+def qa_generate_sql() -> str:
     """DuckDB twin: same layout constants, same regexes."""
+    span = SPAN_WORDS
     parts = []
-    for i in range(1, n_pairs + 1):
+    for i in range(1, N_PAIRS + 1):
         q0, a0 = (2 * i - 2) * span + 1, (2 * i - 1) * span + 1
         line = (f"'{Q_MARK} {i}: Hvad siges om ' || "
                 f"array_to_string(ws[{q0}:{q0 + span - 1}], ' ') || '?' || chr(10) || "
@@ -261,16 +257,16 @@ def qa_generate_sql(table: str = "documents", text_col: str = "text",
         parts.append(f"CASE WHEN len(ws) >= {a0} THEN {line} END")
     comp = f"concat_ws(chr(10), {', '.join(parts)})"
     return f"""
-        WITH w AS (SELECT {id_col},
-                          string_split({_canon_sql(text_col)}, ' ') AS ws
-                   FROM {table}),
-        c AS (SELECT {id_col}, {comp} AS comp
-              FROM w WHERE len(ws) <= {max_tokens}),
-        p AS (SELECT {id_col},
+        WITH w AS (SELECT doc_id,
+                          string_split({_canon_sql("text")}, ' ') AS ws
+                   FROM documents),
+        c AS (SELECT doc_id, {comp} AS comp
+              FROM w WHERE len(ws) <= {MAX_TOKENS}),
+        p AS (SELECT doc_id,
                      regexp_extract_all(comp, '{Q_MARK} \\d+: (.+)', 1) AS qs,
                      regexp_extract_all(comp, '{A_MARK} \\d+: (.+)', 1) AS ans
               FROM c)
-        SELECT {id_col},
+        SELECT doc_id,
                CAST(generate_subscripts(qs, 1) - 1 AS BIGINT) AS pair_idx,
                unnest(qs) AS question,
                ans[generate_subscripts(qs, 1)] AS answer
@@ -283,25 +279,22 @@ def qa_generate_sql(table: str = "documents", text_col: str = "text",
 # relevance scoring (assign_relevance.py) — emit-then-parse round trip
 # ---------------------------------------------------------------------------
 
-def relevance_scores(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     n_passages: int = N_PASSAGES,
-                     span: int = SPAN_WORDS) -> DataFrame:
+def relevance_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, t_idx, score): each document's question (its first
-    ``span`` words) scored against its next ``n_passages`` documents by
+    ``SPAN_WORDS`` words) scored against its next ``N_PASSAGES`` documents by
     id.  The deterministic model: score = floor(10·|q∩p|/|q|)/10 over
     DISTINCT tokens — built as the reference's actual wire format
     ('Tekststykke n: 0.x' response text) and regex-parsed back
     (assign_relevance.py:68), so the protocol round-trip is what the
     oracle hashes.  Pairing is an offset-explode EQUI-join — |docs|·n
     rows, never a cross join."""
-    qtok = F.array_distinct(F.slice(F.split(_canon(text_col), " "), 1, span))
-    q = docs.select(F.col(id_col).alias("qid"), qtok.alias("qtok"))
-    p = docs.select(F.col(id_col).alias("pid"),
-                    F.array_distinct(F.split(_canon(text_col), " ")).alias("ptok"))
+    qtok = F.array_distinct(F.slice(F.split(_canon("text"), " "), 1, SPAN_WORDS))
+    q = docs.select(F.col("doc_id").alias("qid"), qtok.alias("qtok"))
+    p = docs.select(F.col("doc_id").alias("pid"),
+                    F.array_distinct(F.split(_canon("text"), " ")).alias("ptok"))
     pairs = (q
              .select("qid", "qtok",
-                     F.explode(F.sequence(F.lit(1), F.lit(n_passages))).alias("off"))
+                     F.explode(F.sequence(F.lit(1), F.lit(N_PASSAGES))).alias("off"))
              .join(p, F.col("qid") + F.col("off") == F.col("pid"))
              .withColumn("k", F.floor(F.lit(10) * F.size(F.array_intersect("qtok", "ptok"))
                                       / F.size("qtok")).cast("int")))
@@ -315,49 +308,45 @@ def relevance_scores(docs: DataFrame, text_col: str = "text",
                               "\n").alias("response")))
     ts = F.regexp_extract_all("response", F.lit(T_MARK + r" (\d+): \d(?:\.\d+)?"), 1)
     ss = F.regexp_extract_all("response", F.lit(T_MARK + r" \d+: (\d(?:\.\d+)?)"), 1)
-    staged = resp.select(F.col("qid").alias(id_col), ts.alias("ts"), ss.alias("ss"))
+    staged = resp.select(F.col("qid").alias("doc_id"), ts.alias("ts"), ss.alias("ss"))
     # explode_once: a bare posexplode's inferred pre-filter re-runs the
     # regexp_extract_all over the response a second time per row
-    return (explode_once(staged, [id_col, "ss"], "ts", ["i", "t"], pos=True)
-            .select(F.col(id_col),
+    return (explode_once(staged, ["doc_id", "ss"], "ts", ["i", "t"], pos=True)
+            .select(F.col("doc_id"),
                     F.col("t").cast("int").alias("t_idx"),
                     F.element_at("ss", F.col("i") + 1).cast("double").alias("score")))
 
 
-def rephrase(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id", keep: int = 6) -> DataFrame:
+def rephrase(docs: DataFrame) -> DataFrame:
     """(doc_id, question, rephrased): the reword_questions protocol —
     strip both ends of the input (the reference's ^\\s+ / \\s+$ subs),
     synthesize the "more general" rewording deterministically (keep the
-    first ``keep`` words as the topic, frame them as a generic search
+    first ``REPHRASE_KEEP`` words as the topic, frame them as a generic search
     query), store the raw response alongside the input.  Pure JVM; the
     model-backed path is complete_prompts with an api completer."""
-    q = _canon(text_col)
-    topic = F.array_join(F.slice(F.split(q, " "), 1, keep), " ")
+    q = _canon("text")
+    topic = F.array_join(F.slice(F.split(q, " "), 1, REPHRASE_KEEP), " ")
     return (docs
             .filter(F.length(q) > 0)
-            .select(F.col(id_col), q.alias("question"),
+            .select(F.col("doc_id"), q.alias("question"),
                     F.concat(F.lit("Hvad ved man om "), topic,
                              F.lit("?")).alias("rephrased")))
 
 
-def rephrase_sql(table: str = "documents", text_col: str = "text",
-                 id_col: str = "doc_id", keep: int = 6) -> str:
-    c = _canon_sql(text_col)
+def rephrase_sql() -> str:
+    c = _canon_sql("text")
     return f"""
-        WITH q AS (SELECT {id_col}, {c} AS question,
+        WITH q AS (SELECT doc_id, {c} AS question,
                           string_split({c}, ' ') AS ws
-                   FROM {table})
-        SELECT {id_col}, question,
-               'Hvad ved man om ' || array_to_string(ws[1:{keep}], ' ') || '?'
+                   FROM documents)
+        SELECT doc_id, question,
+               'Hvad ved man om ' || array_to_string(ws[1:{REPHRASE_KEEP}], ' ') || '?'
                    AS rephrased
         FROM q WHERE len(question) > 0
     """
 
 
-def mcq_divide(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id", n_sub: int = 3,
-               span: int = 5) -> DataFrame:
+def mcq_divide(docs: DataFrame) -> DataFrame:
     """(doc_id, sub_idx, subquestion): the divide_mcq protocol.  The stem
     is the text before the first answer-option marker (' a)'); the
     deterministic completion emits ``Spørgsmål i: <stem words>?`` lines;
@@ -367,9 +356,11 @@ def mcq_divide(docs: DataFrame, text_col: str = "text",
     itself contains ``': '`` exactly like the reference does.  The word
     array is let-bound (one split per row) and the parse feeds a single
     explode, which drops the empty arrays the old size-filter caught."""
+    span = MCQ_SPAN
+
     def complete(ws: Column) -> Column:
         lines = []
-        for i in range(1, n_sub + 1):
+        for i in range(1, MCQ_N_SUB + 1):
             s0 = (i - 1) * span + 1
             sub = F.array_join(F.slice(ws, s0, span), " ")
             lines.append(F.when(
@@ -378,7 +369,7 @@ def mcq_divide(docs: DataFrame, text_col: str = "text",
                          F.lit("?"))))
         return F.concat_ws("\n", *lines)
 
-    stem = _canon(F.split(F.col(text_col), r" a\)").getItem(0))
+    stem = _canon(F.split(F.col("text"), r" a\)").getItem(0))
     # reference parse: split('\n'); per line split(': ')[1]
     parsed = _let(F.split(stem, " "), lambda w: F.filter(
         F.transform(F.split(complete(w), "\n"),
@@ -386,16 +377,15 @@ def mcq_divide(docs: DataFrame, text_col: str = "text",
         lambda s: F.length(s) > 0))
     # explode_once: the inferred Generate pre-filter would re-run the
     # split→complete→parse chain a second time per row (see qa_generate)
-    return explode_once(docs, [id_col], parsed,
+    return explode_once(docs, ["doc_id"], parsed,
                         ["sub_idx", "subquestion"], pos=True)
 
 
-def mcq_divide_sql(table: str = "documents", text_col: str = "text",
-                   id_col: str = "doc_id", n_sub: int = 3,
-                   span: int = 5) -> str:
-    stem = _canon_sql(f"string_split_regex({text_col}, ' a\\)')[1]")
+def mcq_divide_sql() -> str:
+    span = MCQ_SPAN
+    stem = _canon_sql("string_split_regex(text, ' a\\)')[1]")
     parts = []
-    for i in range(1, n_sub + 1):
+    for i in range(1, MCQ_N_SUB + 1):
         s0 = (i - 1) * span + 1
         parts.append(
             f"CASE WHEN len(ws) >= {s0} AND ws[{s0}] != '' THEN "
@@ -403,43 +393,41 @@ def mcq_divide_sql(table: str = "documents", text_col: str = "text",
             f"array_to_string(ws[{s0}:{s0 + span - 1}], ' ') || '?' END")
     comp = f"concat_ws(chr(10), {', '.join(parts)})"
     return f"""
-        WITH w AS (SELECT {id_col}, string_split({stem}, ' ') AS ws
-                   FROM {table}),
-        c AS (SELECT {id_col}, {comp} AS comp FROM w),
-        p AS (SELECT {id_col},
+        WITH w AS (SELECT doc_id, string_split({stem}, ' ') AS ws
+                   FROM documents),
+        c AS (SELECT doc_id, {comp} AS comp FROM w),
+        p AS (SELECT doc_id,
                      list_filter(
                          list_transform(string_split(comp, chr(10)),
                                         ln -> string_split(ln, ': ')[2]),
                          s -> len(s) > 0) AS subs
               FROM c)
-        SELECT {id_col},
+        SELECT doc_id,
                CAST(generate_subscripts(subs, 1) - 1 AS BIGINT) AS sub_idx,
                unnest(subs) AS subquestion
         FROM p WHERE len(subs) > 0
     """
 
 
-def index_rerank(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", top: int = 3,
-                 n_passages: int = N_PASSAGES) -> DataFrame:
+def index_rerank(docs: DataFrame) -> DataFrame:
     """(doc_id, rank, t_idx, score): the process_subquestions protocol —
     score candidates (relevance_scores), have the "model" answer with the
-    reference's ``Indeks i, Indeks j, …`` wire format for the ``top``
+    reference's ``Indeks i, Indeks j, …`` wire format for the ``RERANK_TOP``
     most relevant, parse every integer back out
     (process_subquestions.py:60 ``\\b(\\d+)\\b``), and join the parsed
     indices back to the candidate rows to recover their scores.  The
     rank window shuffles on doc_id only; the join-back is an equi-join on
-    (doc_id, t_idx) — candidates are bounded by |docs|·n_passages.
+    (doc_id, t_idx) — candidates are bounded by |docs|·N_PASSAGES.
 
     ``scored`` is persisted: it has two consumers (the rank branch and
     the parse join-back), and unpinned, the corpus-sized relevance
     scoring would be derived once per branch (same staging rationale as
     mcq_answer_pipeline's pin_kept)."""
-    scored = pin(relevance_scores(docs, text_col, id_col, n_passages))
-    w = W.partitionBy(id_col).orderBy(F.desc("score"), F.asc("t_idx"))
+    scored = pin(relevance_scores(docs))
+    w = W.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("t_idx"))
     ranked = scored.withColumn("rk", F.row_number().over(w))
-    resp = (ranked.filter(F.col("rk") <= top)
-            .groupBy(id_col)
+    resp = (ranked.filter(F.col("rk") <= RERANK_TOP)
+            .groupBy("doc_id")
             .agg(F.array_join(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("rk", "t_idx"))),
@@ -447,42 +435,38 @@ def index_rerank(docs: DataFrame, text_col: str = "text",
                                        s["t_idx"].cast("string"))),
                 ", ").alias("response")))
     idxs = F.regexp_extract_all("response", F.lit(r"\b(\d+)\b"), 1)
-    parsed = (explode_once(resp, [id_col], idxs, ["i", "t"], pos=True)
-              .select(F.col(id_col), (F.col("i") + 1).alias("rank"),
+    parsed = (explode_once(resp, ["doc_id"], idxs, ["i", "t"], pos=True)
+              .select(F.col("doc_id"), (F.col("i") + 1).alias("rank"),
                       F.col("t").cast("int").alias("t_idx")))
     return (parsed
-            .join(scored, [id_col, "t_idx"])
-            .select(id_col, "rank", "t_idx", "score"))
+            .join(scored, ["doc_id", "t_idx"])
+            .select("doc_id", "rank", "t_idx", "score"))
 
 
-def index_rerank_sql(table: str = "documents", text_col: str = "text",
-                     id_col: str = "doc_id", top: int = 3,
-                     n_passages: int = N_PASSAGES) -> str:
-    scores = relevance_scores_sql(table, text_col, id_col, n_passages)
+def index_rerank_sql() -> str:
+    scores = relevance_scores_sql()
     return f"""
         WITH scored AS ({scores}),
         ranked AS (SELECT *, row_number() OVER
-                       (PARTITION BY {id_col} ORDER BY score DESC, t_idx) AS rk
+                       (PARTITION BY doc_id ORDER BY score DESC, t_idx) AS rk
                    FROM scored),
-        resp AS (SELECT {id_col},
+        resp AS (SELECT doc_id,
                         string_agg('Indeks ' || t_idx, ', ' ORDER BY rk) AS response
-                 FROM ranked WHERE rk <= {top} GROUP BY {id_col}),
-        parsed AS (SELECT {id_col},
+                 FROM ranked WHERE rk <= {RERANK_TOP} GROUP BY doc_id),
+        parsed AS (SELECT doc_id,
                           generate_subscripts(regexp_extract_all(response, '\\b(\\d+)\\b', 1), 1)
                               AS rank,
                           CAST(unnest(regexp_extract_all(response, '\\b(\\d+)\\b', 1)) AS INT)
                               AS t_idx
                    FROM resp)
-        SELECT p.{id_col}, CAST(p.rank AS BIGINT) AS rank, p.t_idx, s.score
+        SELECT p.doc_id, CAST(p.rank AS BIGINT) AS rank, p.t_idx, s.score
         FROM parsed p JOIN scored s
-          ON p.{id_col} = s.{id_col} AND p.t_idx = s.t_idx
+          ON p.doc_id = s.doc_id AND p.t_idx = s.t_idx
     """
 
 
 def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
                         token_budget: int = 120,
-                        text_col: str = "text",
-                        id_col: str = "doc_id",
                         pin_kept: bool = True) -> DataFrame:
     """The mcq_search.py deployment pipeline composed end-to-end
     (process_mcq, mcq_search.py:112-145):
@@ -523,23 +507,22 @@ def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
     from .embed import embed_texts
     from .simsearch import _cos
 
-    mcqs = docs.filter(F.col(id_col) < n_mcq)
-    subs = (mcq_divide(mcqs, text_col, id_col)
-            .select((F.col(id_col) * 10 + F.col("sub_idx")).alias("sid"),
-                    F.col(id_col).alias("mcq_id"), "subquestion"))
+    mcqs = docs.filter(F.col("doc_id") < n_mcq)
+    subs = (mcq_divide(mcqs)
+            .select((F.col("doc_id") * 10 + F.col("sub_idx")).alias("sid"),
+                    F.col("doc_id").alias("mcq_id"), "subquestion"))
     qemb = (embed_texts(subs, text_col="subquestion", id_col="sid")
             .join(subs.select("sid", "mcq_id"), "sid"))
     # the retrieval corpus is DISJOINT from the MCQ set (mcq_search.py
     # retrieves from the QA corpus, never from other exam questions) —
     # filtering only a candidate's own mcq_id would let MCQ i surface as
     # evidence for MCQ j whenever they share topic words
-    cemb = embed_texts(docs.filter(F.col(id_col) >= n_mcq),
-                       text_col=text_col, id_col=id_col)
+    cemb = embed_texts(docs.filter(F.col("doc_id") >= n_mcq))
 
     scored = (cemb
               .crossJoin(F.broadcast(
                   qemb.select("sid", "mcq_id", F.col("embedding").alias("qv"))))
-              .select("sid", "mcq_id", F.col(id_col).alias("cand_id"),
+              .select("sid", "mcq_id", F.col("doc_id").alias("cand_id"),
                       # _cos, not a bare /: ANSI Spark throws DIVIDE_BY_ZERO
                       # on the zero-norm embedding a token-less doc produces
                       _cos("embedding", "qv").alias("score")))
@@ -552,8 +535,8 @@ def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
              .agg(F.max("score").alias("score")))
 
     # token-budget trim: running token total over score-ordered candidates
-    toks = docs.select(F.col(id_col).alias("cand_id"),
-                       F.size(F.split(_canon(text_col), " ")).alias("n_tok"))
+    toks = docs.select(F.col("doc_id").alias("cand_id"),
+                       F.size(F.split(_canon("text"), " ")).alias("n_tok"))
     per_mcq = W.partitionBy("mcq_id").orderBy(F.desc("score"), F.asc("cand_id"))
     kept = (cands.join(toks, "cand_id")
             .withColumn("cum_tok", F.sum("n_tok").over(
@@ -590,22 +573,19 @@ def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
             .select("mcq_id", "pair_idx", "cand_id", "score", "answer"))
 
 
-def relevance_scores_sql(table: str = "documents", text_col: str = "text",
-                         id_col: str = "doc_id",
-                         n_passages: int = N_PASSAGES,
-                         span: int = SPAN_WORDS) -> str:
+def relevance_scores_sql() -> str:
     return f"""
-        WITH q AS (SELECT {id_col} AS qid,
-                          list_distinct(string_split({_canon_sql(text_col)}, ' ')[1:{span}]) AS qtok
-                   FROM {table}),
-        p AS (SELECT {id_col} AS pid,
-                     list_distinct(string_split({_canon_sql(text_col)}, ' ')) AS ptok
-              FROM {table}),
+        WITH q AS (SELECT doc_id AS qid,
+                          list_distinct(string_split({_canon_sql("text")}, ' ')[1:{SPAN_WORDS}]) AS qtok
+                   FROM documents),
+        p AS (SELECT doc_id AS pid,
+                     list_distinct(string_split({_canon_sql("text")}, ' ')) AS ptok
+              FROM documents),
         pairs AS (SELECT q.qid, o.off, p.ptok, q.qtok,
                          CAST(floor(10.0 * len(list_intersect(q.qtok, p.ptok))
                                     / len(q.qtok)) AS INT) AS k
                   FROM q
-                  CROSS JOIN (SELECT unnest(range(1, {n_passages + 1})) AS off) o
+                  CROSS JOIN (SELECT unnest(range(1, {N_PASSAGES + 1})) AS off) o
                   JOIN p ON q.qid + o.off = p.pid),
         resp AS (SELECT qid,
                         string_agg('{T_MARK} ' || off || ': ' ||
@@ -616,7 +596,7 @@ def relevance_scores_sql(table: str = "documents", text_col: str = "text",
                           regexp_extract_all(response, '{T_MARK} (\\d+): \\d(?:\\.\\d+)?', 1) AS ts,
                           regexp_extract_all(response, '{T_MARK} \\d+: (\\d(?:\\.\\d+)?)', 1) AS ss
                    FROM resp)
-        SELECT qid AS {id_col},
+        SELECT qid AS doc_id,
                CAST(unnest(ts) AS INT) AS t_idx,
                CAST(ss[generate_subscripts(ts, 1)] AS DOUBLE) AS score
         FROM parsed

@@ -66,6 +66,11 @@ def payload_meta(docs: DataFrame) -> DataFrame:
     return payloads.mapInPandas(decode, schema=META_SCHEMA)
 
 
+# operator constants, read by each Spark operator and its DuckDB twin
+FRAME_EVERY = 2   # frame_sample keeps every FRAME_EVERY-th frame
+MAX_SIDE = 64     # mm_meta's resize bound (longest side, px)
+BYTE_DIM = 8      # byte_features histogram width
+
 PAYLOAD_META_SQL = """
     WITH p AS (SELECT doc_id, octet_length(encode(text)) AS n_bytes FROM documents)
     SELECT doc_id, n_bytes::INT AS n_bytes, (n_bytes % 256)::INT AS width,
@@ -78,9 +83,9 @@ PAYLOAD_META_SQL = """
 # frame sampling (video-shaped 1→N expansion)
 # ---------------------------------------------------------------------------
 
-def frame_sample(docs: DataFrame, every_n: int = 2) -> DataFrame:
+def frame_sample(docs: DataFrame) -> DataFrame:
     """(doc_id, frame_idx, frame_offset, frame_len): sample every
-    ``every_n``-th frame of each payload.  The frame table derives
+    ``FRAME_EVERY``-th frame of each payload.  The frame table derives
     deterministically from the payload header (n_frames, byte extents) —
     the exact plumbing a real ffmpeg frame extractor slots into, with the
     decode stub swapped for codec calls.  1→N expansion happens JVM-side
@@ -88,7 +93,7 @@ def frame_sample(docs: DataFrame, every_n: int = 2) -> DataFrame:
     meta = payload_meta(docs)
     frames = meta.withColumn(
         "frame_idx", F.explode(F.sequence(
-            F.lit(0), F.col("n_frames") - 1, F.lit(every_n))))
+            F.lit(0), F.col("n_frames") - 1, F.lit(FRAME_EVERY))))
     frame_len = (F.col("n_bytes") / F.col("n_frames")).cast("int")
     return frames.select(
         "doc_id", "frame_idx",
@@ -97,14 +102,14 @@ def frame_sample(docs: DataFrame, every_n: int = 2) -> DataFrame:
     )
 
 
-def frame_sample_sql(every_n: int = 2) -> str:
+def frame_sample_sql() -> str:
     # composed over PAYLOAD_META_SQL (like mm_meta_sql): the header
     # derivation is single-sourced so a layout edit can't leave this
     # oracle checking stale semantics
     return f"""
         WITH m AS ({PAYLOAD_META_SQL}),
         fr AS (SELECT doc_id, n_bytes, n_frames,
-                      unnest(range(0, n_frames, {every_n})) AS frame_idx
+                      unnest(range(0, n_frames, {FRAME_EVERY})) AS frame_idx
                FROM m)
         SELECT doc_id, frame_idx::INT AS frame_idx,
                (frame_idx * (n_bytes // n_frames))::INT AS frame_offset,
@@ -113,18 +118,19 @@ def frame_sample_sql(every_n: int = 2) -> str:
     """
 
 
-def _resize_exprs(max_side: int):
+def _resize_exprs():
     """(out_w, out_h, keep): the ONE Spark-side definition of the
     aspect-preserving resize plan (mm_meta; mm_meta_sql is its twin).
     Explicit floor + 1px minimum: Spark's double->int cast truncates while
     DuckDB's rounds, so the rounding mode must be spelled out for parity."""
+    max_side = MAX_SIDE
     longest = F.greatest("width", "height")
     out_w = F.greatest(F.lit(1), F.floor(F.col("width") * F.lit(max_side) / longest)).cast("int")
     out_h = F.greatest(F.lit(1), F.floor(F.col("height") * F.lit(max_side) / longest)).cast("int")
     return out_w, out_h, longest <= max_side
 
 
-def mm_meta(docs: DataFrame, max_side: int = 64) -> DataFrame:
+def mm_meta(docs: DataFrame) -> DataFrame:
     """payload_meta + resize planning merged into ONE per-doc row, so a
     single driver-gate slot hash-checks both multimodal ops.  ``out_w`` /
     ``out_h`` are 0 for degenerate dimensions (width or height 0); real
@@ -132,7 +138,7 @@ def mm_meta(docs: DataFrame, max_side: int = 64) -> DataFrame:
     stays null-free (nullable ints round-trip differently through pandas
     in the two engines)."""
     m = payload_meta(docs)
-    out_w, out_h, keep = _resize_exprs(max_side)
+    out_w, out_h, keep = _resize_exprs()
     ok = (F.col("width") > 0) & (F.col("height") > 0)
     return m.select(
         "doc_id", "n_bytes", "width", "height", "n_frames",
@@ -143,7 +149,7 @@ def mm_meta(docs: DataFrame, max_side: int = 64) -> DataFrame:
     )
 
 
-def mm_meta_sql(max_side: int = 64) -> str:
+def mm_meta_sql() -> str:
     # composed over PAYLOAD_META_SQL so the meta derivation is
     # single-sourced — an edit to the payload header layout can't leave
     # this gate view testing stale semantics
@@ -151,18 +157,18 @@ def mm_meta_sql(max_side: int = 64) -> str:
         WITH m AS ({PAYLOAD_META_SQL})
         SELECT doc_id, n_bytes, width, height, n_frames,
                CASE WHEN COALESCE(width, 0) <= 0 OR COALESCE(height, 0) <= 0 THEN 0
-                    WHEN GREATEST(width, height) <= {max_side} THEN width
-                    ELSE GREATEST(1, FLOOR(width * {max_side} / GREATEST(width, height)))::INT
+                    WHEN GREATEST(width, height) <= {MAX_SIDE} THEN width
+                    ELSE GREATEST(1, FLOOR(width * {MAX_SIDE} / GREATEST(width, height)))::INT
                END AS out_w,
                CASE WHEN COALESCE(width, 0) <= 0 OR COALESCE(height, 0) <= 0 THEN 0
-                    WHEN GREATEST(width, height) <= {max_side} THEN height
-                    ELSE GREATEST(1, FLOOR(height * {max_side} / GREATEST(width, height)))::INT
+                    WHEN GREATEST(width, height) <= {MAX_SIDE} THEN height
+                    ELSE GREATEST(1, FLOOR(height * {MAX_SIDE} / GREATEST(width, height)))::INT
                END AS out_h
         FROM m
     """
 
 
-def byte_features(docs: DataFrame, dim: int = 8) -> DataFrame:
+def byte_features(docs: DataFrame) -> DataFrame:
     """(doc_id, features): L1-normalized byte histogram over the payload —
     the binary→embedding feature-extraction plumbing (a real image
     featurizer replaces the histogram with model activations; the Arrow
@@ -171,6 +177,7 @@ def byte_features(docs: DataFrame, dim: int = 8) -> DataFrame:
     import numpy as np
 
     payloads = with_payload(docs)
+    dim = BYTE_DIM
 
     def feats(batches):
         for pdf in batches:
@@ -190,7 +197,7 @@ def byte_features(docs: DataFrame, dim: int = 8) -> DataFrame:
     return payloads.mapInPandas(feats, schema="doc_id long, features array<double>")
 
 
-def byte_features_q20(docs: DataFrame, dim: int = 8) -> DataFrame:
+def byte_features_q20(docs: DataFrame) -> DataFrame:
     """Driver-hashable byte_features surface: ``(doc_id, dim, l2q20,
     feat_csv)`` with every float projected through floor-2^20 fixed point
     (the embed_components idiom — exact binary arithmetic on IEEE-identical
@@ -201,7 +208,7 @@ def byte_features_q20(docs: DataFrame, dim: int = 8) -> DataFrame:
     a bare SUM() carries no order guarantee and float addition is not
     associative."""
     q = F.lit(1 << 20)
-    return byte_features(docs, dim).select(
+    return byte_features(docs).select(
         "doc_id", F.size("features").alias("dim"),
         F.floor(F.sqrt(F.aggregate(
             "features", F.lit(0.0), lambda a, x: a + x * x)) * q)
@@ -212,7 +219,7 @@ def byte_features_q20(docs: DataFrame, dim: int = 8) -> DataFrame:
         .alias("feat_csv"))
 
 
-def byte_features_q20_sql(table: str = "documents", dim: int = 8) -> str:
+def byte_features_q20_sql() -> str:
     """DuckDB twin of byte_features_q20, exact for ASCII text (the
     documents fixture is [a-z ]): payload bytes = UTF-8 of text = ord of
     each char, so the histogram is a join-by-index char scan (no unnest —
@@ -223,6 +230,7 @@ def byte_features_q20_sql(table: str = "documents", dim: int = 8) -> str:
     point carries no rounding boundary.  NULL text propagates as a
     NULL-features row (dim/l2q20 NULL, feat_csv '') matching the Spark
     surface's nullable-payload branch — NOT an all-zero row."""
+    dim = BYTE_DIM
     ks = list(range(dim))
     cols = ", ".join(
         f"COALESCE(MAX(CASE WHEN k = {k} THEN c END), 0) AS c{k}" for k in ks)
@@ -235,7 +243,7 @@ def byte_features_q20_sql(table: str = "documents", dim: int = 8) -> str:
     csv = " || ',' || ".join(
         f"CAST(CAST(FLOOR(x{k} * 1048576) AS BIGINT) AS VARCHAR)" for k in ks)
     return f"""
-        WITH d AS (SELECT doc_id, text FROM {table}),
+        WITH d AS (SELECT doc_id, text FROM documents),
         nums AS MATERIALIZED (
           SELECT g.i
           FROM generate_series(1, 1000000) AS g(i),

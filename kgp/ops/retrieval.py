@@ -37,7 +37,6 @@ def _cross_score(qt: pd.Series, ct: pd.Series) -> pd.Series:
 
 def retrieval_pipeline(spark: SparkSession, sf_dir: str, n_queries: int = 8,
                        k_retrieve: int = 50, k_final: int = 5,
-                       ctx_tokens: int = 120,
                        ranked: DataFrame | None = None,
                        index: DataFrame | None = None) -> DataFrame:
     """(qid, final_rank, doc_id, retrieve_score, rerank_score, context).
@@ -75,8 +74,8 @@ def retrieval_pipeline(spark: SparkSession, sf_dir: str, n_queries: int = 8,
     )
     top = pin(top)
 
-    ctx = expand_context(docs, top.select("source", "doc_id"),
-                         max_tokens=ctx_tokens, ranked=ranked)
+    # context budget: T8's CONTEXT_MAX_TOKENS
+    ctx = expand_context(docs, top.select("source", "doc_id"), ranked=ranked)
     return (
         top.join(ctx, (top["source"] == ctx["source"])
                  & (top["doc_id"] == ctx["hit_id"]))

@@ -28,6 +28,19 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from .common import pin
 
+# Every operator reads the embeddings table: ids in ``vec_id``, vectors in
+# ``embedding``.  Operator constants, read by the Spark operators and the
+# DuckDB twins alike:
+TABLE_DIM = 64                # embedding width (every testdata sf)
+TOP_K = 10                    # neighbours per query
+N_QUERIES = 20                # queries are the rows with vec_id < N_QUERIES
+COSINE_PAIRS_THRESHOLD = 0.4  # exact cosine self-join floor
+LSH_BANDS = 4                 # band keys per vector in the S8 LSH index
+N_CENTROIDS = 16              # IVF cells
+LLOYD_ITERS = 10              # k-means iterations
+QUANTIZER_SAMPLE = 4096       # rows the quantizer trains on
+NPROBE = 4                    # IVF cells probed per query
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -47,42 +60,41 @@ def _cos(a, b) -> F.Column:
     return F.round(_dot(a, b) / F.nullif(_norm(a) * _norm(b), F.lit(0.0)), 6)
 
 
-def cosine_topk(df: DataFrame, query_id: int, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(df: DataFrame, query_id: int, k: int = TOP_K) -> DataFrame:
     """Exact top-k cosine neighbors of one row's vector (J11).
 
     The 1-row query side is broadcast; the scan side stays a single
     narrow pass (no shuffle until the final TakeOrderedAndProject).
     """
-    q = df.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("qv"))
+    q = df.filter(F.col("vec_id") == query_id).select(F.col("embedding").alias("qv"))
     scored = (
-        df.filter(F.col(id_col) != query_id)
+        df.filter(F.col("vec_id") != query_id)
         .crossJoin(F.broadcast(q))
         .select(
-            F.col(id_col),
-            _cos(vec_col, "qv").alias("score"),
+            F.col("vec_id"),
+            _cos("embedding", "qv").alias("score"),
         )
     )
-    return scored.orderBy(F.desc("score"), id_col).limit(k)
+    return scored.orderBy(F.desc("score"), "vec_id").limit(k)
 
 
-def cosine_topk_sql(query_id: int, k: int = 10) -> str:
+def cosine_topk_sql(query_id: int) -> str:
     return f"""
         WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {query_id}),
         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id <> {query_id})
         SELECT vec_id,
                ROUND(list_dot_product(v, qv) /
                      (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS score
-        FROM e, q ORDER BY score DESC, vec_id LIMIT {k}
+        FROM e, q ORDER BY score DESC, vec_id LIMIT {TOP_K}
     """
 
 
-def cosine_pairs_exact(df: DataFrame, threshold: float = 0.4,
-                       id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_pairs_exact(df: DataFrame,
+                       threshold: float = COSINE_PAIRS_THRESHOLD) -> DataFrame:
     """All pairs with cosine >= threshold, exact O(N²) self-join baseline.
     Use only at calibration scale; the LSH variant is the scale path."""
-    l = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
-    r = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
+    l = df.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    r = df.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
     return (
         l.join(r, F.col("a") < F.col("b"))
         .select("a", "b",
@@ -91,7 +103,7 @@ def cosine_pairs_exact(df: DataFrame, threshold: float = 0.4,
     )
 
 
-def cosine_pairs_exact_sql(threshold: float = 0.4, max_id: int | None = None) -> str:
+def cosine_pairs_exact_sql(max_id: int | None = None) -> str:
     """``max_id`` mirrors a Spark-side ``vec_id < max_id`` input cap — the
     verification-harness lever that keeps this by-design O(N²) twin to
     minutes at sf > gate scale (see queries.PARITY_CAPS)."""
@@ -103,7 +115,7 @@ def cosine_pairs_exact_sql(threshold: float = 0.4, max_id: int | None = None) ->
                      (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
         FROM e a JOIN e b ON a.vec_id < b.vec_id
         WHERE ROUND(list_dot_product(a.v, b.v) /
-                    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= {threshold}
+                    (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) >= {COSINE_PAIRS_THRESHOLD}
     """
 
 
@@ -111,8 +123,8 @@ def cosine_pairs_exact_sql(threshold: float = 0.4, max_id: int | None = None) ->
 # batched matmul scoring (many queries at once)
 # ---------------------------------------------------------------------------
 
-def cosine_scores_batched(df: DataFrame, query_vec: list[float], k: int = 10,
-                          id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_scores_batched(df: DataFrame, query_vec: list[float],
+                          k: int = TOP_K) -> DataFrame:
     """Top-k via one BLAS matmul per Arrow batch (pandas UDF path).
 
     Same result as `cosine_topk`; preferred when d is large — the JVM
@@ -134,8 +146,8 @@ def cosine_scores_batched(df: DataFrame, query_vec: list[float], k: int = 10,
         return pd.Series(np.where(den > 0, num / safe, np.nan))
 
     return (
-        df.select(F.col(id_col), F.round(_score(vec_col), 6).alias("score"))
-        .orderBy(F.desc("score"), id_col).limit(k)
+        df.select(F.col("vec_id"), F.round(_score("embedding"), 6).alias("score"))
+        .orderBy(F.desc("score"), "vec_id").limit(k)
     )
 
 
@@ -147,8 +159,7 @@ N_PLANES = 12
 _PLANE_SEED = 20240816  # independent hash family from dedup's (by design)
 
 
-def lsh_bucket_ids(df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", bands: int = 3) -> DataFrame:
+def lsh_bucket_ids(df: DataFrame, bands: int) -> DataFrame:
     """(id, bkey) rows: sign-bit bucket keys, ``bands`` keys per vector.
     Bucketing is single-sourced in ops.hyperlsh (cached planes, vectorized
     key build) — shared with dedup.cosine_near_dup_pairs modulo seed."""
@@ -160,26 +171,25 @@ def lsh_bucket_ids(df: DataFrame, id_col: str = "vec_id",
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=["id", "bkey"])
                 continue
-            M = np.stack(pdf[vec_col].to_numpy())
-            ids = pdf[id_col].to_numpy()
+            M = np.stack(pdf["embedding"].to_numpy())
+            ids = pdf["vec_id"].to_numpy()
             per_band = sign_band_keys(M, bands, N_PLANES, _PLANE_SEED)
             yield pd.DataFrame({"id": np.tile(ids, bands),
                                 "bkey": np.concatenate(per_band)})
 
-    return df.select(id_col, vec_col).mapInPandas(keys, schema="id long, bkey string")
+    return df.select("vec_id", "embedding").mapInPandas(keys, schema="id long, bkey string")
 
 
 # ---------------------------------------------------------------------------
 # S8 — persisted ANN index + J10 many-query retrieval join
 # ---------------------------------------------------------------------------
 
-def build_lsh_index(df: DataFrame, out_dir: str, id_col: str = "vec_id",
-                    vec_col: str = "embedding", bands: int = 4) -> None:
+def build_lsh_index(df: DataFrame, out_dir: str) -> None:
     """Materialize the LSH bucket table ONCE (reference
     create_faiss_index.py:43-68: train/add/write_index) — queries then pay
     a bucket-table scan instead of recomputing every corpus bucket key.
     Partitioned by band so a query probing one band prunes the others."""
-    buckets = lsh_bucket_ids(df, id_col, vec_col, bands).withColumn(
+    buckets = lsh_bucket_ids(df, LSH_BANDS).withColumn(
         "band", F.split(F.col("bkey"), ":").getItem(0))
     buckets.write.mode("overwrite").partitionBy("band").parquet(f"{out_dir}/buckets")
     # the index is only probeable with the SAME banding: record it, so a
@@ -188,7 +198,7 @@ def build_lsh_index(df: DataFrame, out_dir: str, id_col: str = "vec_id",
     import json
 
     with open(f"{out_dir}/meta.json", "w") as f:
-        json.dump({"bands": bands, "n_planes": N_PLANES,
+        json.dump({"bands": LSH_BANDS, "n_planes": N_PLANES,
                    "plane_seed": _PLANE_SEED}, f)
 
 
@@ -237,8 +247,7 @@ def load_lsh_index(spark, out_dir: str) -> DataFrame:
     return df
 
 
-def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
+def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = TOP_K,
                    index: DataFrame | None = None, bands: int | None = None) -> DataFrame:
     """J10: a TABLE of queries joined top-k against the corpus (reference
     semantic_search_two_towers.py:19-57 serving a query batch).
@@ -251,8 +260,8 @@ def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     design), exact twin: knn_batch_topk.
     """
     if bands is None and index is None:
-        bands = 4
-    corpus_buckets = index if index is not None else lsh_bucket_ids(corpus, id_col, vec_col, bands)
+        bands = LSH_BANDS
+    corpus_buckets = index if index is not None else lsh_bucket_ids(corpus, bands)
     if index is not None:
         # probe with the INDEX's banding — a caller-supplied bands that
         # disagrees with the build would make every bkey equijoin miss.
@@ -274,47 +283,53 @@ def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
                 "returned by load_lsh_index untransformed, or pass the "
                 "bands the bucket table was built with (mismatched bands "
                 "silently return zero candidates)")
-    q_buckets = lsh_bucket_ids(queries, id_col, vec_col, bands).withColumnRenamed("id", "qid")
+    q_buckets = lsh_bucket_ids(queries, bands).withColumnRenamed("id", "qid")
     cand = (
         q_buckets.join(corpus_buckets, "bkey")
         .filter(F.col("qid") != F.col("id"))
         .select("qid", "id").distinct()
     )
-    qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    return _verify_topk(cand, queries, corpus, k)
+
+
+def _verify_topk(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
+                 k: int) -> DataFrame:
+    """(qid, vec_id, score, rank): exact cosine over the (qid, id)
+    candidate pairs, the top ``k`` per query."""
+    qv = queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    cv = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     scored = (
         cand.join(F.broadcast(qv), "qid").join(cv, "id")
-        .select("qid", F.col("id").alias(id_col),
+        .select("qid", F.col("id").alias("vec_id"),
                 _cos("v", "qv").alias("score"))
     )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), id_col)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(scored, k)
 
 
-def knn_batch_topk(df: DataFrame, max_qid: int = 20, k: int = 10,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact many-query top-k (J10/J11 baseline): broadcast the query
-    block, one narrow scan of the corpus, window top-k per query.
-    O(|Q|·N) dot products — the recall yardstick for ann_batch_topk."""
-    qv = (df.filter(F.col(id_col) < max_qid)
-          .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")))
-    scored = (
-        df.crossJoin(F.broadcast(qv))
-        .filter(F.col(id_col) != F.col("qid"))
-        .select("qid", F.col(id_col),
-                _cos(vec_col, "qv").alias("score"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), id_col)
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    w = W.partitionBy("qid").orderBy(F.desc("score"), "vec_id")
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def knn_batch_topk_sql(max_qid: int = 20, k: int = 10) -> str:
+def knn_batch_topk(df: DataFrame, max_qid: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
+    """Exact many-query top-k (J10/J11 baseline): broadcast the query
+    block, one narrow scan of the corpus, window top-k per query.
+    O(|Q|·N) dot products — the recall yardstick for ann_batch_topk."""
+    qv = (df.filter(F.col("vec_id") < max_qid)
+          .select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")))
+    scored = (
+        df.crossJoin(F.broadcast(qv))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", F.col("vec_id"),
+                _cos("embedding", "qv").alias("score"))
+    )
+    return _rank_topk(scored, k)
+
+
+def knn_batch_topk_sql() -> str:
     return f"""
         WITH q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-                   FROM embeddings WHERE vec_id < {max_qid}),
+                   FROM embeddings WHERE vec_id < {N_QUERIES}),
         e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         s AS (SELECT qid, vec_id,
                      ROUND(list_dot_product(v, qv) /
@@ -322,7 +337,7 @@ def knn_batch_topk_sql(max_qid: int = 20, k: int = 10) -> str:
               FROM e, q WHERE vec_id <> qid),
         r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rank
               FROM s)
-        SELECT qid, vec_id, score, rank FROM r WHERE rank <= {k}
+        SELECT qid, vec_id, score, rank FROM r WHERE rank <= {TOP_K}
     """
 
 
@@ -346,13 +361,12 @@ def _sq_dists(M: np.ndarray, C: np.ndarray) -> np.ndarray:
             + (C * C).sum(axis=1)[None, :])
 
 
-def train_centroids(df: DataFrame, n_centroids: int = 16, n_iter: int = 10,
-                    sample: int = 4096, vec_col: str = "embedding",
-                    id_col: str = "vec_id") -> np.ndarray:
+def train_centroids(df: DataFrame, n_centroids: int = N_CENTROIDS) -> np.ndarray:
     """Deterministic k-means coarse quantizer (Lloyd, fixed iterations) on
     a bounded UNBIASED sample — the faiss `train()` step.
 
-    The sample is the ``sample`` rows with the smallest ``xxhash64(id)``:
+    The sample is the ``QUANTIZER_SAMPLE`` rows with the smallest
+    ``xxhash64(id)``:
     a seeded content-hash order is layout-independent and uniform over the
     corpus, where a bare ``limit(sample)`` takes the FIRST rows — at scale
     that fits the quantizer to the head of the corpus (one ingest batch,
@@ -369,15 +383,15 @@ def train_centroids(df: DataFrame, n_centroids: int = 16, n_iter: int = 10,
     update, so cross-engine float noise (summation order) stays ~9 orders
     of magnitude below the quantization step.  Ties in the nearest-cell
     argmin break toward the LOWER cell index in both engines."""
-    rows = (df.select(vec_col, F.xxhash64(F.col(id_col)).alias("_h"),
-                      F.col(id_col).alias("_i"))
-            .orderBy("_h", "_i").limit(sample).select(vec_col).collect())
+    rows = (df.select("embedding", F.xxhash64(F.col("vec_id")).alias("_h"),
+                      F.col("vec_id").alias("_i"))
+            .orderBy("_h", "_i").limit(QUANTIZER_SAMPLE).select("embedding").collect())
     if not rows:
         raise ValueError("train_centroids: empty embeddings input — "
                          "nothing to train the coarse quantizer on")
     M = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
     C = np.round(M[:min(n_centroids, len(M))].copy(), 6)
-    for _ in range(n_iter):
+    for _ in range(LLOYD_ITERS):
         assign = _sq_dists(M, C).argmin(axis=1)  # ties -> lowest cell
         for c in range(len(C)):
             members = M[assign == c]
@@ -386,8 +400,7 @@ def train_centroids(df: DataFrame, n_centroids: int = 16, n_iter: int = 10,
     return C
 
 
-def ivf_assign(df: DataFrame, centroids: np.ndarray, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     """(id, cell): nearest-centroid assignment — the inverted lists.
     Vectorized argmin per Arrow batch; broadcastable centroid matrix."""
     C = centroids
@@ -397,33 +410,32 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray, id_col: str = "vec_id",
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=["id", "cell"])
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d = _sq_dists(M, C)
-            yield pd.DataFrame({"id": pdf[id_col], "cell": d.argmin(axis=1).astype("int32")})
+            yield pd.DataFrame({"id": pdf["vec_id"], "cell": d.argmin(axis=1).astype("int32")})
 
-    return df.select(id_col, vec_col).mapInPandas(assign, schema="id long, cell int")
+    return df.select("vec_id", "embedding").mapInPandas(assign, schema="id long, cell int")
 
 
-def build_ivf_index(df: DataFrame, out_dir: str, n_centroids: int = 16,
-                    id_col: str = "vec_id", vec_col: str = "embedding") -> np.ndarray:
+def build_ivf_index(df: DataFrame, out_dir: str,
+                    n_centroids: int = N_CENTROIDS) -> np.ndarray:
     """S8, IVF flavor: train the quantizer, persist cell-partitioned
     inverted lists (faiss `add_with_ids` + `write_index`).  Returns the
     centroid matrix (small; callers re-derive it deterministically too)."""
-    C = train_centroids(df, n_centroids, vec_col=vec_col, id_col=id_col)
-    ivf_assign(df, C, id_col, vec_col).write.mode("overwrite") \
+    C = train_centroids(df, n_centroids)
+    ivf_assign(df, C).write.mode("overwrite") \
         .partitionBy("cell").parquet(f"{out_dir}/ivf")
     np.save(f"{out_dir}/centroids.npy", C)
     return C
 
 
 def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray,
-                 k: int = 10, nprobe: int = 4, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
+                 k: int = TOP_K, nprobe: int = NPROBE,
                  index: DataFrame | None = None) -> DataFrame:
     """IVF search: each query probes its ``nprobe`` nearest cells; only
     vectors in those cells are scored exactly (faiss
     `index_ivfflat.search`).  Returns (qid, vec_id, score, rank)."""
-    cells = index if index is not None else ivf_assign(corpus, centroids, id_col, vec_col)
+    cells = index if index is not None else ivf_assign(corpus, centroids)
     C = centroids
 
     def probe(it):
@@ -431,29 +443,21 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray,
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=["qid", "cell"])
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             d = _sq_dists(M, C)
             # stable sort: equal-distance cells keep index order, matching
             # the SQL twin's ORDER BY dist, cell tie-break
             near = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-            qids = np.repeat(pdf[id_col].to_numpy(), near.shape[1])
+            qids = np.repeat(pdf["vec_id"].to_numpy(), near.shape[1])
             yield pd.DataFrame({"qid": qids, "cell": near.ravel().astype("int32")})
 
-    q_cells = queries.select(id_col, vec_col).mapInPandas(probe, schema="qid long, cell int")
+    q_cells = queries.select("vec_id", "embedding").mapInPandas(probe, schema="qid long, cell int")
     cand = (
         q_cells.join(cells, "cell")
         .filter(F.col("qid") != F.col("id"))
         .select("qid", "id").distinct()
     )
-    qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-    cv = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    scored = (
-        cand.join(F.broadcast(qv), "qid").join(cv, "id")
-        .select("qid", F.col("id").alias(id_col),
-                _cos("v", "qv").alias("score"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("score"), id_col)
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _verify_topk(cand, queries, corpus, k)
 
 
 # registry gate floors (ann_recall entry): deterministic hash families +
@@ -464,9 +468,8 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray,
 ANN_RECALL_FLOORS = {"lsh": 0.60, "ivf": 0.50}
 
 
-def ann_recall_at_k(df: DataFrame, max_qid: int = 20, k: int = 10,
+def ann_recall_at_k(df: DataFrame, max_qid: int = N_QUERIES, k: int = TOP_K,
                     index: DataFrame | None = None,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     min_recall: dict[str, float] | None = None) -> DataFrame:
     """(method, n_exact, n_hit, recall_bp): registry-visible recall@k of
     the approximate retrieval paths (LSH bucket join, IVF nprobe) against
@@ -484,19 +487,15 @@ def ann_recall_at_k(df: DataFrame, max_qid: int = 20, k: int = 10,
     # persist: the exact O(|Q|·N) baseline is consumed four times below
     # (hit semi-join + n_exact aggregate per method) — without the pin the
     # dominant cost of the metric is paid 4x
-    exact = pin(knn_batch_topk(df, max_qid=max_qid, k=k, id_col=id_col,
-                            vec_col=vec_col).select("qid", id_col))
-    queries = df.filter(F.col(id_col) < max_qid)
+    exact = pin(knn_batch_topk(df, max_qid=max_qid, k=k).select("qid", "vec_id"))
+    queries = df.filter(F.col("vec_id") < max_qid)
     approx = {
-        "lsh": ann_batch_topk(queries, df, k=k, id_col=id_col,
-                              vec_col=vec_col, index=index),
-        "ivf": ann_ivf_topk(
-            queries, df, train_centroids(df, vec_col=vec_col, id_col=id_col),
-            k=k, id_col=id_col, vec_col=vec_col),
+        "lsh": ann_batch_topk(queries, df, k=k, index=index),
+        "ivf": ann_ivf_topk(queries, df, train_centroids(df), k=k),
     }
     out = None
     for name, adf in approx.items():
-        hit = exact.join(adf.select("qid", id_col), ["qid", id_col], "left_semi")
+        hit = exact.join(adf.select("qid", "vec_id"), ["qid", "vec_id"], "left_semi")
         r = (
             exact.agg(F.count("*").alias("n_exact"))
             .crossJoin(hit.agg(F.count("*").alias("n_hit")))
@@ -541,12 +540,10 @@ def _sqdist_sql(v: str, c: str) -> str:
             f" + list_dot_product({c}, {c}))")
 
 
-def ann_recall_sql(dim: int = 64, max_qid: int = 20, k: int = 10,
-                   bands: int = 4, n_centroids: int = 16, n_iter: int = 10,
-                   sample: int = 4096, nprobe: int = 4) -> str:
+def ann_recall_sql() -> str:
     """Generated DuckDB replay of the ENTIRE ann_recall_at_k chain: the
     hash-ordered quantizer sample and first-K init (sqlhash.xxh64 — bit-
-    equal to Spark's xxhash64), ``n_iter`` unrolled Lloyd iterations with
+    equal to Spark's xxhash64), ``LLOYD_ITERS`` unrolled Lloyd iterations with
     6-decimal centroid rounding, IVF corpus assignment + nprobe query
     probe, hyperplane sign-bit LSH bucket keys (the deterministic plane
     matrix embedded as literals — the same hyperlsh.hyperplanes output the
@@ -556,10 +553,11 @@ def ann_recall_sql(dim: int = 64, max_qid: int = 20, k: int = 10,
     Lambda-free by construction (dim-unrolled AVG columns, built-in
     list_dot_product only) — the DuckDB 1.0 lambda-executor misassociation
     the repo's twin style avoids (see ops/transcript_twin.py) never applies.
-    ``dim`` must match the embeddings table (all testdata sfs carry 64)."""
+    ``TABLE_DIM`` must match the embeddings table's vector width."""
     from .hyperlsh import hyperplanes
     from .sqlhash import xxh64_long_steps
 
+    dim, max_qid, k, bands = TABLE_DIM, N_QUERIES, TOP_K, LSH_BANDS
     steps, hcol = xxh64_long_steps("vec_id")
     dims = range(1, dim + 1)
     parts = [f"""
@@ -568,12 +566,12 @@ emb AS MATERIALIZED (
 hord AS MATERIALIZED (
   SELECT vec_id, v, {hcol} FROM (SELECT vec_id, v, {steps} FROM emb)),
 samp AS MATERIALIZED (
-  SELECT vec_id, v FROM hord ORDER BY {hcol}, vec_id LIMIT {sample}),
+  SELECT vec_id, v FROM hord ORDER BY {hcol}, vec_id LIMIT {QUANTIZER_SAMPLE}),
 c0 AS MATERIALIZED (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY {hcol}, vec_id) - 1 AS INT) AS cell,
          [{', '.join(f'ROUND(v[{j}], 6)' for j in dims)}] AS c
-  FROM (SELECT * FROM hord ORDER BY {hcol}, vec_id LIMIT {n_centroids}))"""]
-    for i in range(1, n_iter + 1):
+  FROM (SELECT * FROM hord ORDER BY {hcol}, vec_id LIMIT {N_CENTROIDS}))"""]
+    for i in range(1, LLOYD_ITERS + 1):
         avg_cols = ", ".join(f"ROUND(AVG(s.v[{j}]), 6) AS d{j}" for j in dims)
         mean_list = "[" + ", ".join(f"m.d{j}" for j in dims) + "]"
         parts.append(f"""
@@ -589,7 +587,7 @@ m{i} AS MATERIALIZED (
 c{i} AS MATERIALIZED (
   SELECT p.cell, CASE WHEN m.cell IS NULL THEN p.c ELSE {mean_list} END AS c
   FROM c{i - 1} p LEFT JOIN m{i} m USING (cell))""")
-    cfin = f"c{n_iter}"
+    cfin = f"c{LLOYD_ITERS}"
     # LSH: deterministic plane literals (same family the S8 index stores)
     hp = hyperplanes(dim, N_PLANES, _PLANE_SEED)
     per = N_PLANES // bands
@@ -628,7 +626,7 @@ qprobe AS MATERIALIZED (
     SELECT e.vec_id AS qid, c.cell,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
                               ORDER BY {_sqdist_sql('e.v', 'c.c')}, c.cell) AS rn
-    FROM emb e CROSS JOIN {cfin} c WHERE e.vec_id < {max_qid}) WHERE rn <= {nprobe}),
+    FROM emb e CROSS JOIN {cfin} c WHERE e.vec_id < {max_qid}) WHERE rn <= {NPROBE}),
 ivf_cand AS MATERIALIZED (
   SELECT DISTINCT q.qid, t.id
   FROM qprobe q JOIN cells t USING (cell) WHERE q.qid <> t.id),

@@ -78,14 +78,16 @@ def _xor(a: str, b: str) -> str:
             f"AS HUGEINT)")
 
 
-def xxh64_long_steps(expr: str, prefix: str = "xx") -> tuple[str, str]:
+def xxh64_long_steps(expr: str) -> tuple[str, str]:
     """(select-steps, final-column) replaying ``F.xxhash64(bigint)``.
 
     Returns a comma-joined chain of lateral-alias SELECT items (DuckDB
     lets a select item reference earlier aliases) and the name of the
     final SIGNED BIGINT column — bit-equal to Spark's output, so ORDER BY
     it reproduces Spark's signed-long ordering.  ``expr`` may be negative
-    (two's complement wrap to [0, 2^64) first)."""
+    (two's complement wrap to [0, 2^64) first).  Step columns are named
+    ``xx0``..``xx11``."""
+    prefix = "xx"
     s = []
     s.append(f"((CAST({expr} AS HUGEINT) % {M64} + {M64}) % {M64}) AS {prefix}0")
     s.append(f"{mulshift_sql(f'{prefix}0', XXP2, 0)} AS {prefix}1")

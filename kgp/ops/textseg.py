@@ -50,55 +50,58 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 from ..textops import (
+    ADJUST_MAX_PASSES,
     CHUNK_ERR_OVERSIZE,
     SUBWORD_RE,
     adjust_paragraph_lengths,
     merge_split_sentences,
     pack_chunks,
 )
+from .common import canon_col as _canon_col, canon_sql as _canon_sql
 from .common import explode_once, spread
 
-# ---------------------------------------------------------------------------
-# shared expression helpers
-# ---------------------------------------------------------------------------
-
-from .common import (canon_col as _canon_col,  # noqa: E402 — shared helpers
-                     canon_sql as _canon_sql)
+# Operator constants, read by each Spark operator and its DuckDB twin.
+# Every operator here reads the documents table: text in ``text``, the
+# paragraph order in ``doc_id`` and the file (group) in ``source``.
+T2_MIN_CHARS, T2_MAX_CHARS = 30, 200          # T2 merge floor / split width
+T4_MIN_TOKENS, T4_MAX_TOKENS = 40, 80         # T4 paragraph length bounds
+T7_MAX_TOKENS = 200                           # T7 chunk budget
+CONTEXT_PATTERN = "stream join"               # T8 hit substring
+CONTEXT_MAX_TOKENS, CONTEXT_BEFORE_PERCENT = 120, 0.3
 
 
 # ---------------------------------------------------------------------------
 # T2 — sentence merge/split (per row)
 # ---------------------------------------------------------------------------
 
-def t2_segments(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                min_chars: int = 30, max_chars: int = 200) -> DataFrame:
-    """(id, seg_idx, segment): textops.merge_split_sentences per document."""
+def t2_segments(df: DataFrame, min_chars: int = T2_MIN_CHARS,
+                max_chars: int = T2_MAX_CHARS) -> DataFrame:
+    """(doc_id, seg_idx, segment): textops.merge_split_sentences per document."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _segs(texts: pd.Series) -> pd.Series:
         return texts.map(lambda t: merge_split_sentences(t or "", min_chars, max_chars))
 
-    return explode_once(spread(df), [id_col], _segs(text_col),
+    return explode_once(spread(df), ["doc_id"], _segs("text"),
                         ["seg_idx", "segment"])
 
 
-def t2_segments_sql(table: str = "documents", text_col: str = "text",
-                    id_col: str = "doc_id", min_chars: int = 30,
-                    max_chars: int = 200) -> str:
+def t2_segments_sql(table: str = "documents", min_chars: int = T2_MIN_CHARS,
+                    max_chars: int = T2_MAX_CHARS) -> str:
     """DuckDB twin: sentence split via terminator-preserving regexp marker,
     greedy merge via list_reduce fold (chr(30)-separated segments), then
     fixed-width split via range/substr."""
     m = max_chars
     return f"""
         WITH s AS (
-          SELECT {id_col},
+          SELECT doc_id,
                  list_filter(string_split(
-                   regexp_replace(regexp_replace({text_col}, '^[\\s\\v]+|[\\s\\v]+$', '', 'g'),
+                   regexp_replace(regexp_replace(text, '^[\\s\\v]+|[\\s\\v]+$', '', 'g'),
                                   '([.!?])[\\s\\v]+', '\\1' || chr(31), 'g'),
                    chr(31)), x -> regexp_replace(x, '^[\\s\\v]+|[\\s\\v]+$', '', 'g') <> '') AS sents
           FROM {table}),
         mseg AS (
-          SELECT {id_col},
+          SELECT doc_id,
                  CASE WHEN len(sents) = 0 THEN CAST([] AS VARCHAR[])
                       ELSE string_split(
                         list_reduce(sents, (acc, x) ->
@@ -108,12 +111,12 @@ def t2_segments_sql(table: str = "documents", text_col: str = "text",
                         chr(30)) END AS segs
           FROM s),
         x AS (
-          SELECT {id_col},
+          SELECT doc_id,
                  flatten(list_transform(segs, seg ->
                    list_transform(range(0, CAST(ceil(length(seg) / {m}.0) AS INT)),
                                   i -> substr(seg, i * {m} + 1, {m})))) AS chunks
           FROM mseg)
-        SELECT {id_col}, generate_subscripts(chunks, 1) - 1 AS seg_idx,
+        SELECT doc_id, generate_subscripts(chunks, 1) - 1 AS seg_idx,
                unnest(chunks) AS segment
         FROM x
     """
@@ -123,78 +126,65 @@ def t2_segments_sql(table: str = "documents", text_col: str = "text",
 # T4 / T7 — per-file sequential policies (applyInPandas) + SQL fold twins
 # ---------------------------------------------------------------------------
 
-def t4_adjust_lengths(df: DataFrame, group_col: str = "source",
-                      order_col: str = "doc_id", text_col: str = "text",
-                      min_tokens: int = 40, max_tokens: int = 80) -> DataFrame:
-    """(group, para_idx, paragraph): token-length normalization per file."""
-    schema = T.StructType([
-        T.StructField(group_col, T.StringType()),
-        T.StructField("para_idx", T.IntegerType()),
-        T.StructField("paragraph", T.StringType()),
-    ])
+def _per_file(df: DataFrame, fn, fields: list) -> DataFrame:
+    """``fn`` over each file's paragraphs as one pandas frame sorted by
+    ``doc_id`` (one shuffle on ``source``); output (source, *fields)."""
+    schema = T.StructType([T.StructField("source", T.StringType()), *fields])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        out = adjust_paragraph_lengths(pdf[text_col].tolist(), min_tokens, max_tokens)
-        return pd.DataFrame({
-            group_col: pdf[group_col].iloc[0],
-            "para_idx": pd.array(range(len(out)), dtype="int32"),
-            "paragraph": out,
-        })
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("doc_id")
+        out = fn(pdf["text"].tolist())
+        return pd.DataFrame({"source": pdf["source"].iloc[0], **out})
 
     return (
-        spread(df.select(group_col, order_col, text_col))
-        .groupBy(group_col).applyInPandas(fn, schema)
+        spread(df.select("source", "doc_id", "text"))
+        .groupBy("source").applyInPandas(run, schema)
     )
 
 
-def t7_pack_chunks(df: DataFrame, group_col: str = "source",
-                   order_col: str = "doc_id", text_col: str = "text",
-                   max_tokens: int = 200) -> DataFrame:
-    """(group, chunk_idx, chunk): greedy token-budget packing per file.
+def _indexed(idx: str, col: str, values: list[str]) -> dict:
+    return {idx: pd.array(range(len(values)), dtype="int32"), col: values}
+
+
+def t4_adjust_lengths(df: DataFrame) -> DataFrame:
+    """(source, para_idx, paragraph): token-length normalization per file."""
+    return _per_file(
+        df,
+        lambda paras: _indexed("para_idx", "paragraph", adjust_paragraph_lengths(
+            paras, T4_MIN_TOKENS, T4_MAX_TOKENS)),
+        [T.StructField("para_idx", T.IntegerType()),
+         T.StructField("paragraph", T.StringType())])
+
+
+def t7_pack_chunks(df: DataFrame) -> DataFrame:
+    """(source, chunk_idx, chunk): greedy token-budget packing per file.
     Files containing an oversize paragraph yield ZERO chunks (reference
     bail; surfaced separately by t7_chunking_errors → D4 ledger)."""
-    schema = T.StructType([
-        T.StructField(group_col, T.StringType()),
-        T.StructField("chunk_idx", T.IntegerType()),
-        T.StructField("chunk", T.StringType()),
-    ])
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        chunks, err = pack_chunks(pdf[text_col].tolist(), max_tokens)
-        return pd.DataFrame({
-            group_col: pdf[group_col].iloc[0],
-            "chunk_idx": pd.array(range(len(chunks)), dtype="int32"),
-            "chunk": chunks,
-        })
-
-    return (
-        spread(df.select(group_col, order_col, text_col))
-        .groupBy(group_col).applyInPandas(fn, schema)
-    )
+    return _per_file(
+        df,
+        lambda paras: _indexed("chunk_idx", "chunk", pack_chunks(paras, T7_MAX_TOKENS)[0]),
+        [T.StructField("chunk_idx", T.IntegerType()),
+         T.StructField("chunk", T.StringType())])
 
 
-def t7_chunking_errors(df: DataFrame, group_col: str = "source",
-                       text_col: str = "text", max_tokens: int = 200) -> DataFrame:
-    """(group, reason): files whose chunking would bail — pure JVM
+def t7_chunking_errors(df: DataFrame, max_tokens: int = T7_MAX_TOKENS) -> DataFrame:
+    """(source, reason): files whose chunking would bail — pure JVM
     expressions (the D4 failure-ledger feed)."""
-    ntok = F.size(F.split(_canon_col(text_col), " "))
+    ntok = F.size(F.split(_canon_col("text"), " "))
     return (
-        df.filter(F.length(_canon_col(text_col)) > 0)
+        df.filter(F.length(_canon_col("text")) > 0)
         .filter(ntok > max_tokens)
-        .select(group_col).distinct()
+        .select("source").distinct()
         .withColumn("reason", F.lit(CHUNK_ERR_OVERSIZE))
     )
 
 
-def t7_chunking_errors_sql(table: str = "documents", group_col: str = "source",
-                           text_col: str = "text", max_tokens: int = 200) -> str:
+def t7_chunking_errors_sql(max_tokens: int = T7_MAX_TOKENS) -> str:
     return f"""
-        SELECT DISTINCT {group_col}, '{CHUNK_ERR_OVERSIZE}' AS reason
-        FROM {table}
-        WHERE {_canon_sql(text_col)} <> ''
-          AND len(string_split({_canon_sql(text_col)}, ' ')) > {max_tokens}
+        SELECT DISTINCT source, '{CHUNK_ERR_OVERSIZE}' AS reason
+        FROM documents
+        WHERE {_canon_sql("text")} <> ''
+          AND len(string_split({_canon_sql("text")}, ' ')) > {max_tokens}
     """
 
 
@@ -233,13 +223,12 @@ def _t4_pass_sql(lst: str, min_t: int, max_t: int) -> str:
             f"s -> s <> chr(29) AND s <> ''), s -> replace(s, chr(29), ''))")
 
 
-def t4_list_sql(paras_lst: str, min_tokens: int, max_tokens: int,
-                passes: int = 3) -> str:
+def t4_list_sql(paras_lst: str, min_tokens: int, max_tokens: int) -> str:
     """Full T4 over a VARCHAR[] expression: canon -> <=3 passes (a pass is
     the identity once every paragraph is within bounds, so unconditionally
     inlining all 3 matches the early-stopping python loop) -> truncate."""
     e = _canon_list_sql(paras_lst)
-    for _ in range(passes):
+    for _ in range(ADJUST_MAX_PASSES):
         e = _t4_pass_sql(e, min_tokens, max_tokens)
     return (f"list_transform({e}, s -> "
             f"array_to_string(string_split(s, ' ')[1:{max_tokens}], ' '))")
@@ -266,83 +255,65 @@ def t7_list_sql(paras_lst: str, max_tokens: int, canon: bool = True) -> str:
                END"""
 
 
-def _grouped_list_cte(table: str, group_col: str, order_col: str,
-                      text_col: str) -> str:
-    return (f"SELECT {group_col}, list({text_col} ORDER BY {order_col}) AS paras "
-            f"FROM {table} GROUP BY {group_col}")
+_GROUPED_LIST_CTE = ("SELECT source, list(text ORDER BY doc_id) AS paras "
+                     "FROM documents GROUP BY source")
 
 
-def t4_adjust_lengths_sql(table: str = "documents", group_col: str = "source",
-                          order_col: str = "doc_id", text_col: str = "text",
-                          min_tokens: int = 40, max_tokens: int = 80) -> str:
-    lst = t4_list_sql("paras", min_tokens, max_tokens)
+def t4_adjust_lengths_sql() -> str:
+    lst = t4_list_sql("paras", T4_MIN_TOKENS, T4_MAX_TOKENS)
     return f"""
-        WITH g AS ({_grouped_list_cte(table, group_col, order_col, text_col)}),
-        a AS (SELECT {group_col}, {lst} AS out FROM g)
-        SELECT {group_col}, generate_subscripts(out, 1) - 1 AS para_idx,
+        WITH g AS ({_GROUPED_LIST_CTE}),
+        a AS (SELECT source, {lst} AS out FROM g)
+        SELECT source, generate_subscripts(out, 1) - 1 AS para_idx,
                unnest(out) AS paragraph
         FROM a
     """
 
 
-def t7_pack_chunks_sql(table: str = "documents", group_col: str = "source",
-                       order_col: str = "doc_id", text_col: str = "text",
-                       max_tokens: int = 200) -> str:
-    lst = t7_list_sql("paras", max_tokens)
+def t7_pack_chunks_sql() -> str:
+    lst = t7_list_sql("paras", T7_MAX_TOKENS)
     return f"""
-        WITH g AS ({_grouped_list_cte(table, group_col, order_col, text_col)}),
-        a AS (SELECT {group_col}, {lst} AS out FROM g)
-        SELECT {group_col}, generate_subscripts(out, 1) - 1 AS chunk_idx,
+        WITH g AS ({_GROUPED_LIST_CTE}),
+        a AS (SELECT source, {lst} AS out FROM g)
+        SELECT source, generate_subscripts(out, 1) - 1 AS chunk_idx,
                unnest(out) AS chunk
         FROM a
     """
 
 
-def curation_pipeline(df: DataFrame, group_col: str = "source",
-                      order_col: str = "doc_id", text_col: str = "text",
-                      min_tokens: int = 40, max_tokens: int = 80,
-                      chunk_tokens: int = 200) -> DataFrame:
+def curation_pipeline(df: DataFrame, min_tokens: int = T4_MIN_TOKENS,
+                      max_tokens: int = T4_MAX_TOKENS,
+                      chunk_tokens: int = T7_MAX_TOKENS) -> DataFrame:
     """T4 → T7 chained per file — the reference's corpus-construction path
     (adjust_length_paragraphs → extract_qa chunking) as ONE grouped-map
     pass: a single shuffle on the group key, both sequential policies
     applied in-executor."""
-    schema = T.StructType([
-        T.StructField(group_col, T.StringType()),
-        T.StructField("chunk_idx", T.IntegerType()),
-        T.StructField("chunk", T.StringType()),
-        T.StructField("n_tokens", T.IntegerType()),
-    ])
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        adjusted = adjust_paragraph_lengths(pdf[text_col].tolist(), min_tokens, max_tokens)
+    def fn(paras: list[str]) -> dict:
+        adjusted = adjust_paragraph_lengths(paras, min_tokens, max_tokens)
         chunks, _err = pack_chunks(adjusted, chunk_tokens)
-        return pd.DataFrame({
-            group_col: pdf[group_col].iloc[0],
-            "chunk_idx": pd.array(range(len(chunks)), dtype="int32"),
-            "chunk": chunks,
+        return {
+            **_indexed("chunk_idx", "chunk", chunks),
             # split(" "), not split(): the DuckDB twin counts via
             # string_split(chunk, ' ') and pack_chunks budgets the same way —
             # bare split() would drift on C0/Unicode whitespace inside tokens
             "n_tokens": pd.array([len(c.split(" ")) for c in chunks], dtype="int32"),
-        })
+        }
 
-    return (
-        spread(df.select(group_col, order_col, text_col))
-        .groupBy(group_col).applyInPandas(fn, schema)
-    )
+    return _per_file(df, fn, [T.StructField("chunk_idx", T.IntegerType()),
+                              T.StructField("chunk", T.StringType()),
+                              T.StructField("n_tokens", T.IntegerType())])
 
 
-def curation_pipeline_sql(table: str = "documents", group_col: str = "source",
-                          order_col: str = "doc_id", text_col: str = "text",
-                          min_tokens: int = 40, max_tokens: int = 80,
-                          chunk_tokens: int = 200) -> str:
+def curation_pipeline_sql(min_tokens: int = T4_MIN_TOKENS,
+                          max_tokens: int = T4_MAX_TOKENS,
+                          chunk_tokens: int = T7_MAX_TOKENS) -> str:
     t4 = t4_list_sql("paras", min_tokens, max_tokens)
     chained = t7_list_sql(t4, chunk_tokens, canon=False)
     return f"""
-        WITH g AS ({_grouped_list_cte(table, group_col, order_col, text_col)}),
-        a AS (SELECT {group_col}, {chained} AS out FROM g)
-        SELECT {group_col}, generate_subscripts(out, 1) - 1 AS chunk_idx,
+        WITH g AS ({_GROUPED_LIST_CTE}),
+        a AS (SELECT source, {chained} AS out FROM g)
+        SELECT source, generate_subscripts(out, 1) - 1 AS chunk_idx,
                unnest(out) AS chunk,
                len(string_split(unnest(out), ' ')) AS n_tokens
         FROM a
@@ -353,28 +324,25 @@ def curation_pipeline_sql(table: str = "documents", group_col: str = "source",
 # T8 — context windows (declarative window/join formulation)
 # ---------------------------------------------------------------------------
 
-def context_windows(df: DataFrame, group_col: str = "source",
-                    order_col: str = "doc_id", text_col: str = "text",
-                    pattern: str = "stream join", max_tokens: int = 120,
-                    before_percent: float = 0.3) -> DataFrame:
-    """(group, hit_id, start_rk, end_rk, context) — token-budget window
+def context_windows(df: DataFrame, pattern: str = CONTEXT_PATTERN,
+                    max_tokens: int = CONTEXT_MAX_TOKENS,
+                    before_percent: float = CONTEXT_BEFORE_PERCENT) -> DataFrame:
+    """(source, hit_id, start_rk, end_rk, context) — token-budget window
     around every hit (``pattern`` substring match).  See expand_context."""
-    return expand_context(df, None, group_col, order_col, text_col,
-                          max_tokens, before_percent, pattern=pattern)
+    return expand_context(df, None, max_tokens, before_percent, pattern=pattern)
 
 
-def ranked_corpus(df: DataFrame, group_col: str = "source",
-                  order_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def ranked_corpus(df: DataFrame) -> DataFrame:
     """The rank/prefix-sum staging table T8 consumes: (g, o, txt, tok, rk,
     c, total, n) — row rank, token count, cumulative tokens and group
     totals per (group, order).  Query-independent, so at scale it is
     materialized ONCE per corpus version (build_ranked_corpus) and every
     expansion reads it instead of re-deriving the window functions in each
     of the plan's ~10 self-join branches."""
-    txt = _canon_col(text_col)
+    txt = _canon_col("text")
     base = (
-        df.filter(F.length(_canon_col(text_col)) > 0)
-        .select(F.col(group_col).alias("g"), F.col(order_col).alias("o"),
+        df.filter(F.length(_canon_col("text")) > 0)
+        .select(F.col("source").alias("g"), F.col("doc_id").alias("o"),
                 txt.alias("txt"))
         .withColumn("tok", F.size(F.split(F.col("txt"), " ")))
     )
@@ -388,12 +356,11 @@ def ranked_corpus(df: DataFrame, group_col: str = "source",
     )
 
 
-def build_ranked_corpus(df: DataFrame, out_dir: str, group_col: str = "source",
-                        order_col: str = "doc_id", text_col: str = "text") -> None:
+def build_ranked_corpus(df: DataFrame, out_dir: str) -> None:
     """Materialize ranked_corpus once (S2-style staging write).  At 100 TB
     this is a partitioned Iceberg table keyed on the group column; the
     parquet dir keeps the same read surface locally."""
-    ranked_corpus(df, group_col, order_col, text_col).write.mode(
+    ranked_corpus(df).write.mode(
         "overwrite").parquet(f"{out_dir}/ranked")
 
 
@@ -402,14 +369,13 @@ def load_ranked_corpus(spark, out_dir: str) -> DataFrame:
 
 
 def expand_context(df: DataFrame, hit_ids: DataFrame | None,
-                   group_col: str = "source", order_col: str = "doc_id",
-                   text_col: str = "text", max_tokens: int = 120,
-                   before_percent: float = 0.3, *,
+                   max_tokens: int = CONTEXT_MAX_TOKENS,
+                   before_percent: float = CONTEXT_BEFORE_PERCENT, *,
                    pattern: str | None = None,
                    ranked: DataFrame | None = None) -> DataFrame:
     """Token-budget context expansion around hit rows.
 
-    ``hit_ids``: DataFrame(group_col, order_col) naming the hit rows
+    ``hit_ids``: DataFrame(source, doc_id) naming the hit rows
     (e.g. retrieval results); alternatively ``pattern`` marks every row
     whose text contains the substring.
 
@@ -427,12 +393,11 @@ def expand_context(df: DataFrame, hit_ids: DataFrame | None,
     reads the staged table (one write, N pruned columnar reads) instead of
     re-computing the static plan ~10 times.
     """
-    r = ranked if ranked is not None else ranked_corpus(
-        df, group_col, order_col, text_col)
+    r = ranked if ranked is not None else ranked_corpus(df)
     if hit_ids is not None:
         marked = r.join(
-            F.broadcast(hit_ids.select(F.col(group_col).alias("g"),
-                                       F.col(order_col).alias("o")).distinct()),
+            F.broadcast(hit_ids.select(F.col("source").alias("g"),
+                                       F.col("doc_id").alias("o")).distinct()),
             ["g", "o"])
     else:
         marked = r.filter(F.col("txt").contains(pattern))
@@ -494,23 +459,20 @@ def expand_context(df: DataFrame, hit_ids: DataFrame | None,
                 lambda s: s.getField("txt")),
             " ").alias("context"))
     )
-    return ctx.select(F.col("g").alias(group_col), "hit_id", "start_rk", "end_rk", "context")
+    return ctx.select(F.col("g").alias("source"), "hit_id", "start_rk", "end_rk", "context")
 
 
-def context_windows_sql(table: str = "documents", group_col: str = "source",
-                        order_col: str = "doc_id", text_col: str = "text",
-                        pattern: str = "stream join", max_tokens: int = 120,
-                        before_percent: float = 0.3) -> str:
-    B, p = max_tokens, before_percent
-    pat = pattern.replace("'", "''")
+def context_windows_sql() -> str:
+    B, p = CONTEXT_MAX_TOKENS, CONTEXT_BEFORE_PERCENT
+    pat = CONTEXT_PATTERN.replace("'", "''")
     return f"""
-        WITH d AS (SELECT {group_col} AS g, {order_col} AS o,
-                          {_canon_sql(text_col)} AS txt
+        WITH d AS (SELECT source AS g, doc_id AS o,
+                          {_canon_sql("text")} AS txt
                    -- canonical-form gate, NOT trim(): a tab/newline-only
                    -- doc passes trim() (space-only strip), becoming a
                    -- phantom row that shifts every rank/prefix-sum vs the
                    -- Spark side's length(canon) > 0 filter
-                   FROM {table} WHERE {_canon_sql(text_col)} <> ''),
+                   FROM documents WHERE {_canon_sql("text")} <> ''),
         r AS (SELECT g, o, txt, len(string_split(txt, ' ')) AS tok,
                      ROW_NUMBER() OVER (PARTITION BY g ORDER BY o) AS rk,
                      SUM(len(string_split(txt, ' '))) OVER
@@ -541,7 +503,7 @@ def context_windows_sql(table: str = "documents", group_col: str = "source",
                       CAST(CASE WHEN h3.total <= {B} THEN 1 ELSE h3.start_rk0 END AS BIGINT) AS start_rk,
                       CAST(CASE WHEN h3.total <= {B} THEN h3.n ELSE COALESCE(en.end_rk_w, h3.hrk) END AS BIGINT) AS end_rk
                FROM h3 LEFT JOIN en USING (g, hit_id))
-        SELECT f.g AS {group_col}, f.hit_id, f.start_rk, f.end_rk,
+        SELECT f.g AS source, f.hit_id, f.start_rk, f.end_rk,
                string_agg(j.txt, ' ' ORDER BY j.rk) AS context
         FROM h4 f JOIN r j ON j.g = f.g AND j.rk BETWEEN f.start_rk AND f.end_rk
         GROUP BY 1, 2, 3, 4
@@ -552,10 +514,10 @@ def context_windows_sql(table: str = "documents", group_col: str = "source",
 # T5 — subword tokenization (pure JVM expressions / pure SQL)
 # ---------------------------------------------------------------------------
 
-def wordpiece(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def wordpiece(df: DataFrame) -> DataFrame:
     """(id, pieces, n_pieces): consonant/vowel-group subword split with
     '##' continuation markers — whole-stage codegen, zero Python."""
-    norm = F.lower(_canon_col(text_col))
+    norm = F.lower(_canon_col("text"))
     words = F.split(norm, " ")
     grouped = F.lit("(" + SUBWORD_RE + ")")
     pieces = F.flatten(F.transform(
@@ -566,21 +528,20 @@ def wordpiece(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         ),
     ))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(pieces, " ").alias("pieces"),
         F.size(pieces).alias("n_pieces"),
     )
 
 
-def wordpiece_sql(table: str = "documents", text_col: str = "text",
-                  id_col: str = "doc_id") -> str:
-    inner = (f"flatten(list_transform(string_split(lower({_canon_sql(text_col)}), ' '), "
+def wordpiece_sql() -> str:
+    inner = (f"flatten(list_transform(string_split(lower({_canon_sql('text')}), ' '), "
              f"w -> list_transform(regexp_extract_all(w, '{SUBWORD_RE}'), "
              f"(piece, i) -> CASE WHEN i = 1 THEN piece ELSE '##' || piece END)))")
     return f"""
-        SELECT {id_col}, array_to_string({inner}, ' ') AS pieces,
+        SELECT doc_id, array_to_string({inner}, ' ') AS pieces,
                len({inner}) AS n_pieces
-        FROM {table}
+        FROM documents
     """
 
 
@@ -591,16 +552,16 @@ def wordpiece_sql(table: str = "documents", text_col: str = "text",
 # matching rule both engines share)
 # ---------------------------------------------------------------------------
 
-def qa_parse(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def qa_parse(df: DataFrame) -> DataFrame:
     """(id, pair_idx, question, answer): build a deterministic
     'Question N: …\\nAnswer N: …' layout from each document (1-in-7 rows
     get an orphan answer — marker counts mismatch → zero pairs, the
     reference's case-3 bail), then parse it back with regexp_extract_all."""
-    txt = _canon_col(text_col)
+    txt = _canon_col("text")
     qa = F.concat(
         F.lit("Question 1: "), F.substring(txt, 1, 40), F.lit("?\n"),
         F.lit("Answer 1: "), F.substring(txt, 41, 40), F.lit(".\n"),
-        F.when(F.col(id_col) % 7 == 0, F.lit("Answer 2: orphan."))
+        F.when(F.col("doc_id") % 7 == 0, F.lit("Answer 2: orphan."))
         .otherwise(F.concat(F.lit("Question 2: "), F.substring(txt, 81, 40), F.lit("?\n"),
                             F.lit("Answer 2: "), F.substring(txt, 121, 40), F.lit("."))),
     )
@@ -609,38 +570,37 @@ def qa_parse(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> D
     ok = (F.size(qs) > 0) & (F.size(qs) == F.size(ans))
     empty = F.array().cast(T.ArrayType(T.StringType()))
     d = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(ok, qs).otherwise(empty).alias("qs"),
         F.when(ok, ans).otherwise(empty).alias("ans"),
     )
     return (
-        d.select(F.col(id_col), "ans", F.posexplode("qs").alias("pair_idx", "question"))
+        d.select(F.col("doc_id"), "ans", F.posexplode("qs").alias("pair_idx", "question"))
         .withColumn("answer", F.element_at("ans", F.col("pair_idx") + 1))
-        .select(id_col, "pair_idx", "question", "answer")
+        .select("doc_id", "pair_idx", "question", "answer")
     )
 
 
-def qa_parse_sql(table: str = "documents", text_col: str = "text",
-                 id_col: str = "doc_id") -> str:
-    txt = _canon_sql(text_col)
+def qa_parse_sql() -> str:
+    txt = _canon_sql("text")
     qa = (f"'Question 1: ' || substr({txt}, 1, 40) || '?' || chr(10) || "
           f"'Answer 1: ' || substr({txt}, 41, 40) || '.' || chr(10) || "
-          f"CASE WHEN {id_col} % 7 = 0 THEN 'Answer 2: orphan.' "
+          f"CASE WHEN doc_id % 7 = 0 THEN 'Answer 2: orphan.' "
           f"ELSE 'Question 2: ' || substr({txt}, 81, 40) || '?' || chr(10) || "
           f"'Answer 2: ' || substr({txt}, 121, 40) || '.' END")
     return f"""
-        WITH b AS (SELECT {id_col}, {qa} AS qa FROM {table}),
-        e AS (SELECT {id_col},
+        WITH b AS (SELECT doc_id, {qa} AS qa FROM documents),
+        e AS (SELECT doc_id,
                      regexp_extract_all(qa, 'Question \\d+: (.+)', 1) AS qs,
                      regexp_extract_all(qa, 'Answer \\d+: (.+)', 1) AS ans
               FROM b),
-        f AS (SELECT {id_col},
+        f AS (SELECT doc_id,
                      CASE WHEN len(qs) > 0 AND len(qs) = len(ans) THEN qs
                           ELSE CAST([] AS VARCHAR[]) END AS qs,
                      CASE WHEN len(qs) > 0 AND len(qs) = len(ans) THEN ans
                           ELSE CAST([] AS VARCHAR[]) END AS ans
               FROM e)
-        SELECT {id_col}, generate_subscripts(qs, 1) - 1 AS pair_idx,
+        SELECT doc_id, generate_subscripts(qs, 1) - 1 AS pair_idx,
                unnest(qs) AS question, unnest(ans) AS answer
         FROM f
     """

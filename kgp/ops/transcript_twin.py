@@ -110,12 +110,12 @@ nums AS MATERIALIZED (
 )"""
 
 
-def _gram_ctes() -> str:
-    """g1..g{MAX_SURFACE_TOKENS}: n-gram candidates over CLEANED tokens
+def _gram_ctes(max_tokens: int) -> str:
+    """g1..g{max_tokens}: n-gram candidates over CLEANED tokens
     (clean_token = edge-punct strip), joined with ' ' exactly like
     GazetteerMatcher.find's ``' '.join(toks[i:i+size])``."""
     out = []
-    for size in range(1, MAX_SURFACE_TOKENS + 1):
+    for size in range(1, max_tokens + 1):
         if size == 1:
             out.append("""
 g1 AS MATERIALIZED (
@@ -209,7 +209,8 @@ vocab AS MATERIALIZED (
 #   final UNION (same family as the CTE-inlining hazard); use join + window.
 
 
-def s2_cte(cue_toks: list[tuple[str, tuple[str, ...]]] | None = None) -> str:
+def s2_cte(cue_toks: list[tuple[str, tuple[str, ...]]] | None = None,
+           max_tokens: int = MAX_SURFACE_TOKENS) -> str:
     """The S2 core, ``psent`` → ``triples_raw`` (conv_id, turn_idx, subj,
     pred, obj, ts): sentences → tokens → greedy cursor scan (recursive) →
     mentions/cues/pairs → triple emission (split_sentences /
@@ -218,12 +219,11 @@ def s2_cte(cue_toks: list[tuple[str, tuple[str, ...]]] | None = None) -> str:
     The caller defines three CTEs before it: ``ordered(tid, conv_id,
     turn_idx, text, tool, ts)`` with a unique ``tid`` per row, ``nums(i)``
     covering every sentence and token list length, and ``vocab(surface,
-    ntoks)`` with distinct surfaces of 1..MAX_SURFACE_TOKENS tokens.
-    ``cue_toks`` overrides the predicate cues (textops._CUE_TOKS shape).
-    Needs ``WITH RECURSIVE``."""
-    gmax = MAX_SURFACE_TOKENS
+    ntoks)`` with distinct surfaces of 1..``max_tokens`` tokens (only
+    n-grams up to that length are built).  ``cue_toks`` overrides the
+    predicate cues (textops._CUE_TOKS shape).  Needs ``WITH RECURSIVE``."""
     gram_union = "\n  UNION ALL ".join(
-        f"SELECT * FROM g{s}" for s in range(1, gmax + 1))
+        f"SELECT * FROM g{s}" for s in range(1, max_tokens + 1))
     return f"""
 -- S2 sentence structure: RE2 has no lookbehind, so split_sentences'
 -- (?<=[.!?])\\s+ becomes replace-terminator-ws-with-sentinel, then split.
@@ -261,7 +261,7 @@ stoks AS MATERIALIZED (
 lowtoks AS MATERIALIZED (
   SELECT tid, sent_idx, ord, lower(tok) AS ltok FROM stoks
 ),
-{_gram_ctes()},
+{_gram_ctes(max_tokens)},
 m_all AS MATERIALIZED (
   SELECT g.tid, g.sent_idx, g.i, g.size, g.gram AS surface
   FROM ({gram_union}) g
@@ -372,13 +372,14 @@ assign AS MATERIALIZED (
 )"""
 
 
-def _linking_cte(threshold: float = 85.0) -> str:
+def _linking_cte() -> str:
     """S3+S4+S5 twin: normalized-surface equality edges + deletion-
     neighborhood blocking + df-cap + difflib token_set_ratio verify
     (ops.difflib_sql) + min-label reachability CC + the materialize
     resolve join.  Mirrors pipeline/link.py + linkspec.py + pipeline/cc.py
     + pipeline/materialize.py (reference entity_alias_mapping.ipynb
     cell-20/29, rdf_graph.ipynb cell-16/20/22)."""
+    from ..fuzzy import FUZZY_LINK_THRESHOLD
     from ..linkspec import MAX_BLOCK_DF, MIN_DELETION_TOKEN_LEN
     from .difflib_sql import ratio_chain
 
@@ -438,7 +439,7 @@ bpn AS MATERIALIZED (
 -- verify_pair: equal norms auto-pass; the rest go through the difflib twin
 vcand AS MATERIALIZED (
   SELECT a * 1000000 + b AS pid, a, b, na, nb FROM bpn WHERE na <> nb
-),{ratio_chain('vcand', threshold)},
+),{ratio_chain('vcand', FUZZY_LINK_THRESHOLD)},
 link_edges AS MATERIALIZED (
   SELECT a, b FROM eq_edges
   UNION
@@ -469,8 +470,7 @@ def transcript_triples_sql(t_path: str | None = None,
 
 
 def transcript_nodes_sql(t_path: str | None = None,
-                         v_path: str | None = None,
-                         threshold: float = 85.0) -> str:
+                         v_path: str | None = None) -> str:
     """S5 nodes twin: one row per CANONICAL entity (component
     representative) — materialize's ``vocab ⋈ canon WHERE entity_id =
     canonical_id`` re-derived through the same linking/CC chain the edges
@@ -480,7 +480,7 @@ def transcript_nodes_sql(t_path: str | None = None,
     ensure_fixture()
     t_path = t_path or TRANSCRIPTS_PATH
     v_path = v_path or VOCAB_PATH
-    return f"""WITH RECURSIVE {_extract_cte(t_path, v_path)},{_linking_cte(threshold)}
+    return f"""WITH RECURSIVE {_extract_cte(t_path, v_path)},{_linking_cte()}
 SELECT CAST(v.entity_id AS BIGINT) AS canonical_id,
        v.canonical_name AS name, v.entity_type
 FROM vraw v JOIN assign a ON a.entity_id = v.entity_id
@@ -489,8 +489,7 @@ WHERE a.canonical_id = v.entity_id
 
 
 def transcript_edges_sql(t_path: str | None = None,
-                         v_path: str | None = None,
-                         threshold: float = 85.0) -> str:
+                         v_path: str | None = None) -> str:
     """Full S1..S5 twin: canonical KG edges (src, dst, pred, conv_id, ts)
     from the raw transcripts — pipeline/run.run_pipeline's ``edges``
     output re-derived end to end (ordering, extraction, blocked linking
@@ -501,7 +500,7 @@ def transcript_edges_sql(t_path: str | None = None,
     ensure_fixture()
     t_path = t_path or TRANSCRIPTS_PATH
     v_path = v_path or VOCAB_PATH
-    return f"""WITH RECURSIVE {_extract_cte(t_path, v_path)},{_linking_cte(threshold)}
+    return f"""WITH RECURSIVE {_extract_cte(t_path, v_path)},{_linking_cte()}
 SELECT CAST(ss.cid AS BIGINT) AS src, CAST(so.cid AS BIGINT) AS dst,
        t.pred, t.conv_id, t.ts
 FROM triples_raw t

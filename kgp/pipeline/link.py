@@ -12,9 +12,10 @@ with shuffle-native blocking:
 - verification = the same token_set_ratio >= 85 as the reference, in an
   Arrow-batched pandas UDF
 
-Skew note: token blocks on frequent name tokens ("Jensen") are the hot
-keys; AQE skew-join splits them at runtime, and blocks are bounded further
-by the band keys being content-hashes (near-uniform).
+Skew note: deletion-neighborhood keys of frequent name tokens ("Jensen")
+are the hot keys; keys shared by more than linkspec.MAX_BLOCK_DF
+entities are dropped (the df cap), and AQE skew-join splits what remains
+at runtime.
 """
 
 from __future__ import annotations

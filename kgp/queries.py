@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from .ops import (bucketed, coref, dedup, docextract, embed, events as ev,
                   fetch, graph, llm, multimodal, retrieval, simsearch,
                   textqa, textseg, transcript_twin)
+from .ops.common import prune_stale_tags
 from .ops.tables import load
 
 
@@ -373,10 +374,6 @@ _CACHE_VERSION = "v5"  # bump when banding/layout constants OR the tag format ch
 # match the new prune key and leak forever in the shared version root)
 
 
-from .ops.common import (dataset_tag as _dataset_tag,  # noqa: F401 — test surface
-                         prune_stale_tags as _prune_stale_tags)
-
-
 def _cache_dir(kind: str, sf_dir: str) -> str:
     from .ops.common import cached_dataset_tag
 
@@ -390,7 +387,7 @@ def _edges_mat(spark: SparkSession, sf_dir: str) -> DataFrame:
     rdf_graph.ipynb cell-36..47)."""
     d = _cache_dir("graph", sf_dir)
     if not os.path.exists(f"{d}/edges/_SUCCESS"):
-        _prune_stale_tags(d)
+        prune_stale_tags(d)
         graph.materialize_graph(spark, sf_dir, d)
     return spark.read.parquet(f"{d}/edges")
 
@@ -407,7 +404,7 @@ def _ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # can never equal the probe keys (load_lsh_index raises on it)
     if not (os.path.exists(f"{d}/buckets/_SUCCESS")
             and simsearch.lsh_index_compatible(d)):
-        _prune_stale_tags(d)
+        prune_stale_tags(d)
         simsearch.build_lsh_index(load(spark, sf_dir, "embeddings"), d)
     return simsearch.load_lsh_index(spark, d)
 
@@ -418,7 +415,7 @@ def _ranked_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     in retrieval_pipeline; see ops.textseg.ranked_corpus)."""
     d = _cache_dir("ranked", sf_dir)
     if not os.path.exists(f"{d}/ranked/_SUCCESS"):
-        _prune_stale_tags(d)
+        prune_stale_tags(d)
         textseg.build_ranked_corpus(load(spark, sf_dir, "documents"), d)
     return textseg.load_ranked_corpus(spark, d)
 
@@ -435,11 +432,12 @@ def _events(fn):
     return lambda spark, sf_dir: fn(load(spark, sf_dir, "events"))
 
 
-def _kgp_inputs(spark, n_ent: int = 120, n_conv: int = 250):
+def _kgp_inputs(spark):
+    """The in-process corpus: 120 entities, 250 conversations."""
     from . import synth
 
-    vocab_pd = synth.gen_entity_vocab(n_ent)
-    transcripts = synth.gen_transcripts_spark(spark, n_conv, vocab_pd)
+    vocab_pd = synth.gen_entity_vocab(120)
+    transcripts = synth.gen_transcripts_spark(spark, 250, vocab_pd)
     return vocab_pd, transcripts
 
 
@@ -581,37 +579,38 @@ REGISTRY: dict[str, Q] = {
         dedup.masked_dup_groups_sql("events", "props", "event_id")),
     "dedup_ngram_jaccard_capped": Q(
         lambda s, d: dedup.ngram_jaccard_pairs_sqlable(load(s, d, "documents"), "text", "doc_id",
-                                                       threshold=0.2, df_cap=64),
-        dedup.ngram_jaccard_sql("documents", "text", "doc_id", threshold=0.2, df_cap=64)),
+                                                       df_cap=dedup.NGRAM_DF_CAP),
+        dedup.ngram_jaccard_sql("documents", "text", "doc_id", df_cap=dedup.NGRAM_DF_CAP)),
     # minhash/simhash: deterministic integer arithmetic replayed exactly in
     # DuckDB (ops.sqlhash) — full hash gates, not rows-only (the strongest
     # check for the reference's core D2 semantics,
     # remove_duplicate_paragraphs.py:104-132)
     "dedup_minhash_pairs": Q(
         lambda s, d: dedup.minhash_near_dup_pairs(load(s, d, "documents"), "text", "doc_id",
-                                                  threshold=0.5, mode="word", quantize=True),
+                                                  threshold=dedup.MINHASH_PAIRS_THRESHOLD,
+                                                  mode="word", quantize=True),
         dedup.minhash_pairs_sql()),
     "dedup_simhash_pairs": Q(
-        lambda s, d: dedup.simhash_near_dup_pairs(load(s, d, "documents"), "text", "doc_id", max_hamming=3),
+        lambda s, d: dedup.simhash_near_dup_pairs(load(s, d, "documents"), "text", "doc_id"),
         dedup.simhash_pairs_sql()),
     "dedup_cosine_pairs": Q(
-        lambda s, d: simsearch.cosine_pairs_exact(load(s, d, "embeddings"), threshold=0.4),
-        simsearch.cosine_pairs_exact_sql(threshold=0.4)),
+        lambda s, d: simsearch.cosine_pairs_exact(load(s, d, "embeddings")),
+        simsearch.cosine_pairs_exact_sql()),
     # --- similarity search (J10/J11)
     "knn_cosine_topk": Q(
-        lambda s, d: simsearch.cosine_topk(load(s, d, "embeddings"), query_id=0, k=10),
-        simsearch.cosine_topk_sql(query_id=0, k=10)),
+        lambda s, d: simsearch.cosine_topk(load(s, d, "embeddings"), query_id=0),
+        simsearch.cosine_topk_sql(query_id=0)),
     "knn_batch_topk": Q(
-        lambda s, d: simsearch.knn_batch_topk(load(s, d, "embeddings"), max_qid=20, k=10),
-        simsearch.knn_batch_topk_sql(max_qid=20, k=10)),
+        lambda s, d: simsearch.knn_batch_topk(load(s, d, "embeddings")),
+        simsearch.knn_batch_topk_sql()),
     # M3 batched-matmul scorer against the SAME oracle as the JVM-expression
     # top-k: one BLAS matmul per Arrow batch must reproduce the exact scores
     "m3_batched_topk": Q(
         lambda s, d: (lambda emb: simsearch.cosine_scores_batched(
             emb.filter(F.col("vec_id") != 0),
-            emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"], k=10))(
+            emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]))(
             load(s, d, "embeddings")),
-        simsearch.cosine_topk_sql(query_id=0, k=10)),
+        simsearch.cosine_topk_sql(query_id=0)),
     # M2 embedder: full hash gate via fixed-point component rows (the raw
     # array<float> operator stays for internal consumers; embed.py docstring
     # explains the float32-vs-ROUND parity trap)
@@ -683,8 +682,7 @@ REGISTRY: dict[str, Q] = {
     # the driver's sf0.01 (lsh 0.67, ivf 0.58 exact).
     "ann_recall": Q(
         lambda s, d: simsearch.ann_recall_at_k(
-            load(s, d, "embeddings"), max_qid=20, k=10,
-            index=_ann_index(s, d),
+            load(s, d, "embeddings"), index=_ann_index(s, d),
             min_recall=simsearch.ANN_RECALL_FLOORS),
         simsearch.ann_recall_sql()),
     # ======================================================================
@@ -737,13 +735,13 @@ REGISTRY: dict[str, Q] = {
         lambda s, d: dedup.cosine_near_dup_pairs(load(s, d, "embeddings"), "embedding", "vec_id", threshold=0.4)),
     "ann_batch_topk": Q(
         lambda s, d: simsearch.ann_batch_topk(
-            load(s, d, "embeddings").filter(F.col("vec_id") < 20),
-            load(s, d, "embeddings"), k=10, index=_ann_index(s, d))),
+            load(s, d, "embeddings").filter(F.col("vec_id") < simsearch.N_QUERIES),
+            load(s, d, "embeddings"), index=_ann_index(s, d))),
     "ann_ivf_topk": Q(
         lambda s, d: simsearch.ann_ivf_topk(
-            load(s, d, "embeddings").filter(F.col("vec_id") < 20),
+            load(s, d, "embeddings").filter(F.col("vec_id") < simsearch.N_QUERIES),
             load(s, d, "embeddings"),
-            simsearch.train_centroids(load(s, d, "embeddings")), k=10)),
+            simsearch.train_centroids(load(s, d, "embeddings")))),
     "m2_embed_neardup": Q(
         lambda s, d: embed.embed_near_dup_pairs(load(s, d, "documents"), threshold=0.9)),
     "t3_semantic_segments": Q(
@@ -780,18 +778,16 @@ PARITY_CAPS: dict[str, Q] = {
     "dedup_cosine_pairs": Q(
         lambda s, d: simsearch.cosine_pairs_exact(
             load(s, d, "embeddings")
-            .filter(F.col("vec_id") < PARITY_CAP_IDS["dedup_cosine_pairs"]),
-            threshold=0.4),
-        simsearch.cosine_pairs_exact_sql(
-            threshold=0.4, max_id=PARITY_CAP_IDS["dedup_cosine_pairs"])),
+            .filter(F.col("vec_id") < PARITY_CAP_IDS["dedup_cosine_pairs"])),
+        simsearch.cosine_pairs_exact_sql(max_id=PARITY_CAP_IDS["dedup_cosine_pairs"])),
     "dedup_ngram_jaccard_capped": Q(
         lambda s, d: dedup.ngram_jaccard_pairs_sqlable(
             load(s, d, "documents")
             .filter(F.col("doc_id") < PARITY_CAP_IDS["dedup_ngram_jaccard_capped"]),
-            "text", "doc_id", threshold=0.2, df_cap=64),
+            "text", "doc_id", df_cap=dedup.NGRAM_DF_CAP),
         dedup.ngram_jaccard_sql(
             f"(SELECT * FROM documents WHERE doc_id < {PARITY_CAP_IDS['dedup_ngram_jaccard_capped']})",
-            "text", "doc_id", threshold=0.2, df_cap=64)),
+            "text", "doc_id", df_cap=dedup.NGRAM_DF_CAP)),
 }
 
 

@@ -145,36 +145,40 @@ def gen_entity_vocab(n_ent: int, seed: int = SEED) -> pd.DataFrame:
     )
 
 
-def extend_alias_chains(vocab: pd.DataFrame, seed: int = SEED,
-                        chain_p: float = 0.25, max_depth: int = 3,
-                        bridge_start: int | None = None,
-                        bridge_run: int = 25) -> pd.DataFrame:
+# extend_alias_chains' shape: share of entities given a typo chain, the
+# longest chain, and the length of the one equality-bridged run
+ALIAS_CHAIN_P, ALIAS_CHAIN_DEPTH, BRIDGE_RUN = 0.25, 3, 25
+
+
+def extend_alias_chains(vocab: pd.DataFrame, seed: int = SEED) -> pd.DataFrame:
     """Deterministically deepen the alias structure (round-5 fixture ask).
 
     Two additions, both pure functions of ``seed``:
 
-    - **typo chains**: for ~``chain_p`` of entities, append
+    - **typo chains**: for ~``ALIAS_CHAIN_P`` of entities, append
       ``alias_1 = typo(canonical)``, ``alias_{k+1} = typo(alias_k)`` up to
-      ``max_depth`` links — longer per-entity alias lists, so the gazetteer
-      scan, the resolve join, and the surface-equality pass all see deeper
-      alias fans (reference alias map: entity_alias_mapping.ipynb cell-29);
+      ``ALIAS_CHAIN_DEPTH`` links — longer per-entity alias lists, so the
+      gazetteer scan, the resolve join, and the surface-equality pass all
+      see deeper alias fans (reference alias map:
+      entity_alias_mapping.ipynb cell-29);
     - **equality bridges**: entities ``bridge_start+1 ..
-      bridge_start+bridge_run-1`` each append the PREVIOUS entity's
-      canonical name as an alias, so the norm-equality linking pass chains
-      them into one ``bridge_run``-node component — the CC twin then
-      exercises a >20-node component inside the driver gate instead of only
-      the 2-3-node merges the base generator emits.
+      bridge_start+BRIDGE_RUN-1`` (``bridge_start`` drawn from ``seed``)
+      each append the PREVIOUS entity's canonical name as an alias, so the
+      norm-equality linking pass chains them into one ``BRIDGE_RUN``-node
+      component — the CC twin then exercises a >20-node component inside
+      the driver gate instead of only the 2-3-node merges the base
+      generator emits.
     """
     n = len(vocab)
-    if bridge_start is None:
-        bridge_start = int(_rng(seed, 7).integers(0, max(1, n - bridge_run)))
+    bridge_run = BRIDGE_RUN
+    bridge_start = int(_rng(seed, 7).integers(0, max(1, n - bridge_run)))
     names = list(vocab["canonical_name"])
     out_aliases = []
     for eid, (name, aliases) in enumerate(zip(names, vocab["aliases"])):
         rng = _rng(seed, 7, eid + 1)
         al = list(aliases)
-        if rng.random() < chain_p:
-            depth = 1 + int(rng.integers(max_depth))
+        if rng.random() < ALIAS_CHAIN_P:
+            depth = 1 + int(rng.integers(ALIAS_CHAIN_DEPTH))
             cur = name
             for _ in range(depth):
                 toks = cur.split()
@@ -293,8 +297,7 @@ def gen_transcripts_pandas(n_conv: int, vocab: pd.DataFrame, seed: int = SEED) -
     return df.iloc[shuf].reset_index(drop=True)
 
 
-def gen_transcripts_spark(spark, n_conv: int, vocab: pd.DataFrame, seed: int = SEED,
-                          parts: int | None = None):
+def gen_transcripts_spark(spark, n_conv: int, vocab: pd.DataFrame, seed: int = SEED):
     """Distributed generator: one task generates a contiguous conv range —
     embarrassingly parallel, no shuffle, scales to any n_conv."""
     from pyspark.sql import functions as F
@@ -320,7 +323,7 @@ def gen_transcripts_spark(spark, n_conv: int, vocab: pd.DataFrame, seed: int = S
             out["turn_idx"] = out["turn_idx"].astype("int32")
             yield out
 
-    parts = parts or max(spark.sparkContext.defaultParallelism, 1)
+    parts = max(spark.sparkContext.defaultParallelism, 1)
     df = spark.range(0, n_conv, numPartitions=parts).mapInPandas(gen, schema=schema)
     # Seeded shuffle of the written order (turn order must be reconstructed
     # by S1, not inherited from generation order).

@@ -361,7 +361,11 @@ def _fnv1a(data: str) -> int:
     return h
 
 
-def char_shingles(s: str, k: int = 3) -> set[int]:
+CHAR_SHINGLE_K = 3
+
+
+def char_shingles(s: str) -> set[int]:
+    k = CHAR_SHINGLE_K
     s = normalize_surface(s)
     if len(s) < k:
         return {_fnv1a(s)} if s else set()
@@ -382,8 +386,8 @@ def word_bigram_shingles(s: str) -> set[int]:
     return {_fnv1a(f"{a} {b}") for a, b in zip(w, w[1:])}
 
 
-def shingle_set(s: str, mode: str = "char", k: int = 3) -> set[int]:
-    return char_shingles(s, k) if mode == "char" else word_bigram_shingles(s)
+def shingle_set(s: str, mode: str = "char") -> set[int]:
+    return char_shingles(s) if mode == "char" else word_bigram_shingles(s)
 
 
 def minhash_signature(shingles: set[int] | list[int], num_hashes: int = 16) -> tuple[int, ...]:
@@ -399,7 +403,7 @@ def minhash_signature(shingles: set[int] | list[int], num_hashes: int = 16) -> t
     return tuple(int(v) for v in sig)
 
 
-def minhash_band_keys(s: str, num_hashes: int = 16, bands: int = 4, k: int = 3,
+def minhash_band_keys(s: str, num_hashes: int = 16, bands: int = 4,
                       mode: str = "char") -> list[str]:
     """LSH band keys: signature split into ``bands`` rows-per-band groups.
 
@@ -407,7 +411,7 @@ def minhash_band_keys(s: str, num_hashes: int = 16, bands: int = 4, k: int = 3,
     the oracle and the Spark stages use exactly these keys, so candidate
     generation is identical by construction (FIXTURES.md §5 parity note).
     """
-    sig = minhash_signature(shingle_set(s, mode, k), num_hashes)
+    sig = minhash_signature(shingle_set(s, mode), num_hashes)
     rows = num_hashes // bands
     return [f"{bi}:" + ",".join(str(x) for x in sig[bi * rows : (bi + 1) * rows]) for bi in range(bands)]
 
@@ -488,8 +492,12 @@ def canon_ws(s: str) -> str:
     return " ".join(ascii_split(s or ""))
 
 
+ADJUST_MAX_PASSES = 3
+
+
 def adjust_paragraph_lengths(paragraphs: list[str], min_tokens: int = 40,
-                             max_tokens: int = 80, max_passes: int = 3) -> list[str]:
+                             max_tokens: int = 80,
+                             max_passes: int = ADJUST_MAX_PASSES) -> list[str]:
     paras = [c for c in (canon_ws(p) for p in paragraphs) if c]
     for _ in range(max_passes):
         out: list[str] = []

@@ -367,7 +367,7 @@ def test_dataset_tag_sees_nested_rewrite(tmp_path):
     cache tag (top-level dir stat alone cannot see it)."""
     import os
 
-    from kgp.queries import _dataset_tag
+    from kgp.ops.common import dataset_tag as _dataset_tag
 
     d = tmp_path / "sfX"
     (d / "documents").mkdir(parents=True)
@@ -385,7 +385,7 @@ def test_prune_stale_tags_removes_only_same_dataset(tmp_path):
     """Prune keys on (basename, pathhash): regenerated content at the SAME
     path is evicted; a different dataset that merely shares the basename
     (e.g. /a/sfX vs /b/sfX) keeps its live cache."""
-    from kgp.queries import _prune_stale_tags
+    from kgp.ops.common import prune_stale_tags as _prune_stale_tags
 
     kind = tmp_path / "graph"
     for tag in ["sfX-p1hash-aaa111", "sfX-p1hash-bbb222",
@@ -400,7 +400,7 @@ def test_prune_stale_tags_removes_only_same_dataset(tmp_path):
 def test_dataset_tag_distinguishes_paths_and_follows_symlinks(tmp_path):
     import os
 
-    from kgp.queries import _dataset_tag
+    from kgp.ops.common import dataset_tag as _dataset_tag
 
     # identical content at two paths -> different tags (prune-safety)
     for parent in ["a", "b"]:

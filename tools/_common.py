@@ -1,18 +1,17 @@
 """Shared fixture-table registry for the tools/ parity harnesses.
 
 check_parity.py and oracle_sweep.py both register the same ten
-driver-generated parquet tables as DuckDB views.  Single-sourcing
-the tuple + loop here means adding/renaming a fixture table is one edit —
-a per-tool copy that drifts would make a harness silently report 'ok' on
-oracles that never saw the data.
+driver-generated parquet tables as DuckDB views.  The table tuple is
+kgp.ops.tables.TABLES, the one the Spark loader reads, so adding or
+renaming a fixture table is one edit — a per-tool copy that drifts would
+make a harness silently report 'ok' on oracles that never saw the data.
 """
 
 from __future__ import annotations
 
 import os
 
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+from kgp.ops.tables import TABLES
 
 
 def create_views(con, sf_dir: str) -> None:
