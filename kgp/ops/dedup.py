@@ -4,8 +4,10 @@ All variants keep the survivor with the lowest id — deterministic at any
 parallelism.  Each is shuffle-native:
 
 - exact:        one groupBy on a content hash (sha2), no joins
-- minhash-LSH:  shingle → minhash signature → band keys → bucket join;
-                candidates verified with exact Jaccard in a pandas UDF
+- minhash-LSH:  word-bigram shingles → minhash signature → band keys →
+                bucket join; candidates verified with exact Jaccard in a
+                pandas UDF (document near-dup — surface-form linking is
+                S3's, kgp/pipeline/link.py)
 - simhash:      64-bit simhash; near-dups = identical band of bits
                 (4×16-bit bands ≙ hamming ≤ 3 heuristic), verified by
                 full-signature hamming distance
@@ -20,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from ..textops import normalize_surface, shingle_set
+from ..textops import MINHASH_BANDS, MINHASH_NUM_HASHES, word_bigram_shingles
 from .common import canon_col, canon_sql, dup_key_col, explode_once, pin, spread
 
 # ---------------------------------------------------------------------------
@@ -46,27 +48,32 @@ def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # minhash LSH near-dup
 # ---------------------------------------------------------------------------
 
-def _shingle_hash_udf(mode: str):
-    """text -> sorted distinct shingle-hash array (computed ONCE per doc;
-    candidates are verified against these arrays, never by re-shingling
-    raw text per pair)."""
+def _shingle_hash_udf():
+    """text -> sorted distinct word-bigram shingle-hash array (computed
+    ONCE per doc; candidates are verified against these arrays, never by
+    re-shingling raw text per pair).
+
+    A factory, called once per operator call: a module-level UDF would
+    make two calls' plans equal, and the CacheManager would then serve a
+    later call's pinned signature table from an earlier call's pin."""
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def _sh(texts: pd.Series) -> pd.Series:
         u64 = np.uint64(1) << np.uint64(63)
         out = []
         for t in texts:
-            hs = np.fromiter(shingle_set(t or "", mode), dtype=np.uint64)
+            hs = np.fromiter(word_bigram_shingles(t or ""), dtype=np.uint64)
             hs.sort()
             out.append((hs - u64).view(np.int64))  # signed view for LongType
         return pd.Series(out)
     return _sh
 
 
-def _bands_from_sh_udf(num_hashes: int, bands: int):
+def _bands_from_sh_udf():
     """shingle-hash array -> LSH band keys, batch-vectorized minhash
-    (same multiply-shift family as textops.minhash_signature)."""
+    (same multiply-shift family and constants as textops.minhash_band_keys)."""
     from ..textops import _MINHASH_A, _MINHASH_B
 
+    num_hashes, bands = MINHASH_NUM_HASHES, MINHASH_BANDS
     rows = num_hashes // bands
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
@@ -109,29 +116,25 @@ def _arr_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
 _arr_jaccard = _arr_jaccard.asNondeterministic()
 
 
-# minhash LSH shape, shared with the DuckDB twin; the twin (and its
-# registry entry) verify at MINHASH_PAIRS_THRESHOLD
-MINHASH_NUM_HASHES, MINHASH_BANDS = 32, 8
+# exact-Jaccard floor of the verified minhash pairs (Spark and DuckDB twin)
 MINHASH_PAIRS_THRESHOLD = 0.5
 
 
-def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
-                           threshold: float = 0.8, mode: str = "char",
-                           quantize: bool = False) -> DataFrame:
-    """Candidate pairs sharing >=1 of ``MINHASH_BANDS`` minhash bands, verified by
-    exact shingle Jaccard >= threshold.  Returns (a, b, jaccard), a < b.
+def minhash_near_dup_pairs(df: DataFrame) -> DataFrame:
+    """Document pairs sharing >=1 of ``MINHASH_BANDS`` minhash bands of
+    their word-bigram shingles, verified by exact shingle Jaccard >=
+    ``MINHASH_PAIRS_THRESHOLD``.  Reads ``doc_id``/``text``; returns
+    (a, b, jq20), a < b.
 
-    ``mode='char'``: char-3gram shingles (surface-form near-dup, J7).
-    ``mode='word'``: word-bigram shingles (document near-dup) — the scale
-    path that replaces the exact `ngram_jaccard_pairs_sqlable` self-join:
-    shuffle is keyed on 4-minhash band keys (near-uniform content hashes),
-    so cost tracks true near-dup density instead of the df² blowup of
-    common shingles.
+    The scale path that replaces the exact `ngram_jaccard_pairs_sqlable`
+    self-join: shuffle is keyed on 4-minhash band keys (near-uniform
+    content hashes), so cost tracks true near-dup density instead of the
+    df² blowup of common shingles.
 
     The threshold filter runs on the RAW double (identical IEEE value in
-    every engine); ``quantize=True`` swaps the rounded ``jaccard`` column
-    for ``jq20 = floor(jaccard * 2^20)`` — exact binary fixed-point, the
-    driver-hash-safe form the DuckDB twin (minhash_pairs_sql) emits.
+    every engine); the output carries ``jq20 = floor(jaccard * 2^20)`` —
+    exact binary fixed-point, the driver-hash-safe form the DuckDB twin
+    (minhash_pairs_sql) emits.
 
     Shuffle diet (100 TB shape): the band self-join carries (id, bkey)
     ONLY — no text, no signatures.  Deduped candidate id pairs are then
@@ -151,7 +154,7 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     # first action (at warehouse scale the same seam is a persisted
     # signature stage table).
     sh = (
-        spread(df).select(F.col(id_col).alias("id"), _shingle_hash_udf(mode)(text_col).alias("sh"))
+        spread(df).select(F.col("doc_id").alias("id"), _shingle_hash_udf()("text").alias("sh"))
         .repartition("id")
     )
     sh = pin(sh)
@@ -162,8 +165,7 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     # The second persist pins the (id, bkey) band table so the signature
     # UDF runs once, not once per self-join side (AQE's broadcast pick
     # stops the two sides' exchanges from being reusable).
-    keyed = pin(explode_once(sh, ["id"],
-                            _bands_from_sh_udf(MINHASH_NUM_HASHES, MINHASH_BANDS)("sh"),
+    keyed = pin(explode_once(sh, ["id"], _bands_from_sh_udf()("sh"),
                             ["bkey"], pos=False))
     l, r = keyed.alias("l"), keyed.alias("r")
     pairs = (
@@ -174,26 +176,22 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     )
     sa = sh.select(F.col("id").alias("a"), F.col("sh").alias("sha"))
     sb = sh.select(F.col("id").alias("b"), F.col("sh").alias("shb"))
-    verified = (
+    return (
         pairs.join(sa, "a").join(sb, "b")
         .withColumn("_j", _arr_jaccard("sha", "shb"))
-        .filter(F.col("_j") >= threshold)
+        .filter(F.col("_j") >= MINHASH_PAIRS_THRESHOLD)
+        .select("a", "b",
+                F.floor(F.col("_j") * F.lit(1 << 20)).cast("long").alias("jq20"))
     )
-    if quantize:
-        return verified.select(
-            "a", "b",
-            F.floor(F.col("_j") * F.lit(1 << 20)).cast("long").alias("jq20"))
-    return verified.select("a", "b", F.round("_j", 6).alias("jaccard"))
 
 
 def minhash_pairs_sql() -> str:
-    """DuckDB oracle for ``minhash_near_dup_pairs(mode='word',
-    quantize=True)`` — the FULL pipeline replayed exactly in SQL: word-
-    bigram fnv1a shingles, 32 multiply-shift minhashes (mod-2^64-exact,
-    sqlhash.mulshift_sql), 8 band keys, band-join candidates, exact
-    shingle-set Jaccard verify.  Deterministic integer arithmetic end to
-    end, so the band keys — not just the verified pairs — agree with the
-    Spark path bit for bit."""
+    """DuckDB oracle for ``minhash_near_dup_pairs`` — the FULL pipeline
+    replayed exactly in SQL: word-bigram fnv1a shingles, 32 multiply-shift
+    minhashes (mod-2^64-exact, sqlhash.mulshift_sql), 8 band keys,
+    band-join candidates, exact shingle-set Jaccard verify.  Deterministic
+    integer arithmetic end to end, so the band keys — not just the
+    verified pairs — agree with the Spark path bit for bit."""
     from ..textops import _MINHASH_A, _MINHASH_B
     from .sqlhash import fnv1a_sql, mulshift_sql
 
@@ -339,10 +337,10 @@ SIMHASH_BAND_BITS = 16
 SIMHASH_MAX_HAMMING = 3  # the pigeonhole bound of the 4x16-bit banding
 
 
-def simhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
-                           max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
-    """Pairs whose simhashes agree on >=1 of 4 16-bit bands AND have
-    hamming distance <= max_hamming.  Returns (a, b, hamming).
+def simhash_near_dup_pairs(df: DataFrame) -> DataFrame:
+    """Document pairs whose simhashes agree on >=1 of 4 16-bit bands AND
+    have hamming distance <= ``SIMHASH_MAX_HAMMING``.  Reads
+    ``doc_id``/``text``; returns (a, b, hamming).
 
     4×16-bit bands guarantee recall 1.0 for hamming <= 3 (pigeonhole) and
     keep candidate buckets selective: each band key has 2^16 values, so
@@ -357,7 +355,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
     # localCheckpoint fits): pins the (id, sh) signature blocks so the
     # simhash UDF runs exactly once
     sh = (
-        spread(df).select(F.col(id_col).alias("id"), simhash_udf(text_col).alias("sh"))
+        spread(df).select(F.col("doc_id").alias("id"), simhash_udf("text").alias("sh"))
         .repartition("id")
     )
     sh = pin(sh)
@@ -379,7 +377,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str, id_col: str,
         .select(F.col("l.id").alias("a"), F.col("l.sh").alias("sa"),
                 F.col("r.id").alias("b"), F.col("r.sh").alias("sb"))
         .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .dropDuplicates(["a", "b"])
         .select("a", "b", "hamming")
     )
@@ -438,7 +436,7 @@ def simhash_pairs_sql() -> str:
 # word-bigram Jaccard — pure DataFrame-API variant (whole-stage codegen)
 # ---------------------------------------------------------------------------
 
-def _word_bigrams(text_col: str):
+def _word_bigrams():
     """Distinct word-bigram shingles, built entirely with JVM expressions:
     normalize → split → transform(sequence) → array_distinct.  No Python.
 
@@ -446,7 +444,7 @@ def _word_bigrams(text_col: str):
     and the DuckDB twins): trimming first strips only the space char, so a
     leading tab would survive into the collapse and yield an empty first
     token — a phantom ' x' bigram the other engines never emit."""
-    norm = canon_col(F.lower(text_col))
+    norm = canon_col(F.lower("text"))
     w = F.split(norm, " ")
     grams = F.transform(
         F.sequence(F.lit(0), F.size(w) - 2),
@@ -455,35 +453,31 @@ def _word_bigrams(text_col: str):
     return F.when(F.size(w) >= 2, F.array_distinct(grams)).otherwise(F.array(norm))
 
 
-# exact word-bigram Jaccard floor, and the df cap the registry entry runs at
+# exact word-bigram Jaccard floor, and the document-frequency cap
 NGRAM_JACCARD_THRESHOLD, NGRAM_DF_CAP = 0.2, 64
 
 
-def ngram_jaccard_pairs_sqlable(df: DataFrame, text_col: str, id_col: str,
-                                threshold: float = NGRAM_JACCARD_THRESHOLD,
-                                df_cap: int | None = None) -> DataFrame:
-    """Exact word-bigram Jaccard pairs >= threshold via explode + self-join.
+def ngram_jaccard_pairs_sqlable(df: DataFrame) -> DataFrame:
+    """Word-bigram Jaccard pairs >= ``NGRAM_JACCARD_THRESHOLD`` via explode
+    + self-join.  Reads ``doc_id``/``text``.
 
     The SQL-expressible exact baseline the minhash/simhash variants
     approximate (oracle: ngram_jaccard_sql).  Shuffle is keyed on the
     shingle, so its cost is Θ(Σ_g df(g)²) — quadratic in per-shingle
-    document frequency.  ``df_cap`` is the scale lever: shingles appearing
-    in more than ``df_cap`` documents are dropped from the universe on BOTH
-    sides (set sizes recomputed over the surviving shingles), turning the
-    worst-case hot shingle into a bounded df_cap² term while keeping the
-    measure exact over the discriminative shingles (mirrored exactly by the
-    SQL twin, so the capped variant is oracle-checkable too).
+    document frequency.  ``NGRAM_DF_CAP`` bounds it: shingles appearing
+    in more than ``NGRAM_DF_CAP`` documents are dropped from the universe
+    on BOTH sides (set sizes recomputed over the surviving shingles),
+    turning the worst-case hot shingle into a bounded cap² term while
+    keeping the measure exact over the discriminative shingles (mirrored
+    exactly by the SQL twin).
     Returns (a, b, jaccard) with jaccard rounded to 6.
     """
-    sh = df.select(F.col(id_col).alias("id"), _word_bigrams(text_col).alias("grams"))
+    sh = df.select(F.col("doc_id").alias("id"), _word_bigrams().alias("grams"))
     ex = sh.select("id", F.explode("grams").alias("g"))
-    if df_cap is not None:
-        hot = (ex.groupBy("g").agg(F.count("*").alias("_df"))
-               .filter(F.col("_df") > df_cap).select("g"))
-        ex = ex.join(F.broadcast(hot), "g", "left_anti")
-        sizes = ex.groupBy("id").agg(F.count("*").alias("n"))
-    else:
-        sizes = sh.select("id", F.size("grams").alias("n"))
+    hot = (ex.groupBy("g").agg(F.count("*").alias("_df"))
+           .filter(F.col("_df") > NGRAM_DF_CAP).select("g"))
+    ex = ex.join(F.broadcast(hot), "g", "left_anti")
+    sizes = ex.groupBy("id").agg(F.count("*").alias("n"))
     l, r = ex.alias("l"), ex.alias("r")
     shared = (
         l.join(r, "g")
@@ -496,34 +490,27 @@ def ngram_jaccard_pairs_sqlable(df: DataFrame, text_col: str, id_col: str,
     return (
         shared.join(sa, "a").join(sb, "b")
         .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NGRAM_JACCARD_THRESHOLD)
         .select("a", "b", "jaccard")
     )
 
 
-def ngram_jaccard_sql(table: str, text_col: str, id_col: str,
-                      df_cap: int | None = None) -> str:
+def ngram_jaccard_sql(table: str) -> str:
     """DuckDB oracle for `ngram_jaccard_pairs_sqlable` (same shingling,
-    same optional document-frequency cap)."""
-    if df_cap is None:
-        ex_sql = "SELECT id, unnest(grams) AS g FROM sh"
-        sizes_sql = "SELECT id, len(grams) AS n FROM sh"
-    else:
-        ex_sql = f"""SELECT id, g FROM (SELECT id, unnest(grams) AS g FROM sh)
-                     WHERE g NOT IN (SELECT g FROM (SELECT unnest(grams) AS g FROM sh)
-                                     GROUP BY g HAVING COUNT(*) > {df_cap})"""
-        sizes_sql = "SELECT id, COUNT(*) AS n FROM ex GROUP BY id"
+    same document-frequency cap) over ``table``'s ``doc_id``/``text``."""
     return f"""
-        WITH d AS (SELECT {id_col} AS id,
-                          {canon_sql(f"lower({text_col})")} AS nt
+        WITH d AS (SELECT doc_id AS id,
+                          {canon_sql("lower(text)")} AS nt
                    FROM {table}),
         w AS (SELECT id, string_split(nt, ' ') AS ws, nt FROM d),
         sh AS (SELECT id, CASE WHEN len(ws) >= 2
                      THEN list_distinct(list_transform(range(1, len(ws)),
                                         i -> ws[i] || ' ' || ws[i + 1]))
                      ELSE [nt] END AS grams FROM w),
-        ex AS ({ex_sql}),
-        sizes AS ({sizes_sql}),
+        ex AS (SELECT id, g FROM (SELECT id, unnest(grams) AS g FROM sh)
+                     WHERE g NOT IN (SELECT g FROM (SELECT unnest(grams) AS g FROM sh)
+                                     GROUP BY g HAVING COUNT(*) > {NGRAM_DF_CAP})),
+        sizes AS (SELECT id, COUNT(*) AS n FROM ex GROUP BY id),
         shared AS (SELECT l.id AS a, r.id AS b, COUNT(*) AS inter
                    FROM ex l JOIN ex r USING (g) WHERE l.id < r.id GROUP BY 1, 2)
         SELECT a, b, ROUND(inter / (sa.n + sb.n - inter)::DOUBLE, 6) AS jaccard

@@ -422,7 +422,7 @@ def index_rerank(docs: DataFrame) -> DataFrame:
     ``scored`` is persisted: it has two consumers (the rank branch and
     the parse join-back), and unpinned, the corpus-sized relevance
     scoring would be derived once per branch (same staging rationale as
-    mcq_answer_pipeline's pin_kept)."""
+    mcq_answer_pipeline's staged candidate table)."""
     scored = pin(relevance_scores(docs))
     w = W.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("t_idx"))
     ranked = scored.withColumn("rk", F.row_number().over(w))
@@ -466,8 +466,7 @@ def index_rerank_sql() -> str:
 
 
 def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
-                        token_budget: int = 120,
-                        pin_kept: bool = True) -> DataFrame:
+                        token_budget: int = 120) -> DataFrame:
     """The mcq_search.py deployment pipeline composed end-to-end
     (process_mcq, mcq_search.py:112-145):
 
@@ -494,15 +493,13 @@ def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
     (|subs| is n_mcq·3, so the candidate set is bounded by |subs|·k);
     everything downstream shuffles on mcq_id only.
 
-    ``pin_kept`` (default True) stages the trimmed candidate table —
-    tiny, bounded by |mcqs|·budget — with an eager localCheckpoint
-    before its two consumers (the response emit and the parse
-    join-back).  Without the pin the static plan re-derives the
-    corpus-sized scoring scan per consumer branch; the pin is the
-    one-write staging the retrieval pipeline uses for its ranked
-    corpus.  On a real cluster the same seam is a stage-table write
-    (io.TableIO).  Pass False for a fully-lazy plan (streaming or
-    plan-inspection use).
+    The trimmed candidate table — tiny, bounded by |mcqs|·budget — is
+    staged with an eager localCheckpoint before its two consumers (the
+    response emit and the parse join-back).  Without the pin the static
+    plan re-derives the corpus-sized scoring scan per consumer branch;
+    the pin is the one-write staging the retrieval pipeline uses for its
+    ranked corpus.  On a real cluster the same seam is a stage-table
+    write (io.TableIO).
     """
     from .embed import embed_texts
     from .simsearch import _cos
@@ -543,8 +540,7 @@ def mcq_answer_pipeline(docs: DataFrame, n_mcq: int = 10, k_per_sub: int = 5,
                 per_mcq.rowsBetween(W.unboundedPreceding, W.currentRow)))
             .filter(F.col("cum_tok") <= token_budget)
             .withColumn("pair_idx", F.row_number().over(per_mcq)))
-    if pin_kept:
-        kept = kept.localCheckpoint(eager=True)
+    kept = kept.localCheckpoint(eager=True)
 
     # the answer wire format, then the reference's regex parse
     letter = F.element_at(F.split(F.lit("a,b,c,d"), ","),

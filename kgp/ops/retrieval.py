@@ -3,7 +3,7 @@
 Mirrors src/deployment/search_pipeline.py:42-89:
 1. retrieve: ANN top-k over the embedding corpus for a TABLE of queries
    (semantic_search_two_towers.py:19-57 → ops.simsearch.ann_batch_topk,
-   LSH bucket join + exact verify);
+   bucket join against the persisted LSH index + exact verify);
 2. rerank: cross-score every (query, candidate) pair with a DIFFERENT
    scorer — token_set_ratio over the raw texts stands in for the
    cross-encoder (bert_rerank.py:69-75) — and keep the top ``k_final``
@@ -35,24 +35,23 @@ def _cross_score(qt: pd.Series, ct: pd.Series) -> pd.Series:
                       for a, b in zip(qt, ct)])
 
 
-def retrieval_pipeline(spark: SparkSession, sf_dir: str, n_queries: int = 8,
-                       k_retrieve: int = 50, k_final: int = 5,
-                       ranked: DataFrame | None = None,
-                       index: DataFrame | None = None) -> DataFrame:
+def retrieval_pipeline(spark: SparkSession, sf_dir: str, index: DataFrame,
+                       n_queries: int = 8, k_retrieve: int = 50, k_final: int = 5,
+                       ranked: DataFrame | None = None) -> DataFrame:
     """(qid, final_rank, doc_id, retrieve_score, rerank_score, context).
 
+    ``index``: the persisted S8 LSH bucket table stage 1 probes
+    (simsearch.load_lsh_index) — built once, like the reference's saved
+    FAISS index (create_faiss_index.py:43-68), instead of recomputing
+    every corpus bucket key per invocation.
     ``ranked``: optional pre-staged ops.textseg.ranked_corpus table for
     stage 3 — collapses the context-expansion plan from ~10 re-derivations
-    of the window functions to N pruned reads of one staged table.
-    ``index``: optional persisted S8 LSH bucket table for stage 1 — without
-    it every invocation recomputes the whole corpus's bucket keys (a full
-    corpus UDF pass the reference amortizes by loading the saved FAISS
-    index, create_faiss_index.py:43-68)."""
+    of the window functions to N pruned reads of one staged table."""
     docs = load(spark, sf_dir, "documents")
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < n_queries)
 
-    stage1 = ann_batch_topk(queries, emb, k=k_retrieve, index=index)
+    stage1 = ann_batch_topk(queries, emb, index, k=k_retrieve)
 
     dq = docs.select(F.col("doc_id").alias("qid"), F.col("text").alias("qtext"))
     dc = docs.select(F.col("doc_id").alias("vec_id"), F.col("text").alias("ctext"),

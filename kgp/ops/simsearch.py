@@ -10,10 +10,12 @@ Two paths, as a 100 TB design requires:
   JVM-side with ``aggregate(zip_with(...))`` over double-cast arrays — no
   Python in the loop, whole-stage codegen, broadcast of the query vector.
   O(N·d) per query; right answer, linear cost.
-- **LSH-bucketed ANN** (the scale path): random-hyperplane sign buckets
-  (deterministic planes) prune candidates before exact verification —
-  the shuffle is keyed on bucket id, so cost scales with bucket sizes,
-  not N².  Mirrors the reference's IVFFlat nlist=100 coarse quantizer.
+- **LSH-bucketed ANN** (the scale path): a persisted index of
+  random-hyperplane sign buckets (deterministic planes; build_lsh_index,
+  the reference's saved FAISS index) prunes candidates before exact
+  verification — the shuffle is keyed on bucket id, so cost scales with
+  bucket sizes, not N².  The IVF path (ann_ivf_topk) mirrors the
+  reference's IVFFlat nlist=100 coarse quantizer.
 
 A batched pandas-UDF matmul (`cosine_scores_batched`) is provided for the
 many-queries case: one BLAS matmul per Arrow batch instead of one
@@ -159,8 +161,8 @@ N_PLANES = 12
 _PLANE_SEED = 20240816  # independent hash family from dedup's (by design)
 
 
-def lsh_bucket_ids(df: DataFrame, bands: int) -> DataFrame:
-    """(id, bkey) rows: sign-bit bucket keys, ``bands`` keys per vector.
+def lsh_bucket_ids(df: DataFrame) -> DataFrame:
+    """(id, bkey) rows: sign-bit bucket keys, ``LSH_BANDS`` keys per vector.
     Bucketing is single-sourced in ops.hyperlsh (cached planes, vectorized
     key build) — shared with dedup.cosine_near_dup_pairs modulo seed."""
 
@@ -173,8 +175,8 @@ def lsh_bucket_ids(df: DataFrame, bands: int) -> DataFrame:
                 continue
             M = np.stack(pdf["embedding"].to_numpy())
             ids = pdf["vec_id"].to_numpy()
-            per_band = sign_band_keys(M, bands, N_PLANES, _PLANE_SEED)
-            yield pd.DataFrame({"id": np.tile(ids, bands),
+            per_band = sign_band_keys(M, LSH_BANDS, N_PLANES, _PLANE_SEED)
+            yield pd.DataFrame({"id": np.tile(ids, LSH_BANDS),
                                 "bkey": np.concatenate(per_band)})
 
     return df.select("vec_id", "embedding").mapInPandas(keys, schema="id long, bkey string")
@@ -184,31 +186,34 @@ def lsh_bucket_ids(df: DataFrame, bands: int) -> DataFrame:
 # S8 — persisted ANN index + J10 many-query retrieval join
 # ---------------------------------------------------------------------------
 
+def _lsh_meta() -> dict:
+    """The signature scheme every stored bkey is built with: fixed when the
+    index is built, and the only scheme a probe may use on it."""
+    return {"bands": LSH_BANDS, "n_planes": N_PLANES, "plane_seed": _PLANE_SEED}
+
+
 def build_lsh_index(df: DataFrame, out_dir: str) -> None:
     """Materialize the LSH bucket table ONCE (reference
     create_faiss_index.py:43-68: train/add/write_index) — queries then pay
     a bucket-table scan instead of recomputing every corpus bucket key.
-    Partitioned by band so a query probing one band prunes the others."""
-    buckets = lsh_bucket_ids(df, LSH_BANDS).withColumn(
-        "band", F.split(F.col("bkey"), ":").getItem(0))
-    buckets.write.mode("overwrite").partitionBy("band").parquet(f"{out_dir}/buckets")
-    # the index is only probeable with the SAME banding: record it, so a
-    # bands/planes/seed mismatch between build and probe cannot silently
-    # produce empty candidate joins (bkey formats simply never matching)
+    Partitioned by band so a query probing one band prunes the others.
+    meta.json records the signature scheme, written after the parquet
+    commit (a crash between the two leaves an incompatible index)."""
     import json
 
+    buckets = lsh_bucket_ids(df).withColumn(
+        "band", F.split(F.col("bkey"), ":").getItem(0))
+    buckets.write.mode("overwrite").partitionBy("band").parquet(f"{out_dir}/buckets")
     with open(f"{out_dir}/meta.json", "w") as f:
-        json.dump({"bands": LSH_BANDS, "n_planes": N_PLANES,
-                   "plane_seed": _PLANE_SEED}, f)
+        json.dump(_lsh_meta(), f)
 
 
 def lsh_index_compatible(out_dir: str) -> bool:
-    """True iff the persisted index's hash family matches the CURRENT
-    module constants.  ``bands`` may differ (the probe adopts the index's
-    banding), but n_planes/plane_seed are baked into every stored bkey —
-    a mismatch means probe keys never equal stored keys and every
-    candidate join is silently empty.  Cache managers use this to trigger
-    a rebuild instead of serving an unprobeable index."""
+    """True iff the persisted index was built with the CURRENT
+    ``LSH_BANDS``/``N_PLANES``/``_PLANE_SEED``.  All three are baked into
+    every stored bkey, and the probe (and the DuckDB twin ann_recall_sql)
+    use the current constants: a mismatch makes probe keys miss stored
+    keys.  Cache managers use this to rebuild instead of serving it."""
     import json
     import os
 
@@ -216,76 +221,36 @@ def lsh_index_compatible(out_dir: str) -> bool:
     if not os.path.exists(meta_path):
         return False
     with open(meta_path) as f:
-        meta = json.load(f)
-    return (meta.get("n_planes") == N_PLANES
-            and meta.get("plane_seed") == _PLANE_SEED)
+        return json.load(f) == _lsh_meta()
 
 
 def load_lsh_index(spark, out_dir: str) -> DataFrame:
-    import json
-    import os
-
-    df = spark.read.parquet(f"{out_dir}/buckets").select("id", "bkey")
-    meta_path = f"{out_dir}/meta.json"
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            # carried on the Python DataFrame handle; ann_batch_topk reads
-            # it so the query side is bucketed with the index's banding
-            df._kgp_lsh_meta = json.load(f)
-        m = df._kgp_lsh_meta
-        if (m.get("n_planes"), m.get("plane_seed")) != (N_PLANES, _PLANE_SEED):
-            # loud, not empty: probing a 12-plane index with 16-plane keys
-            # makes every bkey equijoin miss — zero rows that LOOK like a
-            # result.  meta.json recorded the build family precisely so
-            # this mismatch is an error, not a silent recall=0
-            raise ValueError(
-                f"LSH index at {out_dir} was built with n_planes="
-                f"{m.get('n_planes')}, seed={m.get('plane_seed')} but the "
-                f"current code uses n_planes={N_PLANES}, seed={_PLANE_SEED} "
-                "— rebuild the index (delete the cache dir or bump the "
-                "cache version)")
-    return df
+    """The persisted (id, bkey) bucket table; raises on an index built
+    with another signature scheme — probing it would return zero or wrong
+    candidates that LOOK like a result."""
+    if not lsh_index_compatible(out_dir):
+        raise ValueError(
+            f"LSH index at {out_dir} has no meta.json or was built with "
+            f"another scheme than bands={LSH_BANDS}, n_planes={N_PLANES}, "
+            f"seed={_PLANE_SEED} — rebuild it (build_lsh_index)")
+    return spark.read.parquet(f"{out_dir}/buckets").select("id", "bkey")
 
 
-def ann_batch_topk(queries: DataFrame, corpus: DataFrame, k: int = TOP_K,
-                   index: DataFrame | None = None, bands: int | None = None) -> DataFrame:
+def ann_batch_topk(queries: DataFrame, corpus: DataFrame, index: DataFrame,
+                   k: int = TOP_K) -> DataFrame:
     """J10: a TABLE of queries joined top-k against the corpus (reference
     semantic_search_two_towers.py:19-57 serving a query batch).
 
-    Candidates = bucket-key equijoin (query keys × corpus bucket table —
-    the persisted S8 index when given, else computed on the fly); exact
-    cosine verify only on candidates; row_number per query <= k.  The
-    shuffle is keyed on bucket ids, then on query id — never |Q|×|C|.
-    Returns (qid, vec_id, score, rank); approximate (recall < 1 by
-    design), exact twin: knn_batch_topk.
+    Candidates = bucket-key equijoin of the query keys against ``index``,
+    the persisted S8 bucket table (load_lsh_index); exact cosine verify
+    only on candidates; row_number per query <= k.  The shuffle is keyed
+    on bucket ids, then on query id — never |Q|×|C|.  Returns (qid,
+    vec_id, score, rank); approximate (recall < 1 by design), exact twin:
+    knn_batch_topk.
     """
-    if bands is None and index is None:
-        bands = LSH_BANDS
-    corpus_buckets = index if index is not None else lsh_bucket_ids(corpus, bands)
-    if index is not None:
-        # probe with the INDEX's banding — a caller-supplied bands that
-        # disagrees with the build would make every bkey equijoin miss.
-        # Resolution order: the index's _kgp_lsh_meta wins when present
-        # (the attribute rides the exact Python handle load_lsh_index
-        # returned and is dropped by any DataFrame transformation); a
-        # meta-less index — e.g. a self-built bucket table from
-        # lsh_bucket_ids — is accepted WITH an explicit bands override
-        # (the caller asserts the banding); meta-less AND bands-less is
-        # LOUD, because silently guessing would produce the empty-top-k
-        # failure meta.json exists to stop
-        meta = getattr(index, "_kgp_lsh_meta", None)
-        if meta is not None:
-            bands = meta["bands"]
-        elif bands is None:
-            raise ValueError(
-                "ann_batch_topk: index DataFrame carries no _kgp_lsh_meta "
-                "and no explicit bands= was given — pass the handle "
-                "returned by load_lsh_index untransformed, or pass the "
-                "bands the bucket table was built with (mismatched bands "
-                "silently return zero candidates)")
-    q_buckets = lsh_bucket_ids(queries, bands).withColumnRenamed("id", "qid")
+    q_buckets = lsh_bucket_ids(queries).withColumnRenamed("id", "qid")
     cand = (
-        q_buckets.join(corpus_buckets, "bkey")
+        q_buckets.join(index, "bkey")
         .filter(F.col("qid") != F.col("id"))
         .select("qid", "id").distinct()
     )
@@ -468,20 +433,21 @@ def ann_ivf_topk(queries: DataFrame, corpus: DataFrame, centroids: np.ndarray,
 ANN_RECALL_FLOORS = {"lsh": 0.60, "ivf": 0.50}
 
 
-def ann_recall_at_k(df: DataFrame, max_qid: int = N_QUERIES, k: int = TOP_K,
-                    index: DataFrame | None = None,
-                    min_recall: dict[str, float] | None = None) -> DataFrame:
+def ann_recall_at_k(df: DataFrame, index: DataFrame, max_qid: int = N_QUERIES,
+                    k: int = TOP_K,
+                    min_recall: dict[str, float] = ANN_RECALL_FLOORS) -> DataFrame:
     """(method, n_exact, n_hit, recall_bp): registry-visible recall@k of
-    the approximate retrieval paths (LSH bucket join, IVF nprobe) against
-    the exact twin ``knn_batch_topk`` — the approximation-quality dial the
-    reference trades with IVFFlat nprobe (create_faiss_index.py:43-52),
-    tracked as a number instead of buried in pytest.  Fully distributed:
-    a left-semi join on (qid, vec_id) + two tiny aggregates per method.
+    the approximate retrieval paths (LSH bucket join over the persisted
+    ``index``, IVF nprobe) against the exact twin ``knn_batch_topk`` — the
+    approximation-quality dial the reference trades with IVFFlat nprobe
+    (create_faiss_index.py:43-52), tracked as a number instead of buried
+    in pytest.  Fully distributed: a left-semi join on (qid, vec_id) + two
+    tiny aggregates per method.
 
-    ``min_recall`` (method → floor) makes this a QUALITY GATE: the metric
-    rows are materialized and any method below its floor raises, so the
-    driver's correctness row fails on quality regressions instead of
-    recording unchecked rows.  recall is emitted as integer basis points
+    A QUALITY GATE: the metric rows are materialized and any method below
+    its ``min_recall`` floor (method → floor) raises, so the driver's
+    correctness row fails on quality regressions instead of recording
+    unchecked rows.  recall is emitted as integer basis points
     (recall_bp = round(1e4·hit/exact)) so the row is schema-stable and
     float-free for the driver's canonicalizer."""
     # persist: the exact O(|Q|·N) baseline is consumed four times below
@@ -490,7 +456,7 @@ def ann_recall_at_k(df: DataFrame, max_qid: int = N_QUERIES, k: int = TOP_K,
     exact = pin(knn_batch_topk(df, max_qid=max_qid, k=k).select("qid", "vec_id"))
     queries = df.filter(F.col("vec_id") < max_qid)
     approx = {
-        "lsh": ann_batch_topk(queries, df, k=k, index=index),
+        "lsh": ann_batch_topk(queries, df, index, k=k),
         "ivf": ann_ivf_topk(queries, df, train_centroids(df), k=k),
     }
     out = None
@@ -504,20 +470,18 @@ def ann_recall_at_k(df: DataFrame, max_qid: int = N_QUERIES, k: int = TOP_K,
                     .cast("int").alias("recall_bp"))
         )
         out = r if out is None else out.union(r)
-    if min_recall:
-        rows = out.collect()  # 2 tiny rows — the gate needs the values
-        for row in rows:
-            floor = min_recall.get(row["method"])
-            if floor is not None and row["recall_bp"] < floor * 10000:
-                raise AssertionError(
-                    f"ann_recall quality gate: {row['method']} recall@{k} "
-                    f"= {row['recall_bp'] / 10000:.4f} is below the "
-                    f"{floor:.2f} floor (n_hit={row['n_hit']}/"
-                    f"n_exact={row['n_exact']}) — the approximate index "
-                    "quality regressed")
-        return df.sparkSession.createDataFrame(
-            rows, "method string, n_exact bigint, n_hit bigint, recall_bp int")
-    return out
+    rows = out.collect()  # 2 tiny rows — the gate needs the values
+    for row in rows:
+        floor = min_recall.get(row["method"])
+        if floor is not None and row["recall_bp"] < floor * 10000:
+            raise AssertionError(
+                f"ann_recall quality gate: {row['method']} recall@{k} "
+                f"= {row['recall_bp'] / 10000:.4f} is below the "
+                f"{floor:.2f} floor (n_hit={row['n_hit']}/"
+                f"n_exact={row['n_exact']}) — the approximate index "
+                "quality regressed")
+    return df.sparkSession.createDataFrame(
+        rows, "method string, n_exact bigint, n_hit bigint, recall_bp int")
 
 
 # ---------------------------------------------------------------------------

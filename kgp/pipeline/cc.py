@@ -48,21 +48,21 @@ def _sym(e: DataFrame) -> DataFrame:
 # fused round below; this unfused pair is the reference it is
 # property-tested against.
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """Connect strictly-larger neighbors of every node to its min neighbor."""
+def _large_star_rows(e: DataFrame) -> DataFrame:
+    """Large-star emission before its dedup: each strictly-larger neighbor
+    of a node, linked to the node's min neighbor (rows oriented a > b)."""
     m = F.least(F.min("b").over(W.partitionBy("a")), F.col("a"))
     return (
         _sym(e).withColumn("m", m)
         .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("m").alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
     )
 
 
-def _small_star(e: DataFrame) -> DataFrame:
-    """Connect smaller-or-equal neighbors of every node to its min neighbor."""
-    o = e.select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
+def _small_star_rows(o: DataFrame) -> DataFrame:
+    """Small-star over edges oriented a > b: every node and its smaller
+    neighbors, linked to the min neighbor."""
     om = o.withColumn("m", F.min("b").over(W.partitionBy("a")))
     # one explode, not a 2-branch union: each union branch would re-run
     # the WindowExec (only exchanges are reused across branches); the
@@ -74,6 +74,17 @@ def _small_star(e: DataFrame) -> DataFrame:
         F.struct(F.col("a").alias("x"), F.col("m").alias("y")))).alias("e"))
     return (out.select(F.col("e.x").alias("a"), F.col("e.y").alias("b"))
             .filter(F.col("a") != F.col("b")).distinct())
+
+
+def _large_star(e: DataFrame) -> DataFrame:
+    """Connect strictly-larger neighbors of every node to its min neighbor."""
+    return _large_star_rows(e).distinct()
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    """Connect smaller-or-equal neighbors of every node to its min neighbor."""
+    return _small_star_rows(e.select(F.greatest("a", "b").alias("a"),
+                                     F.least("a", "b").alias("b")))
 
 
 def _round_fused(e: DataFrame) -> DataFrame:
@@ -92,20 +103,8 @@ def _round_fused(e: DataFrame) -> DataFrame:
     edge-set shuffle (~25% of bytes moved) on top of round 3's
     window-form rewrite; outputs are property-tested identical to
     _small_star(_large_star(e))."""
-    m = F.least(F.min("b").over(W.partitionBy("a")), F.col("a"))
-    ls = (
-        _sym(e).withColumn("m", m)
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    o = ls.repartition("a").dropDuplicates(["a", "b"])
-    om = o.withColumn("m", F.min("b").over(W.partitionBy("a")))
-    out = om.select(F.explode(F.array(
-        F.struct(F.col("b").alias("x"), F.col("m").alias("y")),
-        F.struct(F.col("a").alias("x"), F.col("m").alias("y")))).alias("e"))
-    return (out.select(F.col("e.x").alias("a"), F.col("e.y").alias("b"))
-            .filter(F.col("a") != F.col("b")).distinct())
+    return _small_star_rows(
+        _large_star_rows(e).repartition("a").dropDuplicates(["a", "b"]))
 
 
 def _digest(e: DataFrame) -> tuple[int, int]:

@@ -4,10 +4,11 @@ SURVEY.md §2 as a (Spark callable, DuckDB oracle SQL) pair.
 Each Spark callable takes (spark, sf_dir) and returns a DataFrame; the
 oracle SQL is the exactly-equivalent ANSI form DuckDB runs on the same
 parquet tables.  Column names/aliases match pairwise by construction.
-Queries with no SQL-expressible oracle (minhash/simhash/LSH approximations,
-the transcript KG pipeline itself) carry ``sql=None`` → the driver records
-a rows-only check; their correctness is covered by tests/ instead
-(pandas oracle parity, property tests).
+Queries with no SQL-expressible oracle (the LSH/IVF top-k and cosine-LSH
+approximations, the retrieval/MCQ compositions, the entity map, the
+streaming and snapshot entries) carry ``sql=None`` → the driver records a
+rows-only check; their correctness is covered by tests/ instead (pandas
+oracle parity, property tests).
 
 Float-parity policy: any aggregated double is summed as DECIMAL(18,4)
 (order-independent, exact) and only then cast back + rounded, so Spark's
@@ -369,7 +370,9 @@ _Q6_SQL = """
 # version tag invalidates them when banding/layout constants change
 # ---------------------------------------------------------------------------
 
-_CACHE_VERSION = "v5"  # bump when banding/layout constants OR the tag format change
+_CACHE_VERSION = "v5"  # bump when a cache layout OR the tag format changes
+# (the ANN index also rebuilds on its own when meta.json's scheme differs:
+# simsearch.lsh_index_compatible)
 # (v4 -> v5: tags gained a path-hash segment; old-format trees would never
 # match the new prune key and leak forever in the shared version root)
 
@@ -396,12 +399,12 @@ def _ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted LSH bucket table (S8): queries probe the index instead of
     recomputing every corpus bucket key (create_faiss_index.py:43-68)."""
     d = _cache_dir("ann", sf_dir)
-    # completeness = parquet _SUCCESS AND meta.json AND a hash family
-    # matching the current code: meta is written after the parquet commit
-    # (a crash between the two re-triggers the build), and a family
-    # mismatch (N_PLANES/_PLANE_SEED edited without a _CACHE_VERSION
-    # bump) must rebuild rather than serve an index whose stored bkeys
-    # can never equal the probe keys (load_lsh_index raises on it)
+    # completeness = parquet _SUCCESS AND meta.json AND a signature
+    # scheme matching the current code: meta is written after the parquet
+    # commit (a crash between the two re-triggers the build), and a scheme
+    # mismatch (LSH_BANDS/N_PLANES/_PLANE_SEED edited without a
+    # _CACHE_VERSION bump) must rebuild rather than serve an index whose
+    # stored bkeys the probe cannot match (load_lsh_index raises on it)
     if not (os.path.exists(f"{d}/buckets/_SUCCESS")
             and simsearch.lsh_index_compatible(d)):
         prune_stale_tags(d)
@@ -578,20 +581,17 @@ REGISTRY: dict[str, Q] = {
         lambda s, d: dedup.masked_dup_groups(load(s, d, "events"), "props", "event_id"),
         dedup.masked_dup_groups_sql("events", "props", "event_id")),
     "dedup_ngram_jaccard_capped": Q(
-        lambda s, d: dedup.ngram_jaccard_pairs_sqlable(load(s, d, "documents"), "text", "doc_id",
-                                                       df_cap=dedup.NGRAM_DF_CAP),
-        dedup.ngram_jaccard_sql("documents", "text", "doc_id", df_cap=dedup.NGRAM_DF_CAP)),
+        lambda s, d: dedup.ngram_jaccard_pairs_sqlable(load(s, d, "documents")),
+        dedup.ngram_jaccard_sql("documents")),
     # minhash/simhash: deterministic integer arithmetic replayed exactly in
     # DuckDB (ops.sqlhash) — full hash gates, not rows-only (the strongest
     # check for the reference's core D2 semantics,
     # remove_duplicate_paragraphs.py:104-132)
     "dedup_minhash_pairs": Q(
-        lambda s, d: dedup.minhash_near_dup_pairs(load(s, d, "documents"), "text", "doc_id",
-                                                  threshold=dedup.MINHASH_PAIRS_THRESHOLD,
-                                                  mode="word", quantize=True),
+        lambda s, d: dedup.minhash_near_dup_pairs(load(s, d, "documents")),
         dedup.minhash_pairs_sql()),
     "dedup_simhash_pairs": Q(
-        lambda s, d: dedup.simhash_near_dup_pairs(load(s, d, "documents"), "text", "doc_id"),
+        lambda s, d: dedup.simhash_near_dup_pairs(load(s, d, "documents")),
         dedup.simhash_pairs_sql()),
     "dedup_cosine_pairs": Q(
         lambda s, d: simsearch.cosine_pairs_exact(load(s, d, "embeddings")),
@@ -681,9 +681,7 @@ REGISTRY: dict[str, Q] = {
     # recall table itself is value-hash checked.  Floors are anchored at
     # the driver's sf0.01 (lsh 0.67, ivf 0.58 exact).
     "ann_recall": Q(
-        lambda s, d: simsearch.ann_recall_at_k(
-            load(s, d, "embeddings"), index=_ann_index(s, d),
-            min_recall=simsearch.ANN_RECALL_FLOORS),
+        lambda s, d: simsearch.ann_recall_at_k(load(s, d, "embeddings"), _ann_index(s, d)),
         simsearch.ann_recall_sql()),
     # ======================================================================
     # Entries below are PAST the driver's 50-entry window by design:
@@ -721,8 +719,8 @@ REGISTRY: dict[str, Q] = {
     # rows-only tail
     "kgp_entity_map": Q(_kgp_entity_map),
     "retrieval_pipeline": Q(
-        lambda s, d: retrieval.retrieval_pipeline(s, d, ranked=_ranked_corpus(s, d),
-                                                  index=_ann_index(s, d))),
+        lambda s, d: retrieval.retrieval_pipeline(s, d, _ann_index(s, d),
+                                                  ranked=_ranked_corpus(s, d))),
     # the mcq_search.py deployment composition: divide -> per-subquestion
     # retrieval -> Q7 union -> budget trim -> answer/index parse round trip
     "m7_mcq_pipeline": Q(_docs(llm.mcq_answer_pipeline)),
@@ -736,7 +734,7 @@ REGISTRY: dict[str, Q] = {
     "ann_batch_topk": Q(
         lambda s, d: simsearch.ann_batch_topk(
             load(s, d, "embeddings").filter(F.col("vec_id") < simsearch.N_QUERIES),
-            load(s, d, "embeddings"), index=_ann_index(s, d))),
+            load(s, d, "embeddings"), _ann_index(s, d))),
     "ann_ivf_topk": Q(
         lambda s, d: simsearch.ann_ivf_topk(
             load(s, d, "embeddings").filter(F.col("vec_id") < simsearch.N_QUERIES),
@@ -783,11 +781,9 @@ PARITY_CAPS: dict[str, Q] = {
     "dedup_ngram_jaccard_capped": Q(
         lambda s, d: dedup.ngram_jaccard_pairs_sqlable(
             load(s, d, "documents")
-            .filter(F.col("doc_id") < PARITY_CAP_IDS["dedup_ngram_jaccard_capped"]),
-            "text", "doc_id", df_cap=dedup.NGRAM_DF_CAP),
+            .filter(F.col("doc_id") < PARITY_CAP_IDS["dedup_ngram_jaccard_capped"])),
         dedup.ngram_jaccard_sql(
-            f"(SELECT * FROM documents WHERE doc_id < {PARITY_CAP_IDS['dedup_ngram_jaccard_capped']})",
-            "text", "doc_id", df_cap=dedup.NGRAM_DF_CAP)),
+            f"(SELECT * FROM documents WHERE doc_id < {PARITY_CAP_IDS['dedup_ngram_jaccard_capped']})")),
 }
 
 

@@ -328,7 +328,7 @@ def extract_turn(conv_id: str, turn_idx: int, text: str, tool: str | None,
 
 
 # ---------------------------------------------------------------------------
-# Shingles / minhash signatures (D2 near-dup, J6/J7 LSH blocking)
+# Word-bigram shingles / minhash signatures (D2 near-dup)
 # ---------------------------------------------------------------------------
 
 # Fixed affine hash parameters (seeded, content-independent) — deterministic
@@ -352,6 +352,10 @@ for _ in range(64):
     _state ^= (_state << 17) & 0xFFFFFFFFFFFFFFFF
     _MINHASH_B.append(_state)
 
+# minhash LSH shape: signature length and band count, read by the scalar
+# oracle below, ops.dedup.minhash_near_dup_pairs and its DuckDB twin
+MINHASH_NUM_HASHES, MINHASH_BANDS = 32, 8
+
 
 def _fnv1a(data: str) -> int:
     h = 0xCBF29CE484222325
@@ -359,17 +363,6 @@ def _fnv1a(data: str) -> int:
         h ^= byte
         h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return h
-
-
-CHAR_SHINGLE_K = 3
-
-
-def char_shingles(s: str) -> set[int]:
-    k = CHAR_SHINGLE_K
-    s = normalize_surface(s)
-    if len(s) < k:
-        return {_fnv1a(s)} if s else set()
-    return {_fnv1a(s[i : i + k]) for i in range(len(s) - k + 1)}
 
 
 def word_bigram_shingles(s: str) -> set[int]:
@@ -386,34 +379,31 @@ def word_bigram_shingles(s: str) -> set[int]:
     return {_fnv1a(f"{a} {b}") for a, b in zip(w, w[1:])}
 
 
-def shingle_set(s: str, mode: str = "char") -> set[int]:
-    return char_shingles(s) if mode == "char" else word_bigram_shingles(s)
-
-
-def minhash_signature(shingles: set[int] | list[int], num_hashes: int = 16) -> tuple[int, ...]:
+def minhash_signature(shingles: set[int] | list[int]) -> tuple[int, ...]:
     import numpy as np
 
     if not shingles:
-        return tuple([0] * num_hashes)
+        return tuple([0] * MINHASH_NUM_HASHES)
     x = np.fromiter(shingles, dtype=np.uint64)
-    a = np.array(_MINHASH_A[:num_hashes], dtype=np.uint64)
-    b = np.array(_MINHASH_B[:num_hashes], dtype=np.uint64)
+    a = np.array(_MINHASH_A[:MINHASH_NUM_HASHES], dtype=np.uint64)
+    b = np.array(_MINHASH_B[:MINHASH_NUM_HASHES], dtype=np.uint64)
     # uint64 multiply/add wrap at 2^64 — exactly the hash family definition
     sig = (x[:, None] * a[None, :] + b[None, :]).min(axis=0)
     return tuple(int(v) for v in sig)
 
 
-def minhash_band_keys(s: str, num_hashes: int = 16, bands: int = 4,
-                      mode: str = "char") -> list[str]:
-    """LSH band keys: signature split into ``bands`` rows-per-band groups.
+def minhash_band_keys(s: str) -> list[str]:
+    """LSH band keys of ``s``'s word-bigram shingles: the signature split
+    into ``MINHASH_BANDS`` groups of rows.
 
-    Two strings sharing any band key are near-dup / link candidates.  Both
-    the oracle and the Spark stages use exactly these keys, so candidate
-    generation is identical by construction (FIXTURES.md §5 parity note).
+    Two documents sharing any band key are near-dup candidates.  This is
+    the scalar oracle of ops.dedup.minhash_near_dup_pairs, which bands
+    with the same hash family and constants.
     """
-    sig = minhash_signature(shingle_set(s, mode), num_hashes)
-    rows = num_hashes // bands
-    return [f"{bi}:" + ",".join(str(x) for x in sig[bi * rows : (bi + 1) * rows]) for bi in range(bands)]
+    sig = minhash_signature(word_bigram_shingles(s))
+    rows = MINHASH_NUM_HASHES // MINHASH_BANDS
+    return [f"{bi}:" + ",".join(str(x) for x in sig[bi * rows : (bi + 1) * rows])
+            for bi in range(MINHASH_BANDS)]
 
 
 # Near-duplicate boilerplate removal spec (D2): a turn is boilerplate if

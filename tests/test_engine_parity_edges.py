@@ -91,7 +91,7 @@ def test_word_bigram_shingles_three_engine_parity(spark):
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     df = spark.createDataFrame(pdf)
     jvm = {r["doc_id"]: sorted(r["g"]) for r in
-           df.select("doc_id", dedup._word_bigrams("text").alias("g")).collect()}
+           df.select("doc_id", dedup._word_bigrams().alias("g")).collect()}
     con = duckdb.connect()
     con.register("documents", pdf)
     duck = {r[0]: sorted(r[1]) for r in con.execute("""
@@ -203,8 +203,7 @@ def test_simhash_pairs_c0_parity(spark):
              "x\x1cy z w q", "x y z w q", "totally different content here"]
     pdf = _docs_pdf(texts)
     got = sorted((r["a"], r["b"], r["hamming"]) for r in
-                 dedup.simhash_near_dup_pairs(
-                     spark.createDataFrame(pdf), "text", "doc_id").collect())
+                 dedup.simhash_near_dup_pairs(spark.createDataFrame(pdf)).collect())
     con = duckdb.connect()
     con.register("documents", pdf)
     want = sorted(tuple(r) for r in
@@ -217,8 +216,8 @@ def test_simhash_pairs_c0_parity(spark):
 
 
 def test_minhash_pairs_null_text_parity(spark):
-    """NULL text must flow through BOTH engines as '' (the Spark UDF runs
-    shingle_set(t or ''), the twin coalesces before lower()): NULL, ''
+    """NULL text must flow through BOTH engines as '' (the Spark UDF
+    shingles (t or ''), the twin coalesces before lower()): NULL, ''
     and whitespace-only docs all get the sentinel signature and pair with
     each other.  Before the coalesce, the twin's CASE fell through to a
     NULL shingle list and emitted ZERO pairs for NULL-text docs — a
@@ -226,9 +225,7 @@ def test_minhash_pairs_null_text_parity(spark):
     texts = [None, "", "   ", "alpha beta gamma delta", "alpha beta gamma delta"]
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     got = sorted((r["a"], r["b"]) for r in
-                 dedup.minhash_near_dup_pairs(
-                     spark.createDataFrame(pdf), "text", "doc_id",
-                     threshold=0.5, mode="word", quantize=True)
+                 dedup.minhash_near_dup_pairs(spark.createDataFrame(pdf))
                  .select("a", "b").collect())
     con = duckdb.connect()
     con.register("documents", pdf)
@@ -238,6 +235,33 @@ def test_minhash_pairs_null_text_parity(spark):
     # the three token-less docs share the sentinel signature on BOTH engines
     for pair in [(0, 1), (0, 2), (1, 2)]:
         assert pair in got
+
+
+def test_ngram_df_cap_binds_on_both_engines(spark):
+    """The n-gram pairs drop every bigram in more than NGRAM_DF_CAP docs
+    (the testdata corpora never reach the cap): here "common phrase" is
+    in every doc.  Spark and the DuckDB twin agree, and both differ from
+    the uncapped Jaccard, where that bigram alone pairs every doc."""
+    n = dedup.NGRAM_DF_CAP + 6
+    texts = [f"common phrase w{i} x{i}" for i in range(n)]
+    texts += ["common phrase alpha beta gamma", "common phrase alpha beta delta"]
+    pdf = _docs_pdf(texts)
+    got = sorted(tuple(r) for r in
+                 dedup.ngram_jaccard_pairs_sqlable(spark.createDataFrame(pdf)).collect())
+    con = duckdb.connect()
+    con.register("documents", pdf)
+    want = sorted(tuple(r) for r in
+                  con.execute(dedup.ngram_jaccard_sql("documents")).fetchall())
+    assert got == want == [(n, n + 1, 0.5)]
+
+    grams = [{f"{a} {b}" for a, b in zip(w, w[1:])} for w in (t.split() for t in texts)]
+    uncapped = sorted(
+        (i, j, round(len(grams[i] & grams[j]) / len(grams[i] | grams[j]), 6))
+        for i in range(len(texts)) for j in range(i + 1, len(texts))
+        if round(len(grams[i] & grams[j]) / len(grams[i] | grams[j]), 6)
+        >= dedup.NGRAM_JACCARD_THRESHOLD)
+    assert (n, n + 1, 0.6) in uncapped and len(uncapped) > n * (n - 1) // 2
+    assert got != uncapped
 
 
 def test_embed_components_c0_parity(spark):
@@ -331,8 +355,7 @@ def test_mcq_pipeline_zero_norm_doc_survives(spark):
              + ["   ", "alpha beta gamma delta topic words",
                 "topic words overlap alpha beta"])
     pdf = _docs_pdf(texts)
-    out = llm.mcq_answer_pipeline(spark.createDataFrame(pdf), n_mcq=4,
-                                  pin_kept=False).collect()
+    out = llm.mcq_answer_pipeline(spark.createDataFrame(pdf), n_mcq=4).collect()
     assert isinstance(out, list)  # reaching here = no ANSI crash
 
 
@@ -457,10 +480,9 @@ def test_python_udf_pass_counts_are_pinned(spark):
     # minhash/simhash: the persist barrier is in place (signature/band
     # tables cached — the single UDF execution is pinned mechanically by
     # test_explode_once_and_persist_run_udf_once)
-    mh_plan = (dedup.minhash_near_dup_pairs(df, "text", "doc_id", threshold=0.5,
-                                            mode="word", quantize=True)
+    mh_plan = (dedup.minhash_near_dup_pairs(df)
                ._jdf.queryExecution().executedPlan().toString())
-    sh_plan = (dedup.simhash_near_dup_pairs(df, "text", "doc_id", max_hamming=3)
+    sh_plan = (dedup.simhash_near_dup_pairs(df)
                ._jdf.queryExecution().executedPlan().toString())
     assert "InMemoryTableScan" in mh_plan and "InMemoryTableScan" in sh_plan
 

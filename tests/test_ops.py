@@ -73,7 +73,7 @@ def test_graph_materialize_partitioned(spark, tmp_path):
 
 def test_ngram_jaccard_matches_pandas(spark, docs):
     got = {(r["a"], r["b"]): r["jaccard"]
-           for r in dedup.ngram_jaccard_pairs_sqlable(docs, "text", "doc_id", 0.2).collect()}
+           for r in dedup.ngram_jaccard_pairs_sqlable(docs).collect()}
 
     pdf = docs.toPandas()
     import re
@@ -106,7 +106,7 @@ def test_minhash_finds_near_identical(spark):
     rows = [(i, "the quick brown fox jumps over the lazy dog " + str(i % 2)) for i in range(6)]
     rows.append((99, "completely different content with nothing shared at all"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = dedup.minhash_near_dup_pairs(df, "text", "doc_id", threshold=0.8).collect()
+    pairs = dedup.minhash_near_dup_pairs(df).collect()
     ids = {(r["a"], r["b"]) for r in pairs}
     assert (0, 2) in ids and all(99 not in p for p in ids)
 
@@ -119,7 +119,7 @@ def test_simhash_near_identical(spark):
             (3, "totally unrelated words appear here instead now")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = {(r["a"], r["b"]): r["hamming"] for r in
-             dedup.simhash_near_dup_pairs(df, "text", "doc_id", max_hamming=3).collect()}
+             dedup.simhash_near_dup_pairs(df).collect()}
     assert pairs == {(1, 2): 0}
 
     # banding guarantee: any pair within hamming<=3 shares >=1 of 4 16-bit
@@ -160,11 +160,13 @@ def test_batched_matches_jvm_topk(spark, emb):
     assert jvm == bat
 
 
-def test_ann_subset_of_exact_ordering(spark, emb):
+def test_ann_subset_of_exact_ordering(spark, emb, tmp_path):
     """ANN results are exact-scored; every returned score must equal the
     brute-force score for that id (approximation only affects the set)."""
     exact = dict(_np_cosine_topk(emb.toPandas(), 0, 10**6))
-    ann = simsearch.ann_batch_topk(emb.filter(emb.vec_id == 0), emb, k=10).collect()
+    simsearch.build_lsh_index(emb, str(tmp_path))
+    index = simsearch.load_lsh_index(spark, str(tmp_path))
+    ann = simsearch.ann_batch_topk(emb.filter(emb.vec_id == 0), emb, index, k=10).collect()
     assert len(ann) > 0
     for r in ann:
         assert math.isclose(r["score"], exact[r["vec_id"]], abs_tol=2e-6)
@@ -363,7 +365,7 @@ def test_simhash_banding_recall_guarantee(spark):
          "epsilon zeta", "alpha beta", "theta"])]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["a"], r["b"]) for r in
-           dedup.simhash_near_dup_pairs(df, "text", "doc_id", max_hamming=3).collect()}
+           dedup.simhash_near_dup_pairs(df).collect()}
     sh = {i: _simhash64(t) for i, t in rows}
     want = set()
     for i in range(len(rows)):
@@ -378,13 +380,12 @@ def test_minhash_pairs_match_python_spec(spark, docs):
     """The op's output equals the python spec computed with the SAME shared
     functions: pairs sharing >=1 of 8 four-hash band keys whose exact
     shingle Jaccard clears the threshold."""
-    from kgp.textops import minhash_band_keys, shingle_set
+    from kgp.textops import minhash_band_keys, word_bigram_shingles
 
     pdf = docs.toPandas()
     rows = list(pdf[["doc_id", "text"]].itertuples(index=False))
-    bands = {i: set(minhash_band_keys(t or "", num_hashes=32, bands=8, mode="word"))
-             for i, t in rows}
-    sh = {i: shingle_set(t or "", "word") for i, t in rows}
+    bands = {i: set(minhash_band_keys(t or "")) for i, t in rows}
+    sh = {i: word_bigram_shingles(t or "") for i, t in rows}
     want = {}
     for x, (ida, _) in enumerate(rows):
         for idb, _t in rows[x + 1:]:
@@ -392,10 +393,10 @@ def test_minhash_pairs_match_python_spec(spark, docs):
             if bands[a] & bands[b]:
                 u = len(sh[a] | sh[b])
                 j = len(sh[a] & sh[b]) / u if u else 1.0
-                # threshold on the RAW double (engine-identical IEEE value;
-                # the rounded form is display-only)
+                # threshold on the RAW double (engine-identical IEEE value),
+                # emitted as 2^-20 fixed point
                 if j >= 0.5:
-                    want[(a, b)] = round(j, 6)
-    got = {(r["a"], r["b"]): r["jaccard"] for r in dedup.minhash_near_dup_pairs(
-        docs, "text", "doc_id", threshold=0.5, mode="word").collect()}
+                    want[(a, b)] = math.floor(j * (1 << 20))
+    got = {(r["a"], r["b"]): r["jq20"]
+           for r in dedup.minhash_near_dup_pairs(docs).collect()}
     assert got == want and len(want) > 0

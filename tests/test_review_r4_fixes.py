@@ -5,11 +5,8 @@
 2. the fused round's plan keeps three exchanges and no join;
 3. ann_recall is a quality GATE: floors asserted inside the entry,
    quantized int output;
-4. ann_batch_topk accepts a self-built bucket table with an explicit
-   bands override (restored caller contract), stays loud when neither
-   meta nor bands is available;
-5. _a3_dense_ids' unpartitioned window runs on the distinct set only;
-6. pin()/release_pins() is thread-safe.
+4. _a3_dense_ids' unpartitioned window runs on the distinct set only;
+5. pin()/release_pins() is thread-safe.
 """
 
 from __future__ import annotations
@@ -93,39 +90,29 @@ def test_fused_round_plan_has_three_exchanges(spark):
     assert "Join" not in plan
 
 
-def test_ann_recall_gate_passes_and_quantizes(spark):
+def _lsh_index(spark, emb, out_dir):
+    simsearch.build_lsh_index(emb, str(out_dir))
+    return simsearch.load_lsh_index(spark, str(out_dir))
+
+
+def test_ann_recall_gate_passes_and_quantizes(spark, tmp_path):
     emb = load(spark, SF, "embeddings")
     df = simsearch.ann_recall_at_k(
-        emb, max_qid=10, k=5, min_recall={"lsh": 0.0, "ivf": 0.0}).toPandas()
+        emb, _lsh_index(spark, emb, tmp_path), max_qid=10, k=5,
+        min_recall={"lsh": 0.0, "ivf": 0.0}).toPandas()
     assert set(df["method"]) == {"lsh", "ivf"}
     assert df["recall_bp"].dtype.kind == "i"
     assert (df["recall_bp"] <= 10000).all() and (df["recall_bp"] >= 0).all()
     release_pins()
 
 
-def test_ann_recall_gate_trips_on_impossible_floor(spark):
+def test_ann_recall_gate_trips_on_impossible_floor(spark, tmp_path):
     emb = load(spark, SF, "embeddings")
     with pytest.raises(AssertionError, match="quality gate"):
-        simsearch.ann_recall_at_k(emb, max_qid=10, k=5,
+        simsearch.ann_recall_at_k(emb, _lsh_index(spark, emb, tmp_path),
+                                  max_qid=10, k=5,
                                   min_recall={"lsh": 1.01, "ivf": 1.01})
     release_pins()
-
-
-def test_ann_batch_topk_explicit_bands_override(spark):
-    emb = load(spark, SF, "embeddings").limit(200)
-    queries = emb.filter(F.col("vec_id") < 5)
-    # a self-built bucket table (no _kgp_lsh_meta) + matching bands must
-    # reproduce the no-index path exactly
-    buckets = simsearch.lsh_bucket_ids(emb, bands=4)
-    via_index = {tuple(r) for r in simsearch.ann_batch_topk(
-        queries, emb, k=5, index=buckets, bands=4)
-        .select("qid", "vec_id").collect()}
-    no_index = {tuple(r) for r in simsearch.ann_batch_topk(
-        queries, emb, k=5, bands=4).select("qid", "vec_id").collect()}
-    assert via_index == no_index and len(via_index) > 0
-    # meta-less AND bands-less stays loud
-    with pytest.raises(ValueError, match="_kgp_lsh_meta"):
-        simsearch.ann_batch_topk(queries, emb, k=5, index=buckets)
 
 
 def test_a3_window_input_is_distinct_set(spark):

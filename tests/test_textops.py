@@ -63,7 +63,7 @@ def test_extract_turn_tool_triple():
 def test_minhash_deterministic():
     s1 = textops.minhash_band_keys("hello world this is text")
     s2 = textops.minhash_band_keys("hello world this is text")
-    assert s1 == s2 and len(s1) == 4
+    assert s1 == s2 and len(s1) == textops.MINHASH_BANDS
 
 
 def test_token_set_ratio_properties():

@@ -6,7 +6,8 @@ executors can misassociate rows across a CTE chain — nondeterministically
 notes in kgp/ops/transcript_twin.py).  A twin that hash-matches Spark
 once can therefore still flake in the driver's gate.  This tool runs each
 oracle SQL ``n_runs`` times on FRESH connections over the same parquet
-views and reports any query whose canonicalized result hash is not
+views and reports any query whose result hash — the driver gate's
+``value_hash(driver_canon(df))`` from tools/check_parity.py — is not
 constant across runs.  No Spark involved — it sweeps only the DuckDB side.
 
 Usage: python tools/oracle_sweep.py [sf_dir] [n_runs] [query ...]
@@ -14,35 +15,17 @@ Usage: python tools/oracle_sweep.py [sf_dir] [n_runs] [query ...]
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 import time
 
 import duckdb
-import numpy as np
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 from tools._common import create_views  # noqa: E402
-
-
-def _plain(v):
-    """Recursively ndarray→list so repr never hits numpy's '...'-truncated
-    print form (which would let two distinct long vectors hash equal)."""
-    if isinstance(v, np.ndarray):
-        v = v.tolist()
-    if isinstance(v, (list, tuple)):
-        return [_plain(x) for x in v]
-    return v
-
-
-def _hash(df) -> str:
-    df = df.reindex(sorted(df.columns), axis=1)
-    cols = [[repr(_plain(v)) for v in df[c]] for c in df.columns]
-    rows = sorted(zip(*cols)) if cols else []
-    return hashlib.sha256(repr(rows).encode()).hexdigest()
+from tools.check_parity import driver_canon, value_hash  # noqa: E402
 
 
 def sweep_query(sql: str, sf_dir: str, n_runs: int
@@ -57,7 +40,7 @@ def sweep_query(sql: str, sf_dir: str, n_runs: int
             con.execute("SET TimeZone='UTC'")
             create_views(con, sf_dir)
             df = con.execute(sql).df()
-            seen.add((len(df), _hash(df)))
+            seen.add((len(df), value_hash(driver_canon(df))))
         except Exception as e:  # noqa: BLE001 — report, keep sweeping
             return seen, f"{type(e).__name__}: {e}"
         finally:
